@@ -15,6 +15,16 @@ import org.apache.spark.sql.SparkSession
   * Scale note: shuffle partitions default to the local core count for
   * the test harness; on a real cluster this is expected to be overridden
   * (AQE coalescing makes the initial number a ceiling, not a target).
+  *
+  * Codegen cache: Spark keeps compiled whole-stage classes in one
+  * JVM-wide LRU keyed on the generated source, sized by the static conf
+  * `spark.sql.codegen.cache.maxEntries` (default 100). A repeated
+  * workload whose working set of classes exceeds the cache cycles
+  * through it at a 0% hit rate and pays a Janino compile for every
+  * class on every run. [[CodegenCacheEntries]] sizes the cache to the
+  * engine's measured working sets with headroom; see its comment for
+  * the measurements. The conf is static and read once, when Spark's
+  * code generator first loads, so the first session of a JVM fixes it.
   */
 object GraftSession {
 
@@ -23,6 +33,23 @@ object GraftSession {
       .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
       .filter(_ > 0)
       .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** `spark.sql.codegen.cache.maxEntries`. Measured working sets, as
+    * `CodegenMetrics` compilation counts with the cache emptied before
+    * the measured work (so each count is the distinct classes it needs):
+    *   - one `medallion_incremental` op of the lakehouse benchmark
+    *     (silver run, gold star, seven `createOrReplace`, compaction):
+    *     117 classes. At the default of 100 entries it recompiled ~108
+    *     of them on every op, 20-26% of the op's CPU;
+    *   - one `lakehouse_reads` round (six query templates): ~47 classes
+    *     after the set-up's 182, then 2 per query, because the drawn
+    *     keys are literals inlined into the generated code;
+    *   - the battery's `e2e_silver_gold` at sf0.1 (`graft.JobProfile`):
+    *     69 classes (61, 8 and 0 compiled over three reps).
+    * The whole 253-query battery was not measured. 1000 entries hold all
+    * of the above at once (~420 classes) with room for the rest of a
+    * session's queries. */
+  val CodegenCacheEntries = 1000
 
   /** Build a local session with scale-sane defaults. */
   def local(appName: String = "graft", cores: Int = defaultParallelism): SparkSession = {
@@ -39,6 +66,7 @@ object GraftSession {
       .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.parquet.mergeSchema", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       // keep catalog-table files (j15 bucketed fixtures) under target/ so
       // a battery run never litters the repo working tree
       .config("spark.sql.warehouse.dir",

@@ -42,6 +42,14 @@ import org.apache.spark.sql.functions._
   * partitions are HARD-LINKED into the new version, never read,
   * rewritten, or stolen from the live snapshot); the anti-join shuffles
   * only on the merge keys and AQE handles skew.
+  *
+  * File sizing: an unpartitioned whole-table restatement (upsert,
+  * replaceKeys, delete, restate) writes ceil(estimated bytes /
+  * `spark.sql.files.maxPartitionBytes`) files, at least one, where the
+  * estimate is the base manifest's bytes plus the source's plan-stat
+  * size; with either size unknown, or stat columns declared for file
+  * skipping, it keeps the plan's partitioning (see `sizedRestatement`).
+  * A small table therefore commits as one file and needs no compaction.
   */
 /** A concurrent writer committed first: the snapshot this merge was
   * computed from is no longer the live one. Retryable — recompute the
@@ -691,6 +699,24 @@ object TableMerge {
       case None => spark.read.option("mergeSchema", "true").parquet(tablePath)
     }
 
+  /** Row count of the live snapshot, summed from the parquet footers
+    * of the data files its manifest lists: footer reads on the driver,
+    * no Spark job. Copy-on-write snapshots carry no deletion markers,
+    * so footer counts are exact. A table without a manifest (a legacy
+    * layout) is counted with a scan. */
+  def rowCount(spark: SparkSession, tablePath: String): Long =
+    resolveLive(tablePath).flatMap(dir => snapshotMeta(dir).map(dir -> _)) match {
+      case Some((dir, meta)) =>
+        val conf = spark.sparkContext.hadoopConfiguration
+        meta.entries.iterator.map { case (rel, _) =>
+          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+              new org.apache.hadoop.fs.Path(dir.resolve(rel).toUri), conf))
+          try reader.getRecordCount finally reader.close()
+        }.sum
+      case None => read(spark, tablePath).count()
+    }
+
   /** Retained COMMITTED snapshot names, newest first; the head entry
     * of a committed table is the live one. In-flight staging dirs (no
     * commit marker yet — another writer's minutes-long merge write)
@@ -754,6 +780,43 @@ object TableMerge {
     val liveDir = liveVersion.getOrElse(Paths.get(tablePath))
     (liveDir, readSnapshot(spark, liveDir))
   }
+
+  /** File sizing of an UNPARTITIONED whole-table restatement (the full
+    * paths of [[upsert]], [[replaceKeys]], [[delete]] and [[restate]],
+    * bootstraps included): write ceil(estimate / `spark.sql.files.
+    * maxPartitionBytes`) files, at least one, through a narrow
+    * `coalesce`, where the estimate is the base snapshot's manifest
+    * bytes plus `source`'s plan-stat size, with checkpointed inputs
+    * sized by their stored blocks ([[org.apache.spark.sql.graft.bridge.
+    * observedSizeInBytes]]: a checkpoint of the silver CDC join otherwise
+    * carries the join's product-of-inputs estimate, 10 GiB for an 80-row
+    * batch). The merge plan's own partitioning would commit a small
+    * table as several files, each one later rewritten by [[compact]].
+    * A coalesce only merges partitions, so an estimate above the plan's
+    * partition count changes nothing. When either size is unknown (no
+    * base manifest, or a source without statistics, such as an RDD
+    * that was never materialized), `out` keeps its partitioning.
+    * Partitioned writes keep theirs: one writer task per dir is their
+    * own sizing rule. So do tables with declared stat columns ([[zorder]],
+    * [[analyzeStats]]): their files are the unit of file skipping, and
+    * folding a small clustered table into one file would end its
+    * skipping. */
+  private def sizedRestatement(out: DataFrame, source: DataFrame, base: Option[Path],
+                               partitionCols: Seq[String]): DataFrame =
+    if (partitionCols.nonEmpty || base.exists(statColsOfDir(_).nonEmpty)) out
+    else {
+      val baseBytes = base match {
+        case None => Some(0L)
+        case Some(dir) => snapshotMeta(dir).map(_.entries.iterator.map(_._2).sum)
+      }
+      (baseBytes, org.apache.spark.sql.graft.bridge.observedSizeInBytes(source)) match {
+        case (Some(b), Some(sourceBytes)) =>
+          val perFile = out.sparkSession.sessionState.conf.filesMaxPartitionBytes
+          val files = ((sourceBytes + b + perFile - 1) / perFile).max(1).min(Int.MaxValue)
+          out.coalesce(files.toInt)
+        case _ => out
+      }
+    }
 
   /** Write `df` as a complete new version dir, then commit under `expect`. */
   private def writeVersion(df: DataFrame, tablePath: String,
@@ -824,7 +887,8 @@ object TableMerge {
       val base = currentVersionName(tablePath)
       if (base.isEmpty && !exists(tablePath)) {
         // bootstrap: committed iff no concurrent bootstrap won the race
-        writeVersion(src, tablePath, partitionCols, Parent(None), meta)
+        writeVersion(sizedRestatement(src, src, None, partitionCols),
+          tablePath, partitionCols, Parent(None), meta)
       } else conflictIfBaseMoved(tablePath, base) {
         // resolve the merge base ONCE; everything below reads this snapshot
         val (liveDir, target) = baseSnapshot(spark, tablePath, base)
@@ -845,7 +909,8 @@ object TableMerge {
             fallback = mergeRows(target, src, keys),
             partitionCols = partitionCols, meta = meta)
         } else {
-          writeVersion(mergeRows(target, src, keys), tablePath, partitionCols, Parent(base), meta)
+          writeVersion(sizedRestatement(mergeRows(target, src, keys), src, Some(liveDir),
+            partitionCols), tablePath, partitionCols, Parent(base), meta)
         }
       }
     }
@@ -866,7 +931,8 @@ object TableMerge {
       require(groupKeys.nonEmpty, "group keys required")
       val base = currentVersionName(tablePath)
       if (base.isEmpty && !exists(tablePath))
-        writeVersion(source, tablePath, partitionCols, Parent(None), meta)
+        writeVersion(sizedRestatement(source, source, None, partitionCols),
+          tablePath, partitionCols, Parent(None), meta)
       else conflictIfBaseMoved(tablePath, base) {
         val (liveDir, target) = baseSnapshot(spark, tablePath, base)
         val drops = dropGroups.select(groupKeys.map(col): _*).distinct()
@@ -905,7 +971,8 @@ object TableMerge {
         } else {
           val remaining = target.join(drops, groupKeys, "left_anti")
           val merged = remaining.unionByName(source, allowMissingColumns = true)
-          writeVersion(merged, tablePath, partitionCols, Parent(base), meta)
+          writeVersion(sizedRestatement(merged, source, Some(liveDir), partitionCols),
+            tablePath, partitionCols, Parent(base), meta)
         }
       }
     }
@@ -995,9 +1062,12 @@ object TableMerge {
     retryOnConflict(CommitRetries) {
       val base = currentVersionName(tablePath)
       if (base.isEmpty && !exists(tablePath))
-        writeVersion(df, tablePath, partitionCols, Parent(None), meta)
+        writeVersion(sizedRestatement(df, df, None, partitionCols),
+          tablePath, partitionCols, Parent(None), meta)
       else conflictIfBaseMoved(tablePath, base) {
-        writeVersion(df, tablePath, partitionCols, Parent(base), meta)
+        val liveDir = base.fold(Paths.get(tablePath))(Paths.get(tablePath, _))
+        writeVersion(sizedRestatement(df, df, Some(liveDir), partitionCols),
+          tablePath, partitionCols, Parent(base), meta)
       }
     }
 
@@ -1017,7 +1087,8 @@ object TableMerge {
           else layoutPartColsOfDir(liveDir)
         val remaining = target.join(
           deleteKeys.select(keys.map(col): _*).distinct(), keys, "left_anti")
-        writeVersion(remaining, tablePath, layout, Parent(base))
+        writeVersion(sizedRestatement(remaining, deleteKeys, Some(liveDir), layout),
+          tablePath, layout, Parent(base))
       }
     }
 
@@ -1822,10 +1893,12 @@ object TableMerge {
   }
 
   /** UPDATE-SET-* + INSERT-* semantics with union-by-name schema
-    * evolution: result = (target ∖ source-keys) ⊎ source.
+    * evolution: result = (target ∖ source-keys) ⊎ source. `src` is
+    * already unique per key ([[upsert]] dedups it), and an anti join
+    * ignores duplicate keys anyway, so no distinct precedes the join.
     */
   private def mergeRows(target: DataFrame, src: DataFrame, keys: Seq[String]): DataFrame = {
-    val notMatched = target.join(src.select(keys.map(col): _*).distinct(), keys, "left_anti")
+    val notMatched = target.join(src.select(keys.map(col): _*), keys, "left_anti")
     notMatched.unionByName(src, allowMissingColumns = true)
   }
 

@@ -169,17 +169,26 @@ object SilverPipeline {
       .toDF()
   }
 
+  /** The row count an observation collected. A stage whose input Spark
+    * proved empty at run time (adaptive execution replaces it with an
+    * empty relation) runs no task and reports no metrics: that is 0 rows,
+    * as for an empty bronze batch. */
+  private def observedCount(obs: org.apache.spark.sql.Observation): Long =
+    obs.get.get("n").fold(0L)(_.asInstanceOf[Long])
+
   private def runWith(spark: SparkSession, bronze: DataFrame, cfg: Config,
                       forceReprocess: Boolean,
                       chunksOf: DataFrame => DataFrame): RunStats = {
     import spark.implicits._
 
-    // Stage counts ride the ONE materializing job as CollectMetrics
-    // observations (A8) instead of three separate count() actions — the
-    // pre-r6 shape scanned bronze once per count plus once for the
-    // checkpoint (4 source scans + 2 dedup shuffles before any write).
+    // The bronze, dedup and change counts ride the ONE materializing job,
+    // the eager checkpoint below, as CollectMetrics observations (A8)
+    // instead of count() actions: a count per stage would scan bronze
+    // again and, for the change count, run one more job over the
+    // checkpoint.
     val obsBronze = org.apache.spark.sql.Observation()
     val obsDedup = org.apache.spark.sql.Observation()
+    val obsChanged = org.apache.spark.sql.Observation()
     val normalized = normalize(bronze).observe(obsBronze, count(lit(1)).as("n"))
 
     val deduped = dedupLatest(normalized).observe(obsDedup, count(lit(1)).as("n"))
@@ -192,10 +201,11 @@ object SilverPipeline {
     // On a cluster, prefer a reliable checkpoint dir for executor-loss
     // tolerance.
     val changed = detectChanges(spark, deduped, cfg.resourcesPath, forceReprocess)
+      .observe(obsChanged, count(lit(1)).as("n"))
       .localCheckpoint(true)
-    val changedN = changed.count()
-    val bronzeRows = obsBronze.get("n").asInstanceOf[Long]
-    val dedupedN = obsDedup.get("n").asInstanceOf[Long]
+    val changedN = observedCount(obsChanged)
+    val bronzeRows = observedCount(obsBronze)
+    val dedupedN = observedCount(obsDedup)
 
     // chunk only the changed documents (typed flatMap — the stage the
     // caller picked: flat text chunks or the PDF-bytes hierarchy)
@@ -220,8 +230,9 @@ object SilverPipeline {
       if (!TableMerge.exists(cfg.chunksPath))
         TableMerge.createOrReplace(chunksOf(changed), cfg.chunksPath)
     }
+    // from the live snapshot's parquet footers, not a count job
     val chunksWritten =
-      if (TableMerge.exists(cfg.chunksPath)) TableMerge.read(spark, cfg.chunksPath).count()
+      if (TableMerge.exists(cfg.chunksPath)) TableMerge.rowCount(spark, cfg.chunksPath)
       else 0L
     RunStats(bronzeRows, dedupedN, changedN, chunksWritten)
   }

@@ -39,6 +39,39 @@ object bridge extends org.apache.spark.internal.Logging {
     org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
       .getPartitionPathString(colName, Option(castValue).getOrElse(""))
 
+  /** Stand-in leaf for a materialized RDD in a size estimate: its
+    * statistics are the RDD's stored bytes. Never executed. */
+  private final case class StoredRddLeaf(
+      output: Seq[org.apache.spark.sql.catalyst.expressions.Attribute], bytes: BigInt)
+      extends org.apache.spark.sql.catalyst.plans.logical.LeafNode {
+    override def computeStats(): org.apache.spark.sql.catalyst.plans.logical.Statistics =
+      org.apache.spark.sql.catalyst.plans.logical.Statistics(sizeInBytes = bytes)
+  }
+
+  /** Plan-stat size of `df`, where every RDD leaf whose blocks the block
+    * manager holds (an eager local checkpoint, a persisted RDD) counts
+    * its stored bytes: the size observed at run time, not the estimate
+    * the checkpoint copied from its origin plan (for a join, the
+    * product of its inputs' sizes). None when the size is unknown (the
+    * session's `spark.sql.defaultSizeInBytes` or more, as for an RDD
+    * that was never materialized). */
+  def observedSizeInBytes(df: DataFrame): Option[BigInt] = {
+    import org.apache.spark.sql.execution.LogicalRDD
+    val cs = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val plan = df.queryExecution.optimizedPlan
+    val rddIds = plan.collect { case r: LogicalRDD => r.rdd.id }.toSet
+    val stored =
+      if (rddIds.isEmpty) Map.empty[Int, Long]
+      else cs.sparkContext.getRDDStorageInfo(r => rddIds(r.id))
+        .map(i => i.id -> (i.memSize + i.diskSize)).toMap
+    val sized =
+      if (stored.isEmpty) plan
+      else plan.transformUp {
+        case r: LogicalRDD if stored.contains(r.rdd.id) => StoredRddLeaf(r.output, stored(r.rdd.id))
+      }
+    Some(sized.stats.sizeInBytes).filter(_ < cs.sessionState.conf.defaultSizeInBytes)
+  }
+
   import org.apache.spark.sql.catalyst.expressions._
   import org.apache.spark.sql.execution.datasources._
   import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat

@@ -35,6 +35,37 @@ class SilverPipelineSpec extends AnyFunSuite {
   private val doc2 = ("r2", "openstax", "https://x/2", "Biology",
     "d" * 100, "vi", "Cells and organisms explained at length. " * 20)
 
+  /** Run `bronze` through silver and check its RunStats against the
+    * count() actions the run used to take: a count of the CDC frame
+    * (taken here, before the run) and of the chunk table after it. */
+  private def runCounted(bronze: org.apache.spark.sql.DataFrame,
+                         cfg: Config): SilverPipeline.RunStats = {
+    val changedBefore = SilverPipeline.detectChanges(spark,
+      SilverPipeline.dedupLatest(SilverPipeline.normalize(bronze)), cfg.resourcesPath).count()
+    val stats = SilverPipeline.run(spark, bronze, cfg)
+    assert(stats.changed == changedBefore)
+    assert(stats.chunksWritten == TableMerge.read(spark, cfg.chunksPath).count())
+    stats
+  }
+
+  test("RunStats counts equal the count()-based values on every branch") {
+    val cfg = freshCfg()
+    val first = runCounted(bronzeDf(Seq(doc1, doc2)), cfg)
+    assert(first.changed == 2 && first.chunksWritten > 0)
+    val rerun = runCounted(bronzeDf(Seq(doc1, doc2)), cfg)
+    assert(rerun.changed == 0 && rerun.chunksWritten == first.chunksWritten)
+    val update = runCounted(
+      bronzeDf(Seq(doc1.copy(_7 = "Completely new content about graphs. " * 30)))
+        .withColumn("scraped_at", to_timestamp(lit("2026-03-01 00:00:00"))), cfg)
+    assert(update.changed == 1)
+
+    // a zero-change FIRST run creates empty tables
+    val emptyCfg = freshCfg()
+    val empty = runCounted(bronzeDf(Seq.empty), emptyCfg)
+    assert(empty.bronzeRows == 0 && empty.changed == 0 && empty.chunksWritten == 0)
+    assert(TableMerge.exists(emptyCfg.resourcesPath) && TableMerge.exists(emptyCfg.chunksPath))
+  }
+
   test("first run materializes resources and chunks; re-run is a no-op") {
     val cfg = freshCfg()
     val stats1 = SilverPipeline.run(spark, bronzeDf(Seq(doc1, doc2)), cfg)

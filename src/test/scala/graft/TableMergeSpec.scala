@@ -474,4 +474,90 @@ class TableMergeSpec extends AnyFunSuite {
       assert(TableMerge.read(spark, path).filter(col("id") < 8L).count() == 0L)
     } finally { sys.props.remove(prop); () }
   }
+
+  /** Data files of the live snapshot, as its manifest lists them. */
+  private def liveFiles(path: String): Int = TableMerge.manifest(path).get.size
+
+  private def rowsOf(path: String): Seq[(Int, String)] = {
+    import spark.implicits._
+    TableMerge.read(spark, path).select("id", "v").as[(Int, String)].collect().toSeq.sorted
+  }
+
+  test("unpartitioned restatements of a small table commit one file; compaction finds nothing") {
+    import spark.implicits._
+    val path = tmpTable("sized")
+    // createOrReplace is not a restatement: it keeps the frame's partitioning
+    TableMerge.createOrReplace((1 to 200).map(i => (i, s"v$i")).toDF("id", "v").repartition(4), path)
+    assert(liveFiles(path) == 4)
+    var model = (1 to 200).map(i => i -> s"v$i").toMap
+
+    TableMerge.upsert(spark, path,
+      Seq((1, "u"), (500, "n"), (501, "n")).toDF("id", "v").repartition(3), Seq("id"))
+    model ++= Seq(1 -> "u", 500 -> "n", 501 -> "n")
+    assert(liveFiles(path) == 1)
+    assert(rowsOf(path) == model.toSeq.sorted)
+    assert(TableMerge.compact(spark, path, Seq.empty, maxFiles = 1) == 0)
+
+    TableMerge.replaceKeys(spark, path,
+      Seq((2, "r"), (600, "r")).toDF("id", "v").repartition(3),
+      dropGroups = Seq(2, 3, 4).toDF("id"), groupKeys = Seq("id"))
+    model = model -- Seq(2, 3, 4) ++ Seq(2 -> "r", 600 -> "r")
+    assert(liveFiles(path) == 1)
+    assert(rowsOf(path) == model.toSeq.sorted)
+    assert(TableMerge.compact(spark, path, Seq.empty, maxFiles = 1) == 0)
+
+    TableMerge.delete(spark, path, Seq(5, 6).toDF("id"), Seq("id"))
+    model = model -- Seq(5, 6)
+    assert(liveFiles(path) == 1)
+    assert(rowsOf(path) == model.toSeq.sorted)
+
+    TableMerge.restate(spark, path,
+      model.toSeq.toDF("id", "v").repartition(4))
+    assert(liveFiles(path) == 1)
+    assert(rowsOf(path) == model.toSeq.sorted)
+
+    // a bootstrap restatement is sized from its source alone
+    val fresh = tmpTable("sized-bootstrap")
+    TableMerge.replaceKeys(spark, fresh, Seq((1, "a"), (2, "b")).toDF("id", "v").repartition(3),
+      dropGroups = Seq(1).toDF("id"), groupKeys = Seq("id"))
+    assert(liveFiles(fresh) == 1)
+    assert(rowsOf(fresh) == Seq((1, "a"), (2, "b")))
+  }
+
+  test("a restatement larger than spark.sql.files.maxPartitionBytes writes several files") {
+    import spark.implicits._
+    val path = tmpTable("sized-large")
+    val seed = (1 to 3000).map(i => (i, s"value-$i-" + "x" * (i % 50)))
+    TableMerge.createOrReplace(seed.toDF("id", "v").repartition(6), path)
+    val key = "spark.sql.files.maxPartitionBytes"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, "8192")
+    try {
+      TableMerge.upsert(spark, path,
+        (1 to 30).map(i => (i, "u")).toDF("id", "v").repartition(3), Seq("id"))
+      assert(liveFiles(path) > 1, "an estimate of several maxPartitionBytes must not collapse to one file")
+      assert(rowsOf(path) ==
+        (seed.toMap ++ (1 to 30).map(_ -> "u")).toSeq.sorted)
+    } finally spark.conf.set(key, saved)
+  }
+
+  test("a source of unknown size keeps its partitioning") {
+    import spark.implicits._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("id", IntegerType), StructField("v", StringType)))
+    // a DataFrame over an RDD that was never materialized has no plan statistics
+    def unsized(rows: Seq[(Int, String)]) = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.map { case (i, v) => Row(i, v) }, 3), schema)
+    val path = tmpTable("unsized")
+    val first = (1 to 30).map(i => (i, s"v$i"))
+    TableMerge.replaceKeys(spark, path, unsized(first),
+      dropGroups = Seq(1).toDF("id"), groupKeys = Seq("id"))
+    assert(liveFiles(path) == 3)
+    assert(rowsOf(path) == first)
+    TableMerge.replaceKeys(spark, path, unsized((1 to 3).map(i => (i, "r"))),
+      dropGroups = Seq(1, 2, 3).toDF("id"), groupKeys = Seq("id"))
+    assert(liveFiles(path) >= 3)
+    assert(rowsOf(path) == ((1 to 3).map(i => (i, "r")) ++ first.drop(3)).sorted)
+  }
 }
