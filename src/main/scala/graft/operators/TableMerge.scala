@@ -27,6 +27,15 @@ import org.apache.spark.sql.functions._
   * pruned once they age past a grace window (young ones may be a
   * concurrent writer's merge base or staging dir).
   *
+  * One on-disk layout: a committed version dir holds the commit marker,
+  * the schema sidecar, the parts sidecar when partitioned, and the file
+  * manifest. The manifest is the only answer to "which files does this
+  * snapshot have": reads, rewrites (compaction, ZORDER), skipping reads
+  * and hard-link carries all plan from it, and a file in the dir that
+  * the manifest does not list is never read or carried. A table left by
+  * a build that predates manifests (no pointer, no sidecars, or no
+  * manifest) is not readable: delete it and rebuild it.
+  *
   * Multi-writer safety (Iceberg-style optimistic concurrency): a merge
   * resolves its base snapshot ONCE, computes the new version from it,
   * and commits under a short lock file that (a) checks the pointer
@@ -170,20 +179,15 @@ object TableMerge {
     }
   }
 
-  /** A committed table exists: versioned pointer, or a legacy plain
-    * parquet dir (pre-pointer layout) with top-level content.
-    * Underscore files (`_commit.lock`, `_SUCCESS`, …) are metadata, not
-    * content — a leftover lock from a crashed bootstrap must not flip a
-    * virgin table into the "legacy data" path (which would read an
-    * empty/half dir as the merge base). */
-  def exists(tablePath: String): Boolean =
-    resolveLive(tablePath).isDefined || {
-      val p = Paths.get(tablePath)
-      !Files.exists(pointerPath(tablePath)) && Files.exists(p) &&
-        Option(p.toFile.listFiles()).exists(_.exists(f =>
-          !f.getName.startsWith(".") && !f.getName.startsWith("_") &&
-            !f.getName.startsWith("v-")))
-    }
+  /** A committed table exists: its pointer names a present version dir.
+    * Nothing else counts — not a leftover `_commit.lock` from a crashed
+    * bootstrap, not plain parquet files. */
+  def exists(tablePath: String): Boolean = resolveLive(tablePath).isDefined
+
+  /** The live version dir; fails when `tablePath` holds no table. */
+  private def liveDirOf(tablePath: String): Path =
+    resolveLive(tablePath).getOrElse(
+      throw new IllegalArgumentException(s"no graft table at $tablePath"))
 
   /** Name of the marker a version dir receives at commit time; dirs
     * without it are another writer's in-flight staging. */
@@ -206,10 +210,10 @@ object TableMerge {
     * never free text). */
   private val TxnFile = "_graft_txn.tsv"
 
-  /** Per-version partition-column sidecar: directory inference
-    * ([[partitionColsOf]]'s fallback) cannot see the partitioning of a
-    * ZERO-ROW layout (a freshly CREATEd empty table has no `col=val`
-    * dirs yet), so the columns are persisted like the schema is. */
+  /** Per-version partition-column sidecar: directory names cannot show
+    * the partitioning of a ZERO-ROW layout (a freshly CREATEd empty
+    * table has no `col=val` dirs yet), so the columns are persisted like
+    * the schema is. Every partitioned commit writes it. */
   private val PartsFile = "_graft_parts.txt"
 
   /** Per-version FILE MANIFEST (TSV: relPath, size) — the Iceberg-
@@ -221,9 +225,9 @@ object TableMerge {
     * Maintained INCREMENTALLY: partition-scoped commits walk only the
     * freshly-written subtree and carry the untouched partitions' rows
     * from the base manifest verbatim (their files hard-link name-
-    * unchanged); metadata-only commits copy it wholesale. Every commit
+    * unchanged); metadata-only commits carry it wholesale. Every commit
     * writes one — [[commitVersion]] backfills by walking the staged
-    * tree when a path didn't provide it (the legacy-upgrade case). */
+    * tree of a full rewrite. */
   private val ManifestFile = "_graft_manifest.tsv"
 
   /** Stream lines to a sidecar without materializing one driver
@@ -262,44 +266,51 @@ object TableMerge {
     b.result()
   }
 
-  /** Write the staging version's manifest: base-manifest survivors
-    * (rows whose file was NOT rewritten — they hard-link name-unchanged)
-    * plus `fresh` rows for the files this commit wrote. When the base
-    * has no manifest (pre-manifest table), nothing is written here and
-    * [[commitVersion]] backfills with a full staged-tree walk — the
-    * one-time upgrade. An EMPTY manifest is still written: presence is
-    * what routes reads through manifest planning (a zero-row snapshot
-    * has one with no rows). */
-  private def carryManifest(live: Path, staging: Path,
-                            dropped: String => Boolean,
-                            fresh: Seq[String]): Unit = {
-    val base = live.resolve(ManifestFile)
-    if (Files.exists(base)) {
-      withLedgerLines(base) { lines =>
-        val survivors = lines.filter(l => !dropped(l.takeWhile(_ != '\t')))
-        writeLines(staging.resolve(ManifestFile), survivors ++ fresh.iterator)
+  /** Carry the base snapshot's surviving files into the staging
+    * version: every base-manifest entry not `dropped` hard-links
+    * name-unchanged (the manifest is the file list, so a file the
+    * manifest does not list is never carried), and the staging manifest
+    * lists those survivors plus `fresh` rows for the files this commit
+    * wrote. An EMPTY manifest is still written (a zero-row snapshot has
+    * one with no rows). Streamed: the ledger is never one driver string. */
+  private def carryFiles(live: Path, staging: Path,
+                         dropped: String => Boolean,
+                         fresh: Seq[String]): Unit = {
+    val made = scala.collection.mutable.Set[Path]()
+    withLedgerLines(live.resolve(ManifestFile)) { lines =>
+      val survivors = lines.filter { l =>
+        val rel = l.takeWhile(_ != '\t')
+        !dropped(rel) && {
+          val dest = staging.resolve(rel)
+          if (made.add(dest.getParent)) Files.createDirectories(dest.getParent)
+          linkTree(live.resolve(rel), dest)
+          true
+        }
       }
+      writeLines(staging.resolve(ManifestFile), survivors ++ fresh.iterator)
     }
   }
 
-  /** Manifest entries of a snapshot dir, None when it predates
-    * manifests. */
-  private def manifestOf(dir: Path): Option[Seq[(String, Long)]] = {
-    val p = dir.resolve(ManifestFile)
-    if (!Files.exists(p)) None
-    else Some(Files.readString(p).linesIterator.flatMap { l =>
-      l.split('\t') match {
-        case Array(rel, size) => Some((rel, size.toLong))
-        case _ => None
-      }
-    }.toSeq)
-  }
+  /** The dir holding manifest path `rel` — a leaf partition dir, or ""
+    * for a file at the root of an unpartitioned snapshot: the unit that
+    * compaction, ZORDER and scoped merges rewrite or carry whole. */
+  private def unitOf(rel: String): String = rel.substring(0, rel.lastIndexOf('/').max(0))
 
-  /** Data-file manifest of the LIVE snapshot (relPath → bytes), empty
-    * map shape for callers that want the ledger; None when the table
-    * predates manifests or uses the legacy layout. */
+  /** Manifest entries of a committed snapshot dir. */
+  private def manifestOf(dir: Path): Seq[(String, Long)] =
+    withLedgerLines(dir.resolve(ManifestFile)) { lines =>
+      lines.flatMap { l =>
+        l.split('\t') match {
+          case Array(rel, size) => Some((rel, size.toLong))
+          case _ => None
+        }
+      }.toVector
+    }
+
+  /** Data-file manifest of the LIVE snapshot (relPath → bytes): the
+    * snapshot's one file list. None when there is no table. */
   def manifest(tablePath: String): Option[Seq[(String, Long)]] =
-    resolveLive(tablePath).flatMap(manifestOf)
+    resolveLive(tablePath).map(snapshotMeta(_).entries)
 
   /** COLUMN-MAPPING sidecar (TSV: logical name, physical name, in
     * logical read-back order) — the Delta column-mapping analogue that
@@ -382,12 +393,6 @@ object TableMerge {
     cmap.flatMap(_.find(e => e._1.nonEmpty && e._1.equalsIgnoreCase(logical))
       .map(_._2)).getOrElse(logical)
 
-  /** Physical name a logical column maps to (itself when unmapped) —
-    * what stat/zorder declarations and explicit skipping reads use to
-    * key the physical-domain sidecars. */
-  private def physNameOf(tablePath: String, logical: String): String =
-    physNameIn(liveColMap(tablePath), logical)
-
   /** Allocate a physical name for a NEW logical column: the identity
     * spelling when free, else a nanotime-suffixed fresh name. `used`
     * must contain every live AND retired physical name (lower-cased) —
@@ -402,28 +407,39 @@ object TableMerge {
     phys
   }
 
-  /** Shared metadata-only commit: hard-link every data file of the
-    * live snapshot, carry schema/parts/manifest/stats sidecars
-    * verbatim, write the updated column map, CAS-commit. Zero data
-    * read or rewrite at any table size. */
+  private def copySidecar(from: Path, to: Path, name: String): Unit = {
+    val side = from.resolve(name)
+    if (Files.exists(side))
+      Files.copy(side, to.resolve(name), StandardCopyOption.REPLACE_EXISTING): Unit
+  }
+
+  /** Stage a METADATA-ONLY version of committed snapshot `src` (column
+    * mapping changes, ANALYZE, ADD COLUMNS, RESTORE): every data file its
+    * manifest lists hard-links name-unchanged, the manifest carries
+    * verbatim, and the `_graft_*` sidecars are COPIED, never linked — the
+    * caller rewrites some of them in place (column map, schema, stats),
+    * and a write through a hard link would change `src` itself. The
+    * commit marker and txn sidecar belong to `src`'s own commit and
+    * never carry. A failed stage removes its dir. Zero data read or
+    * rewrite at any table size. */
+  private def stageMetadataOnly(tablePath: String, src: Path): Path = {
+    val version = newVersionDir(tablePath)
+    Files.createDirectories(version)
+    try {
+      carryFiles(src, version, _ => false, Seq.empty)
+      Seq(SchemaFile, PartsFile, ColMapFile, StatsFile, StatColsFile)
+        .foreach(copySidecar(src, version, _))
+    } catch {
+      case e: java.io.IOException => deleteRecursively(version); throw e
+    }
+    version
+  }
+
+  /** Metadata-only commit of an updated column map. */
   private def commitColMapChange(tablePath: String, liveDir: Path,
                                  base: Option[String],
                                  newMap: Seq[(String, String)]): Unit = {
-    val version = newVersionDir(tablePath)
-    Files.createDirectories(version)
-    // legacy pointerless layout: liveDir is the table dir holding the
-    // fresh staging dir itself — never link underscore/version entries
-    Option(liveDir.toFile.listFiles()).getOrElse(Array.empty)
-      .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith(".") &&
-        !f.getName.startsWith("v-"))
-      .foreach(f => linkTree(f.toPath, version.resolve(f.getName)))
-    Seq(SchemaFile, PartsFile, ManifestFile).foreach { name =>
-      val side = liveDir.resolve(name)
-      if (Files.exists(side))
-        Files.copy(side, version.resolve(name),
-          StandardCopyOption.REPLACE_EXISTING): Unit
-    }
-    carryStats(liveDir, version, Set.empty)
+    val version = stageMetadataOnly(tablePath, liveDir)
     writeColMap(version, newMap)
     commitVersion(tablePath, version, Parent(base))
   }
@@ -438,16 +454,14 @@ object TableMerge {
                    from: String, to: String): Unit =
     retryOnConflict(CommitRetries) {
       val base = currentVersionName(tablePath)
-      require(base.nonEmpty || exists(tablePath), s"no graft table at $tablePath")
+      require(base.nonEmpty, s"no graft table at $tablePath")
       conflictIfBaseMoved(tablePath, base) {
         val (liveDir, df) = baseSnapshot(spark, tablePath, base)
         require(df.schema.exists(_.name.equalsIgnoreCase(from)),
           s"no column $from at $tablePath")
         require(!df.schema.exists(_.name.equalsIgnoreCase(to)),
           s"column $to already exists at $tablePath")
-        // layoutPartColsOfDir, not the PartsFile-only reader: a legacy
-        // dir-inferred layout must reject partition renames too
-        require(!layoutPartColsOfDir(liveDir).exists(_.equalsIgnoreCase(from)),
+        require(!partColsOfDir(liveDir).exists(_.equalsIgnoreCase(from)),
           s"$from is a partition column of $tablePath — partition names are " +
             "directory paths; renaming one is a physical relayout, not metadata")
         val current = colMapOf(liveDir)
@@ -469,10 +483,10 @@ object TableMerge {
     retryOnConflict(CommitRetries) {
       require(cols.nonEmpty, "no columns to drop")
       val base = currentVersionName(tablePath)
-      require(base.nonEmpty || exists(tablePath), s"no graft table at $tablePath")
+      require(base.nonEmpty, s"no graft table at $tablePath")
       conflictIfBaseMoved(tablePath, base) {
         val (liveDir, df) = baseSnapshot(spark, tablePath, base)
-        val partNames = layoutPartColsOfDir(liveDir)
+        val partNames = partColsOfDir(liveDir)
         cols.foreach { c =>
           require(ifExists || df.schema.exists(_.name.equalsIgnoreCase(c)),
             s"no column $c at $tablePath (use IF EXISTS)")
@@ -528,7 +542,7 @@ object TableMerge {
   }
 
   /** Commit metadata of the LIVE version (empty when the live commit
-    * carried none, or the table uses the legacy unversioned layout). */
+    * carried none, or there is no table). */
   def commitMeta(tablePath: String): Map[String, String] =
     currentVersionName(tablePath).map(versionMeta(tablePath, _)).getOrElse(Map.empty)
 
@@ -542,18 +556,13 @@ object TableMerge {
   def findVersionByMeta(tablePath: String, key: String, value: String): Option[String] =
     versions(tablePath).find(v => versionMeta(tablePath, v).get(key).contains(value))
 
-  /** The snapshot's sidecar schema, None for pre-sidecar legacy dirs. */
-  private def sidecarSchema(dir: Path): Option[org.apache.spark.sql.types.StructType] = {
-    val side = dir.resolve(SchemaFile)
-    if (Files.exists(side))
-      Some(org.apache.spark.sql.types.DataType.fromJson(Files.readString(side))
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-    else None
-  }
-
-  /** Parsed sidecars of an immutable committed snapshot: manifest
-    * entries + per-file ranges + per-file null counts. */
-  private final case class SnapshotMeta(entries: Seq[(String, Long)],
+  /** Parsed sidecars of an immutable committed snapshot: the read-back
+    * (physical) schema, partition columns, manifest entries, per-file
+    * ranges and per-file null counts. */
+  private final case class SnapshotMeta(
+      schema: org.apache.spark.sql.types.StructType,
+      partCols: Seq[String],
+      entries: Seq[(String, Long)],
       ranges: Map[String, Map[String, ColRange]],
       nulls: Map[String, Map[String, (Long, Long)]])
 
@@ -563,54 +572,62 @@ object TableMerge {
   /** Sidecar metadata of a COMMITTED snapshot, memoized per version
     * dir: committed versions are immutable, so the manifest/stats
     * ledgers parse ONCE per process instead of once per read (the
-    * driver-resident-per-read half of VERDICT r18 weak #3). None when
-    * the snapshot predates manifests (or is an uncommitted staging
-    * dir — those are never memoized: still mutable). */
-  private def snapshotMeta(dir: Path): Option[SnapshotMeta] =
-    if (!Files.exists(dir.resolve(ManifestFile)) ||
-        !Files.exists(dir.resolve(CommittedMarker))) None
-    else {
-      if (snapMemo.size > 128) snapMemo.clear() // bounded; rebuilt on demand
-      Some(snapMemo.computeIfAbsent(dir.toAbsolutePath.toString, _ => {
-        val (ranges, nulls) = parseStatsLedger(dir)
-        SnapshotMeta(manifestOf(dir).getOrElse(Seq.empty), ranges, nulls)
-      }))
-    }
+    * driver-resident-per-read half of VERDICT r18 weak #3). Fails on a
+    * dir that is not a committed snapshot of the one layout (no commit
+    * marker, schema sidecar or manifest): an uncommitted staging dir is
+    * still mutable, and a pre-manifest table is not readable. */
+  private def snapshotMeta(dir: Path): SnapshotMeta = {
+    if (!Seq(CommittedMarker, SchemaFile, ManifestFile).forall(n => Files.exists(dir.resolve(n))))
+      throw new IllegalStateException(
+        s"$dir is not a committed graft snapshot: it lacks the commit marker, " +
+          "schema sidecar or manifest. A table written before manifests " +
+          "existed is not readable: delete it and rebuild it")
+    if (snapMemo.size > 128) snapMemo.clear() // bounded; rebuilt on demand
+    snapMemo.computeIfAbsent(dir.toAbsolutePath.toString, _ => {
+      val (ranges, nulls) = parseStatsLedger(dir)
+      SnapshotMeta(
+        org.apache.spark.sql.types.DataType.fromJson(Files.readString(dir.resolve(SchemaFile)))
+          .asInstanceOf[org.apache.spark.sql.types.StructType],
+        partColsOfDir(dir), manifestOf(dir), ranges, nulls)
+    })
+  }
 
   /** Partition columns persisted with a snapshot dir (empty when
-    * unpartitioned). Manifest-carrying snapshots always have the
-    * sidecar when partitioned — the write paths persist it together. */
+    * unpartitioned): every partitioned commit writes the sidecar. */
   private def partColsOfDir(dir: Path): Seq[String] = {
     val p = dir.resolve(PartsFile)
     if (!Files.exists(p)) Seq.empty
     else Files.readString(p).linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
   }
 
-  /** Read a snapshot dir. Manifest-carrying snapshots plan from the
-    * commit-time manifest (zero directory listing, stats/null pruning,
-    * loud [[SnapshotExpiredException]] when VACUUM raced the read);
-    * pre-manifest dirs read by sidecar schema (exact even for zero-row
-    * snapshots) or legacy mergeSchema scan. */
+  /** The one FileIndex every snapshot read goes through: `entries`
+    * (relative to `root` — the snapshot dir, or one compaction unit of
+    * it) planned by [[org.apache.spark.sql.graft.bridge.manifestRead]]:
+    * zero directory listing, stats/null pruning, and a loud
+    * [[SnapshotExpiredException]] when VACUUM expired `snapshot` between
+    * planning and execution. */
+  private def manifestScan(spark: SparkSession, snapshot: Path, root: Path,
+                           schema: org.apache.spark.sql.types.StructType,
+                           partCols: Seq[String], entries: Seq[(String, Long)],
+                           ranges: Map[String, Map[String, ColRange]],
+                           nulls: Map[String, Map[String, (Long, Long)]]): DataFrame = {
+    val marker = snapshot.resolve(CommittedMarker)
+    org.apache.spark.sql.graft.bridge.manifestRead(
+      spark, root.toString, schema, partCols, entries, ranges, nulls,
+      () => Files.exists(marker),
+      s"snapshot ${snapshot.getFileName} under ${snapshot.getParent} was expired " +
+        "(VACUUM/expireVersions) between read planning and execution — " +
+        "re-resolve the live table with a fresh TableMerge.read and " +
+        "retry, or raise the retention horizon so readers outlive it")
+  }
+
+  /** Read a committed snapshot dir from its manifest ([[manifestScan]]),
+    * projected to the logical column view. */
   private def readSnapshot(spark: SparkSession, dir: Path): DataFrame = {
-    val physical = sidecarSchema(dir) match {
-      case Some(schema) =>
-        snapshotMeta(dir) match {
-          case Some(meta) =>
-            val marker = dir.resolve(CommittedMarker)
-            org.apache.spark.sql.graft.bridge.manifestRead(
-              spark, dir.toString, schema, partColsOfDir(dir),
-              meta.entries, meta.ranges, meta.nulls,
-              () => Files.exists(marker),
-              s"snapshot ${dir.getFileName} under ${dir.getParent} was expired " +
-                "(VACUUM/expireVersions) between read planning and execution — " +
-                "re-resolve the live table with a fresh TableMerge.read and " +
-                "retry, or raise the retention horizon so readers outlive it")
-          case None => spark.read.schema(schema).parquet(dir.toString)
-        }
-      case None => spark.read.option("mergeSchema", "true").parquet(dir.toString)
-    }
+    val meta = snapshotMeta(dir)
     // physical files → logical view (identity for unmapped tables)
-    applyColMap(physical, dir)
+    applyColMap(manifestScan(spark, dir, dir, meta.schema, meta.partCols,
+      meta.entries, meta.ranges, meta.nulls), dir)
   }
 
   private def versionDirs(tablePath: String): Seq[java.io.File] =
@@ -620,102 +637,46 @@ object TableMerge {
   private def isCommitted(dir: java.io.File): Boolean =
     Files.exists(dir.toPath.resolve(CommittedMarker))
 
-  /** The live version's partition-column chain, inferred from its
-    * `col=val` directory nesting (empty for an unpartitioned table or
-    * a zero-row layout). Metadata-only: reads directory NAMES, never
-    * data — the SQL MERGE planner uses it to decide whether the
+  /** The live version's partition-column chain, from its parts sidecar
+    * (empty for an unpartitioned table, or no table). Metadata-only —
+    * the SQL MERGE planner uses it to decide whether the
     * partition-scoped copy-on-write path applies. */
   def partitionColsOf(tablePath: String): Seq[String] =
-    resolveLive(tablePath) match {
-      case None => Seq.empty
-      case Some(live) => layoutPartColsOfDir(live)
-    }
-
-  /** Partition-column chain of a snapshot dir: the persisted sidecar
-    * when present, else `col=val` directory-name inference (legacy
-    * pre-sidecar layouts). */
-  private def layoutPartColsOfDir(live: Path): Seq[String] =
-    if (Files.exists(live.resolve(PartsFile))) partColsOfDir(live)
-    else {
-      val b = Seq.newBuilder[String]
-      var dir = live
-      var going = true
-      while (going) {
-        val sub = Option(dir.toFile.listFiles()).getOrElse(Array.empty)
-          .filter(f => f.isDirectory && f.getName.contains("="))
-        if (sub.isEmpty) going = false
-        else {
-          b += sub.head.getName.split("=", 2)(0)
-          dir = sub.head.toPath
-        }
-      }
-      b.result()
-    }
+    resolveLive(tablePath).map(partColsOfDir).getOrElse(Seq.empty)
 
   /** The partition-SCOPED copy-on-write path is only sound when the
     * BASE snapshot is laid out by exactly the same partition chain:
-    * hard-link carry moves `col=val` trees, so a base written flat (or
-    * partitioned differently — e.g. a prior delete() without
-    * partitionCols restated it unpartitioned) has files the carry
-    * would silently SKIP, losing their rows from the new version (r19
-    * self-review: pre-manifest this was a latent data-loss class; the
-    * manifest's ledger-vs-tree consistency made it loud). A layout
-    * mismatch takes the full-restatement path, which is also the
-    * correct semantics for a re-partitioning write. */
+    * the carry keeps every file outside the touched `col=val` dirs, so
+    * the files of a base written flat (or partitioned differently — e.g.
+    * a prior delete() without partitionCols restated it unpartitioned)
+    * lie in no touched dir and would carry beside their rewritten rows,
+    * duplicating them. A layout mismatch takes the
+    * full-restatement path, which is also the correct semantics for a
+    * re-partitioning write. */
   private def baseLayoutMatches(liveDir: Path, partitionCols: Seq[String]): Boolean = {
-    val base = layoutPartColsOfDir(liveDir)
+    val base = partColsOfDir(liveDir)
     base.length == partitionCols.length &&
       base.zip(partitionCols).forall { case (a, b) => a.equalsIgnoreCase(b) }
   }
 
+  /** The live snapshot, planned from its manifest. */
   def read(spark: SparkSession, tablePath: String): DataFrame =
-    resolveLive(tablePath) match {
-      case Some(dir) =>
-        // manifest-carrying snapshots (every commit since manifests
-        // landed) plan from the commit-time manifest via readSnapshot:
-        // zero directory listing, automatic stats/null pruning. The
-        // legacy branch serves PRE-manifest z-ordered snapshots through
-        // the directory-walking stats-pruning FileIndex, so their file
-        // skipping keeps working until their next commit upgrades them.
-        sidecarSchema(dir) match {
-          case Some(schema) if snapshotMeta(dir).isEmpty &&
-              Files.exists(dir.resolve(StatsFile)) =>
-            val (ranges, nulls) = parseStatsLedger(dir)
-            // legacy snapshots get the SAME reader-vs-VACUUM contract
-            // as manifest-planned ones: probe the commit marker (or
-            // the dir itself for pre-marker layouts) at plan/exec time
-            val marker = dir.resolve(CommittedMarker)
-            val probe: () => Boolean =
-              if (Files.exists(marker)) () => Files.exists(marker)
-              else () => Files.exists(dir)
-            applyColMap(org.apache.spark.sql.graft.bridge.statsPrunedRead(
-              spark, dir.toString, schema, ranges, nulls, probe,
-              s"snapshot ${dir.getFileName} under ${dir.getParent} was expired " +
-                "(VACUUM/expireVersions) between read planning and execution — " +
-                "re-resolve the live table with a fresh TableMerge.read and retry, " +
-                "or raise the retention horizon so readers outlive it"), dir)
-          case _ => readSnapshot(spark, dir)
-        }
-      case None => spark.read.option("mergeSchema", "true").parquet(tablePath)
-    }
+    readSnapshot(spark, liveDirOf(tablePath))
 
   /** Row count of the live snapshot, summed from the parquet footers
     * of the data files its manifest lists: footer reads on the driver,
     * no Spark job. Copy-on-write snapshots carry no deletion markers,
-    * so footer counts are exact. A table without a manifest (a legacy
-    * layout) is counted with a scan. */
-  def rowCount(spark: SparkSession, tablePath: String): Long =
-    resolveLive(tablePath).flatMap(dir => snapshotMeta(dir).map(dir -> _)) match {
-      case Some((dir, meta)) =>
-        val conf = spark.sparkContext.hadoopConfiguration
-        meta.entries.iterator.map { case (rel, _) =>
-          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-              new org.apache.hadoop.fs.Path(dir.resolve(rel).toUri), conf))
-          try reader.getRecordCount finally reader.close()
-        }.sum
-      case None => read(spark, tablePath).count()
-    }
+    * so footer counts are exact. */
+  def rowCount(spark: SparkSession, tablePath: String): Long = {
+    val dir = liveDirOf(tablePath)
+    val conf = spark.sparkContext.hadoopConfiguration
+    snapshotMeta(dir).entries.iterator.map { case (rel, _) =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(dir.resolve(rel).toUri), conf))
+      try reader.getRecordCount finally reader.close()
+    }.sum
+  }
 
   /** Retained COMMITTED snapshot names, newest first; the head entry
     * of a committed table is the live one. In-flight staging dirs (no
@@ -769,16 +730,17 @@ object TableMerge {
                       meta: Map[String, String] = Map.empty): Unit =
     writeVersion(df, tablePath, partitionCols, AnyParent, meta)
 
-  /** Resolve the snapshot a merge reads: live version dir (or the
-    * legacy top-level layout when no pointer exists) + its DataFrame.
-    * Conflict if the base version was pruned while resolving. */
+  /** The version dir a merge computes from (`base`, the pointer it
+    * resolved); conflict if it was pruned while resolving. */
+  private def baseDir(tablePath: String, base: Option[String]): Path =
+    base.map(v => Paths.get(tablePath, v)).filter(Files.exists(_)).getOrElse(
+      throw new CommitConflictException(s"$tablePath: base $base pruned mid-merge"))
+
+  /** [[baseDir]] + its DataFrame. */
   private def baseSnapshot(spark: SparkSession, tablePath: String,
                            base: Option[String]): (Path, DataFrame) = {
-    val liveVersion = base.map(v => Paths.get(tablePath, v)).filter(Files.exists(_))
-    if (base.isDefined && liveVersion.isEmpty)
-      throw new CommitConflictException(s"$tablePath: base ${base.get} pruned mid-merge")
-    val liveDir = liveVersion.getOrElse(Paths.get(tablePath))
-    (liveDir, readSnapshot(spark, liveDir))
+    val dir = baseDir(tablePath, base)
+    (dir, readSnapshot(spark, dir))
   }
 
   /** File sizing of an UNPARTITIONED whole-table restatement (the full
@@ -793,9 +755,9 @@ object TableMerge {
     * batch). The merge plan's own partitioning would commit a small
     * table as several files, each one later rewritten by [[compact]].
     * A coalesce only merges partitions, so an estimate above the plan's
-    * partition count changes nothing. When either size is unknown (no
-    * base manifest, or a source without statistics, such as an RDD
-    * that was never materialized), `out` keeps its partitioning.
+    * partition count changes nothing. When the source size is unknown
+    * (a source without statistics, such as an RDD that was never
+    * materialized), `out` keeps its partitioning.
     * Partitioned writes keep theirs: one writer task per dir is their
     * own sizing rule. So do tables with declared stat columns ([[zorder]],
     * [[analyzeStats]]): their files are the unit of file skipping, and
@@ -805,16 +767,13 @@ object TableMerge {
                                partitionCols: Seq[String]): DataFrame =
     if (partitionCols.nonEmpty || base.exists(statColsOfDir(_).nonEmpty)) out
     else {
-      val baseBytes = base match {
-        case None => Some(0L)
-        case Some(dir) => snapshotMeta(dir).map(_.entries.iterator.map(_._2).sum)
-      }
-      (baseBytes, org.apache.spark.sql.graft.bridge.observedSizeInBytes(source)) match {
-        case (Some(b), Some(sourceBytes)) =>
+      val baseBytes = base.fold(0L)(snapshotMeta(_).entries.iterator.map(_._2).sum)
+      org.apache.spark.sql.graft.bridge.observedSizeInBytes(source) match {
+        case Some(sourceBytes) =>
           val perFile = out.sparkSession.sessionState.conf.filesMaxPartitionBytes
-          val files = ((sourceBytes + b + perFile - 1) / perFile).max(1).min(Int.MaxValue)
+          val files = ((sourceBytes + baseBytes + perFile - 1) / perFile).max(1).min(Int.MaxValue)
           out.coalesce(files.toInt)
-        case _ => out
+        case None => out
       }
     }
 
@@ -831,12 +790,10 @@ object TableMerge {
       case Parent(_) => resolveLive(tablePath)
       case AnyParent => None
     }
-    val mapping = live.flatMap(colMapOf)
-    val (physDf, newMap) = mapping match {
-      case Some(m) =>
-        val reserved = live.flatMap(sidecarSchema).map(_.map(_.name): Seq[String])
-          .getOrElse(Seq.empty)
-        val (p, entries) = toPhysical(df, m, reserved); (p, Some(entries))
+    val (physDf, newMap) = live.flatMap(dir => colMapOf(dir).map(dir -> _)) match {
+      case Some((dir, m)) =>
+        val (p, entries) = toPhysical(df, m, snapshotMeta(dir).schema.map(_.name))
+        (p, Some(entries))
       case None => (df, None)
     }
     // the caller names LOGICAL partition columns; the physical frame may
@@ -885,7 +842,7 @@ object TableMerge {
       require(keys.nonEmpty, "merge keys required")
       val src = source.dropDuplicates(keys)
       val base = currentVersionName(tablePath)
-      if (base.isEmpty && !exists(tablePath)) {
+      if (base.isEmpty) {
         // bootstrap: committed iff no concurrent bootstrap won the race
         writeVersion(sizedRestatement(src, src, None, partitionCols),
           tablePath, partitionCols, Parent(None), meta)
@@ -930,7 +887,7 @@ object TableMerge {
     retryOnConflict(CommitRetries) {
       require(groupKeys.nonEmpty, "group keys required")
       val base = currentVersionName(tablePath)
-      if (base.isEmpty && !exists(tablePath))
+      if (base.isEmpty)
         writeVersion(sizedRestatement(source, source, None, partitionCols),
           tablePath, partitionCols, Parent(None), meta)
       else conflictIfBaseMoved(tablePath, base) {
@@ -1012,9 +969,8 @@ object TableMerge {
       // column still living in the carried files
       val (physDf, newMap) = colMapOf(liveDir) match {
         case Some(cm) =>
-          val reserved = sidecarSchema(liveDir).map(_.map(_.name): Seq[String])
-            .getOrElse(Seq.empty)
-          val (p, entries) = toPhysical(merged, cm, reserved); (p, Some(entries))
+          val (p, entries) = toPhysical(merged, cm, snapshotMeta(liveDir).schema.map(_.name))
+          (p, Some(entries))
         case None => (merged, None)
       }
       // cluster by the partition columns before the partitioned write:
@@ -1030,17 +986,17 @@ object TableMerge {
       writeSchemaSidecar(version, m.schema, partitionCols)
       writeTxnSidecar(version, meta)
       newMap.foreach(writeColMap(version, _))
-      val fresh = freshStatsFor(spark, liveDir, version, m.schema, partitionCols)
+      val fresh = collectStatsRows(spark, version, m.schema, partitionCols,
+        statColsOfDir(liveDir))
       // fresh manifest rows cover ONLY the rewritten partitions (the
-      // staging tree before the untouched trees hard-link in) — the
+      // staging tree before the untouched files hard-link in) — the
       // incremental discipline: commit cost scales with what was
       // written, not with table file count
       val freshManifest = manifestRowsOfTree(version)
       val touchedDirs = dirsOfTouchedRows(touched.columns, touchedStrs)
-      carryUntouchedPartitions(liveDir, version, partitionCols, touchedDirs)
-      carryStats(liveDir, version, touchedDirs, fresh)
-      carryManifest(liveDir, version,
-        rel => touchedDirs.exists(d => rel.startsWith(d + "/")), freshManifest)
+      val rewritten = (rel: String) => touchedDirs.contains(unitOf(rel))
+      carryFiles(liveDir, version, rewritten, freshManifest)
+      carryStats(liveDir, version, rewritten, fresh)
       commitVersion(tablePath, version, Parent(base))
     }
   }
@@ -1061,12 +1017,11 @@ object TableMerge {
       meta: Map[String, String] = Map.empty): Unit =
     retryOnConflict(CommitRetries) {
       val base = currentVersionName(tablePath)
-      if (base.isEmpty && !exists(tablePath))
+      if (base.isEmpty)
         writeVersion(sizedRestatement(df, df, None, partitionCols),
           tablePath, partitionCols, Parent(None), meta)
       else conflictIfBaseMoved(tablePath, base) {
-        val liveDir = base.fold(Paths.get(tablePath))(Paths.get(tablePath, _))
-        writeVersion(sizedRestatement(df, df, Some(liveDir), partitionCols),
+        writeVersion(sizedRestatement(df, df, Some(baseDir(tablePath, base)), partitionCols),
           tablePath, partitionCols, Parent(base), meta)
       }
     }
@@ -1080,11 +1035,11 @@ object TableMerge {
              keys: Seq[String], partitionCols: Seq[String] = Seq.empty): Unit =
     retryOnConflict(CommitRetries) {
       val base = currentVersionName(tablePath)
-      if (base.nonEmpty || exists(tablePath)) conflictIfBaseMoved(tablePath, base) {
+      if (base.nonEmpty) conflictIfBaseMoved(tablePath, base) {
         val (liveDir, target) = baseSnapshot(spark, tablePath, base)
         val layout =
           if (partitionCols.nonEmpty) partitionCols
-          else layoutPartColsOfDir(liveDir)
+          else partColsOfDir(liveDir)
         val remaining = target.join(
           deleteKeys.select(keys.map(col): _*).distinct(), keys, "left_anti")
         writeVersion(sizedRestatement(remaining, deleteKeys, Some(liveDir), layout),
@@ -1092,121 +1047,117 @@ object TableMerge {
       }
     }
 
-  /** OPTIMIZE-style small-file compaction: partition trees whose
-    * parquet file count exceeds `maxFiles` are rewritten into
-    * `targetFiles` files; every other partition is hard-linked into the
-    * new version untouched. Commits through the same CAS pointer swap
-    * as merges, so compaction runs concurrently with readers and loses
-    * cleanly (replays) against concurrent writers. This is the
-    * maintenance half of the streaming merge sink: a partition-scoped
-    * rewrite emits one file per merge-shuffle task that held the
-    * partition's rows — up to shuffle.partitions small files per hot
-    * bucket per micro-batch — and compaction folds them back without
-    * blocking the stream. At 100 TB, `targetFiles` is sized from
-    * partition bytes / desired file size rather than a constant. */
+  /** Compaction units of a committed snapshot, from its manifest: the
+    * entries grouped by [[unitOf]], each with its entries relative to
+    * the unit, in unit order. */
+  private def unitsOf(meta: SnapshotMeta): Seq[(String, Seq[(String, Long)])] =
+    meta.entries.groupBy { case (rel, _) => unitOf(rel) }
+      .toSeq.sortBy(_._1).map { case (unit, es) =>
+        val cut = if (unit.isEmpty) 0 else unit.length + 1
+        unit -> es.map { case (rel, size) => (rel.substring(cut), size) }
+      }
+
+  /** The shared tail of [[compact]] and [[zorder]]: stage a version in
+    * which each of `units` (from [[unitsOf]]) is rewritten by `rewrite`
+    * (given the unit's rows and file count) from a manifest-planned read
+    * of exactly its entries — the FileIndex [[read]] uses, so a rewrite
+    * sees exactly the rows a read sees. Every other manifest entry
+    * hard-links name-unchanged, the schema/parts/column-map sidecars
+    * carry, `statCols` are declared and recorded for the rewritten
+    * files while the others keep their stats; then CAS-commit against
+    * `base`. Units are disjoint subtrees (one dest dir each), rewritten
+    * from a small driver pool so the per-unit Spark jobs overlap instead
+    * of serializing (guide §2.6, r20); each thunk builds its own
+    * DataFrame, since they run on pool threads (r21). Returns the number
+    * of units rewritten. */
+  private def rewriteUnits(spark: SparkSession, tablePath: String, liveDir: Path,
+      base: Option[String], units: Seq[(String, Seq[(String, Long)])],
+      statCols: Seq[String])(rewrite: (DataFrame, Int) => DataFrame): Int = {
+    val meta = snapshotMeta(liveDir)
+    // unit files hold the DATA columns (partition values live in dir
+    // names); reading them under the sidecar schema gives files that
+    // predate an ALTER ADD COLUMNS typed NULLs for the new columns
+    val dataSchema = org.apache.spark.sql.types.StructType(
+      meta.schema.filterNot(f => meta.partCols.contains(f.name)))
+    val version = newVersionDir(tablePath)
+    Files.createDirectories(version)
+    graft.Par.inParallel(units.map { case (unit, entries) =>
+      () => rewrite(manifestScan(spark, liveDir, liveDir.resolve(unit), dataSchema,
+          Seq.empty, entries, Map.empty, Map.empty), entries.size)
+        .write.mode(SaveMode.Overwrite).parquet(version.resolve(unit).toString)
+    }): Unit
+    // rewrites change files, not schema: carry the sidecars over
+    Seq(SchemaFile, PartsFile, ColMapFile).foreach(copySidecar(liveDir, version, _))
+    writeStatCols(version, statCols)
+    // stats and manifest rows of the rewritten files, taken before the
+    // other files link in
+    val fresh = collectStatsRows(spark, version, meta.schema, meta.partCols, statCols)
+    val freshManifest = manifestRowsOfTree(version)
+    val rewrittenUnits = units.map(_._1).toSet
+    val rewritten = (rel: String) => rewrittenUnits.contains(unitOf(rel))
+    carryFiles(liveDir, version, rewritten, freshManifest)
+    carryStats(liveDir, version, rewritten, fresh)
+    commitVersion(tablePath, version, Parent(base))
+    units.size
+  }
+
+  /** OPTIMIZE-style small-file compaction: compaction units (see
+    * [[unitsOf]]; `partitionCols` names the layout, so only units that
+    * many `col=val` levels deep are candidates) whose manifest lists
+    * more than `maxFiles` files are rewritten into `targetFiles` files;
+    * every other file is hard-linked into the new version untouched.
+    * Commits through the same CAS pointer swap as merges, so compaction
+    * runs concurrently with readers and loses cleanly (replays) against
+    * concurrent writers. This is the maintenance half of the streaming
+    * merge sink: a partition-scoped rewrite emits one file per
+    * merge-shuffle task that held the partition's rows — up to
+    * shuffle.partitions small files per hot bucket per micro-batch — and
+    * compaction folds them back without blocking the stream. At 100 TB,
+    * `targetFiles` is sized from partition bytes / desired file size
+    * rather than a constant. Returns the number of units rewritten. */
   def compact(spark: SparkSession, tablePath: String, partitionCols: Seq[String],
               maxFiles: Int = 4, targetFiles: Int = 1): Int =
     retryOnConflict(CommitRetries) {
       val base = currentVersionName(tablePath)
-      if (base.isEmpty && !exists(tablePath)) 0
+      if (base.isEmpty) 0
       else conflictIfBaseMoved(tablePath, base) {
-        val (liveDir, _) = baseSnapshot(spark, tablePath, base)
-        if (partitionCols.isEmpty) {
-          // unpartitioned: the snapshot root is the one compaction unit —
-          // rewrite the whole table when its file count overflows
-          val n = Option(liveDir.toFile.listFiles()).getOrElse(Array.empty)
-            .count(_.getName.endsWith(".parquet"))
-          if (n > maxFiles) {
-            writeVersion(readSnapshot(spark, liveDir).coalesce(targetFiles),
-              tablePath, Seq.empty, Parent(base))
-            1
-          } else 0
-        } else {
-          // metadata-only walk: partition rel-paths with too many files
-          def walk(dir: Path, depth: Int, prefix: String): Seq[String] = {
-            val children = Option(dir.toFile.listFiles()).getOrElse(Array.empty)
-            if (depth == partitionCols.length)
-              if (children.count(_.getName.endsWith(".parquet")) > maxFiles) Seq(prefix)
-              else Seq.empty
-            else children.filter(f => f.isDirectory && f.getName.contains("="))
-              .flatMap(d => walk(d.toPath,  depth + 1,
-                if (prefix.isEmpty) d.getName else s"$prefix/${d.getName}")).toSeq
-          }
-          val overflowing = walk(liveDir, 0, "")
-          if (overflowing.nonEmpty) {
-            val version = newVersionDir(tablePath)
-            Files.createDirectories(version)
-            // unit reads pin the sidecar DATA schema, like zorder's
-            // unitReader: a unit mixing pre- and post-ALTER files must
-            // rewrite with the evolved column (typed NULLs on old
-            // files), not whatever one footer's inference says — with
-            // inference, a first-footer pick predating the ALTER would
-            // silently DROP the evolved column's values from the unit
-            // built PER THUNK below: DataFrameReader is mutable (not
-            // thread-safe) and the thunks run on pool threads (r21)
-            val dataSchema = sidecarSchema(liveDir)
-            def unitReader = dataSchema match {
-              case Some(full) =>
-                spark.read.schema(org.apache.spark.sql.types.StructType(
-                  full.filterNot(f => partitionCols.contains(f.name))))
-              case None => spark.read.option("mergeSchema", "true")
-            }
-            // disjoint unit subtrees — same driver-pool overlap as the
-            // zorder rewrite (guide §2.6); identical per-unit output
-            graft.Par.inParallel(overflowing.map { rel =>
-              () => unitReader.parquet(liveDir.resolve(rel).toString)
-                .coalesce(targetFiles)
-                .write.mode(SaveMode.Overwrite).parquet(version.resolve(rel).toString)
-            }): Unit
-            // compaction rewrites files, not schema: carry the sidecars
-            // over; rewritten units get FRESH stats (their files carry
-            // new names), untouched partitions keep theirs verbatim
-            Seq(SchemaFile, PartsFile, ColMapFile).foreach { name =>
-              val side = liveDir.resolve(name)
-              if (Files.exists(side))
-                Files.copy(side, version.resolve(name),
-                  StandardCopyOption.REPLACE_EXISTING): Unit
-            }
-            val statSchema = sidecarSchema(liveDir)
-              .getOrElse(readSnapshot(spark, liveDir).schema)
-            val fresh = freshStatsFor(spark, liveDir, version, statSchema, partitionCols)
-            val freshManifest = manifestRowsOfTree(version)
-            carryUntouchedPartitions(liveDir, version, partitionCols, overflowing.toSet)
-            carryStats(liveDir, version, overflowing.toSet, fresh)
-            carryManifest(liveDir, version,
-              rel => overflowing.exists(d => rel.startsWith(d + "/")), freshManifest)
-            commitVersion(tablePath, version, Parent(base))
-          }
-          overflowing.length
+        val liveDir = baseDir(tablePath, base)
+        val overflowing = unitsOf(snapshotMeta(liveDir)).filter { case (unit, entries) =>
+          val depth = if (unit.isEmpty) 0 else unit.count(_ == '/') + 1
+          depth == partitionCols.length && entries.size > maxFiles
         }
+        if (overflowing.isEmpty) 0
+        else rewriteUnits(spark, tablePath, liveDir, base, overflowing,
+          statColsOfDir(liveDir))((rows, _) => rows.coalesce(targetFiles))
       }
     }
 
   /** OPTIMIZE … ZORDER BY — rewrite EVERY compaction unit of the live
-    * snapshot (each leaf partition dir; the snapshot root when
-    * unpartitioned) with rows re-clustered by the interleaved z-order
-    * key of (`xCol`, `yCol`) via [[Layout.zOrdered]]: each unit keeps
-    * its file count, but files become contiguous z-slices, so parquet
-    * footer min/max stats span bounded rectangles in both columns and
-    * selective scans skip whole files instead of reading everything.
-    * Unlike [[compact]] there are no quiet units — re-clustering IS a
-    * full rewrite of the unit (Delta's `OPTIMIZE … ZORDER BY` has the
-    * same property); at scale the caller scopes it per partition by
-    * keeping partitions small. Content-invariant; commits through the
-    * same CAS pointer swap. Returns the number of units rewritten. */
+    * snapshot (see [[unitsOf]]) with rows re-clustered by the
+    * interleaved z-order key of (`xCol`, `yCol`) via
+    * [[Layout.zOrdered]]: each unit keeps its file count, but files
+    * become contiguous z-slices, so parquet footer min/max stats span
+    * bounded rectangles in both columns and selective scans skip whole
+    * files instead of reading everything. Unlike [[compact]] there are
+    * no quiet units — re-clustering IS a full rewrite of the unit
+    * (Delta's `OPTIMIZE … ZORDER BY` has the same property); at scale
+    * the caller scopes it per partition by keeping partitions small.
+    * Content-invariant; commits through the same CAS pointer swap.
+    * Returns the number of units rewritten. */
   def zorder(spark: SparkSession, tablePath: String, xColIn: String, yColIn: String,
              bits: Int = 16, scope: Option[(String, String)] = None): Int =
     retryOnConflict(CommitRetries) {
       val base = currentVersionName(tablePath)
-      require(base.nonEmpty || exists(tablePath), s"no graft table at $tablePath")
+      require(base.nonEmpty, s"no graft table at $tablePath")
       conflictIfBaseMoved(tablePath, base) {
-        val (liveDir, _) = baseSnapshot(spark, tablePath, base)
+        val liveDir = baseDir(tablePath, base)
+        val meta = snapshotMeta(liveDir)
         // the caller names LOGICAL columns; units and sidecars are the
         // PHYSICAL domain — translate through the mapping up front
         val cmap = colMapOf(liveDir)
         val xCol = physNameIn(cmap, xColIn)
         val yCol = physNameIn(cmap, yColIn)
-        val partitionCols = partitionColsOf(tablePath)
+        val partitionCols = meta.partCols
         // partition columns live in directory NAMES, not in the files
         // the unit reader scans — a partition z-column would fail
         // mid-staging with an unresolved-column error after the version
@@ -1231,119 +1182,36 @@ object TableMerge {
                 s"[${partitionCols.mkString(", ")}]"))
           (canon, v)
         }
-        // leaf units + their current file counts (metadata-only walk)
-        def walk(dir: Path, depth: Int, prefix: String): Seq[(String, Int)] = {
-          val children = Option(dir.toFile.listFiles()).getOrElse(Array.empty)
-          if (depth == partitionCols.length) {
-            val n = children.count(_.getName.endsWith(".parquet"))
-            if (n > 0) Seq(prefix -> n) else Seq.empty
-          } else children.filter(f => f.isDirectory && f.getName.contains("="))
-            .flatMap(d => walk(d.toPath, depth + 1,
-              if (prefix.isEmpty) d.getName else s"$prefix/${d.getName}")).toSeq
-        }
-        val units = walk(liveDir, 0, "").filter { case (rel, _) =>
-          scopeNorm.forall { case (c, v) => rel.split('/').contains(s"$c=$v") }
+        val units = unitsOf(meta).filter { case (unit, _) =>
+          scopeNorm.forall { case (c, v) => unit.split('/').contains(s"$c=$v") }
         }
         if (units.isEmpty) 0
         else {
-          val version = newVersionDir(tablePath)
-          Files.createDirectories(version)
-          // unit reads use the snapshot's sidecar schema (minus the
-          // partition columns, which live in the dir names): files
-          // predating an ALTER ADD COLUMNS lack the new columns and
-          // must read as typed NULLs, not fail resolution
-          val fullSchema = sidecarSchema(liveDir)
-          // def, not val: DataFrameReader is mutable (parquet() writes
-          // its source field), and the unit thunks below run on pool
-          // threads — each gets its own reader (r21)
-          def unitReader = fullSchema match {
-            case Some(full) =>
-              spark.read.schema(org.apache.spark.sql.types.StructType(
-                full.filterNot(f => partitionCols.contains(f.name))))
-            case None => spark.read.option("mergeSchema", "true")
-          }
           // record stats under the schema's OWN column case: Catalyst
           // resolves `col("USER_ID")` case-insensitively, so a
           // case-differing ZORDER BY identifier must not key the
           // sidecar under a name no pushed-filter attribute will match
-          def canon(c: String): String = fullSchema
-            .flatMap(_.find(_.name.equalsIgnoreCase(c)).map(_.name)).getOrElse(c)
-          val xName = canon(xCol)
-          val yName = canon(yCol)
-          // units are disjoint subtrees (one dest dir each): rewrite
-          // them from a small driver pool so the per-unit Spark jobs
-          // overlap instead of serializing — one straggling unit no
-          // longer holds every other unit's idle executors (guide
-          // §2.6; at scale a partition-scoped OPTIMIZE rewrites many
-          // day-partitions the same way). Identical per-unit plans and
-          // bytes; only the job schedule changes (r20).
-          graft.Par.inParallel(units.map { case (rel, nFiles) =>
-            () => {
-              val src = if (rel.isEmpty) liveDir else liveDir.resolve(rel)
-              val dest = if (rel.isEmpty) version else version.resolve(rel)
-              Layout.zOrdered(unitReader.parquet(src.toString), xCol, yCol,
-                  math.max(1, nFiles), bits)
-                .write.mode(SaveMode.Overwrite).parquet(dest.toString)
-            }
-          }): Unit
+          def canon(c: String): String =
+            meta.schema.find(_.name.equalsIgnoreCase(c)).map(_.name).getOrElse(c)
           // ZORDER BY also DECLARES its columns as the table's stat
           // columns: every subsequent write path (merge, insert,
           // compaction) re-records per-file ranges for them, so file
           // skipping survives the table's live merge cycle instead of
           // decaying until the next ZORDER (VERDICT r17 #1)
-          val statColsNew = {
-            val existing = statColsOfDir(liveDir)
-            existing ++ Seq(xName, yName)
-              .filterNot(c => existing.exists(_.equalsIgnoreCase(c)))
-          }
-          writeStatCols(version, statColsNew)
-          // typed per-file range stats of the freshly-written z-slices
-          // (the Delta per-file-stats analogue): one bounded min/max
-          // scan of the staged rewrite, stats in each column's own
-          // unit (long / epoch-days / epoch-micros / UTF-8 string)
-          val statSchema = fullSchema.getOrElse(readSnapshot(spark, liveDir).schema)
-          val statRows = collectStatsRows(spark, version, statSchema,
-            partitionCols, statColsNew)
-          // merge surviving stats of units NOT rewritten (their files
-          // hard-link through unchanged, so their ranges stay valid)
-          val rewritten = units.map { case (rel, _) =>
-            if (rel.isEmpty) "" else rel + "/" }.toSet
-          locally {
-            val p = liveDir.resolve(StatsFile)
-            def emit(old: Iterator[String]): Unit =
-              writeLines(version.resolve(StatsFile), old ++ statRows.iterator)
-            if (!Files.exists(p)) emit(Iterator.empty)
-            else withLedgerLines(p) { lines =>
-              emit(lines.filter { l =>
-                val rel = l.takeWhile(_ != '\t')
-                !rewritten.exists(pre => pre.isEmpty || rel.startsWith(pre))
-              })
-            }
-          }
-          // re-clustering rewrites files, not schema: carry sidecars over
-          Seq(SchemaFile, PartsFile, ColMapFile).foreach { name =>
-            val side = liveDir.resolve(name)
-            if (Files.exists(side))
-              Files.copy(side, version.resolve(name),
-                StandardCopyOption.REPLACE_EXISTING): Unit
-          }
-          val freshManifest = manifestRowsOfTree(version)
-          if (partitionCols.nonEmpty)
-            carryUntouchedPartitions(liveDir, version, partitionCols,
-              units.map(_._1).toSet)
-          carryManifest(liveDir, version,
-            rel => rewritten.exists(pre => pre.isEmpty || rel.startsWith(pre)),
-            freshManifest)
-          commitVersion(tablePath, version, Parent(base))
-          units.size
+          val existing = statColsOfDir(liveDir)
+          val statCols = existing ++ Seq(canon(xCol), canon(yCol))
+            .filterNot(c => existing.exists(_.equalsIgnoreCase(c)))
+          rewriteUnits(spark, tablePath, liveDir, base, units, statCols)(
+            (rows, nFiles) => Layout.zOrdered(rows, xCol, yCol, nFiles, bits))
         }
       }
     }
 
   /** Per-file column-range stats sidecar (TSV: relPath, col, kind,
     * min, max — kind `i` integral long, `d` date epoch-days, `t`
-    * timestamp epoch-micros, `s` UTF-8-binary string; pre-r18 4-field
-    * rows parse as kind `i`). The file-level analogue of Delta's
+    * timestamp epoch-micros, `s` UTF-8-binary string; `n` rows carry
+    * null and row counts, and a row of any other shape records
+    * nothing). The file-level analogue of Delta's
     * per-file stats in the transaction log: EVERY write path records
     * ranges for the table's declared stat columns ([[statColumnsOf]]),
     * so file skipping survives live merge cycles instead of decaying
@@ -1449,9 +1317,9 @@ object TableMerge {
   }
 
   /** Stats of the live snapshot: relPath → col → typed range. Empty
-    * when the live version carries no sidecar. */
+    * when there is no table or the live version records no stats. */
   def fileStats(tablePath: String): Map[String, Map[String, ColRange]] =
-    fileStatsOf(resolveLive(tablePath).getOrElse(Paths.get(tablePath)))
+    resolveLive(tablePath).map(parseStatsLedger(_)._1).getOrElse(Map.empty)
 
   /** ONE streamed pass over the stats ledger → (ranges, null counts):
     * the ledger is the metadata plane's largest artifact, so it is
@@ -1479,9 +1347,6 @@ object TableMerge {
             case Array(rel, c, "n", nn, total) =>
               nulls.getOrElseUpdate(rel, mutable.Map()) +=
                 c -> ((nn.toLong, total.toLong))
-            case Array(rel, c, lo, hi) => // pre-r18 legacy row: integral long
-              ranges.getOrElseUpdate(rel, mutable.Map()) +=
-                c -> NumRange('i', lo.toLong, hi.toLong)
             case Array(rel, c, "s", lo, hi) =>
               ranges.getOrElseUpdate(rel, mutable.Map()) +=
                 c -> StrRange(unescStat(lo), unescStat(hi))
@@ -1496,9 +1361,6 @@ object TableMerge {
       (ranges.view.mapValues(_.toMap).toMap, nulls.view.mapValues(_.toMap).toMap)
     }
   }
-
-  private def fileStatsOf(live: Path): Map[String, Map[String, ColRange]] =
-    parseStatsLedger(live)._1
 
   /** Declared stat columns of the live snapshot (canonical schema
     * case), empty when none were ever declared. */
@@ -1601,61 +1463,21 @@ object TableMerge {
     }
   }
 
-  /** FILE-SKIPPING read: `read(path).filter(col BETWEEN lo AND hi)`,
-    * except files whose sidecar range provably misses [lo, hi] are
+  /** FILE-SKIPPING read: `read(path).filter(CAST(col AS BIGINT)
+    * BETWEEN lo AND hi)`, planned from the live manifest like every
+    * read, so files whose recorded range provably misses [lo, hi] are
     * dropped from the scan BEFORE any parquet footer is opened — the
     * payoff of [[zorder]]'s clustered layout (each file's range is a
-    * bounded slice, so a selective predicate keeps few files). Files
-    * with no recorded stats are always read (safe fallback: a merge
-    * after the zorder adds files without stats; they scan normally).
-    * Semantically identical to the filtered full read at any layout. */
+    * bounded slice, so a selective predicate keeps few files). The
+    * optimizer removes the cast of an integral column, so the range
+    * reaches the manifest index as a pushed filter; other column types
+    * keep their cast and every file. Files with no recorded stats are
+    * always read (a merge after the zorder adds files without stats;
+    * they scan normally). Semantically identical to the filtered full
+    * read at any layout, because it is that read. */
   def readSkipping(spark: SparkSession, tablePath: String, column: String,
-                   lo: Long, hi: Long): DataFrame = {
-    val live = resolveLive(tablePath).getOrElse(Paths.get(tablePath))
-    val stats = fileStats(tablePath)
-    // the caller names a LOGICAL column; stats/files are physical
-    val physColumn = physNameOf(tablePath, column)
-    // stats keys are canonical schema-case names; accept any case here
-    // (Spark column resolution is case-insensitive, the lookup must be)
-    val colKey = sidecarSchema(live)
-      .flatMap(_.find(_.name.equalsIgnoreCase(physColumn)).map(_.name))
-      .getOrElse(physColumn)
-    def files(dir: java.io.File, prefix: String): Seq[(String, String)] =
-      Option(dir.listFiles()).getOrElse(Array.empty).toSeq.flatMap { f =>
-        if (f.isDirectory && f.getName.contains("="))
-          files(f, if (prefix.isEmpty) f.getName else s"$prefix/${f.getName}")
-        else if (f.getName.endsWith(".parquet"))
-          Seq((if (prefix.isEmpty) f.getName else s"$prefix/${f.getName}", f.getPath))
-        else Seq.empty
-      }
-    val all = files(live.toFile, "")
-    val kept = all.filter { case (rel, _) =>
-      stats.get(rel).flatMap(_.get(colKey)) match {
-        // this explicit entry point takes a LONG range, so only
-        // integral-kind stats may prune; date/timestamp/string stats
-        // have their own units and prune through the automatic typed
-        // path in read() — here they conservatively keep the file
-        case Some(NumRange('i', fLo, fHi)) => fHi >= lo && fLo <= hi
-        case _ => true // no (comparable) stats recorded: must read
-      }
-    }
-    if (kept.isEmpty)
-      read(spark, tablePath).filter(col(column).cast("long").between(lo, hi)).limit(0)
-    else {
-      // read with the snapshot's SIDECAR schema, exactly like read():
-      // footer inference from an arbitrary kept file would drop columns
-      // added by a post-zorder ALTER on partitions whose files predate
-      // it — the skipping read must be column-identical to the full read
-      val reader = sidecarSchema(live) match {
-        case Some(schema) => spark.read.schema(schema)
-        case None => spark.read.option("mergeSchema", "true")
-      }
-      // filter in the PHYSICAL domain, then surface the logical view
-      applyColMap(reader.option("basePath", live.toString)
-        .parquet(kept.map(_._2): _*)
-        .filter(col(colKey).cast("long").between(lo, hi)), live)
-    }
-  }
+                   lo: Long, hi: Long): DataFrame =
+    read(spark, tablePath).filter(col(column).cast("long").between(lo, hi))
 
   /** ANALYZE — declare `columns` as the table's stat columns and
     * (re)compute per-file range stats for every live data file (the
@@ -1676,10 +1498,11 @@ object TableMerge {
     retryOnConflict(CommitRetries) {
       require(columns.nonEmpty, "no stat columns given")
       val base = currentVersionName(tablePath)
-      require(base.nonEmpty || exists(tablePath), s"no graft table at $tablePath")
+      require(base.nonEmpty, s"no graft table at $tablePath")
       conflictIfBaseMoved(tablePath, base) {
         val (liveDir, df) = baseSnapshot(spark, tablePath, base)
-        val partNames = partitionColsOf(tablePath)
+        val meta = snapshotMeta(liveDir)
+        val partNames = meta.partCols
         val cmap = colMapOf(liveDir)
         // validate against the LOGICAL schema (what the caller sees),
         // declare and scan in the PHYSICAL domain (what the files and
@@ -1694,25 +1517,7 @@ object TableMerge {
               "(supported: integral, date, timestamp, default-collation string)")
           physNameIn(cmap, f.name)
         }
-        val physSchema = sidecarSchema(liveDir).getOrElse(df.schema)
-        val version = newVersionDir(tablePath)
-        Files.createDirectories(version)
-        // legacy pointerless layout: liveDir == tablePath, which now
-        // contains the fresh staging dir itself — version dirs must
-        // never link (self-link would recurse unboundedly)
-        Option(liveDir.toFile.listFiles()).getOrElse(Array.empty)
-          .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith(".") &&
-            !f.getName.startsWith("v-"))
-          .foreach(f => linkTree(f.toPath, version.resolve(f.getName)))
-        // metadata-only commit: every data file links name-unchanged,
-        // so the base manifest carries verbatim (commitVersion would
-        // otherwise backfill with a full staged-tree walk)
-        Seq(SchemaFile, PartsFile, ManifestFile, ColMapFile).foreach { name =>
-          val side = liveDir.resolve(name)
-          if (Files.exists(side))
-            Files.copy(side, version.resolve(name),
-              StandardCopyOption.REPLACE_EXISTING): Unit
-        }
+        val version = stageMetadataOnly(tablePath, liveDir)
         // union into the existing declared set (zorder's additive
         // behavior): ranges recompute for the WHOLE set in one scan,
         // so earlier columns keep skipping rather than silently losing it
@@ -1721,9 +1526,8 @@ object TableMerge {
           existing ++ canon.filterNot(c => existing.exists(_.equalsIgnoreCase(c)))
         }
         writeStatCols(version, declared)
-        val rows = collectStatsRows(spark, version, physSchema, partNames, declared)
-        if (rows.nonEmpty)
-          writeLines(version.resolve(StatsFile), rows.iterator)
+        writeLines(version.resolve(StatsFile),
+          collectStatsRows(spark, version, meta.schema, partNames, declared).iterator)
         commitVersion(tablePath, version, Parent(base))
       }
     }
@@ -1734,12 +1538,10 @@ object TableMerge {
     * FORWARD — the restore is itself an auditable commit, the
     * restored-from snapshot stays immutable, and a bad restore is
     * undone by restoring again). Zero data rewrite at any table size:
-    * the new version links the snapshot's data tree and schema
-    * sidecars; only the commit marker and txn metadata are written
-    * fresh (hard-linking those would alias the inode, and the commit's
-    * write-through would corrupt the source snapshot's identity).
-    * Restoring the live version is a no-op. Returns the live version
-    * name after the call. */
+    * the new version is a metadata-only stage of the snapshot
+    * ([[stageMetadataOnly]]); only the commit marker and txn metadata
+    * are written fresh. Restoring the live version is a no-op. Returns
+    * the live version name after the call. */
   def restore(tablePath: String, version: String): String =
     retryOnConflict(CommitRetries) {
       val src = Paths.get(tablePath, version)
@@ -1749,33 +1551,29 @@ object TableMerge {
       val base = currentVersionName(tablePath)
       if (base.contains(version)) version
       else {
-        val dest = newVersionDir(tablePath)
-        Files.createDirectories(dest)
         // The linking runs OUTSIDE the commit lock (it can be long on a
         // wide table, and the lock's critical section is pointer-sized
         // by design), so a concurrent VACUUM/expireVersions — which only
         // guarantees the LIVE version survives — can delete `src`
         // mid-walk (ADVICE r17). A vanished source file is a base-moved
         // race, not a corruption: convert it to a retryable conflict so
-        // the retry loop re-validates the snapshot still exists, and
-        // drop the half-linked staging dir instead of orphaning it.
-        try Option(src.toFile.listFiles()).getOrElse(Array.empty)
-          .filter(f => f.getName != CommittedMarker && f.getName != TxnFile)
-          .foreach(c => linkTree(c.toPath, dest.resolve(c.getName)))
-        catch {
-          case e: java.nio.file.NoSuchFileException =>
-            deleteRecursively(dest)
-            throw new CommitConflictException(
-              s"$tablePath: snapshot $version expired while restoring " +
-                s"(${Option(e.getMessage).getOrElse("")})")
-        }
+        // the retry loop re-validates the snapshot still exists (the
+        // stage has already dropped its half-linked dir).
+        val dest =
+          try stageMetadataOnly(tablePath, src)
+          catch {
+            case e: java.nio.file.NoSuchFileException =>
+              throw new CommitConflictException(
+                s"$tablePath: snapshot $version expired while restoring " +
+                  s"(${Option(e.getMessage).getOrElse("")})")
+          }
         writeTxnSidecar(dest, Map("restoredFrom" -> version))
         commitVersion(tablePath, dest, Parent(base))
         dest.getFileName.toString
       }
     }
 
-  /** Name of the LIVE version (None for legacy unversioned layouts). */
+  /** Name of the LIVE version (None when there is no table). */
   def liveVersion(tablePath: String): Option[String] = currentVersionName(tablePath)
 
   /** Hard-link CLONE of a committed table into `dest` (replacing it) —
@@ -1812,8 +1610,8 @@ object TableMerge {
 
   /** ALTER TABLE ADD COLUMNS as a METADATA-ONLY commit (the Iceberg
     * schema-log analogue; reference shape `transformer.py:2421-2425`):
-    * the new version hard-links every data file and partition tree of
-    * the live snapshot and only the schema sidecar changes — existing
+    * the new version is a metadata-only stage of the live snapshot
+    * ([[stageMetadataOnly]]) and only the schema sidecar changes — existing
     * parquet files simply lack the new columns and Spark's reader fills
     * them with nulls on scan. Zero data read or rewrite at any table
     * size; commits through the same CAS pointer swap as merges. Added
@@ -1824,7 +1622,7 @@ object TableMerge {
     retryOnConflict(CommitRetries) {
       require(newCols.nonEmpty, "no columns to add")
       val base = currentVersionName(tablePath)
-      require(base.nonEmpty || exists(tablePath), s"no graft table at $tablePath")
+      require(base.nonEmpty, s"no graft table at $tablePath")
       conflictIfBaseMoved(tablePath, base) {
         val (liveDir, df) = baseSnapshot(spark, tablePath, base)
         val existing = df.schema
@@ -1834,24 +1632,17 @@ object TableMerge {
           s"cannot add columns that already exist: ${dup.mkString(", ")}")
         require(newCols.forall(_.nullable),
           "added columns must be nullable (existing rows have no value to backfill)")
-        val version = newVersionDir(tablePath)
-        Files.createDirectories(version)
-        // see analyzeStats: on a legacy pointerless layout liveDir is
-        // the table dir holding the fresh staging dir — never link it
-        Option(liveDir.toFile.listFiles()).getOrElse(Array.empty)
-          .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith(".") &&
-            !f.getName.startsWith("v-"))
-          .foreach(f => linkTree(f.toPath, version.resolve(f.getName)))
+        val version = stageMetadataOnly(tablePath, liveDir)
         // added columns land at the end of the DATA columns; partition
         // columns keep the trailing position (the Hive/Spark read-back
         // convention every later partitioned write re-establishes).
         // The sidecar stays PHYSICAL: under column mapping a new
         // logical name gets a fresh physical name when its identity
         // spelling would collide with a live or retired physical column
-        val partNames = partitionColsOf(tablePath).toSet
+        val meta = snapshotMeta(liveDir)
+        val partNames = meta.partCols.toSet
         val cmap = colMapOf(liveDir)
-        val physSchema = sidecarSchema(liveDir)
-          .getOrElse(org.apache.spark.sql.types.StructType(existing))
+        val physSchema = meta.schema
         val used = scala.collection.mutable.Set[String]()
         physSchema.foreach(f => used += f.name.toLowerCase(java.util.Locale.ROOT))
         cmap.foreach(_.foreach(e => used += e._2.toLowerCase(java.util.Locale.ROOT)))
@@ -1866,16 +1657,6 @@ object TableMerge {
           writeColMap(version, dataEntries ++
             newCols.map(_.name).zip(newPhysCols.map(_.name)) ++ partEntries)
         }
-        Seq(PartsFile, ManifestFile).foreach { name =>
-          val side = liveDir.resolve(name)
-          if (Files.exists(side))
-            Files.copy(side, version.resolve(name),
-              StandardCopyOption.REPLACE_EXISTING): Unit
-        }
-        // every data file hard-links name-unchanged, so per-file range
-        // stats (and the manifest) stay valid verbatim through the
-        // metadata-only commit
-        carryStats(liveDir, version, Set.empty)
         commitVersion(tablePath, version, Parent(base))
       }
     }
@@ -1884,11 +1665,9 @@ object TableMerge {
     * under the commit lock so a concurrent writer's pointer swap cannot
     * interleave with the delete. */
   def drop(tablePath: String, ifExists: Boolean = false): Unit = {
-    val p = Paths.get(tablePath)
-    if (!Files.exists(p) || !(resolveLive(tablePath).isDefined || exists(tablePath))) {
-      require(ifExists, s"no graft table at $tablePath")
-    } else withCommitLock(tablePath) {
-      deleteRecursively(p)
+    if (!exists(tablePath)) require(ifExists, s"no graft table at $tablePath")
+    else withCommitLock(tablePath) {
+      deleteRecursively(Paths.get(tablePath))
     }
   }
 
@@ -1928,9 +1707,9 @@ object TableMerge {
       case _ => ()
     }
     // every commit carries a manifest: paths that write incrementally
-    // (scoped merges, zorder, metadata-only commits) provided one
-    // already; anything else — full rewrites, the one-time upgrade of a
-    // pre-manifest table — backfills with a staged-tree walk (local
+    // (scoped merges, compaction, zorder, metadata-only commits)
+    // provided one already; full rewrites backfill with a walk of the
+    // tree they just staged (local
     // metadata, once, by the WRITER; what it buys is zero listing on
     // every subsequent READ)
     if (!Files.exists(version.resolve(ManifestFile)))
@@ -1970,17 +1749,17 @@ object TableMerge {
     }
 
   /** Carry the live snapshot's file-range stats into the staging
-    * version, minus entries under TOUCHED partition dirs (their files
-    * are rewritten under fresh names, so their old entries must not
+    * version, minus entries for `dropped` (rewritten) files (their
+    * replacements carry fresh names, so their old entries must not
     * survive — a stale range could wrongly skip a file), plus the
-    * `fresh` rows recorded for the newly written files. Untouched
-    * partitions hard-link with file names intact, so their ranges stay
-    * valid verbatim. With every write path recording fresh rows for
-    * the declared stat columns, file skipping survives live merge
+    * `fresh` rows recorded for the newly written files. Carried files
+    * hard-link with names intact (see [[carryFiles]]), so their ranges
+    * stay valid verbatim. With every write path recording fresh rows
+    * for the declared stat columns, file skipping survives live merge
     * cycles instead of decaying until the next ZORDER. */
   private def carryStats(live: Path, staging: Path,
-                         touchedDirs: Set[String],
-                         fresh: Seq[String] = Seq.empty): Unit = {
+                         dropped: String => Boolean,
+                         fresh: Seq[String]): Unit = {
     val p = live.resolve(StatsFile)
     // streamed on BOTH sides, never one driver string: at 10⁷ files
     // the ledger is the metadata plane's largest artifact (VERDICT r18
@@ -1991,26 +1770,11 @@ object TableMerge {
     }
     if (!Files.exists(p)) emit(Iterator.empty)
     else withLedgerLines(p) { lines =>
-      emit(lines.filter { l =>
-        val rel = l.takeWhile(_ != '\t')
-        !touchedDirs.exists(d => rel.startsWith(d + "/"))
-      })
+      emit(lines.filter(l => !dropped(l.takeWhile(_ != '\t'))))
     }
     val sc = live.resolve(StatColsFile)
     if (Files.exists(sc) && !Files.exists(staging.resolve(StatColsFile)))
       Files.copy(sc, staging.resolve(StatColsFile)): Unit
-  }
-
-  /** Fresh stat rows for the files currently under a staging version
-    * dir, keyed to the base snapshot's declared stat columns — the
-    * per-write half of the stats lifecycle (no-op when the table never
-    * declared stat columns). */
-  private def freshStatsFor(spark: SparkSession, baseDir: Path, staging: Path,
-                            schema: org.apache.spark.sql.types.StructType,
-                            partitionCols: Seq[String]): Seq[String] = {
-    val statCols = statColsOfDir(baseDir)
-    if (statCols.isEmpty) Seq.empty
-    else collectStatsRows(spark, staging, schema, partitionCols, statCols)
   }
 
   /** Partition-scoped merges collect one driver-side row per touched
@@ -2036,9 +1800,9 @@ object TableMerge {
     * writer emits `2020-01-01 00:00:00`, desyncing the touched set
     * from the real tree), then through the writer's segment naming
     * (null AND empty string → `__HIVE_DEFAULT_PARTITION__`, else
-    * path-escaped). A desynced set is a data-loss class:
-    * carryStats/carryManifest keep stale rows for replaced files and
-    * a whole-partition drop can resurrect the hard-linked old tree. */
+    * path-escaped). A desynced set is a data-loss class: carryFiles
+    * keeps the replaced files beside their rewrites, and a
+    * whole-partition drop resurrects the old rows. */
   /** Relative partition-dir names of already-collected touched rows
     * (the rows come from the one bounded collect in
     * [[commitScopedOrFallback]], cast to writer strings there). */
@@ -2049,32 +1813,6 @@ object TableMerge {
         org.apache.spark.sql.graft.bridge.partitionPathSegment(c, row.getString(i))
       }.mkString("/")
     }.toSet
-
-  /** Hard-link untouched first-level partition trees from the live
-    * snapshot into the new version (no data rewrite, live files stay in
-    * place for concurrent readers; falls back to copy on filesystems
-    * without link support).
-    */
-  private def carryUntouchedPartitions(live: Path, staging: Path,
-                                       partitionCols: Seq[String],
-                                       touched: Set[String]): Unit = {
-    def walk(liveDir: Path, stagingDir: Path, depth: Int, prefix: String): Unit = {
-      if (depth == partitionCols.length) return
-      val children = Option(liveDir.toFile.listFiles()).getOrElse(Array.empty)
-      children.filter(f => f.isDirectory && f.getName.contains("=")).foreach { d =>
-        val rel = if (prefix.isEmpty) d.getName else s"$prefix/${d.getName}"
-        val isTouchedPrefix = touched.exists(t => t == rel || t.startsWith(rel + "/"))
-        val dest = stagingDir.resolve(d.getName)
-        if (!isTouchedPrefix) {
-          if (!Files.exists(dest)) linkTree(d.toPath, dest)
-        } else if (depth + 1 < partitionCols.length) {
-          Files.createDirectories(dest)
-          walk(d.toPath, dest, depth + 1, rel)
-        }
-      }
-    }
-    walk(live, staging, 0, "")
-  }
 
   private def linkTree(src: Path, dest: Path): Unit =
     if (Files.isDirectory(src)) {

@@ -747,19 +747,9 @@ object SqlMerge {
           import graft.operators.TableMerge
           require(TableMerge.exists(cmd.path), s"no graft table at ${cmd.path}")
           val live = TableMerge.liveVersion(cmd.path)
-          val (nFiles, bytes) = TableMerge.manifest(cmd.path) match {
-            case Some(entries) => (entries.size.toLong, entries.map(_._2).sum)
-            case None => // pre-manifest table: one bounded walk
-              val dir = java.nio.file.Paths.get(cmd.path, live.getOrElse("."))
-              def walk(f: java.io.File): (Long, Long) =
-                if (f.isDirectory)
-                  Option(f.listFiles()).getOrElse(Array.empty).map(walk)
-                    .foldLeft((0L, 0L)) { case ((a, b), (c, d)) => (a + c, b + d) }
-                else if (f.getName.endsWith(".parquet")) (1L, f.length()) else (0L, 0L)
-              walk(dir.toFile)
-          }
+          val entries = TableMerge.manifest(cmd.path).getOrElse(Seq.empty)
           Seq(org.apache.spark.sql.Row(
-            "graft-parquet", cmd.path, live.orNull, nFiles, bytes,
+            "graft-parquet", cmd.path, live.orNull, entries.size.toLong, entries.map(_._2).sum,
             TableMerge.partitionColsOf(cmd.path).mkString(","),
             TableMerge.versions(cmd.path).size.toLong,
             TableMerge.statColumnsOf(cmd.path).mkString(","),
@@ -772,26 +762,9 @@ object SqlMerge {
           val partCols = TableMerge.partitionColsOf(cmd.path)
           require(partCols.nonEmpty,
             s"SHOW PARTITIONS: table ${cmd.path} is not partitioned")
-          // manifest = zero listing; pre-manifest tables fall back to
-          // one bounded walk of the live version's `col=val` dirs
-          val rels: Seq[String] = TableMerge.manifest(cmd.path) match {
-            case Some(entries) =>
-              entries.map { case (rel, _) =>
-                rel.split('/').dropRight(1).mkString("/")
-              }.distinct
-            case None =>
-              val live = java.nio.file.Paths.get(cmd.path,
-                TableMerge.liveVersion(cmd.path).getOrElse("."))
-              def walk(dir: java.io.File, depth: Int, prefix: String): Seq[String] = {
-                if (depth == partCols.length) return Seq(prefix)
-                Option(dir.listFiles()).getOrElse(Array.empty)
-                  .filter(f => f.isDirectory && f.getName.contains("="))
-                  .flatMap(d => walk(d, depth + 1,
-                    if (prefix.isEmpty) d.getName else s"$prefix/${d.getName}"))
-                  .toSeq
-              }
-              walk(live.toFile, 0, "")
-          }
+          // the partition dirs of the live manifest's files: zero listing
+          val rels = TableMerge.manifest(cmd.path).getOrElse(Seq.empty)
+            .map { case (rel, _) => rel.split('/').dropRight(1).mkString("/") }.distinct
           rels.filter(_.nonEmpty).sorted.map(org.apache.spark.sql.Row(_))
         }) :: Nil
       case cmd: GraftDescribeTableCommand =>

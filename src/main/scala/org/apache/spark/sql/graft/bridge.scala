@@ -8,9 +8,10 @@ import org.apache.spark.sql.types.StructType
 
 /** Narrow `private[sql]` bridge for [[graft.plans.SqlMerge]] and
   * [[graft.operators.TableMerge]]: a Column view of a resolved Catalyst
-  * expression, a DataFrame view of a logical plan, and the two
-  * stats-pruning read paths (manifest-planned and legacy directory-
-  * walked). Nothing else from the internal API is re-exported.
+  * expression, a DataFrame view of a logical plan, partition-dir
+  * naming, plan-size observation, and the one snapshot read path (the
+  * manifest-planned, stats-pruning [[manifestRead]]). Nothing else from
+  * the internal API is re-exported.
   */
 object bridge extends org.apache.spark.internal.Logging {
   def columnOf(e: Expression): Column =
@@ -101,8 +102,8 @@ object bridge extends org.apache.spark.internal.Logging {
       * stat kind — load-bearing, not cosmetic: stats are in each
       * column's own internal unit (kind `i` long value, `d` epoch days,
       * `t` epoch micros), so e.g. a TimestampType literal (micros) must
-      * never compare against a legacy seconds-scale `i` row, and an
-      * integral literal must never compare against date days.
+      * never compare against an integral `i` row, and an integral
+      * literal must never compare against date days.
       * Mismatched or unsupported comparisons keep the file. */
     private def litFor(kind: Char)(l: Literal): Option[Long] = {
       import org.apache.spark.sql.types._
@@ -360,19 +361,6 @@ object bridge extends org.apache.spark.internal.Logging {
       }
     }.toMap
 
-  /** MANIFEST-PLANNED snapshot read (the Iceberg-manifest / Delta-
-    * checkpoint move): the file list, sizes, partition values, and
-    * per-file stats all come from the version's commit-time sidecars —
-    * planning performs ZERO directory listing at any file count, and a
-    * stray file dropped into the snapshot dir is invisible (the
-    * manifest IS the table). Files whose recorded range/null-count
-    * provably misses the pushed data filters are dropped before any
-    * parquet footer is opened; partition pruning evaluates against the
-    * manifest's parsed `col=val` values. `retained` is probed on every
-    * listFiles call (execution planning): a snapshot expired by VACUUM
-    * mid-plan surfaces as a loud [[graft.operators.SnapshotExpiredException]]
-    * instead of a raw FileNotFoundException at task time.
-    */
   /** Process-wide memo of [[ManifestFileIndex.partitioned]] per
     * committed (immutable) snapshot — planning cost is paid once per
     * snapshot per process, not once per planned read. */
@@ -391,6 +379,21 @@ object bridge extends org.apache.spark.internal.Logging {
 
   private def warnMalformedManifest(msg: String): Unit = logWarning(msg)
 
+  /** MANIFEST-PLANNED snapshot read (the Iceberg-manifest / Delta-
+    * checkpoint move): the file list, sizes, partition values, and
+    * per-file stats all come from the version's commit-time sidecars —
+    * planning performs ZERO directory listing at any file count, and a
+    * stray file dropped into the snapshot dir is invisible (the
+    * manifest IS the table). Files whose recorded range/null-count
+    * provably misses the pushed data filters are dropped before any
+    * parquet footer is opened; partition pruning evaluates against the
+    * manifest's parsed `col=val` values. `retained` is probed on every
+    * listFiles call (execution planning): a snapshot expired by VACUUM
+    * mid-plan surfaces as a loud [[graft.operators.SnapshotExpiredException]]
+    * instead of a raw FileNotFoundException at task time. `liveDir`
+    * is the root the `entries` are relative to: a snapshot dir, or one
+    * compaction unit of it.
+    */
   def manifestRead(spark: SparkSession, liveDir: String,
                    schema: StructType, partCols: Seq[String],
                    entries: Seq[(String, Long)],
@@ -412,8 +415,7 @@ object bridge extends org.apache.spark.internal.Logging {
   /** The FileIndex behind [[manifestRead]]: listFiles filters the
     * in-memory manifest — no filesystem call except the O(1) retention
     * probe. Partition pruning mirrors InMemoryFileIndex's name-bound
-    * interpreted predicate; file pruning shares [[PruneContext]] with
-    * the legacy path. */
+    * interpreted predicate; file pruning is [[PruneContext]]'s. */
   private final class ManifestFileIndex(
       cs: org.apache.spark.sql.classic.SparkSession,
       liveDir: String,
@@ -464,12 +466,11 @@ object bridge extends org.apache.spark.internal.Logging {
       * TableMerge's snapshot memo.
       *
       * Rows the partition chain cannot place FAIL OPEN — skipped with
-      * a warning, not thrown (ADVICE r19: a single malformed row —
-      * e.g. a stray root-level parquet backfilled into a partitioned
-      * legacy layout — made every subsequent read of the table throw,
-      * permanently). A skipped row is invisible to the scan, exactly
-      * as a directory-walking partition-discovery read would treat a
-      * file outside the `col=val` tree. */
+      * a warning, not thrown (ADVICE r19: a single malformed row — e.g.
+      * a hand-edited manifest listing a root-level file of a
+      * partitioned snapshot — made every subsequent read of the table
+      * throw, permanently). A skipped row is invisible to the scan, as
+      * a file outside the `col=val` tree is to partition discovery. */
     private lazy val partitioned: Seq[(InternalRow, Seq[(String, FileStatusWithMetadata)])] = {
       val key = s"$rootAbs\u0000${cs.sessionState.conf.sessionLocalTimeZone}" +
         s"\u0000${partSchema.map(_.name).mkString(",")}"
@@ -549,53 +550,5 @@ object bridge extends org.apache.spark.internal.Logging {
         }
       dirs.filter(_.files.nonEmpty)
     }
-  }
-
-  /** LEGACY stats-pruning read for pre-manifest snapshots: a directory-
-    * walking InMemoryFileIndex whose listFiles drops files the recorded
-    * ranges provably exclude. New commits all carry manifests and route
-    * through [[manifestRead]]; this path remains for tables last
-    * written by older builds. */
-  def statsPrunedRead(spark: SparkSession, liveDir: String,
-                      schema: StructType,
-                      stats: Map[String, Map[String, ColRange]],
-                      nulls: Map[String, Map[String, (Long, Long)]],
-                      retained: () => Boolean = () => true,
-                      expiredMsg: String = ""): DataFrame = {
-    val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val root = new org.apache.hadoop.fs.Path(
-      "file:" + new java.io.File(liveDir).getAbsolutePath)
-    val livePrefix = new java.io.File(liveDir).getAbsolutePath
-    val strFileBounds = strBoundsCacheOf(stats)
-    val index = new InMemoryFileIndex(cs, Seq(root),
-      Map("basePath" -> root.toString), Some(schema)) {
-      override def listFiles(partitionFilters: Seq[Expression],
-                             dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-        // same VACUUM contract as the manifest path: a snapshot expired
-        // between planning and execution surfaces as a loud
-        // SnapshotExpiredException, not a raw task-time
-        // FileNotFoundException (VERDICT r19 missing #2)
-        if (!retained())
-          throw new graft.operators.SnapshotExpiredException(expiredMsg)
-        val base = super.listFiles(partitionFilters, dataFilters)
-        if (dataFilters.isEmpty) base
-        else {
-          val ctx = new PruneContext(dataFilters, stats, nulls, strFileBounds)
-          base.map { pd =>
-            pd.copy(files = pd.files.filter { f =>
-              val rel = f.getPath.toUri.getPath
-                .stripPrefix(livePrefix).stripPrefix("/")
-              ctx.keep(rel)
-            })
-          }.filter(_.files.nonEmpty)
-        }
-      }
-    }
-    val partSchema = index.partitionSchema
-    val dataSchema = StructType(
-      schema.filterNot(f => partSchema.exists(_.name == f.name)))
-    val relation = HadoopFsRelation(index, partSchema, dataSchema,
-      bucketSpec = None, new ParquetFileFormat, options = Map.empty)(cs)
-    dataFrameOf(spark, LogicalRelation(relation))
   }
 }

@@ -63,6 +63,102 @@ class ManifestSpec extends AnyFunSuite {
     assert(mf.size == 4 && mf.forall(_._2 > 0L))
   }
 
+  private def liveDirOf(path: String): java.nio.file.Path =
+    Paths.get(path, TableMerge.liveVersion(path).get)
+
+  /** Relative paths of every parquet file under `dir`. */
+  private def parquetUnder(dir: java.nio.file.Path): Set[String] = {
+    def walk(f: java.io.File, prefix: String): Set[String] =
+      Option(f.listFiles()).getOrElse(Array.empty).flatMap { c =>
+        val rel = if (prefix.isEmpty) c.getName else s"$prefix/${c.getName}"
+        if (c.isDirectory) walk(c, rel)
+        else if (c.getName.endsWith(".parquet")) Set(rel) else Set.empty[String]
+      }.toSet
+    walk(dir.toFile, "")
+  }
+
+  /** Drop a 100-row parquet file (ids 1000..1099) into `dir`, outside
+    * any commit. */
+  private def placeStray(dir: java.nio.file.Path): Unit = {
+    val tmp = Files.createTempDirectory("graft-stray-src")
+    (1000L until 1100L).map(i => (i, 9L)).toDF("id", "g")
+      .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    val part = tmp.toFile.listFiles().find(_.getName.endsWith(".parquet")).get
+    Files.copy(part.toPath, dir.resolve("stray-not-in-manifest.parquet"))
+  }
+
+  test("skipping reads, ZORDER and compaction plan from the manifest (stray file invisible)") {
+    def rows = (0L until 64L).map(i => (i, i % 4L)).toDF("id", "g").repartition(4, col("id"))
+    val flat = tmpTable("stray-flat")
+    TableMerge.createOrReplace(rows, flat)
+    placeStray(liveDirOf(flat))
+    val skipped = TableMerge.readSkipping(spark, flat, "id", 0L, 5000L).count()
+    assert(skipped == TableMerge.read(spark, flat).filter(col("id").between(0L, 5000L)).count())
+    assert(skipped == 64L, "the skipping read must take its files from the manifest")
+    assert(TableMerge.zorder(spark, flat, "id", "g") == 1)
+    assert(TableMerge.read(spark, flat).count() == 64L,
+      "ZORDER must rewrite the manifest's rows only, not commit the stray file")
+    // partitioned: the stray sits inside a partition dir that compacts
+    val parted = tmpTable("stray-part")
+    TableMerge.createOrReplace(rows, parted, partitionCols = Seq("g"))
+    assert(TableMerge.manifest(parted).get.count(_._1.startsWith("g=1/")) > 1,
+      "the stray's partition must be one that compacts")
+    placeStray(liveDirOf(parted).resolve("g=1"))
+    assert(TableMerge.compact(spark, parted, Seq("g"), maxFiles = 1) >= 1)
+    assert(TableMerge.read(spark, parted).count() == 64L,
+      "compaction must rewrite the manifest's rows only, not commit the stray file")
+    assert(TableMerge.manifest(parted).get.map(_._1).toSet == parquetUnder(liveDirOf(parted)))
+  }
+
+  test("every commit kind leaves one layout: marker, sidecars, manifest == files") {
+    import org.apache.spark.sql.types.{LongType, StructField}
+    def rows(lo: Long, n: Long): DataFrame =
+      (lo until lo + n).map(i => (i, i % 4L, i * 10L)).toDF("id", "g", "v")
+    for (parts <- Seq(Seq("g"), Seq.empty[String])) {
+      val tag = if (parts.isEmpty) "flat" else "parted"
+      val path = tmpTable(s"layout-$tag")
+      val clone = tmpTable(s"layout-$tag-clone")
+      val kinds: Seq[(String, String, () => Any)] = Seq(
+        ("createOrReplace", path, () =>
+          TableMerge.createOrReplace(rows(0, 64).repartition(4), path, parts)),
+        ("scoped upsert", path, () =>
+          TableMerge.upsert(spark, path, rows(60, 8), Seq("g", "id"), parts)),
+        ("full upsert", path, () =>
+          TableMerge.upsert(spark, path, rows(70, 8), Seq("id"), parts)),
+        ("replaceKeys", path, () =>
+          TableMerge.replaceKeys(spark, path, rows(101, 1), Seq(Tuple1(1L)).toDF("g"),
+            Seq("g"), parts)),
+        ("delete", path, () =>
+          TableMerge.delete(spark, path, Seq(Tuple1(2L)).toDF("id"), Seq("id"))),
+        ("restate", path, () =>
+          TableMerge.restate(spark, path, TableMerge.read(spark, path), parts)),
+        ("compact", path, () => TableMerge.compact(spark, path, parts, maxFiles = 0)),
+        ("zorder", path, () => TableMerge.zorder(spark, path, "id", "v")),
+        ("analyzeStats", path, () => TableMerge.analyzeStats(spark, path, Seq("id"))),
+        ("addColumns", path, () =>
+          TableMerge.addColumns(spark, path, Seq(StructField("w", LongType)))),
+        ("renameColumn", path, () => TableMerge.renameColumn(spark, path, "v", "v2")),
+        ("dropColumns", path, () => TableMerge.dropColumns(spark, path, Seq("w"))),
+        ("restore", path, () => TableMerge.restore(path, TableMerge.versions(path)(1))),
+        ("cloneTable", clone, () => TableMerge.cloneTable(path, clone)))
+      kinds.foreach { case (kind, table, commit) =>
+        val what = s"$kind ($tag)"
+        val before = TableMerge.liveVersion(table)
+        commit()
+        assert(TableMerge.liveVersion(table).nonEmpty && TableMerge.liveVersion(table) != before,
+          s"$what must commit a new version")
+        val live = liveDirOf(table)
+        Seq("_graft_committed", "_graft_schema.json").foreach(f =>
+          assert(Files.exists(live.resolve(f)), s"$what: live dir lacks $f"))
+        assert(Files.exists(live.resolve("_graft_parts.txt")) == parts.nonEmpty,
+          s"$what: the parts sidecar must exist exactly when partitioned")
+        assert(TableMerge.manifest(table).get.map(_._1).toSet == parquetUnder(live),
+          s"$what: the manifest must list exactly the parquet files under the live dir")
+      }
+      assert(TableMerge.read(spark, clone).count() == TableMerge.read(spark, path).count())
+    }
+  }
+
   test("a partition-scoped merge maintains the manifest incrementally") {
     val path = tmpTable("incr")
     val df = (0L until 400L).map(i => (i, if (i % 2 == 0) "even" else "odd", i))
@@ -347,29 +443,6 @@ class ManifestSpec extends AnyFunSuite {
     val df = TableMerge.read(spark, path)
     assert(df.count() == 60L, "well-formed rows must keep reading")
     assert(df.agg(sum("v")).as[Long].head() == (0L until 60L).sum)
-  }
-
-  test("legacy (pre-manifest) reads get the same VACUUM contract") {
-    val path = tmpTable("legacy-vacuum")
-    TableMerge.createOrReplace(
-      (0L until 64L).map(i => (i, i)).toDF("id", "v"), path)
-    TableMerge.analyzeStats(spark, path, Seq("id"))
-    // strip the manifest: the snapshot now looks like a pre-r19 commit
-    // (sidecar schema + stats ledger, no manifest) and must route
-    // through the legacy directory-walking stats-pruned read
-    val live = Paths.get(path, TableMerge.liveVersion(path).get)
-    Files.delete(live.resolve("_graft_manifest.tsv"))
-    val planned = TableMerge.read(spark, path)
-    assert(scanIndexClass(planned) != "ManifestFileIndex",
-      "manifest-less snapshot must take the legacy read path")
-    // concurrent writer commits v2, retention expires the planned v1
-    TableMerge.createOrReplace(
-      (0L until 32L).map(i => (i, -i)).toDF("id", "v"), path)
-    assert(TableMerge.expireVersions(path, 0L) >= 1) // create + analyze commits
-    val e = intercept[SnapshotExpiredException] { planned.count() }
-    assert(e.getMessage.contains("expired") && e.getMessage.contains("retention"),
-      s"documented remedy expected on the LEGACY path too, got: ${e.getMessage}")
-    assert(TableMerge.read(spark, path).count() == 32L)
   }
 
   test("scoped merges recompute stats for TOUCHED files only, carrying the rest verbatim") {
