@@ -1,5 +1,7 @@
 package graft
 
+import graft.Measure.{num, obj, str}
+
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line
   * `{"metric":"total","value":N,"unit":"sec","queries":{name:sec},
@@ -13,51 +15,27 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local("graft-bench")
-    // Warm the JVM/codegen/parquet paths before timing (JIT + whole-stage
-    // codegen compilation otherwise lands entirely on the first query):
-    // an aggregation, a tiny parquet read, and a shuffle — no big-table
+    // Warm the JIT, codegen and parquet paths before timing: an
+    // aggregation, a tiny parquet read, and a shuffle — no big-table
     // data is touched, so no unfair caching.
-    spark.range(1000000).selectExpr("sum(id)").collect()
+    Measure.warm(spark)
     spark.read.parquet(s"$sfDir/region.parquet").groupBy("r_name").count().collect()
-    val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     // Optional first arg: regex over query names; optional second arg:
     // per-query repeat count (min time reported) — both for targeted
     // local timing runs. The driver invokes with no args: full battery,
-    // min of 2 runs each — single-run figures at sf0.1 carry seconds of
-    // codegen/JIT/contention noise that has masqueraded as regressions
-    // (r6: 5-9x phantom slowdowns, all gone on re-run).
+    // min of 2 interleaved passes — single-run figures at sf0.1 carry
+    // seconds of codegen/JIT/contention noise that has masqueraded as
+    // regressions (r6: 5-9x phantom slowdowns, all gone on re-run; r6,
+    // r8: "7× regressions" that landed twice in a row on one query when
+    // its repeats ran back to back).
     val nameFilter = args.lift(0).map(_.r)
     val repeat = args.lift(1).map(_.toInt).getOrElse(2)
-    val selected = SparkEntry.all
-      .filter { case (name, _) => nameFilter.forall(_.findFirstIn(name).isDefined) }
-    // Repeats run INTERLEAVED (pass 1 over every query, then pass 2, …)
-    // rather than back-to-back per query, so a transient stall — GC
-    // pause, sandbox CPU contention, a compaction kicked off by an
-    // earlier query — can't poison BOTH samples of one query. Three
-    // rounds of "7× regressions" (r6, r8) were exactly that: noise that
-    // landed twice in a row on the same query and survived min-of-2.
-    // Between queries the cache is dropped and a GC is requested so one
-    // query's leftover blocks/garbage aren't billed to the next.
-    val best = scala.collection.mutable.LinkedHashMap[String, Double]()
-    for (_ <- 1 to repeat) {
-      selected.foreach { case (name, fn) =>
-        if (!errors.contains(name)) {
-          spark.catalog.clearCache()
-          System.gc()
-          try {
-            val t0 = System.nanoTime()
-            fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-            val sec = (System.nanoTime() - t0) / 1e9
-            if (!best.contains(name) || sec < best(name)) best(name) = sec
-          } catch {
-            case e: Throwable =>
-              errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-              best(name) = -1.0
-          }
-        }
-      }
-    }
-    val results = selected.map { case (name, _) => name -> best.getOrElse(name, -1.0) }
+    val selected = SparkEntry.all.map(_._1)
+      .filter(name => nameFilter.forall(_.findFirstIn(name).isDefined))
+    val queries = SparkEntry.queries
+    def sample(name: String) = Measure.query(spark)(queries(name)(spark, sfDir))
+    val battery = Measure.minOfN(repeat, selected)(sample)
+    val results = selected.map(name => name -> battery.samples.get(name).fold(-1.0)(_.sec))
     // Self-adjudication (VERDICT r10 #4 / r11 #2): after the battery, the
     // 10 slowest queries get an isolated min-of-2 re-run with nothing else
     // in flight. The interleaved battery inherits whatever CPU contention
@@ -65,34 +43,15 @@ object Bench {
     // 7-21x "regressions" all vanished when a judge re-ran the outliers
     // alone. Reporting both figures makes that adjudication self-serve:
     // a real regression shows up in BOTH keys, noise only in "queries".
-    val isolated = scala.collection.mutable.LinkedHashMap[String, Double]()
     val slowest = results.filter(_._2 >= 0).sortBy(-_._2).take(10).map(_._1).toSet
-    selected.filter { case (n, _) => slowest.contains(n) }.foreach { case (name, fn) =>
-      var m = Double.MaxValue
-      for (_ <- 1 to 2) {
-        spark.catalog.clearCache()
-        System.gc()
-        try {
-          val t0 = System.nanoTime()
-          fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-          m = math.min(m, (System.nanoTime() - t0) / 1e9)
-        } catch { case _: Throwable => () } // already in errors from the battery
-      }
-      if (m < Double.MaxValue) isolated(name) = m
+    val isolated = selected.filter(slowest).flatMap { name =>
+      Measure.minOfN(2, Seq(name))(sample).samples.get(name).map(s => name -> s.sec)
     }
-    // Fresh-JVM probe channel (VERDICT r19 #2): the top-10 slowest run
-    // once more through graft.ScaleProbe subprocesses — a fresh session
-    // in a fresh process carries none of this harness's state (memoized
-    // checkpoint blocks, listener backlog, old-gen pressure), which made
-    // three identical r19 battery runs swing 219-276 s. THIS map is the
+    // Fresh-JVM probe channel, after this session stops (Measure.probe):
+    // three identical battery runs swung 219-276 s, so THIS map is the
     // round-over-round regression gate; "queries" prices the
     // interleaved-session experience, "isolated" the same-JVM re-run.
-    // the parent session stops FIRST: a live 32-core session (parked
-    // executor threads, resident heap) contends with the probe
-    // subprocesses — the r20 ScaleBench probes read 22-37 s in-flight
-    // where the same probe on a quiet machine reads 5-9 s
     spark.stop()
-    val probe = scala.collection.mutable.LinkedHashMap[String, Double]()
     // Probe set = the battery's top-10 slowest ∪ a pinned roster of the
     // optimization rounds' touched paths (VERDICT r20 #4: with session
     // memos, a query's battery figure prices whichever consumer ran
@@ -110,82 +69,37 @@ object Bench {
       "sim_recall_at_k", "sim_hnsw_ef_sweep", "sim_hnsw_probed",
       "dedup_canonical", "text_kn_logprob",
       "e2e_silver_gold", "e2e_silver_pdf")
-    val probeSet = slowest ++ probeRoster
-    if (nameFilter.isEmpty) {
-      val cp0 = System.getProperty("java.class.path")
-      val cp =
-        if (cp0 != null && cp0.contains("classes")) cp0
-        else "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*"
-      val javaBin = new java.io.File(new java.io.File(
-        System.getProperty("java.home"), "bin"), "java").getAbsolutePath
-      selected.filter { case (n, _) => probeSet.contains(n) }.foreach { case (name, _) =>
-        try {
-          val pb = new ProcessBuilder(javaBin, "-Xmx24g", "-cp", cp,
-            "graft.ScaleProbe", sfDir, name, "2")
-          pb.redirectErrorStream(true)
-          val p = pb.start()
-          val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
-          p.waitFor()
-          """"sec":([0-9.]+)""".r.findFirstMatchIn(out)
-            .foreach(m => probe(name) = m.group(1).toDouble)
-        } catch { case _: Throwable => () } // probe is advisory, never fatal
+    // the probe is advisory: a probe that fails leaves its query out
+    val probe =
+      if (nameFilter.nonEmpty) Seq.empty
+      else selected.filter(slowest ++ probeRoster).flatMap { name =>
+        Measure.probe(sfDir, name, 2).toOption.map(name -> _)
       }
-    }
-    def esc(s: String): String = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-    val qs = results.map { case (k, v) => s""""${esc(k)}":$v""" }.mkString("{", ",", "}")
-    val es = errors.map { case (k, v) => s""""${esc(k)}":"${esc(v)}"""" }.mkString("{", ",", "}")
-    val iso = isolated.map { case (k, v) => s""""${esc(k)}":$v""" }.mkString("{", ",", "}")
-    val prb = probe.map { case (k, v) => s""""${esc(k)}":$v""" }.mkString("{", ",", "}")
+    def full(m: Seq[(String, Double)]) = obj(m.map { case (k, v) => k -> v.toString })
+    def compact(m: Seq[(String, Double)]) = obj(m.map { case (k, v) => k -> num(v) })
+    val es = obj(battery.errors.map { case (k, v) => k -> str(v) })
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"isolated":$iso,"probe":$prb,"errors":$es,"sf":"$sfDir"}"""
-    // The driver captures only the last ~2000 chars of stdout (r4/r5 lost the
-    // full line to truncation → parsed:null). Print a line guaranteed to fit:
-    // rounded figures, slowest queries first, capped to a byte budget; the
-    // complete full-precision set is persisted to BENCH_full.json below.
-    def r3(v: Double): String = f"$v%.3f"
-    // Budget sized so line (~1150 chars incl. the ~300-char isolated map)
-    // + sbt's trailing "[success] …" both fit inside the driver's
-    // last-2000-chars capture with slack (r13/r14 parsed:null: a 1700-char
-    // line left no room for trailing output).
-    // r21: shrunk again for the widened probe roster (~24 entries,
-    // ~+400 chars) — total line ≈ 380 (queries) + ~290 (isolated) +
-    // ~690 (probe) + ~170 fixed ≈ 1530, leaving sbt's trailing
-    // "[success] …" inside the 2000-char capture with slack
+    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":${full(results)},"isolated":${full(isolated)},"probe":${full(probe)},"errors":$es,"sf":"$sfDir"}"""
+    // Bench harnesses keep only the last ~2000 chars of stdout, so the
+    // printed line must fit with sbt's trailing "[success] …": rounded
+    // figures, slowest queries first, capped to a byte budget. 380 (queries)
+    // + ~290 (isolated) + ~690 (probe) + ~170 fixed ≈ 1530 chars.
     val budget = 380
     val sorted = results.filter(_._2 >= 0).sortBy(-_._2)
-    val kept = scala.collection.mutable.ArrayBuffer[String]()
-    var used = 0
-    sorted.foreach { case (k, v) =>
-      val entry = s""""${esc(k)}":${r3(v)}"""
-      if (used + entry.length + 1 <= budget) { kept += entry; used += entry.length + 1 }
-    }
+    val (kept, _) = sorted.map { case (k, v) => s"${str(k)}:${num(v)}" }
+      .foldLeft((Vector.empty[String], 0)) { case ((kept, used), e) =>
+        if (used + e.length + 1 <= budget) (kept :+ e, used + e.length + 1) else (kept, used) }
     val omitted = sorted.length - kept.length
-    val isoCompact = isolated.map { case (k, v) => s""""${esc(k)}":${r3(v)}""" }.mkString("{", ",", "}")
-    val prbCompact = probe.map { case (k, v) => s""""${esc(k)}":${r3(v)}""" }.mkString("{", ",", "}")
-    val line = s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${sorted.length},"omitted":$omitted,"queries":{${kept.mkString(",")}},"isolated":$isoCompact,"probe":$prbCompact,"errors":$es,"sf":"$sfDir"}"""
-    // Persist to the repo root regardless of the invoker's cwd (the
-    // driver's per-round artifact keeps only the compact stdout line;
-    // this file is the complete full-precision map the judge diffs) —
-    // plus a cwd copy when cwd isn't the repo root.
-    // Filtered runs (targeted local timing) must NOT clobber the
-    // committed full-battery map — only the no-args battery persists.
-    if (nameFilter.isEmpty) {
-      val repoRoot = java.nio.file.Paths.get("/root/repo")
-      val targets = Seq(repoRoot.resolve("BENCH_full.json"),
-        java.nio.file.Paths.get("BENCH_full.json").toAbsolutePath).distinct
-      targets.foreach { p =>
-        try java.nio.file.Files.write(p, (fullLine + "\n").getBytes("UTF-8"))
-        catch { case _: Throwable => () } // bench result > bookkeeping
-      }
-    }
-    // (Spark already stopped before the probe phase — nothing can push
-    // the JSON line out of the driver's tail capture here.)
+    val line = s"""{"metric":"total","value":${num(total)},"unit":"sec","n_queries":${sorted.length},"omitted":$omitted,"queries":{${kept.mkString(",")}},"isolated":${compact(isolated)},"probe":${compact(probe)},"errors":$es,"sf":"$sfDir"}"""
+    // The complete full-precision map goes to BENCH_full.json in the
+    // working directory (a per-round bench artifact keeps only the
+    // compact stdout line). Filtered runs (targeted local timing) must
+    // NOT clobber the full-battery map — only the no-args battery writes.
+    if (nameFilter.isEmpty)
+      try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_full.json"),
+        (fullLine + "\n").getBytes("UTF-8"))
+      catch { case _: Throwable => () } // bench result > bookkeeping
     println(line)
-    if (results.isEmpty || errors.nonEmpty) sys.exit(1)
+    if (results.isEmpty || battery.errors.nonEmpty) sys.exit(1)
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.Measure.{num, obj, str}
 import graft.operators.TableMerge
 
 /** Per-stage adjudication of the k20_stats_merge commit chain (VERDICT
@@ -26,24 +27,20 @@ object CommitProfile {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(1).map(_.toInt).getOrElse(3)
     val spark = GraftSession.local("graft-commit-profile")
-    spark.range(1000000).selectExpr("sum(id)").collect() // JIT warm
+    Measure.warm(spark)
 
-    def r3(v: Double): String = f"$v%.3f"
     def chain(withStats: Boolean): Map[String, Double] = {
       val path = new java.io.File(
         s"target/graft-state/k20_profile_${if (withStats) "stats" else "nostats"}")
         .getAbsolutePath
       val stages = scala.collection.mutable.LinkedHashMap[String, Double]()
       def stage[A](name: String)(body: => A): A = {
-        val t0 = System.nanoTime()
-        val r = body
-        val sec = (System.nanoTime() - t0) / 1e9
-        if (!stages.contains(name) || sec < stages(name)) stages(name) = sec
+        val (r, sec) = Measure.time(body)
+        if (stages.get(name).forall(sec < _)) stages(name) = sec
         r
       }
-      for (_ <- 1 to reps) {
-        spark.catalog.clearCache()
-        System.gc()
+      // each rep starts from a clean slate; its stages are timed bare
+      for (_ <- 1 to reps) Measure.sample(spark) {
         stage("drop") { TableMerge.drop(path, ifExists = true) }
         Tables.events(spark, sfDir)
           .selectExpr("event_id", "user_id", "event_type",
@@ -86,12 +83,10 @@ object CommitProfile {
 
     val withStats = chain(withStats = true)
     val noStats = chain(withStats = false)
-    def js(m: Map[String, Double]): String =
-      m.map { case (k, v) => s""""$k":${r3(v)}""" }.mkString("{", ",", "}")
-    val mergeDelta = withStats("merge") - noStats("merge")
-    println(s"""{"metric":"k20_stage_profile","sf":"$sfDir","reps":$reps,""" +
-      s""""with_stats":${js(withStats)},"no_stats":${js(noStats)},""" +
-      s""""merge_sidecar_delta_sec":${r3(mergeDelta)}}""")
+    def js(m: Map[String, Double]): String = obj(m.map { case (k, v) => k -> num(v) })
+    println(obj(Seq("metric" -> str("k20_stage_profile"), "sf" -> str(sfDir),
+      "reps" -> reps.toString, "with_stats" -> js(withStats), "no_stats" -> js(noStats),
+      "merge_sidecar_delta_sec" -> num(withStats("merge") - noStats("merge")))))
     spark.stop()
   }
 }

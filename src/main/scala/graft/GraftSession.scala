@@ -44,7 +44,7 @@ object GraftSession {
     *   - one `lakehouse_reads` round (six query templates): ~47 classes
     *     after the set-up's 182, then 2 per query, because the drawn
     *     keys are literals inlined into the generated code;
-    *   - the battery's `e2e_silver_gold` at sf0.1 (`graft.JobProfile`):
+    *   - the battery's `e2e_silver_gold` at sf0.1 (`graft.ScaleProbe`):
     *     69 classes (61, 8 and 0 compiled over three reps).
     * The whole 253-query battery was not measured. 1000 entries hold all
     * of the above at once (~420 classes) with room for the rest of a

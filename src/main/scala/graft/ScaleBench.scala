@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.Measure.{num, obj, str}
+
 /** Scale-slope evidence for the dedup/ANN tier (VERDICT r8 #6): no sf1
   * testdata exists, so synthesize ×1 and ×8 corpora from the base sf dir
   * and measure how the candidate-generating queries scale. The thing to
@@ -196,8 +198,13 @@ object ScaleBench {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
     val repeat = args.lift(1).map(_.toInt).getOrElse(2)
     val spark = GraftSession.local("graft-scale")
-    // warm codegen/JIT the same way Bench does
-    spark.range(1000000).selectExpr("sum(id)").collect()
+    Measure.warm(spark)
+    // one `"x<f>":{…}` entry per factor
+    def byFactor(fs: Seq[Int])(fields: Int => Seq[(String, String)]): String =
+      obj(fs.map(f => s"x$f" -> obj(fields(f))))
+    // a census row's columns as JSON fields, named by their aliases
+    def fieldsOf(row: org.apache.spark.sql.Row): Seq[(String, String)] =
+      row.schema.fieldNames.toSeq.zip(row.toSeq.map(String.valueOf))
 
     val dirs: Map[Int, String] = (Factors :+ DeepFactor :+ X64Factor).map { f =>
       val dir = new java.io.File(s"target/graft-state/scale_x$f").getAbsolutePath
@@ -233,25 +240,16 @@ object ScaleBench {
 
     // interleaved min-of-N, same discipline as Bench: the full battery
     // config at ×1/×8
-    val times = scala.collection.mutable.LinkedHashMap[(String, Int), Double]()
-    for (_ <- 1 to repeat; name <- Queries; f <- Factors) {
-      spark.catalog.clearCache()
-      System.gc()
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dirs(f)).write.mode("overwrite").format("noop").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      val k = (name, f)
-      if (!times.contains(k) || sec < times(k)) times(k) = sec
-    }
+    val times = Measure.minOfN(repeat, for (name <- Queries; f <- Factors) yield (name, f)) {
+      case (name, f) => Measure.query(spark)(SparkEntry.queries(name)(spark, dirs(f)))
+    }.secs
 
     // census-tuned widths per factor (tuning cost billed separately)
-    val tuned: Map[Int, (Int, Long, Long, Double)] =
-      (Factors :+ DeepFactor :+ X64Factor).map { f =>
-      val t0 = System.nanoTime()
-      val c = graft.operators.LshTuner.chooseBandBits(
-        neardupCorpus(spark, dirs(f)), "embedding", bands = 2)
-      f -> ((c.bits, c.candPairs, c.maxBucket, (System.nanoTime() - t0) / 1e9))
+    val lsh = (Factors :+ DeepFactor :+ X64Factor).map { f =>
+      f -> Measure.time(graft.operators.LshTuner.chooseBandBits(
+        neardupCorpus(spark, dirs(f)), "embedding", bands = 2))
     }.toMap
+    def bits(f: Int): Int = lsh(f)._1.bits
 
     // census-tuned IVF width per factor (VERDICT r15 #4): chooseNlist
     // holds the probed volume ≤ 2048 rows/query as the corpus grows,
@@ -259,61 +257,41 @@ object ScaleBench {
     // write cost are billed separately (they are corpus-build costs, the
     // same ledger as the LSH census), and the timed deep query is the
     // partition-pruned probed read.
-    val ivfTuned: Map[Int, (graft.operators.IvfTuner.Census, Seq[Int], String, Double, Double)] =
-      (Factors :+ DeepFactor).map { f =>
-        val emb = spark.read.parquet(s"${dirs(f)}/embeddings.parquet")
-          .select(col("vec_id"), col("embedding"))
-        val t0 = System.nanoTime()
-        val c = graft.operators.IvfTuner.chooseNlist(emb, "embedding",
-          nprobe = 4, maxProbedRows = 2048)
-        val tuneSec = (System.nanoTime() - t0) / 1e9
-        val probes = graft.operators.IvfTuner.probeList(c.nlist, 4)
-        val path = s"${dirs(f)}/emb_ivf_tuned"
-        val t1 = System.nanoTime()
-        graft.operators.Layout.writeIvfBucketed(emb, path, c.nlist)
-        val writeSec = (System.nanoTime() - t1) / 1e9
-        f -> ((c, probes, path, tuneSec, writeSec))
-      }.toMap
-
-    def deepRunner(name: String, f: Int): (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame =
-      name match {
-        case "sim_ivf_topk" =>
-          (s, _) => { val (_, probes, path, _, _) = ivfTuned(f)
-            graft.operators.Layout.ivfProbedTopk(s, path, probes, 20) }
-        case "sim_ivfpq_topk" =>
-          (s, _) => { val (_, probes, path, _, _) = ivfTuned(f)
-            graft.queries.VectorQueries.ivfProbedPqTopk(s, path, probes, 10) }
-        case "dedup_semantic_keep" =>
-          (s, d) => graft.queries.EmbedNeardupQueries.semanticKeep(s, d, 2, tuned(f)._1)
-        case "sim_embed_neardup" =>
-          (s, d) => graft.queries.EmbedNeardupQueries.embedNeardup(s, d, 2, tuned(f)._1)
-        case "sim_hnsw_topk" =>
-          (s, d) => graft.queries.GraphAnnQueries.hnswTopk(s, d, tuned(f)._1)
-        case "sim_hnsw_maintain" =>
-          (s, d) => graft.queries.GraphAnnQueries.hnswMaintain(s, d, tuned(f)._1)
-        case "sim_index_maintain" =>
-          (s, d) => graft.queries.VectorIndexQueries.maintainAt(s, d, ivfTuned(f)._1.nlist)
-        case "sim_index_retrain" =>
-          (s, d) => graft.queries.VectorIndexQueries.retrainAt(s, d, ivfTuned(f)._1.nlist)
-        case "sim_hnsw_batch" =>
-          (s, d) => graft.queries.GraphAnnQueries.hnswBatch(s, d, tuned(f)._1)
-        case "sim_hnsw_hier" =>
-          (s, d) => graft.queries.GraphAnnQueries.hnswHier(s, d, tuned(f)._1)
-        case other => SparkEntry.queries(other)
-      }
+    val ivfTuned = (Factors :+ DeepFactor).map { f =>
+      val emb = spark.read.parquet(s"${dirs(f)}/embeddings.parquet")
+        .select(col("vec_id"), col("embedding"))
+      val (c, tuneSec) = Measure.time(graft.operators.IvfTuner.chooseNlist(emb, "embedding",
+        nprobe = 4, maxProbedRows = 2048))
+      val probes = graft.operators.IvfTuner.probeList(c.nlist, 4)
+      val path = s"${dirs(f)}/emb_ivf_tuned"
+      val (_, writeSec) = Measure.time(graft.operators.Layout.writeIvfBucketed(emb, path, c.nlist))
+      f -> ((c, probes, path, tuneSec, writeSec))
+    }.toMap
 
     // deep tier: census-width runners at ×1/×8/×32 (for the non-LSH deep
     // queries the runner IS the battery query)
-    val deepTimes = scala.collection.mutable.LinkedHashMap[(String, Int), Double]()
-    for (_ <- 1 to repeat; name <- DeepQueries; f <- Factors :+ DeepFactor) {
-      spark.catalog.clearCache()
-      System.gc()
-      val t0 = System.nanoTime()
-      deepRunner(name, f)(spark, dirs(f)).write.mode("overwrite").format("noop").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      val k = (name, f)
-      if (!deepTimes.contains(k) || sec < deepTimes(k)) deepTimes(k) = sec
+    def deepRun(name: String, f: Int): org.apache.spark.sql.DataFrame = {
+      import graft.queries.{EmbedNeardupQueries => E, GraphAnnQueries => G, VectorIndexQueries => V}
+      val (d, w) = (dirs(f), bits(f))
+      lazy val (ivf, probes, path, _, _) = ivfTuned(f)
+      name match {
+        case "sim_ivf_topk" => graft.operators.Layout.ivfProbedTopk(spark, path, probes, 20)
+        case "sim_ivfpq_topk" => graft.queries.VectorQueries.ivfProbedPqTopk(spark, path, probes, 10)
+        case "dedup_semantic_keep" => E.semanticKeep(spark, d, 2, w)
+        case "sim_embed_neardup" => E.embedNeardup(spark, d, 2, w)
+        case "sim_hnsw_topk" => G.hnswTopk(spark, d, w)
+        case "sim_hnsw_maintain" => G.hnswMaintain(spark, d, w)
+        case "sim_index_maintain" => V.maintainAt(spark, d, ivf.nlist)
+        case "sim_index_retrain" => V.retrainAt(spark, d, ivf.nlist)
+        case "sim_hnsw_batch" => G.hnswBatch(spark, d, w)
+        case "sim_hnsw_hier" => G.hnswHier(spark, d, w)
+        case other => SparkEntry.queries(other)(spark, d)
+      }
     }
+    def deep(name: String, f: Int) = Measure.query(spark)(deepRun(name, f))
+    val deepTimes = Measure.minOfN(repeat,
+      for (name <- DeepQueries; f <- Factors :+ DeepFactor) yield (name, f))(
+      (deep _).tupled).secs.to(scala.collection.mutable.Map)
     // VERDICT r17 #3 — adjudicate sim_hnsw_maintain's ×32/×8: its ×32
     // absolute is ~3 s, where per-JOB fixed cost (≈40 Spark jobs per
     // cycle: checkpoints, broadcasts, the audit joins) is a large
@@ -323,27 +301,13 @@ object ScaleBench {
     // time IS the fixed cost, so (t - overhead) isolates the data term
     // and the data-term ratio is the honest slope.
     val MaintainReps = 5
-    for (_ <- 1 to math.max(0, MaintainReps - repeat); f <- Factors :+ DeepFactor) {
-      spark.catalog.clearCache()
-      System.gc()
-      val t0 = System.nanoTime()
-      deepRunner("sim_hnsw_maintain", f)(spark, dirs(f))
-        .write.mode("overwrite").format("noop").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      val k = ("sim_hnsw_maintain", f)
-      if (sec < deepTimes(k)) deepTimes(k) = sec
-    }
-    val maintainOverhead: Map[Int, Double] = (Factors :+ DeepFactor).map { f =>
-      var best = Double.MaxValue
-      for (_ <- 1 to MaintainReps) {
-        spark.catalog.clearCache()
-        System.gc()
-        val t0 = System.nanoTime()
-        graft.queries.GraphAnnQueries.hnswMaintainOverhead(spark, dirs(f), tuned(f)._1)
-          .write.mode("overwrite").format("noop").save()
-        best = math.min(best, (System.nanoTime() - t0) / 1e9)
-      }
-      f -> best
+    for ((f, sec) <- Measure.minOfN(math.max(0, MaintainReps - repeat), Factors :+ DeepFactor)(
+        deep("sim_hnsw_maintain", _)).secs)
+      deepTimes(("sim_hnsw_maintain", f)) = math.min(deepTimes(("sim_hnsw_maintain", f)), sec)
+    val maintainOverhead = (Factors :+ DeepFactor).map { f =>
+      f -> Measure.minOfN(MaintainReps, Seq(f))(_ => Measure.query(spark)(
+        graft.queries.GraphAnnQueries.hnswMaintainOverhead(spark, dirs(f), bits(f))))
+        .secs(f)
     }.toMap
     // ×64 adjudication points for the skew-capped families (VERDICT r18
     // #8): min-of-2, at the ×64 census width for the embed pipeline.
@@ -361,27 +325,13 @@ object ScaleBench {
     // backlog) that measured 27-36 s for the ×64 winnow read where a
     // fresh JVM reads ~15 s — the engine's slope is the clean number,
     // and comparing ×32 vs ×64 through the SAME channel is what makes
-    // the ratio meaningful. r20: the probes run AFTER spark.stop() —
-    // the r20 in-flight probes read 22-37 s where the same probe on a
-    // quiet machine reads 5-9 s, because the parent's live 48 GB
-    // session (executor threads parked, heap resident, OS page cache
-    // squeezed) contends with the subprocess; deferring them to the
-    // spark-free tail of the run removes that contention from the
-    // measurement. The embed pipeline needs the in-harness census
-    // width, and its in-harness ×64 is already clean (≈1.4×).
-    val embedX64: Double = {
-      var best = Double.MaxValue
-      for (_ <- 1 to 2) {
-        spark.catalog.clearCache()
-        System.gc()
-        val t0 = System.nanoTime()
-        graft.queries.EmbedNeardupQueries.embedNeardup(
-            spark, dirs(X64Factor), 2, tuned(X64Factor)._1)
-          .write.mode("overwrite").format("noop").save()
-        best = math.min(best, (System.nanoTime() - t0) / 1e9)
-      }
-      best
-    }
+    // the ratio meaningful. The probes run after spark.stop(): in-flight
+    // probes read 22-37 s where the same probe on a quiet machine reads
+    // 5-9 s. The embed pipeline needs the in-harness census width, and
+    // its in-harness ×64 is already clean (≈1.4×).
+    val embedX64 = Measure.minOfN(2, Seq(X64Factor))(f => Measure.query(spark)(
+      graft.queries.EmbedNeardupQueries.embedNeardup(spark, dirs(f), 2, bits(f))))
+      .secs(X64Factor)
 
     // MANIFEST READ-PLANNING probe (VERDICT r18 #1): a table whose FILE
     // COUNT grows ×32 while the read stays selective — range-clustered
@@ -399,8 +349,7 @@ object ScaleBench {
     // additionally benefits from the r20 per-snapshot partition-
     // grouping memo: grouping parses once per snapshot per process,
     // PruneContext keep-tests remain the per-read O(files) term.
-    val manifestPlanning: Map[Int, (Long, Double, Double, Long)] =
-      Seq(1, 8, 32, 256, 1536).map { f =>
+    val manifestJson = byFactor(Seq(1, 8, 32, 256, 1536)) { f =>
       val nFiles = f * 64
       val path = new java.io.File(
         s"target/graft-state/scale_manifest_x$f").getAbsolutePath
@@ -415,34 +364,27 @@ object ScaleBench {
       val ledgerBytes = Seq("_graft_manifest.tsv", "_graft_stats.tsv")
         .map(n => new java.io.File(live, n))
         .filter(_.exists).map(_.length).sum
-      var first = 0.0
-      var best = Double.MaxValue
-      for (i <- 0 until 6) {
-        val t0 = System.nanoTime()
-        val n = graft.operators.TableMerge.read(spark, path)
-          .filter(col("id") === 7L).count()
-        val sec = (System.nanoTime() - t0) / 1e9
+      val reads = (0 until 6).map { _ =>
+        val (n, sec) = Measure.time(graft.operators.TableMerge.read(spark, path)
+          .filter(col("id") === 7L).count())
         require(n == 1L, s"manifest probe wrong answer: $n")
-        if (i == 0) first = sec else best = math.min(best, sec)
+        sec
       }
-      f -> ((nFiles.toLong, first, best, ledgerBytes))
-    }.toMap
+      Seq("n_files" -> nFiles.toString, "first_read_sec" -> num(reads.head),
+        "warm_read_sec" -> num(reads.tail.min), "ledger_bytes" -> ledgerBytes.toString)
+    }
 
     // fixed-8-bit ×32 documentation points, single run — the point is the
     // order of magnitude (15-35× over linear), not a tight timing
     val fixed32 = FixedWidthDoc.map { name =>
-      spark.catalog.clearCache()
-      System.gc()
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dirs(DeepFactor)).write.mode("overwrite").format("noop").save()
-      name -> (System.nanoTime() - t0) / 1e9
+      name -> Measure.query(spark)(SparkEntry.queries(name)(spark, dirs(DeepFactor))).sec
     }.toMap
 
     // band-bucket diagnostics: replicate dedup_minhash_pairs' candidate
     // generation (same 3-shingle minhash, r=2/b=2 bands) and report the
     // pair volume the band join would produce BEFORE the distinct —
     // the quantity that must stay ~linear for the design to hold.
-    val bandStats: Map[Int, (Long, Long, Long)] = Factors.map { f =>
+    val bands = byFactor(Factors) { f =>
       val spec = Seq((1000003L, 12345L), (999983L, 54321L), (999979L, 11111L),
         (1000033L, 77777L)).map { case (a, b) => s"$a,$b" }.mkString(";")
       val P = 2147483647L
@@ -456,12 +398,11 @@ object ScaleBench {
           s"(sig[0] * 31 + sig[1]) % $P AS band_0", s"(sig[2] * 31 + sig[3]) % $P AS band_1")
         .selectExpr("doc_id", "posexplode(array(band_0, band_1)) AS (band_idx, band_val)")
         .groupBy("band_idx", "band_val").agg(count(lit(1)).as("n"))
-      val row = buckets.agg(
+      fieldsOf(buckets.agg(
         sum(expr("n * (n - 1) DIV 2")).as("cand_pairs"),
         max("n").as("max_bucket"),
-        count(lit(1)).as("n_buckets")).head()
-      f -> (row.getLong(0), row.getLong(1), row.getLong(2))
-    }.toMap
+        count(lit(1)).as("n_buckets")).head())
+    }
 
     // winnow df-cap census (VERDICT r12 #3): at ×f the query's boilerplate
     // footer is shared across ALL copies (the fixture appends it AFTER the
@@ -470,7 +411,7 @@ object ScaleBench {
     // ~linear for the cap to be the claimed skew guard. Reported: the
     // candidate-pair sums Σ df·(df−1)/2 with and without the df ≤ 32 cap,
     // and the hottest print's df.
-    val winnowStats: Map[Int, (Long, Long, Long)] = Seq(8, DeepFactor, X64Factor).map { f =>
+    val winnowJson = byFactor(Seq(8, DeepFactor, X64Factor)) { f =>
       val boiler = "all rights reserved contact the site administrator for removal details"
       val base = spark.read.parquet(s"${dirs(f)}/documents.parquet")
         .select(col("doc_id"),
@@ -487,13 +428,12 @@ object ScaleBench {
         .withColumn("sels", expr(graft.queries.PipelineShared.winnowSelsExpr(4)))
         .select(col("doc_id"), explode(expr(
           "array_distinct(transform(sels, p -> element_at(hashes, p)))")).as("h"))
-      val row = fps.groupBy("h").agg(count(lit(1)).as("df"))
+      fieldsOf(fps.groupBy("h").agg(count(lit(1)).as("df"))
         .agg(sum(expr("df * (df - 1) DIV 2")).as("cand_uncapped"),
           sum(expr("CASE WHEN df <= 32 THEN df * (df - 1) DIV 2 ELSE 0 END"))
             .as("cand_capped"),
-          max("df").as("max_df")).head()
-      f -> ((row.getLong(0), row.getLong(1), row.getLong(2)))
-    }.toMap
+          max("df").as("max_df")).head())
+    }
 
     // containment df-cap census (VERDICT r16 #8): the containment join's
     // candidate volume is Σ df(df−1)/2 over the shingle inverted index —
@@ -504,8 +444,7 @@ object ScaleBench {
     // ~linear while the uncapped bound compounds. Reported at the same
     // factors as winnow_cap, with the capped volume at 16/32/64 so the
     // battery's cap choice is a measured pick, not a constant of faith.
-    val containStats: Map[Int, (Long, Long, Long, Long, Long)] =
-      Seq(8, DeepFactor, X64Factor).map { f =>
+    val containJson = byFactor(Seq(8, DeepFactor, X64Factor)) { f =>
       val base = spark.read.parquet(s"${dirs(f)}/documents.parquet")
         .selectExpr("doc_id", "split(text, ' ') AS tokens")
       val corpus = base.unionByName(
@@ -513,137 +452,84 @@ object ScaleBench {
           .select((col("doc_id") + 500000).as("doc_id"),
             expr("slice(tokens, 3, 10)").as("tokens")))
         .filter(size(col("tokens")) >= 3)
-      val row = corpus
+      fieldsOf(corpus
         .selectExpr("doc_id", "explode(graft_shingle_set(graft_word_fps(tokens))) AS sh")
         .groupBy("sh").agg(count(lit(1)).as("df"))
         .agg(sum(expr("df * (df - 1) DIV 2")).as("cand_uncapped"),
           sum(expr("CASE WHEN df <= 16 THEN df * (df - 1) DIV 2 ELSE 0 END")).as("cand_cap16"),
           sum(expr("CASE WHEN df <= 32 THEN df * (df - 1) DIV 2 ELSE 0 END")).as("cand_cap32"),
           sum(expr("CASE WHEN df <= 64 THEN df * (df - 1) DIV 2 ELSE 0 END")).as("cand_cap64"),
-          max("df").as("max_df")).head()
-      f -> ((row.getLong(0), row.getLong(1), row.getLong(2), row.getLong(3), row.getLong(4)))
-    }.toMap
+          max("df").as("max_df")).head())
+    }
 
     // ---- spark-free tail: every in-harness measurement is done; stop
     // the session so the isolated-JVM probes run against a quiet
     // machine (see the channel note above), then assemble the JSON.
     spark.stop()
-    System.gc()
-    def isolatedSec(dir: String, name: String, reps: Int): Double = {
-      val javaBin = new java.io.File(new java.io.File(
-        System.getProperty("java.home"), "bin"), "java").getAbsolutePath
-      val pb = new ProcessBuilder(javaBin, "-Xmx32g", "-cp",
-        System.getProperty("java.class.path"),
-        "graft.ScaleProbe", dir, name, reps.toString)
-      pb.redirectErrorStream(true)
-      val p = pb.start()
-      val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
-      p.waitFor()
-      """"sec":([0-9.]+)""".r.findFirstMatchIn(out)
-        .map(_.group(1).toDouble)
-        .getOrElse(throw new IllegalStateException(
-          s"ScaleProbe($name) produced no timing line:\n${out.takeRight(800)}"))
-    }
-    val winnowIso32 = isolatedSec(dirs(DeepFactor), "dedup_winnow_capped", 2)
-    val containIso32 = isolatedSec(dirs(DeepFactor), "dedup_containment_incr", 2)
-    val x64Times: Map[String, Double] = Map(
-      "dedup_winnow_capped" -> isolatedSec(dirs(X64Factor), "dedup_winnow_capped", 2),
-      "sim_embed_neardup" -> embedX64,
-      "dedup_containment_incr" ->
-        isolatedSec(dirs(X64Factor), "dedup_containment_incr", 2))
+    def isolatedSec(f: Int, name: String): Double =
+      Measure.probe(dirs(f), name, 2).fold(e => throw new IllegalStateException(e), identity)
 
-    def r3(v: Double): String = f"$v%.3f"
-    val perQuery = Queries.map { q =>
+    val perQuery = obj(Queries.map { q =>
       val t1 = times((q, 1)); val t8 = times((q, 8))
-      s""""$q":{"x1":${r3(t1)},"x8":${r3(t8)},"ratio":${r3(t8 / math.max(t1, 1e-9))}}"""
-    }.mkString("{", ",", "}")
-    val deepJson = DeepQueries.map { q =>
+      q -> obj(Seq("x1" -> num(t1), "x8" -> num(t8), "ratio" -> num(t8 / math.max(t1, 1e-9))))
+    })
+    val deepJson = obj(DeepQueries.map { q =>
       val t1 = deepTimes((q, 1)); val t8 = deepTimes((q, 8)); val t32 = deepTimes((q, DeepFactor))
       // t×32/t×8 against 4× more data — ≲4 means the curve stays linear
-      val bits = if (FixedWidthDoc.contains(q)) {
-        val bitsJson = (Factors :+ DeepFactor)
-          .map(f => s""""x$f":${tuned(f)._1}""").mkString("{", ",", "}")
-        s""","band_bits":$bitsJson,"x32_fixed8":${r3(fixed32(q))}"""
-      } else ""
-      s""""$q":{"x1":${r3(t1)},"x8":${r3(t8)},"x$DeepFactor":${r3(t32)},""" +
-        s""""ratio_x32_x8":${r3(t32 / math.max(t8, 1e-9))}$bits}"""
-    }.mkString("{", ",", "}")
+      val fixed =
+        if (!FixedWidthDoc.contains(q)) Nil
+        else Seq("band_bits" -> obj((Factors :+ DeepFactor).map(f => s"x$f" -> bits(f).toString)),
+          "x32_fixed8" -> num(fixed32(q)))
+      q -> obj(Seq("x1" -> num(t1), "x8" -> num(t8), s"x$DeepFactor" -> num(t32),
+        "ratio_x32_x8" -> num(t32 / math.max(t8, 1e-9))) ++ fixed)
+    })
     // the census itself (the production tuning cost) + what it measured
-    val lshJson = (Factors :+ DeepFactor).map { f =>
-      val (bits, pairs, maxB, sec) = tuned(f)
-      s""""x$f":{"bits":$bits,"cand_pairs":$pairs,"max_bucket":$maxB,"tune_sec":${r3(sec)}}"""
-    }.mkString("{", ",", "}")
-    val bands = Factors.map { f =>
-      val (pairs, maxB, nB) = bandStats(f)
-      s""""x$f":{"cand_pairs":$pairs,"max_bucket":$maxB,"n_buckets":$nB}"""
-    }.mkString("{", ",", "}")
+    val lshJson = byFactor(Factors :+ DeepFactor) { f =>
+      val (c, sec) = lsh(f)
+      Seq("bits" -> c.bits.toString, "cand_pairs" -> c.candPairs.toString,
+        "max_bucket" -> c.maxBucket.toString, "tune_sec" -> num(sec))
+    }
     val t1Total = Queries.map(q => times((q, 1))).sum
     val t8Total = Queries.map(q => times((q, 8))).sum
-    val winnowJson = Seq(8, DeepFactor, X64Factor).map { f =>
-      val (unc, cap, maxDf) = winnowStats(f)
-      s""""x$f":{"cand_uncapped":$unc,"cand_capped":$cap,"max_df":$maxDf}"""
-    }.mkString("{", ",", "}")
     // the ×64 doubling verdict for the two skew-capped families:
     // ratio_x64_x32 against 2× more data — ≲2 = still linear per row
-    val x64Json = X64Queries.map { q =>
-      // both factors through the SAME channel: isolated JVM for winnow,
-      // in-harness (census-width) for embed
-      val (t32, t64, channel) = q match {
-        case "dedup_winnow_capped" =>
-          (winnowIso32, x64Times(q), "isolated-jvm")
-        case "dedup_containment_incr" =>
-          (containIso32, x64Times(q), "isolated-jvm")
-        case _ =>
-          (deepTimes((q, DeepFactor)), x64Times(q), "in-harness")
-      }
-      val bits =
-        if (q == "sim_embed_neardup") s""","band_bits_x64":${tuned(X64Factor)._1}"""
-        else ""
-      s""""$q":{"x32":${r3(t32)},"x64":${r3(t64)},""" +
-        s""""ratio_x64_x32":${r3(t64 / math.max(t32, 1e-9))},""" +
-        s""""channel":"$channel"$bits}"""
-    }.mkString("{", ",", "}")
-    val manifestJson = Seq(1, 8, 32, 256, 1536).map { f =>
-      val (nFiles, first, best, ledgerBytes) = manifestPlanning(f)
-      s""""x$f":{"n_files":$nFiles,"first_read_sec":${r3(first)},""" +
-        s""""warm_read_sec":${r3(best)},"ledger_bytes":$ledgerBytes}"""
-    }.mkString("{", ",", "}")
-    val containJson = Seq(8, DeepFactor, X64Factor).map { f =>
-      val (unc, c16, c32, c64, maxDf) = containStats(f)
-      s""""x$f":{"cand_uncapped":$unc,"cand_cap16":$c16,"cand_cap32":$c32,""" +
-        s""""cand_cap64":$c64,"max_df":$maxDf}"""
-    }.mkString("{", ",", "}")
+    val x64Json = obj(X64Queries.map { q =>
+      // both factors through the SAME channel: isolated JVM for winnow
+      // and containment, in-harness (census-width) for embed
+      val embed = q == "sim_embed_neardup"
+      val (t32, t64, channel) =
+        if (embed) (deepTimes((q, DeepFactor)), embedX64, "in-harness")
+        else (isolatedSec(DeepFactor, q), isolatedSec(X64Factor, q), "isolated-jvm")
+      q -> obj(Seq("x32" -> num(t32), "x64" -> num(t64),
+        "ratio_x64_x32" -> num(t64 / math.max(t32, 1e-9)), "channel" -> str(channel)) ++
+        (if (embed) Seq("band_bits_x64" -> bits(X64Factor).toString) else Nil))
+    })
     // the IVF width census (the production tuning cost) + what it chose
-    val ivfJson = (Factors :+ DeepFactor).map { f =>
+    val ivfJson = byFactor(Factors :+ DeepFactor) { f =>
       val (c, _, _, tuneSec, writeSec) = ivfTuned(f)
-      s""""x$f":{"nlist":${c.nlist},"n_rows":${c.nRows},"probed_rows":${c.probedRows},""" +
-        s""""max_list":${c.maxList},"tune_sec":${r3(tuneSec)},"write_sec":${r3(writeSec)}}"""
-    }.mkString("{", ",", "}")
+      Seq("nlist" -> c.nlist.toString, "n_rows" -> c.nRows.toString,
+        "probed_rows" -> c.probedRows.toString, "max_list" -> c.maxList.toString,
+        "tune_sec" -> num(tuneSec), "write_sec" -> num(writeSec))
+    }
     // the sim_hnsw_maintain adjudication block: min-of-5 totals, the
     // empty-batch fixed-cost probe, and the overhead-adjusted data-term
     // ratio (the number the ≤~1.5 target should be read against)
     val maintainJson = {
-      val t8 = deepTimes(("sim_hnsw_maintain", 8))
-      val t32 = deepTimes(("sim_hnsw_maintain", DeepFactor))
-      val o8 = maintainOverhead(8)
-      val o32 = maintainOverhead(DeepFactor)
-      val d8 = math.max(t8 - o8, 1e-3)
-      val d32 = math.max(t32 - o32, 1e-3)
-      val oJson = (Factors :+ DeepFactor)
-        .map(f => s""""x$f":${r3(maintainOverhead(f))}""").mkString("{", ",", "}")
-      s"""{"reps":$MaintainReps,"overhead":$oJson,""" +
-        s""""data_x8":${r3(d8)},"data_x$DeepFactor":${r3(d32)},""" +
-        s""""data_ratio_x32_x8":${r3(d32 / d8)}}"""
+      val d8 = math.max(deepTimes(("sim_hnsw_maintain", 8)) - maintainOverhead(8), 1e-3)
+      val d32 = math.max(deepTimes(("sim_hnsw_maintain", DeepFactor)) -
+        maintainOverhead(DeepFactor), 1e-3)
+      obj(Seq("reps" -> MaintainReps.toString,
+        "overhead" -> obj((Factors :+ DeepFactor).map(f => s"x$f" -> num(maintainOverhead(f)))),
+        "data_x8" -> num(d8), s"data_x$DeepFactor" -> num(d32),
+        "data_ratio_x32_x8" -> num(d32 / d8)))
     }
-    val line = s"""{"metric":"scale_slope","base":"$base","factors":[1,8,$DeepFactor],""" +
-      s""""total_x1":${r3(t1Total)},"total_x8":${r3(t8Total)},""" +
-      s""""total_ratio":${r3(t8Total / t1Total)},"queries":$perQuery,""" +
-      s""""deep":$deepJson,"lsh_census":$lshJson,"ivf_census":$ivfJson,""" +
-      s""""minhash_bands":$bands,"winnow_cap":$winnowJson,""" +
-      s""""hnsw_maintain_adjudication":$maintainJson,""" +
-      s""""x64_adjudication":$x64Json,""" +
-      s""""manifest_planning":$manifestJson,""" +
-      s""""containment_cap":$containJson}"""
+    val line = obj(Seq("metric" -> str("scale_slope"), "base" -> str(base),
+      "factors" -> s"[1,8,$DeepFactor]", "total_x1" -> num(t1Total), "total_x8" -> num(t8Total),
+      "total_ratio" -> num(t8Total / t1Total), "queries" -> perQuery, "deep" -> deepJson,
+      "lsh_census" -> lshJson, "ivf_census" -> ivfJson, "minhash_bands" -> bands,
+      "winnow_cap" -> winnowJson, "hnsw_maintain_adjudication" -> maintainJson,
+      "x64_adjudication" -> x64Json, "manifest_planning" -> manifestJson,
+      "containment_cap" -> containJson))
     println(line)
     java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_scale.json"),
       (line + "\n").getBytes("UTF-8"))

@@ -1,16 +1,18 @@
 package graft
 
+import graft.Measure.num
+
 /** Isolated-JVM timing channel for one registry query: a fresh session
-  * in a fresh process, so the measurement carries none of a long-lived
-  * harness's session state (memoized checkpoint blocks, listener
-  * backlog, old-gen pressure). ScaleBench spawns this as a subprocess
-  * for the ×64 skew-cap adjudication — the contaminated in-harness ×64
-  * winnow read measured 27-36 s where this channel reads ~15 s, and the
-  * number that adjudicates the ENGINE's slope is the clean one.
+  * in a fresh process carries none of a long-lived harness's session
+  * state (memoized checkpoint blocks, listener backlog, old-gen
+  * pressure). `Bench` and `ScaleBench` spawn it through [[Measure.probe]].
   *
-  * Args: sfDir queryName [reps=2]. Prints ONE JSON line with the
-  * min-of-reps seconds (cache drop + GC between reps, noop sink — the
-  * ScaleBench discipline).
+  * Args: sfDir queryName [reps=2]. Each rep is a clean-slate sample.
+  * Prints per rep a `[profile]` line (seconds, Spark jobs, summed job
+  * seconds, driver gap, codegen compilations and their milliseconds)
+  * and one line per job (id, seconds, label), then ONE JSON line for
+  * the best rep: `query`, `sec`, `jobs`, `job_s`, `gap_s`, `compiles`,
+  * `compile_ms`.
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
@@ -18,16 +20,20 @@ object ScaleProbe {
     val name = args(1)
     val reps = args.lift(2).map(_.toInt).getOrElse(2)
     val spark = GraftSession.local("graft-probe")
-    spark.range(1000000).selectExpr("sum(id)").collect() // JIT warm
-    var best = Double.MaxValue
-    for (_ <- 1 to reps) {
-      spark.catalog.clearCache()
-      System.gc()
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir).write.mode("overwrite").format("noop").save()
-      best = math.min(best, (System.nanoTime() - t0) / 1e9)
+    Measure.warm(spark)
+    val samples = (1 to reps).map { rep =>
+      val s = Measure.query(spark)(SparkEntry.queries(name)(spark, dir))
+      println(f"[profile] rep=$rep total=${s.sec}%.3f njobs=${s.jobs.size} " +
+        f"jobsum=${s.jobSec}%.3f gap=${s.gapSec}%.3f compiles=${s.compiles} " +
+        f"compile_ms=${s.compileMs}%.0f")
+      s.jobs.foreach(j => println(f"[profile]   ${j.id}%4d ${j.sec}%6.3f  ${j.label.take(110)}"))
+      s
     }
-    println(f"""{"query":"$name","sec":$best%.3f}""")
     spark.stop()
+    val best = samples.minBy(_.sec)
+    println(Measure.obj(Seq("query" -> Measure.str(name), "sec" -> num(best.sec),
+      "jobs" -> best.jobs.size.toString, "job_s" -> num(best.jobSec),
+      "gap_s" -> num(best.gapSec), "compiles" -> best.compiles.toString,
+      "compile_ms" -> num(best.compileMs))))
   }
 }

@@ -312,6 +312,12 @@ object TableMerge {
   def manifest(tablePath: String): Option[Seq[(String, Long)]] =
     resolveLive(tablePath).map(snapshotMeta(_).entries)
 
+  /** Manifest entries of retained version `version` (a [[versions]]
+    * entry); None when it expired since it was listed. */
+  def versionManifest(tablePath: String, version: String): Option[Seq[(String, Long)]] =
+    try Some(manifestOf(Paths.get(tablePath, version)))
+    catch { case _: java.nio.file.NoSuchFileException => None }
+
   /** COLUMN-MAPPING sidecar (TSV: logical name, physical name, in
     * logical read-back order) — the Delta column-mapping analogue that
     * makes `ALTER TABLE … RENAME/DROP COLUMN` METADATA-ONLY commits:

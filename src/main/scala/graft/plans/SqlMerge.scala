@@ -161,8 +161,9 @@ object SqlMerge {
   }
 
   /** `DESCRIBE HISTORY graft.…` → one row per retained committed
-    * snapshot, newest first: name, live flag, data-file count, and the
-    * commit's txn metadata rendered `k=v` comma-joined. */
+    * snapshot, newest first: name, live flag, data-file count (from the
+    * version's manifest), and the commit's txn metadata rendered `k=v`
+    * comma-joined. */
   final case class GraftHistoryCommand(path: String) extends LeafCommand {
     override val output: Seq[Attribute] = Seq(
       attr("version", org.apache.spark.sql.types.StringType),
@@ -789,18 +790,13 @@ object SqlMerge {
         GraftMaintenanceExec(cmd.output, _ => {
           import graft.operators.TableMerge
           val live = TableMerge.liveVersion(cmd.path)
-          TableMerge.versions(cmd.path).map { v =>
-            val dir = java.nio.file.Paths.get(cmd.path, v)
-            val nFiles = {
-              def walk(f: java.io.File): Long =
-                if (f.isDirectory)
-                  Option(f.listFiles()).getOrElse(Array.empty).map(walk).sum
-                else if (f.getName.endsWith(".parquet")) 1L else 0L
-              walk(dir.toFile)
+          // a version VACUUM expires after the listing has no manifest: skip it
+          TableMerge.versions(cmd.path).flatMap { v =>
+            TableMerge.versionManifest(cmd.path, v).map { entries =>
+              val meta = TableMerge.versionMeta(cmd.path, v).toSeq.sorted
+                .map { case (k, x) => s"$k=$x" }.mkString(",")
+              org.apache.spark.sql.Row(v, live.contains(v), entries.size.toLong, meta)
             }
-            val meta = TableMerge.versionMeta(cmd.path, v).toSeq.sorted
-              .map { case (k, x) => s"$k=$x" }.mkString(",")
-            org.apache.spark.sql.Row(v, live.contains(v), nFiles, meta)
           }
         }) :: Nil
       case GraftTable(_, _, child) => planLater(child) :: Nil

@@ -9,13 +9,18 @@ import org.apache.spark.sql.types.StructType
 /** Narrow `private[sql]` bridge for [[graft.plans.SqlMerge]] and
   * [[graft.operators.TableMerge]]: a Column view of a resolved Catalyst
   * expression, a DataFrame view of a logical plan, partition-dir
-  * naming, plan-size observation, and the one snapshot read path (the
+  * naming, plan-size observation, a listener-bus drain for
+  * [[graft.Measure]], and the one snapshot read path (the
   * manifest-planned, stats-pruning [[manifestRead]]). Nothing else from
   * the internal API is re-exported.
   */
 object bridge extends org.apache.spark.internal.Logging {
   def columnOf(e: Expression): Column =
     org.apache.spark.sql.classic.ExpressionUtils.column(e)
+
+  /** Wait until every queued listener event has been delivered. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 
   def dataFrameOf(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(

@@ -727,22 +727,35 @@ class SqlMergeSpec extends AnyFunSuite {
     assert(df.count() == 256L)
     assert(scanned < 8L, s"micros stats must prune a ts range scan ($scanned)")
     // SCALE-MISMATCH GUARD: a pre-r18 sidecar recorded cast(ts AS long)
-    // = epoch SECONDS as a kind-less integral row; a micros-valued
-    // timestamp literal must never compare against it (1e6 scale apart
-    // — it would wrongly prune every file). Rewrite the live sidecar
-    // into the legacy 4-field format and assert nothing is pruned away.
-    val live = java.nio.file.Paths.get(path, TableMerge.liveVersion(path).get)
-    val legacy = Files.readString(live.resolve("_graft_stats.tsv")).linesIterator
+    // = epoch SECONDS as a kind-less 4-field row; such a row must record
+    // no range, so a micros-valued timestamp literal never compares
+    // against it (1e6 scale apart — it would wrongly prune every file).
+    // The legacy ledger goes into a clone no read has parsed yet (each
+    // snapshot's ledger parses once per process), and replaces the
+    // clone's hard-linked sidecar instead of writing through it into
+    // the source snapshot.
+    val legacyPath = tmpTable("tsguard-legacy")
+    TableMerge.cloneTable(path, legacyPath)
+    val ledger = java.nio.file.Paths.get(legacyPath, TableMerge.liveVersion(legacyPath).get)
+      .resolve("_graft_stats.tsv")
+    val legacy = Files.readString(ledger).linesIterator
       .flatMap(_.split('\t') match {
         case Array(rel, "ts", "t", lo, hi) =>
           Some(s"$rel\tts\t${lo.toLong / 1000000L}\t${hi.toLong / 1000000L}")
         case Array(rel, c, _, lo, hi) => Some(s"$rel\t$c\t$lo\t$hi")
         case _ => None
-      }).mkString("\n")
-    Files.writeString(live.resolve("_graft_stats.tsv"), legacy)
-    val n = TableMerge.read(spark, path).filter(col("ts") >= lit(cut)).count()
+      }).toSeq
+    assert(legacy.exists(_.split('\t')(1) == "ts"), "the legacy ledger must carry ts rows")
+    Files.delete(ledger)
+    Files.writeString(ledger, legacy.mkString("\n"))
+    assert(TableMerge.fileStats(legacyPath).isEmpty, "4-field ledger rows must record no range")
+    val n = TableMerge.read(spark, legacyPath).filter(col("ts") >= lit(cut)).count()
     assert(n == 256L,
       s"timestamp-literal bounds must not narrow seconds-scale legacy stats (got $n rows)")
+    assert(TableMerge.fileStats(path).values.exists(_.get("ts").exists {
+      case TableMerge.NumRange('t', _, _) => true
+      case _ => false
+    }), "the source snapshot's ledger must be untouched")
   }
 
   test("case-differing ZORDER BY identifiers still produce matching stats") {
@@ -1084,5 +1097,30 @@ class SqlMergeSpec extends AnyFunSuite {
     TableMerge.createOrReplace((0L until 4L).map(i => (i, i)).toDF("id", "v"), flat)
     val e = intercept[Exception](spark.sql(s"SHOW PARTITIONS graft.`$flat`").collect())
     assert(e.getMessage.contains("not partitioned"))
+  }
+
+  test("DESCRIBE HISTORY counts each version's files from its manifest") {
+    import spark.implicits._
+    val path = tmpTable("history-files")
+    def write(): Unit = TableMerge.createOrReplace(
+      (0L until 64L).map(i => (i, i % 4L)).toDF("id", "g").repartition(4), path)
+    write()
+    val first = TableMerge.liveVersion(path).get
+    write()
+    spark.sql(s"VACUUM graft.`$path` RETAIN 0 HOURS").collect()
+    assert(TableMerge.versionManifest(path, first).isEmpty,
+      "an expired version has no manifest, so history skips it")
+    // a stray parquet file in the live dir, outside any commit
+    val tmp = Files.createTempDirectory("graft-history-stray")
+    (1000L until 1100L).map(i => (i, 9L)).toDF("id", "g")
+      .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    Files.copy(tmp.toFile.listFiles().find(_.getName.endsWith(".parquet")).get.toPath,
+      java.nio.file.Paths.get(path, TableMerge.liveVersion(path).get)
+        .resolve("stray-not-in-manifest.parquet"))
+    val numFiles = spark.sql(s"DESCRIBE DETAIL graft.`$path`").head().getLong(3)
+    val hist = spark.sql(s"DESCRIBE HISTORY graft.`$path`")
+      .as[(String, Boolean, Long, String)].collect().toSeq
+    assert(numFiles == 4L && hist.map(h => (h._2, h._3)) == Seq((true, numFiles)),
+      s"the live row must count the manifest's $numFiles files: $hist")
   }
 }
