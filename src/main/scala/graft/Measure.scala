@@ -23,9 +23,12 @@ object Measure {
     * first-use compilation does not land on the first timed item. */
   def warm(spark: SparkSession): Unit = spark.range(1000000).selectExpr("sum(id)").collect()
 
-  /** One Spark job of a sample: seconds from submission to end, and its
-    * label: `spark.job.description`, else Spark's short call site. */
-  final case class Job(id: Int, sec: Double, label: String)
+  /** One Spark job of a sample: its submission and end, in seconds from
+    * the sample's start, and its label: `spark.job.description`, else
+    * Spark's short call site. */
+  final case class Job(id: Int, start: Double, end: Double, label: String) {
+    def sec: Double = end - start
+  }
 
   /** One timed run: wall seconds, the Spark jobs it ran, and its codegen
     * compilations and their milliseconds (a warm run that still
@@ -33,9 +36,19 @@ object Measure {
   final case class Sample(sec: Double, jobs: Seq[Job], compiles: Long, compileMs: Double) {
     /** Job seconds summed; overlapping jobs each count in full. */
     def jobSec: Double = jobs.map(_.sec).sum
-    /** Driver-side time outside jobs: planning, commit filesystem work,
-      * collects. Negative only when jobs overlapped. */
-    def gapSec: Double = sec - jobSec
+    /** Wall seconds in which no job ran: planning, commit filesystem
+      * work, collects. Wall minus the union of the job intervals clipped
+      * to the sample, so overlapping jobs count once and it is never
+      * negative. */
+    def gapSec: Double = {
+      var busy, reach = 0.0
+      for (j <- jobs.sortBy(_.start)) {
+        val end = math.min(j.end, sec)
+        busy += math.max(0.0, end - math.max(j.start, reach))
+        reach = math.max(reach, end)
+      }
+      sec - busy
+    }
   }
 
   /** Result and wall seconds of `body`, with no cache drop or GC: for
@@ -56,8 +69,9 @@ object Measure {
     jobs.open()
     val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val compileNs0 = CodeGenerator.compileTime
+    val originMs = System.currentTimeMillis()
     val (_, sec) = time(body)
-    Sample(sec, jobs.close(), CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0,
+    Sample(sec, jobs.close(originMs), CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0,
       (CodeGenerator.compileTime - compileNs0) / 1e6)
   }
 
@@ -96,7 +110,7 @@ object Measure {
     * bus delivers late. */
   private final class JobRecorder(sc: SparkContext) extends SparkListener {
     private val started = new ConcurrentHashMap[Int, (Long, String)]()
-    private val ended = new ConcurrentLinkedQueue[Job]()
+    private val ended = new ConcurrentLinkedQueue[(Int, Long, Long, String)]()
     private val sqlSites = new ConcurrentHashMap[Long, String]()
 
     override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
@@ -116,13 +130,19 @@ object Measure {
     }
 
     override def onJobEnd(je: SparkListenerJobEnd): Unit = Option(started.remove(je.jobId))
-      .foreach { case (t0, label) => ended.add(Job(je.jobId, (je.time - t0) / 1e3, label)) }
+      .foreach { case (t0, label) => ended.add((je.jobId, t0, je.time, label)) }
 
     /** Forget every job delivered so far. */
     def open(): Unit = { bridge.drainListenerBus(sc); started.clear(); ended.clear() }
 
-    /** The jobs that started after [[open]] and have ended, by id. */
-    def close(): Seq[Job] = { bridge.drainListenerBus(sc); ended.asScala.toSeq.sortBy(_.id) }
+    /** The jobs that started after [[open]] and have ended, by id, timed
+      * from `originMs` (epoch milliseconds, the event clock). */
+    def close(originMs: Long): Seq[Job] = {
+      bridge.drainListenerBus(sc)
+      ended.asScala.toSeq.map { case (id, t0, t1, label) =>
+        Job(id, (t0 - originMs) / 1e3, (t1 - originMs) / 1e3, label)
+      }.sortBy(_.id)
+    }
   }
 
   private val recorders = new ConcurrentHashMap[SparkContext, JobRecorder]()

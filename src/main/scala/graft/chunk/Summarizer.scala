@@ -80,10 +80,4 @@ object Summarizer {
     val joined = summarize(text, cfg).mkString(" ")
     if (joined.length <= maxChars) joined else joined.substring(0, maxChars).trim
   }
-
-  /** Composite summary across parts (pages or chapter summaries): the
-    * reference's chapter/document summaries concatenate member text and
-    * re-summarize. */
-  def compositeSummary(parts: Seq[String], cfg: Config = Config()): String =
-    summaryText(parts.filter(p => p != null && p.nonEmpty).mkString("\n"), cfg)
 }

@@ -69,24 +69,6 @@ object HllSketch {
     case _ => 0.7213 / (1.0 + 1.079 / m)
   }
 
-  def estimate(regs: Array[Byte]): Long = {
-    val m = regs.length
-    var invSum = 0.0
-    var zeros = 0
-    var i = 0
-    while (i < m) {
-      val r = regs(i) & 0xFF
-      invSum += java.lang.Math.pow(2.0, -r)
-      if (r == 0) zeros += 1
-      i += 1
-    }
-    val e = alpha(m) * m.toDouble * m.toDouble / invSum
-    val corrected =
-      if (e <= 2.5 * m && zeros > 0) m * java.lang.Math.log(m.toDouble / zeros)
-      else e
-    java.lang.Math.round(corrected)
-  }
-
   def pack(regs: Array[Byte], p: Int): Array[Byte] = {
     val out = new Array[Byte](4 + regs.length)
     out(0) = (p >>> 24).toByte; out(1) = (p >>> 16).toByte
@@ -94,10 +76,6 @@ object HllSketch {
     System.arraycopy(regs, 0, out, 4, regs.length)
     out
   }
-
-  def unpackP(bytes: Array[Byte]): Int =
-    ((bytes(0) & 0xFF) << 24) | ((bytes(1) & 0xFF) << 16) |
-      ((bytes(2) & 0xFF) << 8) | (bytes(3) & 0xFF)
 
   def unpackRegs(bytes: Array[Byte]): Array[Byte] =
     java.util.Arrays.copyOfRange(bytes, 4, bytes.length)

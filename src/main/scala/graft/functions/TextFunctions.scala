@@ -279,49 +279,6 @@ object TextFunctions {
     BigDecimal(math.min(score, 1.0)).setScale(3, BigDecimal.RoundingMode.HALF_UP).toDouble
   }
 
-  /** F4 — `build_minio_object_candidates` (transformer.py:140-183):
-    * expand an asset path/URL into candidate object keys (s3/http prefix
-    * strip, bucket prefix strip, query/fragment strip, percent-decode),
-    * order-preserving dedup.
-    */
-  def buildObjectCandidates(assetPath: String, bucket: Option[String]): Seq[String] = {
-    val raw = cleanScalar(assetPath).getOrElse(return Seq.empty)
-    val bucketName = bucket.flatMap(cleanScalar).getOrElse("")
-    val seen = scala.collection.mutable.LinkedHashSet[String]()
-
-    def push(candidate: String): Unit = {
-      val text0 = Option(candidate).getOrElse("").trim
-      if (text0.isEmpty) return
-      if (text0.startsWith("s3://") || text0.startsWith("s3a://")) {
-        val afterScheme = text0.substring(text0.indexOf("://") + 3)
-        val slash = afterScheme.indexOf('/')
-        val key = if (slash >= 0) afterScheme.substring(slash + 1) else ""
-        if (key.nonEmpty) {
-          push(key)
-          if (bucketName.nonEmpty && key.startsWith(bucketName + "/"))
-            push(key.substring(bucketName.length + 1))
-        }
-        return
-      }
-      if (text0.startsWith("http://") || text0.startsWith("https://")) {
-        try {
-          val u = new java.net.URI(text0)
-          push(Option(u.getRawPath).getOrElse("").dropWhile(_ == '/'))
-        } catch { case _: Exception => }
-        return
-      }
-      var text = text0.dropWhile(_ == '/')
-      text = text.split("\\?", 2)(0).split("#", 2)(0)
-      if (bucketName.nonEmpty && text.startsWith(bucketName + "/"))
-        text = text.substring(bucketName.length + 1)
-      if (text.nonEmpty) seen.add(text)
-      val decoded = try java.net.URLDecoder.decode(text, "UTF-8") catch { case _: Exception => "" }
-      if (decoded.nonEmpty) seen.add(decoded)
-    }
-    push(raw)
-    seen.toSeq
-  }
-
   // --- Q4-style text analytics (chatbot_api.py:69-119) ----------------
 
   /** English stopword set used by keyword extraction and the lang-ID

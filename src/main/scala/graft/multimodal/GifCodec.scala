@@ -146,7 +146,6 @@ object GifCodec {
   def decode(b: Array[Byte]): Option[(Int, Int, Array[Byte], Array[Byte])] = {
     if (b.length < 13 || b(0) != 'G' || b(1) != 'I' || b(2) != 'F') return None
     def leU16(i: Int): Int = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-    val width = leU16(6); val height = leU16(8)
     val packed = b(10) & 0xff
     if ((packed & 0x80) == 0 || (packed & 0x07) != 7) return None // need 256-entry GCT
     var i = 13

@@ -368,31 +368,6 @@ object MediaStub {
         math.floor(scale * 10000).toLong)
     }
   }
-
-  /** Feature extraction: one `dim`-float vector per asset — the
-    * embedding-shaped output a vision/audio encoder would produce, fed
-    * to the sim_* ANN queries downstream. One "model" per partition
-    * (mapPartitions), rows streamed. STUB DECODE: the vector is a
-    * deterministic byte-derived fake (rolling sums over the payload);
-    * a real encoder replaces only the vector body, not the plumbing. */
-  def extractFeatures(records: Dataset[MediaRecord], dim: Int): Dataset[(Long, Array[Float])] = {
-    import records.sparkSession.implicits._
-    require(dim > 0)
-    records.mapPartitions { rows =>
-      // per-partition "model load" (a real encoder is expensive to init)
-      val acc = new Array[Float](dim)
-      rows.map { r =>
-        java.util.Arrays.fill(acc, 0.0f)
-        var i = 0
-        while (i < r.media.length) {
-          acc(i % dim) += ((r.media(i) & 0xff) - 128) / 128.0f
-          i += 1
-        }
-        val n = math.max(1, r.media.length / dim)
-        (r.doc_id, acc.map(_ / n).clone())
-      }
-    }
-  }
 }
 
 /** Well-formed media container builders — the ENCODER half of the header

@@ -288,7 +288,6 @@ object PdfCodec {
           // indirect-ref lookahead: N G R
           val save = pos
           ws()
-          val t2start = pos
           val t2 = token()
           if (t2.nonEmpty && t2.forall(_.isDigit)) {
             ws()

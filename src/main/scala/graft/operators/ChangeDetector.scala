@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** I1-I3 — reusable change-data detection (SURVEY §7.3 "custom library"):
@@ -43,14 +43,6 @@ object ChangeDetector {
     classify(batch, existing, keys, fingerprintCol, tsCol)
       .filter(col("change_kind") =!= Unchanged)
       .drop("change_kind")
-
-  /** I2 — asset-level drift: etag/size/mtime inequality with coalesce
-    * defaults (any listed column differing marks the row changed). */
-  def driftPredicate(driftCols: Seq[(String, String)]): Column =
-    driftCols.map { case (cur, ex) =>
-      coalesce(col(cur).cast("string"), lit("")) =!=
-        coalesce(col(ex).cast("string"), lit(""))
-    }.reduce(_ || _)
 
   /** I3 — tombstones: keys present in `existing` but absent from
     * `current` (deleted upstream); feed the result to TableMerge.delete. */

@@ -67,13 +67,6 @@ object Layout {
       .drop("__z")
   }
 
-  /** Write `df` z-ordered on (`xCol`, `yCol`) into `numFiles` parquet
-    * files (see [[zOrdered]]). */
-  def writeZOrdered(df: DataFrame, path: String, xCol: String, yCol: String,
-                    numFiles: Int, bits: Int = 16): Unit =
-    zOrdered(df, xCol, yCol, numFiles, bits)
-      .write.mode("overwrite").parquet(path)
-
   /** Write an embeddings frame BUCKETED by its IVF coarse-centroid
     * assignment — the storage layout that turns the ANN probe filter
     * into partition pruning: a query that probes `nprobe` of `nlist`

@@ -1,33 +1,20 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
-/** Band-shape tuning for the MINHASH band join (VERDICT r10 #6) — the
-  * Jaccard-space sibling of [[LshTuner]]: today's dedup tier runs a
-  * fixed r=2 rows × b=2 bands banding; this measures, from the same
-  * cheap bucket census the LSH tuner uses, what candidate-pair volume
-  * each feasible (r, b) shape of a k-permutation signature would
-  * produce on the REAL corpus, and picks the highest-recall shape whose
-  * volume stays bounded.
-  *
-  * The S-curve (Leskovec/Rajaraman/Ullman ch. 3) says a pair at Jaccard
-  * s surfaces with p = 1−(1−s^r)^b: smaller r ⇒ higher recall AND more
-  * candidates. So the choice rule is: among shapes whose measured
-  * pairs-per-doc is ≤ the bound, take the SMALLEST r (max recall),
-  * breaking ties toward more bands; if nothing is bounded, take the
-  * largest r (damage control — the caller sees the measured volume
-  * either way). Like the LSH census, the census shuffle on
-  * (band_idx, band_val) is the exact shuffle the candidate join would
-  * do, so the probe prices the join it protects.
+/** Band rows at any (r, b) shape of a k-permutation MinHash signature —
+  * the Jaccard-space sibling of [[LshTuner]]'s census: today's dedup
+  * tier runs a fixed r=2 rows × b=2 bands banding, and
+  * `dedup_band_census` counts, per feasible shape, the candidate-pair
+  * volume the band join would produce on the REAL corpus. The S-curve
+  * (Leskovec/Rajaraman/Ullman ch. 3) says a pair at Jaccard s surfaces
+  * with p = 1−(1−s^r)^b: smaller r ⇒ higher recall AND more candidates.
+  * The census shuffle on (band_idx, band_val) is the exact shuffle the
+  * candidate join would do, so the probe prices the join it protects.
   */
 object MinHashTuner {
 
   private val P = 2147483647L // 31-bit Mersenne prime (dedup tier domain)
-
-  final case class Census(r: Int, b: Int, candPairs: Long, maxBucket: Long, nDocs: Long) {
-    def pairsPerDoc: Double = candPairs.toDouble / math.max(nDocs, 1L)
-  }
 
   /** Band value of rows j·r … j·r+r−1 of the signature: a *31-fold with
     * a mod at each step (≡ the dedup tier's `(sig[0]*31+sig[1]) % P`
@@ -45,56 +32,5 @@ object MinHashTuner {
     shingled
       .selectExpr("doc_id", s"graft_minhash(shset, '$spec') AS sig")
       .selectExpr("doc_id", s"posexplode(array($bands)) AS (band_idx, band_val)")
-  }
-
-  /** One census pass at shape (r, b): candidate-pair volume
-    * (Σ n·(n−1)/2 over buckets — the band join's pre-distinct output
-    * size), max bucket occupancy, and the doc count. */
-  def census(shingled: DataFrame, spec: String, r: Int, b: Int): Census = {
-    val row = bandRows(shingled, spec, r, b)
-      .groupBy("band_idx", "band_val").agg(count(lit(1)).as("n"))
-      .agg(coalesce(sum(expr("n * (n - 1) DIV 2")), lit(0L)).as("cand_pairs"),
-        coalesce(max("n"), lit(0L)).as("max_bucket"),
-        coalesce(sum(col("n")), lit(0L)).as("n_band_rows"))
-      .head()
-    // every doc emits exactly b band rows, so docs = band rows / b
-    Census(r, b, row.getLong(0), row.getLong(1), row.getLong(2) / b)
-  }
-
-  /** Census every shape, then choose: bounded shapes → smallest r
-    * (max recall), ties → larger b; none bounded → largest r. Returns
-    * (chosen, all censuses) so callers can log the full curve. */
-  def choose(shingled: DataFrame, spec: String, shapes: Seq[(Int, Int)],
-             maxPairsPerDoc: Double = 24.0): (Census, Seq[Census]) = {
-    require(shapes.nonEmpty, "no candidate shapes")
-    val all = shapes.map { case (r, b) => census(shingled, spec, r, b) }
-    val bounded = all.filter(_.pairsPerDoc <= maxPairsPerDoc)
-    val chosen =
-      if (bounded.nonEmpty) bounded.minBy(c => (c.r, -c.b))
-      else all.maxBy(c => (c.r, c.b))
-    (chosen, all)
-  }
-
-  /** Candidate pairs at shape (r, b) confirmed by exact shingle Jaccard
-    * ≥ `threshold` — the generalized form of the dedup tier's fixed
-    * r=2/b=2 pair pipeline, for recall measurement at tuned shapes. */
-  def confirmedPairs(shingled: DataFrame, spec: String, r: Int, b: Int,
-                     threshold: Double = 0.6): DataFrame = {
-    val rows = bandRows(shingled, spec, r, b)
-    val candidates = rows.as("x")
-      .join(rows.as("y"),
-        col("x.band_idx") === col("y.band_idx") &&
-          col("x.band_val") === col("y.band_val") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
-      .distinct()
-    candidates
-      .join(shingled.select(col("doc_id").as("id_a"), col("shset").as("set_a")), "id_a")
-      .join(shingled.select(col("doc_id").as("id_b"), col("shset").as("set_b")), "id_b")
-      .selectExpr("id_a", "id_b",
-        "CAST(size(array_intersect(set_a, set_b)) AS DOUBLE) / " +
-          "(size(set_a) + size(set_b) - size(array_intersect(set_a, set_b))) AS j")
-      .filter(col("j") >= threshold)
-      .select(col("id_a"), col("id_b"))
   }
 }

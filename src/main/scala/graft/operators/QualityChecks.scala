@@ -5,19 +5,16 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Data-quality check runner + ≥k-of-n gate — the engine's face of the
+/** Data-quality check runner — the engine's face of the
   * reference's quality_log table (`create_schema.py:395-410`:
   * check_id / table_name / check_type / check_result / passed_count /
-  * failed_count / check_timestamp / details MAP<STRING,STRING>) and the
-  * gold-layer validation gate (`gold_layer_processing_dag.py:246-343`:
-  * N named table checks, the layer validates iff ≥ 7 of 9 pass).
+  * failed_count / check_timestamp / details MAP<STRING,STRING>).
   *
   * Scale shape: ALL checks against one table fuse into a single
   * conditional aggregate over one scan (`sum(when(pred, 1))` per check
   * — partial-agg friendly, no per-check pass), and the per-check log
   * rows come from `inline` over the 1-row aggregate, so a table of any
   * size pays exactly one read no matter how many checks it carries.
-  * The gate itself reduces the log — driver-side state is two longs.
   */
 object QualityChecks {
 
@@ -67,22 +64,5 @@ object QualityChecks {
         ).as("details"))
     }
     agg.select(inline(array(logRows: _*)))
-  }
-
-  final case class GateResult(passed: Boolean, passedChecks: Int,
-                              totalChecks: Int, log: DataFrame)
-
-  /** ≥k-of-n gate over one or more check runs: the layer validates iff
-    * at least `minPassed` checks passed; the full quality_log survives
-    * either way (the reference writes check results whether or not the
-    * gate opens, then branches the DAG on the summary). */
-  def gate(runs: Seq[DataFrame], minPassed: Int): GateResult = {
-    require(runs.nonEmpty, "at least one check run required")
-    val log = runs.reduce(_.unionByName(_))
-    val summary = log.agg(
-      sum(when(col("check_result") === "passed", 1L).otherwise(0L)),
-      count(lit(1))).head()
-    GateResult(summary.getLong(0) >= minPassed,
-      summary.getLong(0).toInt, summary.getLong(1).toInt, log)
   }
 }

@@ -25,24 +25,6 @@ object SkewSalt {
     df.withColumn(saltCol, pmod(xxhash64(saltSource.map(col): _*), lit(buckets)))
   }
 
-  /** Salted count: two-phase groupBy for a skewed key column. */
-  def saltedCount(df: DataFrame, key: String, buckets: Int,
-                  saltSource: Seq[String]): DataFrame =
-    withSalt(df, buckets, saltSource)
-      .groupBy(col(key), col("__salt"))
-      .agg(count(lit(1)).as("__partial"))
-      .groupBy(col(key))
-      .agg(sum("__partial").as("n"))
-
-  /** Salted sum over `valueCol` for a skewed key column. */
-  def saltedSum(df: DataFrame, key: String, valueCol: String, buckets: Int,
-                saltSource: Seq[String]): DataFrame =
-    withSalt(df, buckets, saltSource)
-      .groupBy(col(key), col("__salt"))
-      .agg(sum(valueCol).as("__partial"))
-      .groupBy(col(key))
-      .agg(sum("__partial").as(s"sum_$valueCol"))
-
   /** Salted broadcast-side replication for a skewed JOIN: explode the
     * (small) build side once per salt bucket so a salted probe side can
     * equi-join on (key, salt). Probe side: `withSalt(...)`; build side:

@@ -518,7 +518,7 @@ object TableMerge {
 
   private def writeSchemaSidecar(version: Path,
                                  schema: org.apache.spark.sql.types.StructType,
-                                 partitionCols: Seq[String] = Seq.empty): Unit = {
+                                 partitionCols: Seq[String]): Unit = {
     // store the READ-BACK column order (data columns, then partition
     // columns — how Spark reconstructs a partitioned layout) so a
     // zero-row table presents the same schema it will have once data
@@ -551,16 +551,6 @@ object TableMerge {
     * carried none, or there is no table). */
   def commitMeta(tablePath: String): Map[String, String] =
     currentVersionName(tablePath).map(versionMeta(tablePath, _)).getOrElse(Map.empty)
-
-  /** Newest retained committed version whose metadata has `key -> value`
-    * — the replay-detection lookup for exactly-once sinks: a foreachBatch
-    * writer tags each commit with its batchId and asks this before
-    * re-applying. Bounded by retention (one prior version + prune
-    * grace), which covers the prompt-restart replay window; a replay
-    * older than retention gets None and must fail loudly rather than
-    * silently re-apply. */
-  def findVersionByMeta(tablePath: String, key: String, value: String): Option[String] =
-    versions(tablePath).find(v => versionMeta(tablePath, v).get(key).contains(value))
 
   /** Parsed sidecars of an immutable committed snapshot: the read-back
     * (physical) schema, partition columns, manifest entries, per-file
@@ -1114,11 +1104,11 @@ object TableMerge {
     * every other file is hard-linked into the new version untouched.
     * Commits through the same CAS pointer swap as merges, so compaction
     * runs concurrently with readers and loses cleanly (replays) against
-    * concurrent writers. This is the maintenance half of the streaming
-    * merge sink: a partition-scoped rewrite emits one file per
+    * concurrent writers. This is the maintenance half of repeated
+    * scoped merges: a partition-scoped rewrite emits one file per
     * merge-shuffle task that held the partition's rows — up to
-    * shuffle.partitions small files per hot bucket per micro-batch — and
-    * compaction folds them back without blocking the stream. At 100 TB,
+    * shuffle.partitions small files per hot bucket per merge — and
+    * compaction folds them back without blocking writers. At 100 TB,
     * `targetFiles` is sized from partition bytes / desired file size
     * rather than a constant. Returns the number of units rewritten. */
   def compact(spark: SparkSession, tablePath: String, partitionCols: Seq[String],
@@ -1702,7 +1692,7 @@ object TableMerge {
     * version gives in-flight readers a full commit-cycle grace period.
     */
   private def commitVersion(tablePath: String, version: Path,
-                            expect: Expect = AnyParent): Unit = withCommitLock(tablePath) {
+                            expect: Expect): Unit = withCommitLock(tablePath) {
     val pointer = pointerPath(tablePath)
     val prev = currentVersionName(tablePath)
     expect match {

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -68,16 +68,15 @@ private[graft] object BpeQueries {
       org.apache.spark.sql.functions.call_function("graft_bpe_merge",
         col("t"), lit(lhs), lit(rhs)))
 
-  /** Trained merge tables per corpus dir — a tokenizer is trained once
-    * and REUSED, not retrained per query (the three battery entries
-    * share one table, exactly as a production pipeline ships one
-    * tokenizer artifact). Safe to memoize: the table is plain data,
-    * training is deterministic (BpeSpec pins re-run equality), and the
-    * testdata dirs are immutable. On a memo hit the vocab is
-    * re-tokenized by REPLAYING the stored merges — 8 lazy projection
-    * rounds, no counting jobs, no driver collects. */
-  private val trainedMerges =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String)]]()
+  /** Memo key of a corpus dir's trained merge table — a tokenizer is
+    * trained once per session and REUSED, not retrained per query (the
+    * three battery entries share one table, exactly as a production
+    * pipeline ships one tokenizer artifact). Safe to memoize: the table
+    * is plain data and training is deterministic (BpeSpec pins re-run
+    * equality). On a memo hit the vocab is re-tokenized by REPLAYING
+    * the stored merges — 8 lazy projection rounds, no counting jobs, no
+    * driver collects. */
+  private def mergesKey(d: String): String = "bpe_merges|" + d
 
   /** Textbook BPE train loop: NumMerges rounds of count → top-1 →
     * apply, returning the ranked merge table and the fully tokenized
@@ -85,8 +84,15 @@ private[graft] object BpeQueries {
     * are exhausted. */
   private[graft] def learnMerges(s: SparkSession, d: String): (Seq[(String, String)], DataFrame) = {
     val v = vocab(s, d)
-    Option(trainedMerges.get(d)) match {
-      case Some(m) =>
+    var trained: Option[DataFrame] = None
+    val m = PipelineShared.memo(s, mergesKey(d)) {
+      val (merges, voc) = learnMergesFrom(v)
+      trained = Some(voc)
+      merges
+    }
+    trained match {
+      case Some(voc) => (m, voc)
+      case None =>
         // checkpoint per round EXACTLY like training: a filter or join
         // predicate pushed through 8 stacked rounds of nested-lambda
         // projections makes the optimizer's alias inlining (trimAliases
@@ -96,10 +102,6 @@ private[graft] object BpeQueries {
         var df = v.withColumn("t", split(col("w"), "")).localCheckpoint()
         m.foreach { case (l, r) => df = applyMergeRound(df, l, r).localCheckpoint() }
         (m, df)
-      case None =>
-        val (m, voc) = learnMergesFrom(v)
-        trainedMerges.put(d, m)
-        (m, voc)
     }
   }
 
@@ -130,10 +132,10 @@ private[graft] object BpeQueries {
     * tokenizer ships. Oracle = the same train loop unrolled as SQL.
     * This entry is the TRAINING operator, so it always trains
     * (bypassing the memo — its bench time is the honest train cost)
-    * and refreshes the stored table the apply-side entries reuse. */
+    * and memoizes the table the apply-side entries reuse. */
   private val textBpeMerges: Q = (s, d) => {
     val (merges, _) = learnMergesFrom(vocab(s, d))
-    trainedMerges.put(d, merges)
+    PipelineShared.memo(s, mergesKey(d))(merges)
     import s.implicits._
     merges.zipWithIndex
       .map { case ((l, r), i) => (i + 1L, l, r, l + r) }

@@ -1,11 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.TableMerge
 import graft.queries.PipelineShared._
 
 /** Hybrid-search + COMPOSED tier (split from PipelineQueries in r10;

@@ -219,10 +219,7 @@ private[queries] object DedupQueries {
   private val dedupIndexMaintain: Q = (s, d) => {
     import graft.operators.TableMerge
     val spec = MinhashPairParams.map { case (a, b) => s"$a,$b" }.mkString(";")
-    val stateDir = java.nio.file.Paths.get(
-      sys.props.getOrElse("graft.state.dir", "target/graft-state"))
-    java.nio.file.Files.createDirectories(stateDir)
-    val path = stateDir.resolve(s"bandidx_${new java.io.File(d).getName}").toString
+    val path = statePath(s"bandidx_${new java.io.File(d).getName}")
     def wipe(p: java.io.File): Unit = {
       if (p.isDirectory) Option(p.listFiles()).getOrElse(Array.empty).foreach(wipe)
       p.delete(); ()
@@ -265,16 +262,61 @@ private[queries] object DedupQueries {
       .orderBy("band_idx")
   }
 
-  /** Novelty FILTER over a batch vs the stored corpus band index — the
-    * batch twin of [[graft.streaming.EventStreams.novelDocuments]] (the
-    * same code runs on the unbounded stream; this entry puts it under
-    * the hash gate): a doc is novel iff NONE of its minhash bands
-    * collide with the corpus index. Complements `dedup_incremental`,
-    * which emits the CONFIRMED near-dup pairs; this emits the
-    * certified-novel side — the set a daily ingest would append without
-    * any exact-Jaccard work. Same fixture as dedup_incremental. */
+  /** MinHash band projection of a documents frame (doc_id, text) →
+    * (doc_id, band_0, band_1): 3-shingle set → k-permutation signature →
+    * r=2 banded values, the same construction `dedup_incremental` uses.
+    * Every step is a per-row projection through the native graft
+    * kernels. Documents shorter than one shingle (< 3 tokens) carry no
+    * signature and are excluded here — [[novelDocuments]] passes them
+    * through as novel. */
+  private def minhashBands(docs: DataFrame, spec: String): DataFrame =
+    docs.selectExpr("doc_id", "split(text, ' ') AS tokens")
+      .filter(size(col("tokens")) >= 3)
+      .selectExpr("doc_id", "graft_shingle_set(graft_word_fps(tokens)) AS shset")
+      .selectExpr("doc_id", s"graft_minhash(shset, '$spec') AS sig")
+      .selectExpr("doc_id",
+        s"(sig[0] * 31 + sig[1]) % $P AS band_0",
+        s"(sig[2] * 31 + sig[3]) % $P AS band_1")
+
+  /** Stored-corpus band index (doc_id, band_idx, band_val) — the
+    * persistable table the incremental dedup maintains; build once from
+    * the corpus, then the novelty filter joins against it. */
+  private def corpusBandIndex(docs: DataFrame, spec: String): DataFrame =
+    minhashBands(docs, spec)
+      .selectExpr("doc_id", "posexplode(array(band_0, band_1)) AS (band_idx, band_val)")
+
+  /** Novelty filter: a doc is certified novel iff NONE of its bands
+    * collide with the stored corpus index. Two chained LEFT ANTI joins
+    * (one per band), no aggregation — the corpus index is the only
+    * state. Collision docs (the ones filtered out here) are near-dup
+    * CANDIDATES; the exact-Jaccard confirm is `dedup_incremental`'s
+    * role, so no shingle sets are buffered. Sub-shingle-length docs
+    * union back in as novel. At scale the index table should be stored
+    * bucketed by band_val (co-located join) rather than broadcast — the
+    * corpus index of a 100 TB corpus is itself large. */
+  private def novelDocuments(docs: DataFrame, corpusIndex: DataFrame, spec: String): DataFrame = {
+    val bands = minhashBands(docs, spec)
+    val idx0 = corpusIndex.filter(col("band_idx") === 0)
+      .select(col("band_val").as("cb0")).distinct()
+    val idx1 = corpusIndex.filter(col("band_idx") === 1)
+      .select(col("band_val").as("cb1")).distinct()
+    val shorts = docs.selectExpr("doc_id", "split(text, ' ') AS tokens")
+      .filter(size(col("tokens")) < 3).select("doc_id")
+    bands
+      .join(idx0, col("band_0") === col("cb0"), "left_anti")
+      .join(idx1, col("band_1") === col("cb1"), "left_anti")
+      .select("doc_id")
+      .union(shorts)
+  }
+
+  /** Novelty FILTER over a batch vs the stored corpus band index
+    * ([[novelDocuments]] under the hash gate): a doc is novel iff NONE
+    * of its minhash bands collide with the corpus index. Complements
+    * `dedup_incremental`, which emits the CONFIRMED near-dup pairs; this
+    * emits the certified-novel side — the set a daily ingest would
+    * append without any exact-Jaccard work. Same fixture as
+    * dedup_incremental. */
   private val dedupNovelFilter: Q = (s, d) => {
-    import graft.streaming.EventStreams
     val spec = MinhashPairParams.map { case (a, b) => s"$a,$b" }.mkString(";")
     val docs = Tables.documents(s, d)
     val corpusDocs = docs.filter(col("doc_id") % 10 =!= 0).select("doc_id", "text")
@@ -282,8 +324,7 @@ private[queries] object DedupQueries {
       .union(docs.filter(col("doc_id") % 10 =!= 0 && col("doc_id") % 20 === 5)
         .selectExpr("doc_id + 200000 AS doc_id",
           "concat_ws(' ', slice(split(text, ' '), 2, size(split(text, ' ')) - 1)) AS text"))
-    EventStreams.novelDocuments(batchDocs,
-        EventStreams.corpusBandIndex(corpusDocs, spec), spec)
+    novelDocuments(batchDocs, corpusBandIndex(corpusDocs, spec), spec)
       .orderBy("doc_id")
   }
 

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -184,10 +184,8 @@ private[queries] object DistAggQueries {
 
   // ------------------------------------------------------------ event-time window
 
-  /** Tumbling event-time window aggregate (Structured-Streaming-shaped;
-    * same plan works under readStream with a watermark — see
-    * graft.streaming). Timestamps bucket to days, so the parquet
-    * ns → Spark µs truncation is immaterial. */
+  /** Tumbling event-time window aggregate. Timestamps bucket to days,
+    * so the parquet ns → Spark µs truncation is immaterial. */
   private val streamWindowAgg: Q = (s, d) =>
     Tables.events(s, d)
       .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
@@ -320,10 +318,7 @@ private[queries] object DistAggQueries {
     * p50/p90 are the bucket upper edges where cumulative count crosses
     * the rank — integer compares, no interpolation ambiguity. */
   private val aggHistQuantile: Q = (s, d) => {
-    val stateDir = java.nio.file.Paths.get(
-      sys.props.getOrElse("graft.state.dir", "target/graft-state"))
-    java.nio.file.Files.createDirectories(stateDir)
-    val path = stateDir.resolve("agg_hist_quantile").toString
+    val path = statePath("agg_hist_quantile")
     val docs = Tables.documents(s, d).select(col("source"), col("doc_id"),
       least(expr("n_chars div 200"), lit(29L)).as("bucket"))
     def partial(df: DataFrame): DataFrame =
@@ -350,13 +345,10 @@ private[queries] object DistAggQueries {
       .orderBy("source")
   }
 
-  /** Batch sessionization — the gaps-and-islands twin of
-    * [[graft.streaming.EventStreams.sessionize]]: a session breaks when
+  /** Batch sessionization (gaps and islands): a session breaks when
     * consecutive events of a user are more than `gapMs` apart; session
-    * ids are the running count of breaks. Same 30-minute gap rule as
-    * the streaming flatMapGroupsWithState version (whose spec pins the
-    * open/close semantics) — this one is SQL-expressible, so the oracle
-    * hash-pins it. Milliseconds on BOTH engines (unix_millis ↔
+    * ids are the running count of breaks. 30-minute gap rule; the
+    * oracle hash-pins it. Milliseconds on BOTH engines (unix_millis ↔
     * epoch_ms) — µs tails differ in the ns→µs conversion corners.
     * Shuffle key user_id, two stacked windows on the same sort — one
     * exchange, one sort. */

@@ -6,12 +6,11 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.queries.PipelineShared._
 import org.apache.spark.sql.expressions.Window
-import graft.queries.VectorQueries.duckLshBits
 
 /** Embedding near-dup / semantic-decontamination tier — split from
   * VectorQueries in r12 (mechanical move, registry names and oracles
   * unchanged): banded-LSH embedding near-dup pairs with the native
-  * cosine confirm, the LSH pair-recall audit, streaming-shared semantic
+  * cosine confirm, the LSH pair-recall audit, semantic
   * decontamination, and the SemDeDup-style keep decision.
   */
 private[graft] object EmbedNeardupQueries {

@@ -513,8 +513,7 @@ private[graft] object GraphAnnQueries {
 
   /** SERVED beam walk over the PERSISTED src-bucketed neighbor table —
     * the 100 TB read path the in-memory walk models: the graph lives as
-    * a TableMerge layout partitioned by `ebucket = src % 16` (what
-    * [[graft.streaming.EventStreams.graphIndexSink]] maintains), and
+    * a TableMerge layout partitioned by `ebucket = src % 16`, and
     * each hop reads ONLY the frontier's buckets — the `isin` on the
     * partition column resolves to partition pruning, so a hop's I/O is
     * O(beam) partition dirs, never the table (GraphAnnSpec pins the
@@ -537,10 +536,7 @@ private[graft] object GraphAnnQueries {
     // the table simply no longer stores the pair_e6 score column,
     // which no reader consumed.
     val path = PipelineShared.memo(s, s"hnsw_probed_table|$d") {
-      val stateDir = java.nio.file.Paths.get(
-        sys.props.getOrElse("graft.state.dir", "target/graft-state"))
-      java.nio.file.Files.createDirectories(stateDir)
-      val p = stateDir.resolve(s"hnswidx_${new java.io.File(d).getName}").toString
+      val p = PipelineShared.statePath(s"hnswidx_${new java.io.File(d).getName}")
       def wipe(f: java.io.File): Unit = {
         if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(wipe)
         f.delete(); ()

@@ -1,7 +1,6 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.multimodal.{PngCodec, WavCodec}
@@ -252,7 +251,6 @@ private[graft] object MultimodalQueries {
     * (17.0.20) — a JDK upgrade re-pins them, same class of dependency
     * as every golden constant. */
   private val mmPixelStatsJpeg: Q = (s, d) => {
-    import s.implicits._
     // session-memoized + checkpointed (VERDICT r18 #6): the fixture
     // ENCODE + decode is the dominant cost and the digest gate's
     // crossJoin(agg) would otherwise execute the plan twice per run —

@@ -45,6 +45,15 @@ private[graft] object PipelineShared {
     }
   }
 
+  /** Path of a state table or file named `name` under the state root
+    * (system property `graft.state.dir`, default `target/graft-state`);
+    * creates the root. */
+  def statePath(name: String): String = {
+    val dir = java.nio.file.Paths.get(sys.props.getOrElse("graft.state.dir", "target/graft-state"))
+    java.nio.file.Files.createDirectories(dir)
+    dir.resolve(name).toString
+  }
+
   /** Overlap independent eager builds on the driver pool — see
     * [[graft.Par.inParallel]] (guide §2.6). */
   def inParallel[T](thunks: Seq[() => T]): Seq[T] = graft.Par.inParallel(thunks)

@@ -56,14 +56,12 @@ private[queries] object RelationalExtrasQueries {
   }
 
   /** W5 — native `session_window` event-time sessionization: the
-    * third sessionization surface (flatMapGroupsWithState pins the
-    * stateful streaming form, `sessionize_batch` the gaps-and-islands
-    * window form; this is Spark's BUILT-IN session aggregate, the one
-    * a SQL user reaches for) hash-pinned against the same relational
-    * gap rule — session = maximal run of a user's events with
+    * second sessionization surface (`sessionize_batch` is the
+    * gaps-and-islands window form; this is Spark's BUILT-IN session
+    * aggregate, the one a SQL user reaches for) hash-pinned against the
+    * same relational gap rule — session = maximal run of a user's events with
     * consecutive gaps ≤ 30 min, end = last event + gap. One shuffle on
-    * user_id, sessions merged inside the aggregate; the same query
-    * runs unchanged under readStream with a watermark. Milliseconds on
+    * user_id, sessions merged inside the aggregate. Milliseconds on
     * both engines (unix_millis ↔ epoch_ms). */
   private val w5SessionWindow: Q = (s, d) =>
     Tables.events(s, d)

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -295,9 +295,7 @@ private[graft] object SamplerQueries {
     * (doc_id, bucket) partial-agg groupBy, and the top-50 is a
     * TakeOrdered — no global sort materializes, nothing is all-pairs. */
   /** DSIR feature extraction: one `(doc_id, source, b)` row per hashed
-    * bigram occurrence — shared by the battery row and the streaming
-    * selection twin ([[graft.streaming.DsirStream]]), so they cannot
-    * drift. */
+    * bigram occurrence. */
   private[graft] def dsirFeats(docs: DataFrame): DataFrame =
     // posexplode + prev lookup (the LmQueries positions idiom) instead of
     // materializing a per-doc bigram-string array: measured 6.2 s → the

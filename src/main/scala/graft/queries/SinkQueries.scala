@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.operators.TableMerge
+import graft.queries.PipelineShared.statePath
 import graft.sources.SqlDumpParser
 
 /** Source/sink battery for the file-shaped SURVEY.md §2.1 rows: the
@@ -23,12 +24,6 @@ import graft.sources.SqlDumpParser
 object SinkQueries {
 
   type Q = (SparkSession, String) => DataFrame
-
-  private def statePath(name: String): String = {
-    val dir = Paths.get(sys.props.getOrElse("graft.state.dir", "target/graft-state"))
-    Files.createDirectories(dir)
-    dir.resolve(name).toString
-  }
 
   /** S1 — multiline JSON scan (transformer.py:1440-1444): one
     * array-of-records file per source, read with multiline=true. The

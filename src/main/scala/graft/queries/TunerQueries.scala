@@ -8,15 +8,14 @@ import graft.operators.MinHashTuner
 import graft.queries.PipelineShared._
 
 /** Band-shape CENSUS for the MinHash dedup tier (VERDICT r10 #6) — the
-  * measured S-curve trade the [[graft.operators.MinHashTuner]] chooser
-  * consumes, pinned as an oracle row per feasible shape of the
+  * measured S-curve trade of [[graft.operators.MinHashTuner]]'s band
+  * rows, pinned as an oracle row per feasible shape of the
   * 4-permutation signature: r=1/b=4 (max recall, max candidates),
   * r=2/b=2 (the shipped dedup-tier shape), r=4/b=1 (most selective).
   * Buckets are counted over the SAME banded values the candidate join
   * shuffles on, so cand_pairs is exactly the join's pre-distinct
-  * output size — the number the tuner bounds before committing to the
-  * join. LshTunerSpec drives the chooser off this census and proves
-  * recall at the chosen shape dominates the most-selective shape.
+  * output size — the number a tuner would bound before committing to
+  * the join. LshTunerSpec checks the volume is monotone in r.
   *
   * Scale: one groupBy per shape over (band_idx, band_val) — partial
   * aggregation, compact integer keys, no pairs materialized anywhere.

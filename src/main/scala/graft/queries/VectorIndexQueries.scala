@@ -91,10 +91,7 @@ private[graft] object VectorIndexQueries {
     * deterministic create+merge, not a version pileup. */
   private def buildMaintainedIndex(s: SparkSession, d: String, tag: String,
                                    nlist: Int): String = {
-    val stateDir = java.nio.file.Paths.get(
-      sys.props.getOrElse("graft.state.dir", "target/graft-state"))
-    java.nio.file.Files.createDirectories(stateDir)
-    val path = stateDir.resolve(s"ivfidx_${tag}_${new java.io.File(d).getName}").toString
+    val path = statePath(s"ivfidx_${tag}_${new java.io.File(d).getName}")
     def wipe(p: java.io.File): Unit = {
       if (p.isDirectory) Option(p.listFiles()).getOrElse(Array.empty).foreach(wipe)
       p.delete(); ()
@@ -111,8 +108,7 @@ private[graft] object VectorIndexQueries {
     // moves zero data (inode links), so the timed cost of a cycle is
     // the batch merge + its reads — the recurring work.
     val seed = PipelineShared.memo(s, s"ivfidx_seed|$d|$nlist") {
-      val sp = stateDir.resolve(
-        s"ivfidx_seed_${new java.io.File(d).getName}_$nlist").toString
+      val sp = statePath(s"ivfidx_seed_${new java.io.File(d).getName}_$nlist")
       wipe(new java.io.File(sp))
       // bulk load clustered by the partition column: `nlist` initial
       // files, not tasks×dirs (the same one-writer-per-dir discipline

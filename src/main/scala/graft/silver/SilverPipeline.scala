@@ -179,8 +179,6 @@ object SilverPipeline {
   private def runWith(spark: SparkSession, bronze: DataFrame, cfg: Config,
                       forceReprocess: Boolean,
                       chunksOf: DataFrame => DataFrame): RunStats = {
-    import spark.implicits._
-
     // The bronze, dedup and change counts ride the ONE materializing job,
     // the eager checkpoint below, as CollectMetrics observations (A8)
     // instead of count() actions: a count per stage would scan bronze

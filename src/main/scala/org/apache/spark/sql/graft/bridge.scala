@@ -26,14 +26,6 @@ object bridge extends org.apache.spark.internal.Logging {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
-  /** Hive path-escaping of one partition VALUE — the same rule Spark's
-    * writers apply when naming `col=val` directories. Every write-side
-    * computation that compares against (or predicts) directory names
-    * must escape with THIS, or values containing `/ : % #` etc. desync
-    * the touched-partition bookkeeping from the real tree. */
-  def escapePartitionValue(s: String): String =
-    org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(s)
-
   /** One `col=value` path segment, named EXACTLY as Spark's writer
     * names it: null AND empty string render as
     * `__HIVE_DEFAULT_PARTITION__`, everything else path-escapes. The
@@ -82,7 +74,6 @@ object bridge extends org.apache.spark.internal.Logging {
   import org.apache.spark.sql.execution.datasources._
   import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
   import org.apache.spark.unsafe.types.UTF8String
-  import graft.operators.TableMerge
   import graft.operators.TableMerge.{ColRange, NumRange, StrRange}
 
   /** One listFiles invocation's pruning state: filter-shape extraction

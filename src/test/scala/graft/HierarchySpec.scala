@@ -41,14 +41,6 @@ class HierarchySpec extends AnyFunSuite {
     assert(Summarizer.summaryText("", maxChars = 100) == "")
   }
 
-  test("F23 composite summary stacks parts") {
-    val s = Summarizer.compositeSummary(Seq(
-      "Chapter one covers relational scans and storage formats in detail.",
-      null, "",
-      "Chapter two explains distributed join execution and shuffle costs."))
-    assert(s.nonEmpty)
-  }
-
   // ---------------------------------------------------------- F22 TOC cascade
 
   private def pages(ps: (Int, String)*): Map[Int, String] = ps.toMap

@@ -22,7 +22,7 @@ class HllSketchSpec extends AnyFunSuite {
   private def directEstimate(keys: Seq[Long]): Long = {
     val regs = new Array[Byte](HllSketch.numRegisters(P))
     keys.foreach(HllSketch.add(regs, P, _))
-    HllSketch.estimate(regs)
+    HllSketch.estimatePacked(HllSketch.pack(regs, P))
   }
 
   test("estimate lands within 5% across cardinality regimes") {

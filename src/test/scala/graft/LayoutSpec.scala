@@ -23,7 +23,7 @@ class LayoutSpec extends AnyFunSuite {
     val base = Files.createTempDirectory("graft-layout")
     val zdir = base.resolve("zorder").toString
     val ldir = base.resolve("linear").toString
-    Layout.writeZOrdered(dims, zdir, "x", "y", numFiles = 8)
+    Layout.zOrdered(dims, "x", "y", numFiles = 8).write.mode("overwrite").parquet(zdir)
     dims.repartitionByRange(8, col("x")).sortWithinPartitions("x")
       .write.mode("overwrite").parquet(ldir)
 
@@ -121,7 +121,7 @@ class LayoutSpec extends AnyFunSuite {
       (-900000000000000000L, 1L), (0L, 500L), (900000000000000000L, 1000L))
       .toDF("x", "y")
     val dir = Files.createTempDirectory("graft-layout-wide").resolve("z").toString
-    Layout.writeZOrdered(wide, dir, "x", "y", numFiles = 2)
+    Layout.zOrdered(wide, "x", "y", numFiles = 2).write.mode("overwrite").parquet(dir)
     val back = spark.read.parquet(dir).as[(Long, Long)].collect().toSet
     assert(back == wide.as[(Long, Long)].collect().toSet)
   }

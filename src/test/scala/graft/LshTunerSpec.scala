@@ -71,7 +71,7 @@ class LshTunerSpec extends AnyFunSuite {
     assert(c.candPairs == 0L && c.nRows == 0L && c.pairsPerRow == 0.0)
   }
 
-  // ---- MinHash band-shape tuner (the Jaccard-space sibling) ----
+  // ---- MinHash band census (the Jaccard-space sibling) ----
 
   import graft.operators.MinHashTuner
 
@@ -91,43 +91,19 @@ class LshTunerSpec extends AnyFunSuite {
   test("minhash census: candidate volume decreases with r (band coincidences nest)") {
     val sh = shingledSf0001.cache()
     try {
-      val Seq(c14, c22, c41) =
-        Shapes.map { case (r, b) => MinHashTuner.census(sh, MinhashSpec, r, b) }
-      assert(c14.nDocs == c22.nDocs && c22.nDocs == c41.nDocs)
+      // per shape, the `dedup_band_census` arithmetic: candidate pairs
+      // (Σ n·(n−1)/2 over band buckets) and docs (band rows / b)
+      val Seq(c14, c22, c41) = Shapes.map { case (r, b) =>
+        val row = MinHashTuner.bandRows(sh, MinhashSpec, r, b)
+          .groupBy("band_idx", "band_val").agg(count(lit(1)).as("n"))
+          .agg(sum(expr("n * (n - 1) DIV 2")), sum("n")).head()
+        (row.getLong(0), row.getLong(1) / b)
+      }
+      assert(c14._2 == c22._2 && c22._2 == c41._2)
       // a band coincidence at r=2k implies one at r=k (bands refine),
       // so pre-distinct candidate volume is monotone in r
-      assert(c14.candPairs >= c22.candPairs && c22.candPairs >= c41.candPairs)
-      assert(c41.candPairs > 0, "fixture degenerate: no near-dups collide at r=4")
-    } finally { sh.unpersist(); () }
-  }
-
-  test("minhash chooser takes the smallest bounded r (max recall), damage-control otherwise") {
-    val sh = shingledSf0001.cache()
-    try {
-      val (chosen, all) = MinHashTuner.choose(sh, MinhashSpec, Shapes, maxPairsPerDoc = 1e9)
-      assert(chosen.r == 1 && chosen.b == 4) // everything bounded → max recall
-      assert(all.size == 3)
-      val (strict, _) = MinHashTuner.choose(sh, MinhashSpec, Shapes, maxPairsPerDoc = -1.0)
-      assert(strict.r == 4 && strict.b == 1) // nothing bounded → most selective
-    } finally { sh.unpersist(); () }
-  }
-
-  test("recall at the census-tuned shape dominates the shipped r=2/b=2 shape") {
-    import spark.implicits._
-    val sh = shingledSf0001.cache()
-    try {
-      def pairs(r: Int, b: Int): Set[(Long, Long)] =
-        MinHashTuner.confirmedPairs(sh, MinhashSpec, r, b)
-          .as[(Long, Long)].collect().toSet
-      val Seq(p14, p22, p41) = Shapes.map { case (r, b) => pairs(r, b) }
-      // confirmed sets nest with r for the same permutation family
-      assert(p41.subsetOf(p22) && p22.subsetOf(p14))
-      assert(p22.nonEmpty, "fixture degenerate: shipped shape finds nothing")
-      // the chooser can only move r DOWN from the shipped 2 when bounded,
-      // so its confirmed set is a superset of the shipped one
-      val (chosen, _) = MinHashTuner.choose(sh, MinhashSpec, Shapes, maxPairsPerDoc = 64.0)
-      assert(chosen.r <= 2, s"census says sf0.001 cannot afford r<=2: $chosen")
-      assert(p22.subsetOf(pairs(chosen.r, chosen.b)))
+      assert(c14._1 >= c22._1 && c22._1 >= c41._1)
+      assert(c41._1 > 0, "fixture degenerate: no near-dups collide at r=4")
     } finally { sh.unpersist(); () }
   }
 }

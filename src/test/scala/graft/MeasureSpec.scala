@@ -28,7 +28,27 @@ class MeasureSpec extends AnyFunSuite {
     assert(own.map(_.label).take(2) == Seq("measure-spec first", "measure-spec second"), s.jobs)
     assert(own.size == 3 && own(2).label.contains("MeasureSpec.scala"), s.jobs)
     assert(s.jobs.forall(_.sec >= 0) && s.jobSec == s.jobs.map(_.sec).sum)
-    assert(s.gapSec == s.sec - s.jobSec && s.gapSec >= 0.1, s)
+    // the union of the job intervals is at most their summed time
+    assert(s.gapSec >= s.sec - s.jobSec - 0.01 && s.gapSec >= 0.1 && s.gapSec <= s.sec, s)
+  }
+
+  test("overlapping jobs count once in the driver gap, which stays non-negative") {
+    val sc = spark.sparkContext
+    val s = Measure.sample(spark) {
+      Par.inParallel(Seq("a", "b").map { label => () =>
+        sc.setJobDescription(s"measure-spec overlap $label")
+        try sc.parallelize(1 to 2, 2).map { x => Thread.sleep(400); x }.count()
+        finally sc.setJobDescription(null)
+      })
+      ()
+    }
+    val own = s.jobs.filter(_.label.startsWith("measure-spec overlap"))
+    assert(own.size == 2, s.jobs)
+    val Seq(a, b) = own
+    assert(a.start < b.end && b.start < a.end, s"jobs did not overlap: $own")
+    assert(s.gapSec >= 0 && s.gapSec <= s.sec, s)
+    // the overlap is counted once: wall minus summed job time is smaller
+    assert(s.sec - s.jobSec < s.gapSec, s)
   }
 
   test("min-of-N keeps each item's best sample; a failing item is recorded once, then skipped") {

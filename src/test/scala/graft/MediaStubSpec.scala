@@ -176,21 +176,6 @@ class MediaStubSpec extends AnyFunSuite {
     assert(p3.out_height == 512 && p3.out_width == math.floor(50 * 512.0 / 2000).toInt)
   }
 
-  test("feature extraction: deterministic dim-sized vectors, payload-sensitive") {
-    import spark.implicits._
-    val ds = Seq(rec(1, "abcabc", "image/png"), rec(2, "abcabc", "image/png"),
-      rec(3, "zzzzzz", "image/png")).toDS()
-    val feats = MediaStub.extractFeatures(ds, dim = 8).collect()
-      .map { case (id, v) => id -> v.toSeq }.toMap
-    assert(feats.values.forall(_.size == 8))
-    assert(feats(1L) == feats(2L))      // same bytes ⇒ same vector
-    assert(feats(1L) != feats(3L))      // different bytes ⇒ different vector
-    // partition count does not change vectors (model-per-partition)
-    val reparts = MediaStub.extractFeatures(ds.repartition(3), dim = 8).collect()
-      .map { case (id, v) => id -> v.toSeq }.toMap
-    assert(reparts == feats)
-  }
-
   test("partition count does not change results (decoder-per-partition)") {
     import spark.implicits._
     val recs = (1L to 50L).map(i => rec(i, s"payload-$i", if (i % 2 == 0) "video/mp4" else "image/png"))

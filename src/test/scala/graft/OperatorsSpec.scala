@@ -1,13 +1,11 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{ChangeDetector, SkewSalt, StateStore}
+import graft.operators.{ChangeDetector, SkewSalt}
 
-/** ChangeDetector (I1-I3), StateStore (I4) and SkewSalt library specs. */
+/** ChangeDetector (I1-I3) and SkewSalt library specs. */
 class OperatorsSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestBase.spark
@@ -50,56 +48,6 @@ class OperatorsSpec extends AnyFunSuite {
     val current = Seq("a", "c").toDF("id")
     assert(ChangeDetector.tombstones(existing, current, Seq("id"))
       .as[String].collect().toSeq == Seq("b"))
-  }
-
-  test("ChangeDetector.driftPredicate matches any differing column") {
-    import spark.implicits._
-    val df = Seq(
-      ("e1", "e1", 10, 10),  // no drift
-      ("e1", "e2", 10, 10),  // etag drift
-      ("e1", "e1", 10, 11),  // size drift
-      (null.asInstanceOf[String], null.asInstanceOf[String], 10, 10)) // both null: equal
-      .toDF("etag", "ex_etag", "size", "ex_size")
-    val drifted = df.filter(ChangeDetector.driftPredicate(
-      Seq("etag" -> "ex_etag", "size" -> "ex_size")))
-    assert(drifted.count() == 2)
-  }
-
-  test("StateStore memoizes and skips unchanged payloads") {
-    val path = Files.createTempDirectory("graft-state").resolve("state").toString
-    val store = new StateStore(spark, path)
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    assert(store.latestHash("k") == None)
-
-    var builds = 0
-    assert(store.runIfChanged("k", "h1", ts("2026-01-01 00:00:00")) { builds += 1 })
-    assert(builds == 1)
-    // same hash: skipped
-    assert(!store.runIfChanged("k", "h1", ts("2026-01-02 00:00:00")) { builds += 1 })
-    assert(builds == 1)
-    // new hash: rebuilt
-    assert(store.runIfChanged("k", "h2", ts("2026-01-03 00:00:00")) { builds += 1 })
-    assert(builds == 2)
-    assert(store.latestHash("k") == Some("h2"))
-    // independent key
-    assert(store.runIfChanged("k2", "h1", ts("2026-01-04 00:00:00")) { builds += 1 })
-    assert(builds == 3)
-  }
-
-  test("salted aggregation equals plain aggregation") {
-    import spark.implicits._
-    // skewed: key 'hot' holds 90% of rows
-    val rows = (1 to 1000).map(i => (if (i <= 900) "hot" else s"k${i % 7}", i.toLong, i.toDouble))
-    val df = rows.toDF("key", "row_id", "v")
-    val plainCount = df.groupBy("key").count().as[(String, Long)].collect().toMap
-    val saltedCount = SkewSalt.saltedCount(df, "key", buckets = 8, saltSource = Seq("row_id"))
-      .as[(String, Long)].collect().toMap
-    assert(saltedCount == plainCount)
-    val plainSum = df.groupBy("key").agg(sum("v")).as[(String, Double)].collect().toMap
-    val saltedSum = SkewSalt.saltedSum(df, "key", "v", buckets = 8, saltSource = Seq("row_id"))
-      .as[(String, Double)].collect().toMap
-    assert(saltedSum.keySet == plainSum.keySet)
-    plainSum.foreach { case (k, v) => assert(math.abs(saltedSum(k) - v) < 1e-6) }
   }
 
   test("salted join equals plain join") {
@@ -172,25 +120,5 @@ class OperatorsSpec extends AnyFunSuite {
       .as[(String, Long, Long)].head()
     assert(row == (("passed", 0L, 0L)))
     assert(log.select("details").as[Map[String, String]].head()("rows_checked") == "0")
-  }
-
-  test("QualityChecks.gate: pass path, fail path, threshold edge") {
-    import spark.implicits._
-    import graft.operators.QualityChecks
-    import graft.operators.QualityChecks.Check
-    val ts = java.sql.Timestamp.valueOf("2024-06-01 00:00:00")
-    val t = Seq((1L, "ok"), (2L, null.asInstanceOf[String])).toDF("id", "status")
-    val run = QualityChecks.run(t, "t", Seq(
-      Check("c_pass1", "range", col("id") > 0),          // passes
-      Check("c_pass2", "domain", col("id") < 10),        // passes
-      Check("c_fail", "completeness", col("status").isNotNull)), ts) // fails
-    // 2 of 3 pass: gate opens at k=2 (edge), k=1; refuses at k=3
-    val atEdge = QualityChecks.gate(Seq(run), minPassed = 2)
-    assert(atEdge.passed && atEdge.passedChecks == 2 && atEdge.totalChecks == 3)
-    assert(QualityChecks.gate(Seq(run), minPassed = 1).passed)
-    val over = QualityChecks.gate(Seq(run), minPassed = 3)
-    assert(!over.passed && over.passedChecks == 2)
-    // the log survives a failed gate (the reference records results either way)
-    assert(over.log.count() == 3)
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -40,14 +40,16 @@ class TableMergeSpec extends AnyFunSuite {
     TableMerge.upsert(spark, path, Seq((2, "b")).toDF("id", "v"), Seq("id"),
       meta = Map("app.batch" -> "1", "app.pre" -> TableMerge.versions(path).head))
     assert(TableMerge.commitMeta(path).get("app.batch").contains("1"))
-    val v1 = TableMerge.findVersionByMeta(path, "app.batch", "1")
-    val v0 = TableMerge.findVersionByMeta(path, "app.batch", "0")
+    def findVersionByMeta(key: String, value: String): Option[String] =
+      TableMerge.versions(path).find(v => TableMerge.versionMeta(path, v).get(key).contains(value))
+    val v1 = findVersionByMeta("app.batch", "1")
+    val v0 = findVersionByMeta("app.batch", "0")
     assert(v1.isDefined && v0.isDefined && v1 != v0)
     assert(TableMerge.versionMeta(path, v1.get).get("app.pre") == v0.map(identity))
     // untagged commit: head meta is empty, the tagged versions remain findable
     TableMerge.upsert(spark, path, Seq((3, "c")).toDF("id", "v"), Seq("id"))
     assert(TableMerge.commitMeta(path).isEmpty)
-    assert(TableMerge.findVersionByMeta(path, "app.batch", "1") == v1)
+    assert(findVersionByMeta("app.batch", "1") == v1)
     // partition-scoped branch also carries meta
     val ppath = tmpTable("meta-part")
     TableMerge.createOrReplace(Seq((1, "x", "p0")).toDF("id", "v", "p"), ppath, Seq("p"))
@@ -181,6 +183,60 @@ class TableMergeSpec extends AnyFunSuite {
     assert(got == Set(("p0", 1, "a"), ("p2", 2, "B2"), ("p1", 3, "c")))
     // the moved key exists ONLY at its new position — no stale row in p0
     assert(TableMerge.read(spark, path).filter($"id" === 2).count() == 1)
+  }
+
+  /** Inodes of the parquet files under `partDir` of the live version. */
+  private def liveInodes(path: String, partDir: String): Set[Long] = {
+    val live = java.nio.file.Paths.get(path).resolve(
+      Files.readString(java.nio.file.Paths.get(path, "_current")).trim)
+    Option(live.resolve(partDir).toFile.listFiles()).getOrElse(Array.empty)
+      .filter(_.getName.endsWith(".parquet"))
+      .map(f => Files.getAttribute(f.toPath, "unix:ino").asInstanceOf[Long]).toSet
+  }
+
+  test("replaceKeys replaces each key's row set: stale rows go, an empty new set clears the key") {
+    import spark.implicits._
+    val path = tmpTable("set-replace")
+    // a print-set index: each (bucket, doc_id) owns a SET of hashes
+    TableMerge.createOrReplace(
+      Seq((0, 1L, 10L), (0, 1L, 11L), (0, 1L, 12L), (1, 2L, 20L), (1, 2L, 21L), (1, 3L, 30L))
+        .toDF("bucket", "doc_id", "h"), path, Seq("bucket"))
+    // doc 1 is re-scraped to a smaller, partly new set; doc 2 to a text
+    // too short to carry any print (dropped, nothing inserted)
+    TableMerge.replaceKeys(spark, path,
+      source = Seq((0, 1L, 11L), (0, 1L, 13L)).toDF("bucket", "doc_id", "h"),
+      dropGroups = Seq((0, 1L), (1, 2L)).toDF("bucket", "doc_id"),
+      groupKeys = Seq("bucket", "doc_id"), partitionCols = Seq("bucket"))
+    val got = TableMerge.read(spark, path).select("bucket", "doc_id", "h")
+      .as[(Int, Long, Long)].collect().toSet
+    assert(got == Set((0, 1L, 11L), (0, 1L, 13L), (1, 3L, 30L)))
+  }
+
+  test("quiet buckets keep their inodes over repeated scoped merges") {
+    import spark.implicits._
+    val path = tmpTable("quiet-repeat")
+    TableMerge.createOrReplace(
+      (0 until 4).flatMap(b => (1 to 3).map(i => (b, b * 10L + i, s"v$i")))
+        .toDF("bucket", "id", "v"), path, Seq("bucket"))
+    val untouched = liveInodes(path, "bucket=3")
+    assert(untouched.nonEmpty)
+    // round r rewrites bucket r only; every earlier bucket is carried
+    val rewritten = (0 until 3).map { r =>
+      val before = liveInodes(path, s"bucket=$r")
+      TableMerge.upsert(spark, path, Seq((r, r * 10L + 1, s"r$r")).toDF("bucket", "id", "v"),
+        keys = Seq("bucket", "id"), partitionCols = Seq("bucket"))
+      val after = liveInodes(path, s"bucket=$r")
+      assert(after.nonEmpty && after != before, s"round $r did not rewrite bucket $r")
+      after
+    }
+    rewritten.zipWithIndex.foreach { case (ino, b) =>
+      assert(liveInodes(path, s"bucket=$b") == ino, s"bucket $b rewritten after its round")
+    }
+    assert(liveInodes(path, "bucket=3") == untouched, "never-touched bucket rewritten")
+    val got = TableMerge.read(spark, path).select("bucket", "id", "v")
+      .as[(Int, Long, String)].collect().toSet
+    assert(got.size == 12)
+    assert((0 until 3).forall(r => got.contains((r, r * 10L + 1, s"r$r"))))
   }
 
   test("upsert on a missing table creates it") {

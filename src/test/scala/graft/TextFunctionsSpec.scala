@@ -121,16 +121,6 @@ class TextFunctionsSpec extends AnyFunSuite {
     assert(computeQualityScore(Some("T"), None, Seq.empty, None, Some("en"), None, None, 1) == 0.33)
   }
 
-  test("F4 build_minio_object_candidates expands s3/http/bucket prefixes") {
-    assert(buildObjectCandidates("s3://warehouse/bronze/a.pdf", Some("warehouse")) ==
-      Seq("bronze/a.pdf"))
-    assert(buildObjectCandidates("https://minio.local/warehouse/docs/x%20y.pdf", None) ==
-      Seq("warehouse/docs/x%20y.pdf", "warehouse/docs/x y.pdf"))
-    assert(buildObjectCandidates("/warehouse/k.pdf?v=1#frag", Some("warehouse")) ==
-      Seq("k.pdf"))
-    assert(buildObjectCandidates("  ", None) == Seq.empty)
-  }
-
   test("Q4 keyword extraction and language detection") {
     assert(extractKeywords("what is the fastest sorting algorithm") ==
       Seq("fastest", "sorting", "algorithm"))

@@ -38,7 +38,7 @@ class TopKPerKeySpec extends AnyFunSuite {
     // a groupBy collect_list sort (engine-independent reference)
     val expected = df.as[(Int, Int, Long)].collect()
       .groupBy(_._1).toSeq
-      .flatMap { case (k, rows) =>
+      .flatMap { case (_, rows) =>
         rows.sortBy(r => (-r._2, r._3)).take(5).zipWithIndex
           .map { case ((key, score, id), i) => (key, score, id, i + 1) }
       }.sortBy(t => (t._1, t._4))

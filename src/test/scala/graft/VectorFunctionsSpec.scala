@@ -42,19 +42,4 @@ class VectorFunctionsSpec extends AnyFunSuite {
       .head().getDouble(0)
     assert(d == 5.0)
   }
-
-  test("hyperplane signature is deterministic and within bit range") {
-    import spark.implicits._
-    val df = Seq(
-      Tuple1(Seq.tabulate(8)(i => math.sin(i + 1))),
-      Tuple1(Seq.tabulate(8)(i => -math.sin(i + 1)))).toDF("v")
-    val sigs = df.select(VectorFunctions.hyperplaneSignature(col("v"), dim = 8, bits = 6))
-      .as[Int].collect()
-    assert(sigs.forall(s => s >= 0 && s < 64))
-    // antipodal vectors land in complementary buckets
-    assert(sigs(0) + sigs(1) == 63)
-    // rerun gives identical signatures (determinism across plans)
-    val again = df.select(VectorFunctions.hyperplaneSignature(col("v"), 8, 6)).as[Int].collect()
-    assert(again.toSeq == sigs.toSeq)
-  }
 }

@@ -99,9 +99,7 @@ class GraphAnnSpec extends AnyFunSuite {
     assert(probed == walked)
     // the hop read prunes: an isin on the partition column selects only
     // those partition dirs (the table was just built by hnswProbedTopk)
-    val path = java.nio.file.Paths.get(
-      sys.props.getOrElse("graft.state.dir", "target/graft-state"))
-      .resolve("hnswidx_sf0.001").toString
+    val path = PipelineShared.statePath("hnswidx_sf0.001")
     val hopRead = graft.operators.TableMerge.read(spark, path)
       .filter(org.apache.spark.sql.functions.col("ebucket").isin(3L, 7L))
     val scans = hopRead.queryExecution.executedPlan.collect {
@@ -113,7 +111,6 @@ class GraphAnnSpec extends AnyFunSuite {
   }
 
   test("ef sweep: wider beam never visits fewer nodes at equal graph") {
-    import spark.implicits._
     val scored = GraphAnnQueries.scoredDf(spark, sf).localCheckpoint()
     val edges = GraphAnnQueries.edgesDf(spark, sf).localCheckpoint()
     val sizes = Seq(4, 8, 16).map { beam =>
