@@ -1,5 +1,10 @@
 package graft
 
+import java.nio.file.Files
+import java.nio.file.attribute.PosixFilePermissions
+
+import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.SparkSession
 
 /** SparkSession factory for the graft engine.
@@ -42,8 +47,9 @@ object GraftSession {
     *     117 classes. At the default of 100 entries it recompiled ~108
     *     of them on every op, 20-26% of the op's CPU;
     *   - one `lakehouse_reads` round (six query templates): ~47 classes
-    *     after the set-up's 182, then 2 per query, because the drawn
-    *     keys are literals inlined into the generated code;
+    *     after the set-up's 182, then none: the drawn keys are filter
+    *     constants, which [[graft.plans.ParameterizeFilters]] keeps out
+    *     of the generated code (before it, 2 per query);
     *   - the battery's `e2e_silver_gold` at sf0.1 (`graft.ScaleProbe`):
     *     69 classes (61, 8 and 0 compiled over three reps).
     * The whole 253-query battery was not measured. 1000 entries hold all
@@ -67,6 +73,8 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.parquet.mergeSchema", "false")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      // set file permissions in-process instead of forking `chmod`
+      .config("spark.hadoop.fs.file.impl", classOf[GraftLocalFileSystem].getName)
       // keep catalog-table files (j15 bucketed fixtures) under target/ so
       // a battery run never litters the repo working tree
       .config("spark.sql.warehouse.dir",
@@ -78,5 +86,25 @@ object GraftSession {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
+  }
+}
+
+/** The `file:` filesystem of a graft session: Hadoop's checksummed
+  * `LocalFileSystem` over a raw filesystem that sets permissions with
+  * `java.nio`. Without libhadoop, the stock raw filesystem forks a
+  * `chmod` process for every permission it sets: on each file the
+  * parquet writer creates and on each directory the commit protocol
+  * makes (315 forks in one `medallion_incremental` run of three set-ups
+  * and four ops). A sticky bit, which `java.nio` cannot set, still goes
+  * through the stock path. */
+final class GraftLocalFileSystem extends LocalFileSystem(new GraftLocalFileSystem.Raw)
+
+object GraftLocalFileSystem {
+  final class Raw extends RawLocalFileSystem {
+    override def setPermission(p: Path, permission: FsPermission): Unit =
+      if (permission.getStickyBit) super.setPermission(p, permission)
+      else Files.setPosixFilePermissions(pathToFile(p).toPath, PosixFilePermissions.fromString(
+        Seq(permission.getUserAction, permission.getGroupAction, permission.getOtherAction)
+          .map(_.SYMBOL).mkString)): Unit
   }
 }

@@ -118,9 +118,11 @@ final case class CosineSimilarity(left: Expression, right: Expression)
 
 /** Session extension registering the graft function surface
   * (`spark.sql.extensions=graft.expressions.GraftExtensions`, wired in
-  * GraftSession so SQL, Column and Python callers all see it) and the
+  * GraftSession so SQL, Column and Python callers all see it), the
   * bounded-heap top-k planner strategy
-  * ([[graft.plans.TopKPerKey.TopKPerKeyStrategy]]). */
+  * ([[graft.plans.TopKPerKey.TopKPerKeyStrategy]]), the SQL MERGE / DDL
+  * surface ([[graft.plans.SqlMerge]]) and the filter-constant rule
+  * ([[graft.plans.ParameterizeFilters]]). */
 final class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction((
@@ -402,5 +404,8 @@ final class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // claim the statement for the session catalog before any injected
     // resolution rule runs (see SqlMerge.convertDdl)
     ext.injectParser((s, parser) => new graft.plans.SqlMerge.GraftSqlParser(s, parser))
+    // filter constants by reference, so a re-run with new keys reuses
+    // its compiled classes (graft.plans.ParameterizeFilters)
+    ext.injectColumnar(_ => graft.plans.ParameterizeFilters.Hook)
   }
 }

@@ -269,7 +269,9 @@ object TableMerge {
   /** Carry the base snapshot's surviving files into the staging
     * version: every base-manifest entry not `dropped` hard-links
     * name-unchanged (the manifest is the file list, so a file the
-    * manifest does not list is never carried), and the staging manifest
+    * manifest does not list is never carried), with its `.<name>.crc`
+    * checksum sidecar when it has one (a file read without its sidecar
+    * is read unverified), and the staging manifest
     * lists those survivors plus `fresh` rows for the files this commit
     * wrote. An EMPTY manifest is still written (a zero-row snapshot has
     * one with no rows). Streamed: the ledger is never one driver string. */
@@ -283,7 +285,10 @@ object TableMerge {
         !dropped(rel) && {
           val dest = staging.resolve(rel)
           if (made.add(dest.getParent)) Files.createDirectories(dest.getParent)
-          linkTree(live.resolve(rel), dest)
+          val src = live.resolve(rel)
+          linkTree(src, dest)
+          val crc = src.resolveSibling(s".${src.getFileName}.crc")
+          if (Files.exists(crc)) linkTree(crc, dest.resolveSibling(crc.getFileName))
           true
         }
       }
@@ -1822,7 +1827,7 @@ object TableMerge {
       }
     }
 
-  private def deleteRecursively(p: Path): Unit = {
+  private[graft] def deleteRecursively(p: Path): Unit = {
     val f = p.toFile
     if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(c => deleteRecursively(c.toPath))
     f.delete(): Unit

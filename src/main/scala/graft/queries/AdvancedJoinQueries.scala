@@ -44,11 +44,7 @@ private[graft] object AdvancedJoinQueries {
         val wh = s.conf.get("spark.sql.warehouse.dir")
         val dir = if (wh.startsWith("file:")) java.nio.file.Paths.get(new java.net.URI(wh))
           else java.nio.file.Paths.get(wh)
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles).getOrElse(Array.empty[java.io.File]).foreach(rm)
-          f.delete(): Unit
-        }
-        rm(dir.resolve(name).toFile)
+        graft.operators.TableMerge.deleteRecursively(dir.resolve(name))
       }
       reset("graft_b_orders")
       reset("graft_b_lineitem")

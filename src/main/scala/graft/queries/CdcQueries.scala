@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.operators.{ChangeDetector, TableMerge}
-import graft.queries.PipelineShared.statePath
+import graft.queries.PipelineShared.{statePath, wipedStatePath}
 
 /** Incremental / change-data queries (SURVEY.md §2.9) and the MERGE-sink
   * battery (§2.1 K1/K2/K5). The merge queries materialize real Parquet
@@ -359,11 +359,7 @@ object CdcQueries {
     * the PAST version is addressed positionally (the non-live committed
     * version), which is only deterministic from a fresh table. */
   private val k9TimeTravel: Q = (s, d) => {
-    val path = statePath("k9_time_travel")
-    def rmrf(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rmrf)); f.delete(); ()
-    }
-    rmrf(new java.io.File(path))
+    val path = wipedStatePath("k9_time_travel")
     val v1 = Tables.customer(s, d).filter(col("c_custkey") % 2 === 0)
       .select("c_custkey", "c_mktsegment", "c_acctbal")
     TableMerge.createOrReplace(v1, path)
@@ -401,11 +397,7 @@ object CdcQueries {
     * recompute over both batches: incremental maintenance must be
     * indistinguishable from it. State wiped per run. */
   private val i8MatviewDelta: Q = (s, d) => {
-    val path = statePath("i8_matview_delta")
-    def rmrf(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rmrf)); f.delete(); ()
-    }
-    rmrf(new java.io.File(path))
+    val path = wipedStatePath("i8_matview_delta")
     val cust = Tables.customer(s, d).select(col("c_mktsegment"), col("c_custkey"),
       expr("CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)").as("bal_e2"))
     def partial(df: DataFrame): DataFrame = df.groupBy("c_mktsegment")
@@ -491,11 +483,7 @@ object CdcQueries {
     * valid_from) pins the effective-dating itself. State wiped per
     * run. */
   private val i9Scd2History: Q = (s, d) => {
-    val path = statePath("i9_scd2_history")
-    def rmrf(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rmrf)); f.delete(); ()
-    }
-    rmrf(new java.io.File(path))
+    val path = wipedStatePath("i9_scd2_history")
     val cust = Tables.customer(s, d).select(col("c_custkey"), col("c_mktsegment"),
       expr("CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)").as("bal_e2"))
     // v1 dimension: everything but the %7==3 keys, open since 2024-01-01

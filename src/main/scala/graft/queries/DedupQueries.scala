@@ -219,12 +219,7 @@ private[queries] object DedupQueries {
   private val dedupIndexMaintain: Q = (s, d) => {
     import graft.operators.TableMerge
     val spec = MinhashPairParams.map { case (a, b) => s"$a,$b" }.mkString(";")
-    val path = statePath(s"bandidx_${new java.io.File(d).getName}")
-    def wipe(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).getOrElse(Array.empty).foreach(wipe)
-      p.delete(); ()
-    }
-    wipe(new java.io.File(path))
+    val path = wipedStatePath(s"bandidx_${new java.io.File(d).getName}")
     val docs = Tables.documents(s, d)
       .selectExpr("doc_id", "split(text, ' ') AS tokens")
     val corpusDocs = docs.filter(col("doc_id") % 10 =!= 0)

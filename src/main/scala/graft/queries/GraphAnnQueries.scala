@@ -536,12 +536,7 @@ private[graft] object GraphAnnQueries {
     // the table simply no longer stores the pair_e6 score column,
     // which no reader consumed.
     val path = PipelineShared.memo(s, s"hnsw_probed_table|$d") {
-      val p = PipelineShared.statePath(s"hnswidx_${new java.io.File(d).getName}")
-      def wipe(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(wipe)
-        f.delete(); ()
-      }
-      wipe(new java.io.File(p))
+      val p = PipelineShared.wipedStatePath(s"hnswidx_${new java.io.File(d).getName}")
       TableMerge.createOrReplace(
         edgesCkpt(s, d).withColumn("ebucket", pmod(col("src"), lit(NB))),
         p, Seq("ebucket"))

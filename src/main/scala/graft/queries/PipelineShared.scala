@@ -54,6 +54,14 @@ private[graft] object PipelineShared {
     dir.resolve(name).toString
   }
 
+  /** [[statePath]] of `name`, with whatever an earlier run left there
+    * deleted. */
+  def wipedStatePath(name: String): String = {
+    val p = statePath(name)
+    graft.operators.TableMerge.deleteRecursively(java.nio.file.Paths.get(p))
+    p
+  }
+
   /** Overlap independent eager builds on the driver pool — see
     * [[graft.Par.inParallel]] (guide §2.6). */
   def inParallel[T](thunks: Seq[() => T]): Seq[T] = graft.Par.inParallel(thunks)

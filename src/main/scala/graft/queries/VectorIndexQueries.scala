@@ -91,12 +91,7 @@ private[graft] object VectorIndexQueries {
     * deterministic create+merge, not a version pileup. */
   private def buildMaintainedIndex(s: SparkSession, d: String, tag: String,
                                    nlist: Int): String = {
-    val path = statePath(s"ivfidx_${tag}_${new java.io.File(d).getName}")
-    def wipe(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).getOrElse(Array.empty).foreach(wipe)
-      p.delete(); ()
-    }
-    wipe(new java.io.File(path))
+    val path = wipedStatePath(s"ivfidx_${tag}_${new java.io.File(d).getName}")
     val emb = Tables.embeddings(s, d)
     // The pre-merge corpus index is a maintained ARTIFACT (a
     // deterministic function of (d, nlist)) — built ONCE per session
@@ -108,8 +103,7 @@ private[graft] object VectorIndexQueries {
     // moves zero data (inode links), so the timed cost of a cycle is
     // the batch merge + its reads — the recurring work.
     val seed = PipelineShared.memo(s, s"ivfidx_seed|$d|$nlist") {
-      val sp = statePath(s"ivfidx_seed_${new java.io.File(d).getName}_$nlist")
-      wipe(new java.io.File(sp))
+      val sp = wipedStatePath(s"ivfidx_seed_${new java.io.File(d).getName}_$nlist")
       // bulk load clustered by the partition column: `nlist` initial
       // files, not tasks×dirs (the same one-writer-per-dir discipline
       // TableMerge's scoped merges apply internally)

@@ -12,12 +12,14 @@ import graft.operators.TableMerge
 import graft.silver.SilverPipeline
 
 /** Steady-state codegen: once warm, a repeated silver → gold → commit
-  * cycle compiles nothing. Spark keeps compiled classes in one JVM-wide
+  * cycle compiles nothing, and neither does a read re-run with new keys. Spark keeps compiled classes in one JVM-wide
   * LRU (`spark.sql.codegen.cache.maxEntries`, sized by
   * [[GraftSession.CodegenCacheEntries]]); a cycle whose working set
   * outgrows it hits 0% and recompiles every class on every cycle, which
   * cost the medallion op ~25% of its CPU. A plan change that pushes the
-  * working set past the cache turns this red.
+  * working set past the cache turns this red. A filter constant inlined
+  * into generated code makes each new key a new class; the read case
+  * turns red if one is.
   */
 class CodegenCacheSpec extends AnyFunSuite {
 
@@ -70,5 +72,46 @@ class CodegenCacheSpec extends AnyFunSuite {
     assert(perCycle.last == 0L,
       s"warm cycles compiled ${perCycle.mkString(", ")} classes: the cycle's " +
         "working set outgrew the codegen cache")
+  }
+
+  test("a graft-table read re-run with fresh keys compiles nothing after its first run") {
+    import spark.implicits._
+    val day0 = java.time.LocalDate.of(2024, 1, 1)
+    // every k in 0..499 six times, every day of 60 fifty times
+    val rows = (0 until 3000).map(i => (i.toLong, i * 419L % 500, day0.plusDays(i % 60), i % 97))
+    val path = Files.createTempDirectory("graft-codegen-reads").resolve("t").toString
+    TableMerge.createOrReplace(rows.toDF("id", "k", "d", "v"), path)
+    val from = s"SELECT count(*), sum(v) FROM graft.`$path` WHERE"
+    def expect(p: ((Long, Long, java.time.LocalDate, Int)) => Boolean): (Long, Long) = {
+      val hit = rows.filter(p)
+      (hit.size.toLong, hit.map(_._4.toLong).sum)
+    }
+    // each template maps a draw to its SQL and its plain-Scala answer
+    val templates: Seq[(String, Int => (String, (Long, Long)))] = Seq(
+      "BETWEEN" -> { i =>
+        val a = 40L * i + 3
+        (s"$from k BETWEEN $a AND ${a + 9}", expect(r => r._2 >= a && r._2 <= a + 9))
+      },
+      "IN" -> { i =>
+        val keys = (0 until 8).map(j => (31L * i + 53L * j) % 500)
+        (s"$from k IN (${keys.mkString(", ")})", expect(r => keys.contains(r._2)))
+      },
+      "date range" -> { i =>
+        val (lo, hi) = (day0.plusDays(3L * i), day0.plusDays(3L * i + 10))
+        (s"$from d >= DATE'$lo' AND d < DATE'$hi'",
+          expect(r => !r._3.isBefore(lo) && r._3.isBefore(hi)))
+      })
+    templates.foreach { case (name, draw) =>
+      def run(i: Int): Unit = {
+        val (q, want) = draw(i)
+        val got = spark.sql(q).head()
+        assert((got.getLong(0), got.getLong(1)) == want, q)
+      }
+      run(0)
+      val before = compilations
+      (1 to 3).foreach(run)
+      assert(compilations - before == 0L,
+        s"$name: a re-run with new keys compiled ${compilations - before} classes")
+    }
   }
 }

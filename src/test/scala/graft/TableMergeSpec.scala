@@ -616,4 +616,42 @@ class TableMergeSpec extends AnyFunSuite {
     assert(liveFiles(path) >= 3)
     assert(rowsOf(path) == ((1 to 3).map(i => (i, "r")) ++ first.drop(3)).sorted)
   }
+
+  test("a carried file keeps its checksum sidecar, so a corrupted carried file fails to read") {
+    import spark.implicits._
+    val path = tmpTable("crc")
+    TableMerge.createOrReplace((1 to 200).map(i => (s"p${i % 2}", i, s"v$i")).toDF("pt", "id", "v"),
+      path, partitionCols = Seq("pt"))
+    // a scoped upsert into p0 carries p1's files into the new version
+    TableMerge.upsert(spark, path, Seq(("p0", 2, "B")).toDF("pt", "id", "v"),
+      keys = Seq("pt", "id"), partitionCols = Seq("pt"))
+    val live = java.nio.file.Paths.get(path, Files.readString(java.nio.file.Paths.get(path, "_current")).trim)
+    val carried = live.resolve("pt=p1").toFile.listFiles().filter(_.getName.endsWith(".parquet"))
+    assert(carried.nonEmpty)
+    carried.foreach(f => assert(new java.io.File(f.getParentFile, s".${f.getName}.crc").isFile, f))
+    // flip one byte of the first data page of a carried file
+    val raf = new java.io.RandomAccessFile(carried.head, "rw")
+    try { raf.seek(8); val b = raf.read(); raf.seek(8); raf.write(b ^ 0xff) } finally raf.close()
+    val e = intercept[Exception](TableMerge.read(spark, path).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[org.apache.hadoop.fs.ChecksumException]), e)
+  }
+
+  test("the session's file: filesystem sets permissions in-process and keeps checksums") {
+    import java.nio.file.attribute.PosixFilePermissions
+    import org.apache.hadoop.fs.{LocalFileSystem, Path}
+    import org.apache.hadoop.fs.permission.FsPermission
+    val dir = Files.createTempDirectory("graft-fs")
+    // Hadoop caches filesystems by scheme and user, not by conf: check
+    // what the session's own conf resolves for a file: path
+    val fs = new Path(dir.toUri).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.isInstanceOf[GraftLocalFileSystem], fs.getClass)
+    assert(fs.asInstanceOf[LocalFileSystem].getRawFileSystem.isInstanceOf[GraftLocalFileSystem.Raw])
+    val f = new Path(dir.resolve("x").toUri)
+    fs.create(f).close()
+    assert(Files.exists(dir.resolve(".x.crc")))
+    fs.setPermission(f, new FsPermission("640"))
+    assert(PosixFilePermissions.toString(Files.getPosixFilePermissions(dir.resolve("x"))) ==
+      "rw-r-----")
+  }
 }
