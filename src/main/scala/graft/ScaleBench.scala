@@ -359,11 +359,7 @@ object ScaleBench {
           .selectExpr("id", "id % 8 AS g", "id * 3 AS v")
           .repartitionByRange(nFiles, col("id")), path)
       graft.operators.TableMerge.analyzeStats(spark, path, Seq("id"))
-      val live = new java.io.File(path,
-        graft.operators.TableMerge.liveVersion(path).get)
-      val ledgerBytes = Seq("_graft_manifest.tsv", "_graft_stats.tsv")
-        .map(n => new java.io.File(live, n))
-        .filter(_.exists).map(_.length).sum
+      val ledgerBytes = graft.operators.TableMerge.ledgerBytes(path)
       val reads = (0 until 6).map { _ =>
         val (n, sec) = Measure.time(graft.operators.TableMerge.read(spark, path)
           .filter(col("id") === 7L).count())

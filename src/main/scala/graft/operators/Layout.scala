@@ -73,40 +73,23 @@ object Layout {
     * centroids lists and reads only those partition directories, i.e.
     * nprobe/nlist of the corpus, before a single row is decoded.
     * This is the materialized form of the `sim_ivf_topk` plan note
-    * ("at 100 TB the corpus is WRITTEN bucketed by centroid_id"). */
-  def writeIvfBucketed(embeddings: DataFrame, path: String, nlist: Int): Unit = {
-    val out = embeddings
+    * ("at 100 TB the corpus is WRITTEN bucketed by centroid_id"), kept
+    * as a graft table partitioned by `centroid_id`, so a probe is
+    * partition pruning over its manifest. */
+  def writeIvfBucketed(embeddings: DataFrame, path: String, nlist: Int): Unit =
+    TableMerge.createOrReplace(embeddings
       .selectExpr("vec_id", "embedding",
-        s"graft_ivf_assign(embedding, $nlist) AS centroid_id")
-    out.write.mode("overwrite").partitionBy("centroid_id").parquet(path)
-    // schema sidecar (TableMerge discipline): a zero-row partitioned
-    // write leaves no part files, so without persisted metadata the
-    // layout would be unreadable exactly when the corpus slice is empty
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(path, "_graft_schema.json"), out.schema.json)
-  }
+        s"graft_ivf_assign(embedding, $nlist) AS centroid_id"), path, Seq("centroid_id"))
 
   /** Probed ANN top-k over an IVF-bucketed layout: the centroid filter
-    * resolves to partition pruning (LayoutSpec measures scanned files),
-    * then native cosine + top-k run on the nprobe partitions alone.
-    * Same fixed query vector (0.1·1⃗) and output contract as
-    * `sim_ivf_topk`, so the same oracle verifies both physical paths. */
-  /** Read an IVF-bucketed layout back, surviving the zero-row case via
-    * the schema sidecar. */
-  def readBucketed(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
-    val side = java.nio.file.Paths.get(path, "_graft_schema.json")
-    val reader =
-      if (java.nio.file.Files.exists(side))
-        spark.read.schema(org.apache.spark.sql.types.DataType
-          .fromJson(java.nio.file.Files.readString(side))
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-      else spark.read
-    reader.parquet(path)
-  }
-
+    * resolves to partition pruning over the table's manifest (LayoutSpec
+    * measures scanned files), then native cosine + top-k run on the
+    * nprobe partitions alone. Same fixed query vector (0.1·1⃗) and
+    * output contract as `sim_ivf_topk`, so the same oracle verifies both
+    * physical paths. */
   def ivfProbedTopk(spark: org.apache.spark.sql.SparkSession, path: String,
                     probes: Seq[Int], k: Int): DataFrame = {
-    readBucketed(spark, path)
+    TableMerge.read(spark, path)
       .filter(col("centroid_id").isin(probes: _*))
       .selectExpr("vec_id", "CAST(centroid_id AS INT) AS centroid_id",
         "CAST(floor(graft_cosine(embedding, array_repeat(CAST(0.1 AS DOUBLE), 64)) " +

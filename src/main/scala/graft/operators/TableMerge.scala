@@ -27,14 +27,19 @@ import org.apache.spark.sql.functions._
   * pruned once they age past a grace window (young ones may be a
   * concurrent writer's merge base or staging dir).
   *
-  * One on-disk layout: a committed version dir holds the commit marker,
-  * the schema sidecar, the parts sidecar when partitioned, and the file
-  * manifest. The manifest is the only answer to "which files does this
-  * snapshot have": reads, rewrites (compaction, ZORDER), skipping reads
-  * and hard-link carries all plan from it, and a file in the dir that
-  * the manifest does not list is never read or carried. A table left by
-  * a build that predates manifests (no pointer, no sidecars, or no
-  * manifest) is not readable: delete it and rebuild it.
+  * One on-disk layout: beside its data files, a committed version dir
+  * holds the commit marker, ONE metadata record (schema, partition
+  * columns, column map, declared stat columns, commit metadata — the
+  * Iceberg table-metadata analogue), the file manifest, and the
+  * per-file stats ledger when stat columns are declared. The manifest
+  * is the only answer to "which files does this snapshot have": reads,
+  * rewrites (compaction, ZORDER), skipping reads and hard-link carries
+  * all plan from it, and a file in the dir that the manifest does not
+  * list is never read or carried. Every commit kind stages through one
+  * sequence ([[stageCommit]]) and writes a fresh record; no metadata
+  * file is ever copied or linked from another version. A table left by
+  * an earlier layout (no pointer, no record, or no manifest) is not
+  * readable: delete it and rebuild it.
   *
   * Multi-writer safety (Iceberg-style optimistic concurrency): a merge
   * resolves its base snapshot ONCE, computes the new version from it,
@@ -193,28 +198,79 @@ object TableMerge {
     * without it are another writer's in-flight staging. */
   private val CommittedMarker = "_graft_committed"
 
-  /** Per-version schema sidecar (the Delta/Iceberg metadata-log
-    * analogue): a ZERO-ROW snapshot writes no parquet part files at all
-    * when partitioned (and a first silver run over an empty CDC batch is
-    * exactly that), so without persisted metadata the table would become
-    * unreadable — UNABLE_TO_INFER_SCHEMA — the moment it is empty.
-    * Underscore-prefixed, so Spark's file readers ignore it as data. */
-  private val SchemaFile = "_graft_schema.json"
+  /** Per-version METADATA RECORD (JSON; the Iceberg table-metadata-file
+    * analogue, `create_schema.py:237-358`): everything a snapshot says
+    * about itself besides its file list and per-file stats, written
+    * into the version dir BEFORE the pointer swap, so metadata and data
+    * commit atomically. Underscore-prefixed, so Spark's file readers
+    * ignore it as data. */
+  private val RecordFile = "_graft_snapshot.json"
 
-  /** Per-commit application metadata sidecar (the Delta `txn`
-    * appId/version analogue): small string map written into the
-    * version dir BEFORE the pointer swap, so meta and data commit
-    * atomically — a reader either sees both or neither. Underscore-
-    * prefixed so Spark's file readers ignore it. Tab-separated lines
-    * (keys/values here are identifiers — batch ids, version names —
-    * never free text). */
-  private val TxnFile = "_graft_txn.tsv"
+  /** The fields of a [[RecordFile]]:
+    *  - `schema`: the PHYSICAL schema in read-back order (data columns,
+    *    then partition columns — how Spark reconstructs a partitioned
+    *    layout). A ZERO-ROW snapshot writes no parquet part files at all
+    *    when partitioned (a first silver run over an empty CDC batch is
+    *    exactly that), so without it an empty table would be unreadable
+    *    (UNABLE_TO_INFER_SCHEMA), and the read-back order makes a
+    *    zero-row table present the schema it will have once data lands;
+    *  - `partitionCols`: directory names cannot show the partitioning of
+    *    a zero-row layout (a freshly CREATEd table has no `col=val` dirs);
+    *  - `columnMap`: logical → physical names, see [[applyColMap]]; None
+    *    for tables never renamed or dropped from (the identity path);
+    *  - `statColumns`: the columns every write records per-file ranges
+    *    for, declared by [[zorder]] and [[analyzeStats]];
+    *  - `txn`: the commit's application metadata (the Delta `txn`
+    *    appId/version analogue; keys and values are identifiers such as
+    *    batch ids and version names). */
+  private[graft] final case class SnapshotRecord(
+      schema: org.apache.spark.sql.types.StructType,
+      partitionCols: Seq[String],
+      columnMap: Option[Seq[(String, String)]],
+      statColumns: Seq[String],
+      txn: Map[String, String])
 
-  /** Per-version partition-column sidecar: directory names cannot show
-    * the partitioning of a ZERO-ROW layout (a freshly CREATEd empty
-    * table has no `col=val` dirs yet), so the columns are persisted like
-    * the schema is. Every partitioned commit writes it. */
-  private val PartsFile = "_graft_parts.txt"
+  private def writeRecord(dir: Path, r: SnapshotRecord): Unit = {
+    import org.json4s._
+    import org.json4s.jackson.{JsonMethods => J}
+    def strs(xs: Seq[String]): JValue = JArray(xs.map(JString(_)).toList)
+    Files.writeString(dir.resolve(RecordFile), J.compact(J.render(JObject(
+      "schema" -> J.parse(r.schema.json),
+      "partitionCols" -> strs(r.partitionCols),
+      "columnMap" -> r.columnMap.fold[JValue](JNull)(m =>
+        JArray(m.map { case (l, p) => strs(Seq(l, p)) }.toList)),
+      "statColumns" -> strs(r.statColumns),
+      "txn" -> JObject(r.txn.toList.map { case (k, v) => k -> JString(v) }))))): Unit
+  }
+
+  private def parseRecord(dir: Path): SnapshotRecord = {
+    import org.json4s._
+    import org.json4s.jackson.{JsonMethods => J}
+    val j = J.parse(Files.readString(dir.resolve(RecordFile)))
+    def strs(v: JValue): Seq[String] = v match {
+      case JArray(xs) => xs.collect { case JString(s) => s }
+      case _ => Seq.empty
+    }
+    SnapshotRecord(
+      org.apache.spark.sql.types.DataType.fromJson(J.compact(J.render(j \ "schema")))
+        .asInstanceOf[org.apache.spark.sql.types.StructType],
+      strs(j \ "partitionCols"),
+      j \ "columnMap" match {
+        case JArray(pairs) => Some(pairs.map(strs).collect { case Seq(l, p) => (l, p) })
+        case _ => None
+      },
+      strs(j \ "statColumns"),
+      j \ "txn" match {
+        case JObject(fields) => fields.collect { case (k, JString(v)) => k -> v }.toMap
+        case _ => Map.empty
+      })
+  }
+
+  /** `schema` in read-back order for a layout partitioned by `partCols`. */
+  private def readBackOrder(schema: org.apache.spark.sql.types.StructType,
+                            partCols: Seq[String]): org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType(schema.filterNot(f => partCols.contains(f.name)) ++
+      partCols.flatMap(c => schema.find(_.name == c)))
 
   /** Per-version FILE MANIFEST (TSV: relPath, size) — the Iceberg-
     * manifest / Delta-checkpoint analogue: the commit records exactly
@@ -225,12 +281,12 @@ object TableMerge {
     * Maintained INCREMENTALLY: partition-scoped commits walk only the
     * freshly-written subtree and carry the untouched partitions' rows
     * from the base manifest verbatim (their files hard-link name-
-    * unchanged); metadata-only commits carry it wholesale. Every commit
-    * writes one — [[commitVersion]] backfills by walking the staged
-    * tree of a full rewrite. */
+    * unchanged); metadata-only commits carry it wholesale; a full
+    * rewrite lists the walk of the tree it staged. Every commit writes
+    * one ([[stageCommit]]). */
   private val ManifestFile = "_graft_manifest.tsv"
 
-  /** Stream lines to a sidecar without materializing one driver
+  /** Stream lines to a ledger without materializing one driver
     * string (the ledger-write half of VERDICT r18 weak #3: a
     * 10⁷-file stats/manifest ledger must not be built with mkString). */
   private def writeLines(dest: Path, lines: Iterator[String]): Unit = {
@@ -266,33 +322,20 @@ object TableMerge {
     b.result()
   }
 
-  /** Carry the base snapshot's surviving files into the staging
-    * version: every base-manifest entry not `dropped` hard-links
-    * name-unchanged (the manifest is the file list, so a file the
-    * manifest does not list is never carried), with its `.<name>.crc`
-    * checksum sidecar when it has one (a file read without its sidecar
-    * is read unverified), and the staging manifest
-    * lists those survivors plus `fresh` rows for the files this commit
-    * wrote. An EMPTY manifest is still written (a zero-row snapshot has
-    * one with no rows). Streamed: the ledger is never one driver string. */
-  private def carryFiles(live: Path, staging: Path,
-                         dropped: String => Boolean,
-                         fresh: Seq[String]): Unit = {
-    val made = scala.collection.mutable.Set[Path]()
-    withLedgerLines(live.resolve(ManifestFile)) { lines =>
-      val survivors = lines.filter { l =>
-        val rel = l.takeWhile(_ != '\t')
-        !dropped(rel) && {
-          val dest = staging.resolve(rel)
-          if (made.add(dest.getParent)) Files.createDirectories(dest.getParent)
-          val src = live.resolve(rel)
-          linkTree(src, dest)
-          val crc = src.resolveSibling(s".${src.getFileName}.crc")
-          if (Files.exists(crc)) linkTree(crc, dest.resolveSibling(crc.getFileName))
-          true
-        }
-      }
-      writeLines(staging.resolve(ManifestFile), survivors ++ fresh.iterator)
+  /** Write ledger `name` (manifest or stats) of the staging version:
+    * the rows of `from`'s ledger whose file (first field) `keep`
+    * accepts, then the `fresh` rows of the files this commit wrote. An
+    * EMPTY ledger is still written (a zero-row snapshot has a manifest
+    * with no rows). Streamed on both sides, never one driver string: at
+    * 10⁷ files the ledgers are the metadata plane's largest artifacts. */
+  private def carryLedger(from: Option[Path], staging: Path, name: String,
+                          fresh: Seq[String])(keep: String => Boolean): Unit = {
+    def emit(carried: Iterator[String]): Unit =
+      writeLines(staging.resolve(name), carried ++ fresh.iterator)
+    from.map(_.resolve(name)).filter(Files.exists(_)) match {
+      case Some(p) => withLedgerLines(p)(lines =>
+        emit(lines.filter(l => keep(l.takeWhile(_ != '\t')))))
+      case None => emit(Iterator.empty)
     }
   }
 
@@ -320,42 +363,43 @@ object TableMerge {
   /** Manifest entries of retained version `version` (a [[versions]]
     * entry); None when it expired since it was listed. */
   def versionManifest(tablePath: String, version: String): Option[Seq[(String, Long)]] =
-    try Some(manifestOf(Paths.get(tablePath, version)))
+    try retained(tablePath, version).map(_.entries)
     catch { case _: java.nio.file.NoSuchFileException => None }
 
-  /** COLUMN-MAPPING sidecar (TSV: logical name, physical name, in
-    * logical read-back order) — the Delta column-mapping analogue that
-    * makes `ALTER TABLE … RENAME/DROP COLUMN` METADATA-ONLY commits:
-    * parquet files keep their original (physical) column names forever;
-    * readers project physical→logical through the map; writers rename
-    * logical→physical on the way in, so a renamed column's new rows
-    * land under the SAME physical name its old rows carry. Absent for
-    * tables never renamed/dropped (the identity fast path — zero
-    * overhead). Partition columns are always identity-mapped (their
-    * names live in directory paths); rename/drop reject them. */
-  private val ColMapFile = "_graft_colmap.tsv"
+  /** Record of retained version `version` (a [[versions]] entry); None
+    * when it expired since it was listed. Parses no ledger. */
+  private[graft] def versionRecord(tablePath: String, version: String): Option[SnapshotRecord] =
+    retained(tablePath, version).map(_.record)
 
-  private def colMapOf(dir: Path): Option[Seq[(String, String)]] = {
-    val p = dir.resolve(ColMapFile)
-    if (!Files.exists(p)) None
-    else Some(Files.readString(p).linesIterator.filter(_.contains('\t')).map { l =>
-      val i = l.indexOf('\t'); (l.substring(0, i), l.substring(i + 1))
-    }.toSeq)
-  }
+  /** The live version's name, record and manifest, all read from the
+    * ONE version the pointer names when it is read, so an answer built
+    * from them never mixes two snapshots. None when there is no table
+    * (or, rarely, when the named version expired under a newer commit
+    * before it was read). */
+  private[graft] def liveSnapshot(tablePath: String)
+      : Option[(String, SnapshotRecord, Seq[(String, Long)])] =
+    currentVersionName(tablePath).flatMap(v =>
+      versionRecord(tablePath, v).zip(versionManifest(tablePath, v))
+        .map { case (r, m) => (v, r, m) })
 
-  private def writeColMap(version: Path, m: Seq[(String, String)]): Unit =
-    Files.writeString(version.resolve(ColMapFile),
-      m.map { case (l, p) => s"$l\t$p" }.mkString("\n")): Unit
+  private def liveRecord(tablePath: String): Option[SnapshotRecord] =
+    resolveLive(tablePath).map(snapshotMeta(_).record)
 
   /** Logical view of a physical snapshot DataFrame: project through
-    * the column map (dropped physical columns vanish; renamed ones
-    * surface under their logical name). Identity when unmapped.
-    * TOMBSTONE entries (empty logical name) mark RETIRED physical
-    * names — a dropped column's physical data still lives in carried
-    * files, so its name stays reserved forever (never re-assignable to
-    * a new logical column) but never projects. */
-  private def applyColMap(df: DataFrame, dir: Path): DataFrame =
-    colMapOf(dir) match {
+    * the column map (the Delta column-mapping analogue that makes
+    * `ALTER TABLE … RENAME/DROP COLUMN` METADATA-ONLY commits: parquet
+    * files keep their original physical column names forever; writers
+    * rename logical→physical on the way in, so a renamed column's new
+    * rows land under the SAME physical name its old rows carry).
+    * Dropped physical columns vanish; renamed ones surface under their
+    * logical name. Identity when unmapped. TOMBSTONE entries (empty
+    * logical name) mark RETIRED physical names — a dropped column's
+    * physical data still lives in carried files, so its name stays
+    * reserved forever (never re-assignable to a new logical column) but
+    * never projects. Partition columns are always identity-mapped
+    * (their names live in directory paths); rename/drop reject them. */
+  private def applyColMap(df: DataFrame, colMap: Option[Seq[(String, String)]]): DataFrame =
+    colMap match {
       case Some(m) => df.select(m.collect {
         case (log, phys) if log.nonEmpty => col(phys).as(log) }: _*)
       case None => df
@@ -388,13 +432,10 @@ object TableMerge {
       entries ++ tombstones)
   }
 
-  /** The live mapping, or None for identity tables. */
-  private def liveColMap(tablePath: String): Option[Seq[(String, String)]] =
-    resolveLive(tablePath).flatMap(colMapOf)
-
   /** Whether the live snapshot reads through a column mapping
     * (introspection surface — DESCRIBE DETAIL). */
-  def isColumnMapped(tablePath: String): Boolean = liveColMap(tablePath).isDefined
+  def isColumnMapped(tablePath: String): Boolean =
+    liveRecord(tablePath).exists(_.columnMap.isDefined)
 
   /** Physical name a logical column maps to under `cmap` (itself when
     * unmapped; tombstones never match) — the ONE lookup every
@@ -418,42 +459,60 @@ object TableMerge {
     phys
   }
 
-  private def copySidecar(from: Path, to: Path, name: String): Unit = {
-    val side = from.resolve(name)
-    if (Files.exists(side))
-      Files.copy(side, to.resolve(name), StandardCopyOption.REPLACE_EXISTING): Unit
-  }
-
-  /** Stage a METADATA-ONLY version of committed snapshot `src` (column
-    * mapping changes, ANALYZE, ADD COLUMNS, RESTORE): every data file its
-    * manifest lists hard-links name-unchanged, the manifest carries
-    * verbatim, and the `_graft_*` sidecars are COPIED, never linked — the
-    * caller rewrites some of them in place (column map, schema, stats),
-    * and a write through a hard link would change `src` itself. The
-    * commit marker and txn sidecar belong to `src`'s own commit and
-    * never carry. A failed stage removes its dir. Zero data read or
-    * rewrite at any table size. */
-  private def stageMetadataOnly(tablePath: String, src: Path): Path = {
+  /** The ONE staging sequence every commit kind goes through. In a
+    * fresh version dir: `write` puts this commit's new data files and
+    * returns their stats rows; the manifest rows of what it wrote are
+    * taken before anything carries in; every file of `carryFrom`'s
+    * manifest that `carry` keeps hard-links name-unchanged, with its
+    * `.<name>.crc` checksum sidecar when it has one (a file read without
+    * its sidecar is read unverified); the manifest lists the carried
+    * files and then the written ones; when `record` declares stat
+    * columns, the stats ledger carries the kept files' rows (their
+    * names are unchanged, so their ranges stay valid) except those
+    * `write` re-recorded, then the fresh rows; `record` is written
+    * fresh; then the version commits under `expect`. Rewritten files
+    * get fresh names, so their old manifest and stats rows never
+    * survive. A failed stage removes its dir. Commit kinds differ only
+    * in the record, what `write` writes, and what `carry` keeps.
+    * Returns the committed version's name. */
+  private def stageCommit(tablePath: String, expect: Expect, record: SnapshotRecord,
+      carryFrom: Option[Path], carry: String => Boolean = _ => true)(
+      write: Path => Seq[String]): String = {
     val version = newVersionDir(tablePath)
-    Files.createDirectories(version)
     try {
-      carryFiles(src, version, _ => false, Seq.empty)
-      Seq(SchemaFile, PartsFile, ColMapFile, StatsFile, StatColsFile)
-        .foreach(copySidecar(src, version, _))
+      val freshStats = write(version)
+      Files.createDirectories(version) // `write` may have written nothing
+      val made = scala.collection.mutable.Set[Path]()
+      carryLedger(carryFrom, version, ManifestFile, manifestRowsOfTree(version)) { rel =>
+        carry(rel) && carryFrom.exists { from =>
+          val (src, dest) = (from.resolve(rel), version.resolve(rel))
+          if (made.add(dest.getParent)) Files.createDirectories(dest.getParent)
+          linkTree(src, dest)
+          val crc = src.resolveSibling(s".${src.getFileName}.crc")
+          if (Files.exists(crc)) linkTree(crc, dest.resolveSibling(crc.getFileName))
+          true
+        }
+      }
+      if (record.statColumns.nonEmpty) {
+        val restated = freshStats.iterator.map(_.takeWhile(_ != '\t')).toSet
+        carryLedger(carryFrom, version, StatsFile, freshStats)(rel =>
+          carry(rel) && !restated(rel))
+      }
+      writeRecord(version, record)
     } catch {
-      case e: java.io.IOException => deleteRecursively(version); throw e
+      case scala.util.control.NonFatal(e) => deleteRecursively(version); throw e
     }
-    version
+    commitVersion(tablePath, version, expect)
+    version.getFileName.toString
   }
 
-  /** Metadata-only commit of an updated column map. */
-  private def commitColMapChange(tablePath: String, liveDir: Path,
-                                 base: Option[String],
-                                 newMap: Seq[(String, String)]): Unit = {
-    val version = stageMetadataOnly(tablePath, liveDir)
-    writeColMap(version, newMap)
-    commitVersion(tablePath, version, Parent(base))
-  }
+  /** A METADATA-ONLY commit of `record` over committed snapshot `src`
+    * (column-map changes, ADD COLUMNS, RESTORE): every file and stats
+    * row carries, nothing is written. Zero data read or rewrite at any
+    * table size. */
+  private def commitRecord(tablePath: String, base: Option[String], src: Path,
+                           record: SnapshotRecord): String =
+    stageCommit(tablePath, Parent(base), record, Some(src))(_ => Seq.empty)
 
   /** ALTER TABLE … RENAME COLUMN as a METADATA-ONLY commit via column
     * mapping: only the map changes — every data file hard-links
@@ -472,16 +531,16 @@ object TableMerge {
           s"no column $from at $tablePath")
         require(!df.schema.exists(_.name.equalsIgnoreCase(to)),
           s"column $to already exists at $tablePath")
-        require(!partColsOfDir(liveDir).exists(_.equalsIgnoreCase(from)),
+        val rec = recordOf(liveDir)
+        require(!rec.partitionCols.exists(_.equalsIgnoreCase(from)),
           s"$from is a partition column of $tablePath — partition names are " +
             "directory paths; renaming one is a physical relayout, not metadata")
-        val current = colMapOf(liveDir)
-          .getOrElse(df.columns.toSeq.map(c => (c, c)))
-        val newMap = current.map {
+        val newMap = rec.columnMap.getOrElse(df.columns.toSeq.map(c => (c, c))).map {
           case (l, p) if l.equalsIgnoreCase(from) => (to, p)
           case e => e
         }
-        commitColMapChange(tablePath, liveDir, base, newMap)
+        commitRecord(tablePath, base, liveDir,
+          rec.copy(columnMap = Some(newMap), txn = Map.empty))
       }
     }
 
@@ -497,16 +556,15 @@ object TableMerge {
       require(base.nonEmpty, s"no graft table at $tablePath")
       conflictIfBaseMoved(tablePath, base) {
         val (liveDir, df) = baseSnapshot(spark, tablePath, base)
-        val partNames = partColsOfDir(liveDir)
+        val rec = recordOf(liveDir)
         cols.foreach { c =>
           require(ifExists || df.schema.exists(_.name.equalsIgnoreCase(c)),
             s"no column $c at $tablePath (use IF EXISTS)")
-          require(!partNames.exists(_.equalsIgnoreCase(c)),
+          require(!rec.partitionCols.exists(_.equalsIgnoreCase(c)),
             s"$c is a partition column of $tablePath — repartition the table " +
               "instead of dropping its layout column")
         }
-        val current = colMapOf(liveDir)
-          .getOrElse(df.columns.toSeq.map(c => (c, c)))
+        val current = rec.columnMap.getOrElse(df.columns.toSeq.map(c => (c, c)))
         // dropping RETIRES the physical name (tombstone, empty logical):
         // the data still lives in hard-linked files, so the name can
         // never be reassigned — a re-ADDed logical column of the same
@@ -517,88 +575,65 @@ object TableMerge {
         }
         require(newMap.exists(_._1.nonEmpty),
           s"cannot drop every column of $tablePath")
-        commitColMapChange(tablePath, liveDir, base, newMap)
+        commitRecord(tablePath, base, liveDir,
+          rec.copy(columnMap = Some(newMap), txn = Map.empty))
       }
     }
 
-  private def writeSchemaSidecar(version: Path,
-                                 schema: org.apache.spark.sql.types.StructType,
-                                 partitionCols: Seq[String]): Unit = {
-    // store the READ-BACK column order (data columns, then partition
-    // columns — how Spark reconstructs a partitioned layout) so a
-    // zero-row table presents the same schema it will have once data
-    // lands; before r16 the sidecar kept the pre-partitionBy write
-    // order and positional SQL INSERTs against empty tables misaligned
-    Files.writeString(version.resolve(SchemaFile),
-      org.apache.spark.sql.types.StructType(
-        schema.filterNot(f => partitionCols.contains(f.name)) ++
-          partitionCols.flatMap(c => schema.find(_.name == c))).json)
-    if (partitionCols.nonEmpty)
-      Files.writeString(version.resolve(PartsFile), partitionCols.mkString("\n")): Unit
-  }
-
-  private def writeTxnSidecar(version: Path, meta: Map[String, String]): Unit =
-    if (meta.nonEmpty)
-      Files.writeString(version.resolve(TxnFile),
-        meta.map { case (k, v) => s"$k\t$v" }.mkString("\n"))
-
   /** Commit metadata of a retained version ([[versions]] entry); empty
-    * map when the commit carried none. */
-  def versionMeta(tablePath: String, version: String): Map[String, String] = {
-    val p = Paths.get(tablePath, version, TxnFile)
-    if (!Files.exists(p)) Map.empty
-    else Files.readString(p).linesIterator.filter(_.contains('\t')).map { l =>
-      val i = l.indexOf('\t'); l.substring(0, i) -> l.substring(i + 1)
-    }.toMap
-  }
+    * map when the commit carried none, or the version expired. */
+  def versionMeta(tablePath: String, version: String): Map[String, String] =
+    versionRecord(tablePath, version).fold(Map.empty[String, String])(_.txn)
 
   /** Commit metadata of the LIVE version (empty when the live commit
     * carried none, or there is no table). */
   def commitMeta(tablePath: String): Map[String, String] =
     currentVersionName(tablePath).map(versionMeta(tablePath, _)).getOrElse(Map.empty)
 
-  /** Parsed sidecars of an immutable committed snapshot: the read-back
-    * (physical) schema, partition columns, manifest entries, per-file
-    * ranges and per-file null counts. */
-  private final case class SnapshotMeta(
-      schema: org.apache.spark.sql.types.StructType,
-      partCols: Seq[String],
-      entries: Seq[(String, Long)],
-      ranges: Map[String, Map[String, ColRange]],
-      nulls: Map[String, Map[String, (Long, Long)]])
+  /** An immutable committed snapshot: its parsed record, and its
+    * manifest entries and per-file ranges and null counts, each ledger
+    * parsed only when first asked for — paths that need only the record
+    * (history, DESCRIBE, a REPLACE's stat-column lookup) never read a
+    * ledger. */
+  private final class SnapshotMeta(dir: Path, val record: SnapshotRecord) {
+    lazy val entries: Seq[(String, Long)] = manifestOf(dir)
+    private lazy val stats = parseStatsLedger(dir)
+    def ranges: Map[String, Map[String, ColRange]] = stats._1
+    def nulls: Map[String, Map[String, (Long, Long)]] = stats._2
+  }
 
   private val snapMemo =
     new java.util.concurrent.ConcurrentHashMap[String, SnapshotMeta]()
 
-  /** Sidecar metadata of a COMMITTED snapshot, memoized per version
-    * dir: committed versions are immutable, so the manifest/stats
-    * ledgers parse ONCE per process instead of once per read (the
+  /** Metadata of a COMMITTED snapshot, memoized per version dir:
+    * committed versions are immutable, so the record and the ledgers
+    * parse ONCE per process instead of once per read (the
     * driver-resident-per-read half of VERDICT r18 weak #3). Fails on a
     * dir that is not a committed snapshot of the one layout (no commit
-    * marker, schema sidecar or manifest): an uncommitted staging dir is
-    * still mutable, and a pre-manifest table is not readable. */
+    * marker, record or manifest): an uncommitted staging dir is still
+    * mutable, and a table of an earlier layout is not readable. */
   private def snapshotMeta(dir: Path): SnapshotMeta = {
-    if (!Seq(CommittedMarker, SchemaFile, ManifestFile).forall(n => Files.exists(dir.resolve(n))))
+    if (!Seq(CommittedMarker, RecordFile, ManifestFile).forall(n => Files.exists(dir.resolve(n))))
       throw new IllegalStateException(
         s"$dir is not a committed graft snapshot: it lacks the commit marker, " +
-          "schema sidecar or manifest. A table written before manifests " +
-          "existed is not readable: delete it and rebuild it")
+          "snapshot record or manifest. A table written by an earlier layout " +
+          "is not readable: delete it and rebuild it")
     if (snapMemo.size > 128) snapMemo.clear() // bounded; rebuilt on demand
-    snapMemo.computeIfAbsent(dir.toAbsolutePath.toString, _ => {
-      val (ranges, nulls) = parseStatsLedger(dir)
-      SnapshotMeta(
-        org.apache.spark.sql.types.DataType.fromJson(Files.readString(dir.resolve(SchemaFile)))
-          .asInstanceOf[org.apache.spark.sql.types.StructType],
-        partColsOfDir(dir), manifestOf(dir), ranges, nulls)
-    })
+    snapMemo.computeIfAbsent(dir.toAbsolutePath.toString,
+      _ => new SnapshotMeta(dir, parseRecord(dir)))
   }
 
-  /** Partition columns persisted with a snapshot dir (empty when
-    * unpartitioned): every partitioned commit writes the sidecar. */
-  private def partColsOfDir(dir: Path): Seq[String] = {
-    val p = dir.resolve(PartsFile)
-    if (!Files.exists(p)) Seq.empty
-    else Files.readString(p).linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
+  private def recordOf(dir: Path): SnapshotRecord = snapshotMeta(dir).record
+
+  /** Metadata of retained version `version`; None when it expired,
+    * before or while it was read. */
+  private def retained(tablePath: String, version: String): Option[SnapshotMeta] = {
+    val dir = Paths.get(tablePath, version)
+    try Some(snapshotMeta(dir))
+    catch {
+      case _: java.nio.file.NoSuchFileException => None
+      case _: IllegalStateException if !Files.exists(dir.resolve(CommittedMarker)) => None
+    }
   }
 
   /** The one FileIndex every snapshot read goes through: `entries`
@@ -626,9 +661,10 @@ object TableMerge {
     * projected to the logical column view. */
   private def readSnapshot(spark: SparkSession, dir: Path): DataFrame = {
     val meta = snapshotMeta(dir)
+    val r = meta.record
     // physical files → logical view (identity for unmapped tables)
-    applyColMap(manifestScan(spark, dir, dir, meta.schema, meta.partCols,
-      meta.entries, meta.ranges, meta.nulls), dir)
+    applyColMap(manifestScan(spark, dir, dir, r.schema, r.partitionCols,
+      meta.entries, meta.ranges, meta.nulls), r.columnMap)
   }
 
   private def versionDirs(tablePath: String): Seq[java.io.File] =
@@ -638,12 +674,12 @@ object TableMerge {
   private def isCommitted(dir: java.io.File): Boolean =
     Files.exists(dir.toPath.resolve(CommittedMarker))
 
-  /** The live version's partition-column chain, from its parts sidecar
+  /** The live version's partition-column chain, from its record
     * (empty for an unpartitioned table, or no table). Metadata-only —
     * the SQL MERGE planner uses it to decide whether the
     * partition-scoped copy-on-write path applies. */
   def partitionColsOf(tablePath: String): Seq[String] =
-    resolveLive(tablePath).map(partColsOfDir).getOrElse(Seq.empty)
+    liveRecord(tablePath).fold(Seq.empty[String])(_.partitionCols)
 
   /** The partition-SCOPED copy-on-write path is only sound when the
     * BASE snapshot is laid out by exactly the same partition chain:
@@ -655,7 +691,7 @@ object TableMerge {
     * full-restatement path, which is also the correct semantics for a
     * re-partitioning write. */
   private def baseLayoutMatches(liveDir: Path, partitionCols: Seq[String]): Boolean = {
-    val base = partColsOfDir(liveDir)
+    val base = recordOf(liveDir).partitionCols
     base.length == partitionCols.length &&
       base.zip(partitionCols).forall { case (a, b) => a.equalsIgnoreCase(b) }
   }
@@ -663,6 +699,12 @@ object TableMerge {
   /** The live snapshot, planned from its manifest. */
   def read(spark: SparkSession, tablePath: String): DataFrame =
     readSnapshot(spark, liveDirOf(tablePath))
+
+  /** Bytes of the live snapshot's manifest and stats ledger: the
+    * per-file metadata a read plans from (0 when there is no table). */
+  private[graft] def ledgerBytes(tablePath: String): Long =
+    resolveLive(tablePath).fold(0L)(dir => Seq(ManifestFile, StatsFile)
+      .map(n => dir.resolve(n).toFile).filter(_.exists).map(_.length).sum)
 
   /** Row count of the live snapshot, summed from the parquet footers
     * of the data files its manifest lists: footer reads on the driver,
@@ -766,7 +808,7 @@ object TableMerge {
     * skipping. */
   private def sizedRestatement(out: DataFrame, source: DataFrame, base: Option[Path],
                                partitionCols: Seq[String]): DataFrame =
-    if (partitionCols.nonEmpty || base.exists(statColsOfDir(_).nonEmpty)) out
+    if (partitionCols.nonEmpty || base.exists(recordOf(_).statColumns.nonEmpty)) out
     else {
       val baseBytes = base.fold(0L)(snapshotMeta(_).entries.iterator.map(_._2).sum)
       org.apache.spark.sql.graft.bridge.observedSizeInBytes(source) match {
@@ -782,51 +824,34 @@ object TableMerge {
   private def writeVersion(df: DataFrame, tablePath: String,
                            partitionCols: Seq[String], expect: Expect,
                            meta: Map[String, String] = Map.empty): Unit = {
+    val live = resolveLive(tablePath).map(snapshotMeta)
     // mapped tables write PHYSICAL files: a merge/delete restatement
     // (Parent expect) converts its logical result through the mapping
     // and carries it; a full REPLACE (AnyParent) resets the mapping —
     // the replacing content defines fresh identity names, as Delta's
     // REPLACE TABLE does
-    val live = expect match {
-      case Parent(_) => resolveLive(tablePath)
-      case AnyParent => None
-    }
-    val (physDf, newMap) = live.flatMap(dir => colMapOf(dir).map(dir -> _)) match {
-      case Some((dir, m)) =>
-        val (p, entries) = toPhysical(df, m, snapshotMeta(dir).schema.map(_.name))
-        (p, Some(entries))
+    val (physDf, newMap) = live.filter(_ => expect != AnyParent)
+        .flatMap(m => m.record.columnMap.map(toPhysical(df, _, m.record.schema.map(_.name)))) match {
+      case Some((p, entries)) => (p, Some(entries))
       case None => (df, None)
     }
     // the caller names LOGICAL partition columns; the physical frame may
     // carry them under mapped names (re-partitioning by a RENAMED column
     // — r19 review: partitionBy on the logical name would fail against
-    // physDf, and the PartsFile must name what the dirs are named)
-    val physParts = newMap match {
-      case Some(m) => partitionCols.map(c =>
-        m.find(e => e._1.nonEmpty && e._1.equalsIgnoreCase(c)).map(_._2).getOrElse(c))
-      case None => partitionCols
+    // physDf, and the record must name what the dirs are named)
+    val physParts = partitionCols.map(physNameIn(newMap, _))
+    // a full snapshot replaces every file: it keeps the table's declared
+    // stat columns and re-records stats for all of them (one bounded
+    // min/max scan of what was just written — the Delta
+    // stats-on-every-add discipline)
+    val record = SnapshotRecord(readBackOrder(physDf.schema, physParts), physParts, newMap,
+      live.fold(Seq.empty[String])(_.record.statColumns), meta)
+    stageCommit(tablePath, expect, record, carryFrom = None) { version =>
+      val writer = physDf.write.mode(SaveMode.Overwrite)
+      (if (physParts.nonEmpty) writer.partitionBy(physParts: _*) else writer)
+        .parquet(version.toString)
+      freshStats(physDf.sparkSession, version, record)
     }
-    val version = newVersionDir(tablePath)
-    val writer = physDf.write.mode(SaveMode.Overwrite)
-    (if (physParts.nonEmpty) writer.partitionBy(physParts: _*) else writer)
-      .parquet(version.toString)
-    writeSchemaSidecar(version, physDf.schema, physParts)
-    writeTxnSidecar(version, meta)
-    newMap.foreach(writeColMap(version, _))
-    // a full snapshot replaces every file: re-record stats for the
-    // table's declared stat columns (one bounded min/max scan of what
-    // was just written — the Delta stats-on-every-add discipline)
-    resolveLive(tablePath).foreach { live =>
-      val statCols = statColsOfDir(live)
-      if (statCols.nonEmpty) {
-        writeStatCols(version, statCols)
-        val fresh = collectStatsRows(physDf.sparkSession, version, physDf.schema,
-          physParts, statCols)
-        if (fresh.nonEmpty)
-          writeLines(version.resolve(StatsFile), fresh.iterator)
-      }
-    }
-    commitVersion(tablePath, version, expect)
   }
 
   /** K1 + K5 — upsert `source` into the table at `tablePath` on `keys`.
@@ -965,12 +990,13 @@ object TableMerge {
         meta + (ScopeFallbackKey -> s"touched=$nTouched>max=$maxScopedPartitions"))
     } else {
       // mapped tables stage PHYSICAL rows (identity for unmapped ones);
-      // the base sidecar's physical names are reserved so a merge-side
+      // the base record's physical names are reserved so a merge-side
       // new column can never collide with a retired (dropped) physical
       // column still living in the carried files
-      val (physDf, newMap) = colMapOf(liveDir) match {
+      val baseRec = recordOf(liveDir)
+      val (physDf, newMap) = baseRec.columnMap match {
         case Some(cm) =>
-          val (p, entries) = toPhysical(merged, cm, snapshotMeta(liveDir).schema.map(_.name))
+          val (p, entries) = toPhysical(merged, cm, baseRec.schema.map(_.name))
           (p, Some(entries))
         case None => (merged, None)
       }
@@ -981,24 +1007,19 @@ object TableMerge {
       // maintained-index reads and rewrites degrade with width (r17
       // probe: 1,953 files for a 64k-row table)
       val m = physDf.repartition(partitionCols.map(col): _*)
-      val version = newVersionDir(tablePath)
-      m.write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*)
-        .parquet(version.toString)
-      writeSchemaSidecar(version, m.schema, partitionCols)
-      writeTxnSidecar(version, meta)
-      newMap.foreach(writeColMap(version, _))
-      val fresh = collectStatsRows(spark, version, m.schema, partitionCols,
-        statColsOfDir(liveDir))
-      // fresh manifest rows cover ONLY the rewritten partitions (the
-      // staging tree before the untouched files hard-link in) — the
-      // incremental discipline: commit cost scales with what was
+      val record = baseRec.copy(schema = readBackOrder(m.schema, partitionCols),
+        partitionCols = partitionCols, columnMap = newMap, txn = meta)
+      // the touched partitions are rewritten; the rest hard-link. Fresh
+      // manifest and stats rows cover ONLY the rewritten partitions —
+      // the incremental discipline: commit cost scales with what was
       // written, not with table file count
-      val freshManifest = manifestRowsOfTree(version)
       val touchedDirs = dirsOfTouchedRows(touched.columns, touchedStrs)
-      val rewritten = (rel: String) => touchedDirs.contains(unitOf(rel))
-      carryFiles(liveDir, version, rewritten, freshManifest)
-      carryStats(liveDir, version, rewritten, fresh)
-      commitVersion(tablePath, version, Parent(base))
+      stageCommit(tablePath, Parent(base), record, Some(liveDir),
+          carry = rel => !touchedDirs.contains(unitOf(rel))) { version =>
+        m.write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*)
+          .parquet(version.toString)
+        freshStats(spark, version, record)
+      }
     }
   }
 
@@ -1040,7 +1061,7 @@ object TableMerge {
         val (liveDir, target) = baseSnapshot(spark, tablePath, base)
         val layout =
           if (partitionCols.nonEmpty) partitionCols
-          else partColsOfDir(liveDir)
+          else recordOf(liveDir).partitionCols
         val remaining = target.join(
           deleteKeys.select(keys.map(col): _*).distinct(), keys, "left_anti")
         writeVersion(sizedRestatement(remaining, deleteKeys, Some(liveDir), layout),
@@ -1063,10 +1084,10 @@ object TableMerge {
     * (given the unit's rows and file count) from a manifest-planned read
     * of exactly its entries — the FileIndex [[read]] uses, so a rewrite
     * sees exactly the rows a read sees. Every other manifest entry
-    * hard-links name-unchanged, the schema/parts/column-map sidecars
-    * carry, `statCols` are declared and recorded for the rewritten
-    * files while the others keep their stats; then CAS-commit against
-    * `base`. Units are disjoint subtrees (one dest dir each), rewritten
+    * hard-links name-unchanged, the record keeps the base's schema,
+    * partitioning and column map, `statCols` are declared and recorded
+    * for the rewritten files while the others keep their stats; then
+    * CAS-commit against `base`. Units are disjoint subtrees (one dest dir each), rewritten
     * from a small driver pool so the per-unit Spark jobs overlap instead
     * of serializing (guide §2.6, r20); each thunk builds its own
     * DataFrame, since they run on pool threads (r21). Returns the number
@@ -1074,31 +1095,24 @@ object TableMerge {
   private def rewriteUnits(spark: SparkSession, tablePath: String, liveDir: Path,
       base: Option[String], units: Seq[(String, Seq[(String, Long)])],
       statCols: Seq[String])(rewrite: (DataFrame, Int) => DataFrame): Int = {
-    val meta = snapshotMeta(liveDir)
+    val baseRec = recordOf(liveDir)
     // unit files hold the DATA columns (partition values live in dir
-    // names); reading them under the sidecar schema gives files that
+    // names); reading them under the record's schema gives files that
     // predate an ALTER ADD COLUMNS typed NULLs for the new columns
     val dataSchema = org.apache.spark.sql.types.StructType(
-      meta.schema.filterNot(f => meta.partCols.contains(f.name)))
-    val version = newVersionDir(tablePath)
-    Files.createDirectories(version)
-    graft.Par.inParallel(units.map { case (unit, entries) =>
-      () => rewrite(manifestScan(spark, liveDir, liveDir.resolve(unit), dataSchema,
-          Seq.empty, entries, Map.empty, Map.empty), entries.size)
-        .write.mode(SaveMode.Overwrite).parquet(version.resolve(unit).toString)
-    }): Unit
-    // rewrites change files, not schema: carry the sidecars over
-    Seq(SchemaFile, PartsFile, ColMapFile).foreach(copySidecar(liveDir, version, _))
-    writeStatCols(version, statCols)
-    // stats and manifest rows of the rewritten files, taken before the
-    // other files link in
-    val fresh = collectStatsRows(spark, version, meta.schema, meta.partCols, statCols)
-    val freshManifest = manifestRowsOfTree(version)
-    val rewrittenUnits = units.map(_._1).toSet
-    val rewritten = (rel: String) => rewrittenUnits.contains(unitOf(rel))
-    carryFiles(liveDir, version, rewritten, freshManifest)
-    carryStats(liveDir, version, rewritten, fresh)
-    commitVersion(tablePath, version, Parent(base))
+      baseRec.schema.filterNot(f => baseRec.partitionCols.contains(f.name)))
+    val record = baseRec.copy(statColumns = statCols, txn = Map.empty)
+    val rewritten = units.map(_._1).toSet
+    stageCommit(tablePath, Parent(base), record, Some(liveDir),
+        carry = rel => !rewritten(unitOf(rel))) { version =>
+      Files.createDirectories(version) // the unit writes run concurrently under it
+      graft.Par.inParallel(units.map { case (unit, entries) =>
+        () => rewrite(manifestScan(spark, liveDir, liveDir.resolve(unit), dataSchema,
+            Seq.empty, entries, Map.empty, Map.empty), entries.size)
+          .write.mode(SaveMode.Overwrite).parquet(version.resolve(unit).toString)
+      }): Unit
+      freshStats(spark, version, record)
+    }
     units.size
   }
 
@@ -1129,7 +1143,7 @@ object TableMerge {
         }
         if (overflowing.isEmpty) 0
         else rewriteUnits(spark, tablePath, liveDir, base, overflowing,
-          statColsOfDir(liveDir))((rows, _) => rows.coalesce(targetFiles))
+          recordOf(liveDir).statColumns)((rows, _) => rows.coalesce(targetFiles))
       }
     }
 
@@ -1153,12 +1167,12 @@ object TableMerge {
       conflictIfBaseMoved(tablePath, base) {
         val liveDir = baseDir(tablePath, base)
         val meta = snapshotMeta(liveDir)
-        // the caller names LOGICAL columns; units and sidecars are the
+        // the caller names LOGICAL columns; units and ledgers are the
         // PHYSICAL domain — translate through the mapping up front
-        val cmap = colMapOf(liveDir)
+        val cmap = meta.record.columnMap
         val xCol = physNameIn(cmap, xColIn)
         val yCol = physNameIn(cmap, yColIn)
-        val partitionCols = meta.partCols
+        val partitionCols = meta.record.partitionCols
         // partition columns live in directory NAMES, not in the files
         // the unit reader scans — a partition z-column would fail
         // mid-staging with an unresolved-column error after the version
@@ -1191,15 +1205,15 @@ object TableMerge {
           // record stats under the schema's OWN column case: Catalyst
           // resolves `col("USER_ID")` case-insensitively, so a
           // case-differing ZORDER BY identifier must not key the
-          // sidecar under a name no pushed-filter attribute will match
+          // ledger under a name no pushed-filter attribute will match
           def canon(c: String): String =
-            meta.schema.find(_.name.equalsIgnoreCase(c)).map(_.name).getOrElse(c)
+            meta.record.schema.find(_.name.equalsIgnoreCase(c)).map(_.name).getOrElse(c)
           // ZORDER BY also DECLARES its columns as the table's stat
           // columns: every subsequent write path (merge, insert,
           // compaction) re-records per-file ranges for them, so file
           // skipping survives the table's live merge cycle instead of
           // decaying until the next ZORDER (VERDICT r17 #1)
-          val existing = statColsOfDir(liveDir)
+          val existing = meta.record.statColumns
           val statCols = existing ++ Seq(canon(xCol), canon(yCol))
             .filterNot(c => existing.exists(_.equalsIgnoreCase(c)))
           rewriteUnits(spark, tablePath, liveDir, base, units, statCols)(
@@ -1208,7 +1222,7 @@ object TableMerge {
       }
     }
 
-  /** Per-file column-range stats sidecar (TSV: relPath, col, kind,
+  /** Per-file column-range stats ledger (TSV: relPath, col, kind,
     * min, max — kind `i` integral long, `d` date epoch-days, `t`
     * timestamp epoch-micros, `s` UTF-8-binary string; `n` rows carry
     * null and row counts, and a row of any other shape records
@@ -1216,14 +1230,9 @@ object TableMerge {
     * per-file stats in the transaction log: EVERY write path records
     * ranges for the table's declared stat columns ([[statColumnsOf]]),
     * so file skipping survives live merge cycles instead of decaying
-    * until the next ZORDER (VERDICT r17 #1). */
+    * until the next ZORDER (VERDICT r17 #1). A version has one exactly
+    * when its record declares stat columns. */
   private val StatsFile = "_graft_stats.tsv"
-
-  /** Per-version declared-stat-columns sidecar: the columns every
-    * subsequent write records per-file min/max for. Set by [[zorder]]
-    * (its z-columns) and [[analyzeStats]]; carried through commits like
-    * the schema sidecar. */
-  private val StatColsFile = "_graft_statcols.txt"
 
   /** Typed per-file column range ([[fileStats]] values). */
   sealed trait ColRange
@@ -1320,7 +1329,7 @@ object TableMerge {
   /** Stats of the live snapshot: relPath → col → typed range. Empty
     * when there is no table or the live version records no stats. */
   def fileStats(tablePath: String): Map[String, Map[String, ColRange]] =
-    resolveLive(tablePath).map(parseStatsLedger(_)._1).getOrElse(Map.empty)
+    resolveLive(tablePath).map(snapshotMeta(_).ranges).getOrElse(Map.empty)
 
   /** ONE streamed pass over the stats ledger → (ranges, null counts):
     * the ledger is the metadata plane's largest artifact, so it is
@@ -1366,48 +1375,53 @@ object TableMerge {
   /** Declared stat columns of the live snapshot (canonical schema
     * case), empty when none were ever declared. */
   def statColumnsOf(tablePath: String): Seq[String] =
-    resolveLive(tablePath).map(statColsOfDir).getOrElse(Seq.empty)
+    liveRecord(tablePath).fold(Seq.empty[String])(_.statColumns)
 
-  private def statColsOfDir(dir: Path): Seq[String] = {
-    val p = dir.resolve(StatColsFile)
-    if (!Files.exists(p)) Seq.empty
-    else Files.readString(p).linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
-  }
-
-  private def writeStatCols(version: Path, cols: Seq[String]): Unit =
-    if (cols.nonEmpty)
-      Files.writeString(version.resolve(StatColsFile), cols.mkString("\n")): Unit
-
-  /** One bounded scan of the parquet tree under `scanRoot` (a staged
-    * version dir, or the subset of it written so far): per file, the
-    * min/max of every supported declared stat column, as TSV rows in
-    * the typed sidecar format. Collect size = files × stat columns ×
-    * two scalars — the same ledger as Delta's per-file stats. Columns
-    * whose type is unsupported (or that are partition columns — their
-    * values live in dir names, pruned by partition pruning) record
-    * nothing. */
-  private def collectStatsRows(spark: SparkSession, scanRoot: Path,
-                               schema: org.apache.spark.sql.types.StructType,
-                               partitionCols: Seq[String],
-                               statCols: Seq[String]): Seq[String] = {
+  /** Stats rows of the parquet files a commit just wrote under
+    * `staging` (before anything carries in), for `rec`'s declared stat
+    * columns: see [[statsRows]]. */
+  private def freshStats(spark: SparkSession, staging: Path, rec: SnapshotRecord): Seq[String] = {
     def anyParquet(f: java.io.File): Boolean =
       if (f.isDirectory)
         Option(f.listFiles()).getOrElse(Array.empty).exists(anyParquet)
       else f.getName.endsWith(".parquet")
+    if (rec.statColumns.isEmpty || !anyParquet(staging.toFile)) Seq.empty
+    else {
+      // read with the READ-BACK schema (data cols then partition cols),
+      // never footer inference: a stat column added by a metadata-only
+      // ALTER is absent from pre-evolution footers and must resolve as
+      // typed NULLs (recording no range), not fail the scan
+      val readSchema = org.apache.spark.sql.types.StructType(
+        rec.schema.filterNot(f => rec.partitionCols.exists(_.equalsIgnoreCase(f.name))) ++
+          rec.partitionCols.flatMap(c => rec.schema.find(_.name.equalsIgnoreCase(c))))
+      statsRows(spark.read.schema(readSchema)
+        .option("basePath", staging.toString)
+        .parquet(staging.toString), staging, rec)
+    }
+  }
+
+  /** One bounded aggregate over `scan` (the files under `scanRoot`):
+    * per file, the min/max of every supported declared stat column of
+    * `rec`, as TSV rows in the typed ledger format. Collect size = files
+    * × stat columns × two scalars — the same ledger as Delta's per-file
+    * stats. Columns whose type is unsupported (or that are partition
+    * columns — their values live in dir names, pruned by partition
+    * pruning) record nothing. */
+  private def statsRows(scan: DataFrame, scanRoot: Path, rec: SnapshotRecord): Seq[String] = {
     // a TIMESTAMP_NTZ column's stats ride the NTZ→TIMESTAMP cast,
     // which interprets the wall clock in the SESSION timezone — only
     // under UTC do the recorded micros equal the wall-clock micros an
     // NTZ literal carries. Any other session records no NTZ stats
     // (conservative: those files always read).
-    val utcSession = spark.conf.get("spark.sql.session.timeZone", "") == "UTC"
-    val typed: Seq[(String, Char)] = statCols.flatMap { c =>
-      schema.find(f => f.name.equalsIgnoreCase(c) &&
-          !partitionCols.exists(_.equalsIgnoreCase(c)))
+    val utcSession = scan.sparkSession.conf.get("spark.sql.session.timeZone", "") == "UTC"
+    val typed: Seq[(String, Char)] = rec.statColumns.flatMap { c =>
+      rec.schema.find(f => f.name.equalsIgnoreCase(c) &&
+          !rec.partitionCols.exists(_.equalsIgnoreCase(c)))
         .filter(f =>
           f.dataType != org.apache.spark.sql.types.TimestampNTZType || utcSession)
         .flatMap(f => statKindOf(f.dataType).map(k => f.name -> k))
     }
-    if (typed.isEmpty || !anyParquet(scanRoot.toFile)) Seq.empty
+    if (typed.isEmpty) Seq.empty
     else {
       val aggs = typed.flatMap { case (name, kind) =>
         val c = kind match {
@@ -1423,17 +1437,7 @@ object TableMerge {
           count(col(name)).as(s"__nn_$name"))
       } :+ count(lit(1)).as("__total")
       val rootAbs = scanRoot.toAbsolutePath.toString
-      // read with the READ-BACK schema (data cols then partition cols),
-      // never footer inference: a stat column added by a metadata-only
-      // ALTER is absent from pre-evolution footers and must resolve as
-      // typed NULLs (recording no range), not fail the scan
-      val readSchema = org.apache.spark.sql.types.StructType(
-        schema.filterNot(f => partitionCols.exists(_.equalsIgnoreCase(f.name))) ++
-          partitionCols.flatMap(c => schema.find(_.name.equalsIgnoreCase(c))))
-      val rows = spark.read.schema(readSchema)
-        .option("basePath", scanRoot.toString)
-        .parquet(scanRoot.toString)
-        .groupBy(input_file_name().as("__f"))
+      val rows = scan.groupBy(input_file_name().as("__f"))
         .agg(aggs.head, aggs.tail: _*)
         .collect()
       val out = Seq.newBuilder[String]
@@ -1503,11 +1507,11 @@ object TableMerge {
       conflictIfBaseMoved(tablePath, base) {
         val (liveDir, df) = baseSnapshot(spark, tablePath, base)
         val meta = snapshotMeta(liveDir)
-        val partNames = meta.partCols
-        val cmap = colMapOf(liveDir)
+        val partNames = meta.record.partitionCols
+        val cmap = meta.record.columnMap
         // validate against the LOGICAL schema (what the caller sees),
         // declare and scan in the PHYSICAL domain (what the files and
-        // the pruning sidecars key on)
+        // the pruning ledgers key on)
         val canon = columns.map { c =>
           val f = df.schema.find(_.name.equalsIgnoreCase(c)).getOrElse(
             throw new IllegalArgumentException(s"no column $c at $tablePath"))
@@ -1518,18 +1522,20 @@ object TableMerge {
               "(supported: integral, date, timestamp, default-collation string)")
           physNameIn(cmap, f.name)
         }
-        val version = stageMetadataOnly(tablePath, liveDir)
         // union into the existing declared set (zorder's additive
         // behavior): ranges recompute for the WHOLE set in one scan,
         // so earlier columns keep skipping rather than silently losing it
         val declared = {
-          val existing = statColsOfDir(liveDir)
+          val existing = meta.record.statColumns
           existing ++ canon.filterNot(c => existing.exists(_.equalsIgnoreCase(c)))
         }
-        writeStatCols(version, declared)
-        writeLines(version.resolve(StatsFile),
-          collectStatsRows(spark, version, meta.schema, partNames, declared).iterator)
-        commitVersion(tablePath, version, Parent(base))
+        val record = meta.record.copy(statColumns = declared, txn = Map.empty)
+        // every file carries and is re-recorded: one scan of exactly the
+        // files the base manifest lists, whose rows replace theirs
+        stageCommit(tablePath, Parent(base), record, Some(liveDir)) { _ =>
+          statsRows(manifestScan(spark, liveDir, liveDir, record.schema,
+            record.partitionCols, meta.entries, Map.empty, Map.empty), liveDir, record)
+        }
       }
     }
 
@@ -1539,9 +1545,9 @@ object TableMerge {
     * FORWARD — the restore is itself an auditable commit, the
     * restored-from snapshot stays immutable, and a bad restore is
     * undone by restoring again). Zero data rewrite at any table size:
-    * the new version is a metadata-only stage of the snapshot
-    * ([[stageMetadataOnly]]); only the commit marker and txn metadata
-    * are written fresh. Restoring the live version is a no-op. Returns
+    * the new version is a metadata-only commit over the snapshot
+    * ([[commitRecord]]) whose record is the snapshot's with fresh txn
+    * metadata. Restoring the live version is a no-op. Returns
     * the live version name after the call. */
   def restore(tablePath: String, version: String): String =
     retryOnConflict(CommitRetries) {
@@ -1560,17 +1566,14 @@ object TableMerge {
         // race, not a corruption: convert it to a retryable conflict so
         // the retry loop re-validates the snapshot still exists (the
         // stage has already dropped its half-linked dir).
-        val dest =
-          try stageMetadataOnly(tablePath, src)
-          catch {
-            case e: java.nio.file.NoSuchFileException =>
-              throw new CommitConflictException(
-                s"$tablePath: snapshot $version expired while restoring " +
-                  s"(${Option(e.getMessage).getOrElse("")})")
-          }
-        writeTxnSidecar(dest, Map("restoredFrom" -> version))
-        commitVersion(tablePath, dest, Parent(base))
-        dest.getFileName.toString
+        try commitRecord(tablePath, base, src,
+          recordOf(src).copy(txn = Map("restoredFrom" -> version)))
+        catch {
+          case e: java.nio.file.NoSuchFileException =>
+            throw new CommitConflictException(
+              s"$tablePath: snapshot $version expired while restoring " +
+                s"(${Option(e.getMessage).getOrElse("")})")
+        }
       }
     }
 
@@ -1611,8 +1614,8 @@ object TableMerge {
 
   /** ALTER TABLE ADD COLUMNS as a METADATA-ONLY commit (the Iceberg
     * schema-log analogue; reference shape `transformer.py:2421-2425`):
-    * the new version is a metadata-only stage of the live snapshot
-    * ([[stageMetadataOnly]]) and only the schema sidecar changes — existing
+    * the new version is a metadata-only commit over the live snapshot
+    * ([[commitRecord]]) and only the record's schema changes — existing
     * parquet files simply lack the new columns and Spark's reader fills
     * them with nulls on scan. Zero data read or rewrite at any table
     * size; commits through the same CAS pointer swap as merges. Added
@@ -1633,32 +1636,28 @@ object TableMerge {
           s"cannot add columns that already exist: ${dup.mkString(", ")}")
         require(newCols.forall(_.nullable),
           "added columns must be nullable (existing rows have no value to backfill)")
-        val version = stageMetadataOnly(tablePath, liveDir)
         // added columns land at the end of the DATA columns; partition
         // columns keep the trailing position (the Hive/Spark read-back
         // convention every later partitioned write re-establishes).
-        // The sidecar stays PHYSICAL: under column mapping a new
+        // The record's schema stays PHYSICAL: under column mapping a new
         // logical name gets a fresh physical name when its identity
         // spelling would collide with a live or retired physical column
-        val meta = snapshotMeta(liveDir)
-        val partNames = meta.partCols.toSet
-        val cmap = colMapOf(liveDir)
-        val physSchema = meta.schema
+        val rec = recordOf(liveDir)
+        val partNames = rec.partitionCols.toSet
         val used = scala.collection.mutable.Set[String]()
-        physSchema.foreach(f => used += f.name.toLowerCase(java.util.Locale.ROOT))
-        cmap.foreach(_.foreach(e => used += e._2.toLowerCase(java.util.Locale.ROOT)))
+        rec.schema.foreach(f => used += f.name.toLowerCase(java.util.Locale.ROOT))
+        rec.columnMap.foreach(_.foreach(e => used += e._2.toLowerCase(java.util.Locale.ROOT)))
         val newPhysCols = newCols.map(f => f.copy(name = freshPhysName(f.name, used)))
-        val (dataCols, partCols) = physSchema.partition(f => !partNames.contains(f.name))
-        Files.writeString(version.resolve(SchemaFile),
-          org.apache.spark.sql.types.StructType(dataCols ++ newPhysCols ++ partCols).json)
-        cmap.foreach { m =>
+        val (dataCols, partCols) = rec.schema.partition(f => !partNames.contains(f.name))
+        val newMap = rec.columnMap.map { m =>
           val (dataEntries, partEntries) = m.partition { case (l, _) =>
             !partNames.contains(l)
           }
-          writeColMap(version, dataEntries ++
-            newCols.map(_.name).zip(newPhysCols.map(_.name)) ++ partEntries)
+          dataEntries ++ newCols.map(_.name).zip(newPhysCols.map(_.name)) ++ partEntries
         }
-        commitVersion(tablePath, version, Parent(base))
+        commitRecord(tablePath, base, liveDir, rec.copy(
+          schema = org.apache.spark.sql.types.StructType(dataCols ++ newPhysCols ++ partCols),
+          columnMap = newMap, txn = Map.empty))
       }
     }
 
@@ -1707,15 +1706,6 @@ object TableMerge {
           s"$tablePath: expected parent $name but live is $prev")
       case _ => ()
     }
-    // every commit carries a manifest: paths that write incrementally
-    // (scoped merges, compaction, zorder, metadata-only commits)
-    // provided one already; full rewrites backfill with a walk of the
-    // tree they just staged (local
-    // metadata, once, by the WRITER; what it buys is zero listing on
-    // every subsequent READ)
-    if (!Files.exists(version.resolve(ManifestFile)))
-      writeLines(version.resolve(ManifestFile),
-        manifestRowsOfTree(version).iterator)
     // mark committed BEFORE the swap: versions()/expireVersions use the
     // marker to tell immutable snapshots from in-flight staging dirs
     Files.writeString(version.resolve(CommittedMarker),
@@ -1749,35 +1739,6 @@ object TableMerge {
             s"(${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(120)})")
     }
 
-  /** Carry the live snapshot's file-range stats into the staging
-    * version, minus entries for `dropped` (rewritten) files (their
-    * replacements carry fresh names, so their old entries must not
-    * survive — a stale range could wrongly skip a file), plus the
-    * `fresh` rows recorded for the newly written files. Carried files
-    * hard-link with names intact (see [[carryFiles]]), so their ranges
-    * stay valid verbatim. With every write path recording fresh rows
-    * for the declared stat columns, file skipping survives live merge
-    * cycles instead of decaying until the next ZORDER. */
-  private def carryStats(live: Path, staging: Path,
-                         dropped: String => Boolean,
-                         fresh: Seq[String]): Unit = {
-    val p = live.resolve(StatsFile)
-    // streamed on BOTH sides, never one driver string: at 10⁷ files
-    // the ledger is the metadata plane's largest artifact (VERDICT r18
-    // weak #3 for the write, ADVICE r19 for the read)
-    def emit(survivors: Iterator[String]): Unit = {
-      val all = (survivors ++ fresh.iterator).buffered
-      if (all.hasNext) writeLines(staging.resolve(StatsFile), all)
-    }
-    if (!Files.exists(p)) emit(Iterator.empty)
-    else withLedgerLines(p) { lines =>
-      emit(lines.filter(l => !dropped(l.takeWhile(_ != '\t'))))
-    }
-    val sc = live.resolve(StatColsFile)
-    if (Files.exists(sc) && !Files.exists(staging.resolve(StatColsFile)))
-      Files.copy(sc, staging.resolve(StatColsFile)): Unit
-  }
-
   /** Partition-scoped merges collect one driver-side row per touched
     * partition (the hard-link planner needs the dir names). Bounded by
     * partitions-touched-per-commit — fine for incremental merges — but
@@ -1801,7 +1762,7 @@ object TableMerge {
     * writer emits `2020-01-01 00:00:00`, desyncing the touched set
     * from the real tree), then through the writer's segment naming
     * (null AND empty string → `__HIVE_DEFAULT_PARTITION__`, else
-    * path-escaped). A desynced set is a data-loss class: carryFiles
+    * path-escaped). A desynced set is a data-loss class: the carry
     * keeps the replaced files beside their rewrites, and a
     * whole-partition drop resurrects the old rows. */
   /** Relative partition-dir names of already-collected touched rows

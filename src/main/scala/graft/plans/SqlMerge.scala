@@ -445,7 +445,7 @@ object SqlMerge {
           "ALTER TABLE ADD COLUMNS on graft tables adds top-level columns only")
         require(qc.position.isEmpty,
           "ALTER TABLE ADD COLUMNS on graft tables appends at the end " +
-            "(no FIRST/AFTER \u2014 positions are the read-back sidecar order)")
+            "(no FIRST/AFTER \u2014 positions are the record's read-back order)")
         require(qc.default.isEmpty,
           "ALTER TABLE ADD COLUMNS on graft tables does not support DEFAULT " +
             "(existing rows read back as NULL)")
@@ -746,34 +746,31 @@ object SqlMerge {
       case cmd: GraftDescribeDetailCommand =>
         GraftMaintenanceExec(cmd.output, _ => {
           import graft.operators.TableMerge
-          require(TableMerge.exists(cmd.path), s"no graft table at ${cmd.path}")
-          val live = TableMerge.liveVersion(cmd.path)
-          val entries = TableMerge.manifest(cmd.path).getOrElse(Seq.empty)
+          // every fact from the ONE version the pointer named: a commit
+          // landing mid-statement must not mix two snapshots in a row
+          val (live, rec, entries) = liveSnapshotOf(cmd.path)
           Seq(org.apache.spark.sql.Row(
-            "graft-parquet", cmd.path, live.orNull, entries.size.toLong, entries.map(_._2).sum,
-            TableMerge.partitionColsOf(cmd.path).mkString(","),
+            "graft-parquet", cmd.path, live, entries.size.toLong, entries.map(_._2).sum,
+            rec.partitionCols.mkString(","),
             TableMerge.versions(cmd.path).size.toLong,
-            TableMerge.statColumnsOf(cmd.path).mkString(","),
-            TableMerge.isColumnMapped(cmd.path)))
+            rec.statColumns.mkString(","),
+            rec.columnMap.isDefined))
         }) :: Nil
       case cmd: GraftShowPartitionsCommand =>
         GraftMaintenanceExec(cmd.output, _ => {
-          import graft.operators.TableMerge
-          require(TableMerge.exists(cmd.path), s"no graft table at ${cmd.path}")
-          val partCols = TableMerge.partitionColsOf(cmd.path)
-          require(partCols.nonEmpty,
+          val (_, rec, entries) = liveSnapshotOf(cmd.path)
+          require(rec.partitionCols.nonEmpty,
             s"SHOW PARTITIONS: table ${cmd.path} is not partitioned")
           // the partition dirs of the live manifest's files: zero listing
-          val rels = TableMerge.manifest(cmd.path).getOrElse(Seq.empty)
+          val rels = entries
             .map { case (rel, _) => rel.split('/').dropRight(1).mkString("/") }.distinct
           rels.filter(_.nonEmpty).sorted.map(org.apache.spark.sql.Row(_))
         }) :: Nil
       case cmd: GraftDescribeTableCommand =>
         GraftMaintenanceExec(cmd.output, s => {
-          import graft.operators.TableMerge
-          require(TableMerge.exists(cmd.path), s"no graft table at ${cmd.path}")
-          val schema = TableMerge.read(s, cmd.path).schema
-          val partCols = TableMerge.partitionColsOf(cmd.path)
+          val (live, rec, _) = liveSnapshotOf(cmd.path)
+          val schema = graft.operators.TableMerge.readVersion(s, cmd.path, live).schema
+          val partCols = rec.partitionCols
           val colRows = schema.fields.toSeq.map(f =>
             org.apache.spark.sql.Row(f.name, f.dataType.simpleString, null))
           val partRows =
@@ -803,6 +800,12 @@ object SqlMerge {
       case _ => Nil
     }
   }
+
+  /** The live version of the graft table at `path` with its record and
+    * manifest: the one snapshot an introspection statement answers from. */
+  private def liveSnapshotOf(path: String) =
+    graft.operators.TableMerge.liveSnapshot(path).getOrElse(
+      throw new IllegalArgumentException(s"no graft table at $path"))
 
   /** Driver-side maintenance runner with a row-valued result (the
     * OPTIMIZE/VACUUM/RESTORE/HISTORY statements return small status
@@ -911,10 +914,10 @@ object SqlMerge {
     } else TableMerge.createOrReplace(result, path)
   }
 
-  /** CREATE TABLE (no AS): commit an EMPTY versioned table whose schema
-    * sidecar carries the declared columns in read-back order (data
-    * columns, then partition columns) — the zero-row snapshot the
-    * sidecar machinery exists for. */
+  /** CREATE TABLE (no AS): commit an EMPTY versioned table whose
+    * snapshot record carries the declared columns in read-back order
+    * (data columns, then partition columns) — the zero-row snapshot the
+    * record's schema exists for. */
   private[graft] def runCreate(spark: SparkSession, cmd: GraftCreateTableCommand): Unit = {
     import graft.operators.TableMerge
     if (TableMerge.exists(cmd.path)) {

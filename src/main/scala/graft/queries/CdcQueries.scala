@@ -253,8 +253,8 @@ object CdcQueries {
     * SQL against `graft.`path`` (`create_schema.py:237-358`'s
     * `CREATE TABLE … PARTITIONED BY`; `transformer.py:2421-2425`'s
     * `ALTER TABLE … ADD COLUMN`), end-to-end under the oracle hash:
-    * partitioned CREATE of an EMPTY table (sidecar schema + persisted
-    * partition columns), INSERT of a seed snapshot, METADATA-ONLY
+    * partitioned CREATE of an EMPTY table (schema and partition
+    * columns persisted in the snapshot record), INSERT of a seed snapshot, METADATA-ONLY
     * `ADD COLUMNS` (zero data files rewritten — SqlMergeSpec pins the
     * inodes), a second INSERT carrying the evolved columns, and a
     * read-back aggregation in which the pre-evolution rows' NULLs and
@@ -711,7 +711,7 @@ object CdcQueries {
     * monetizes `OPTIMIZE … ZORDER BY`. CTAS partitions events by type;
     * the ZORDER statement rewrites each partition as contiguous
     * z-slices of (user_id, value_e2) and records per-file range stats
-    * in the version's stats sidecar; a selective user_id range is then
+    * in the version's stats ledger; a selective user_id range is then
     * answered through BOTH skipping forms — the automatic stats-aware
     * FileIndex behind a plain `read().filter` and the explicit
     * `TableMerge.readSkipping` — each dropping provably-missing files
@@ -734,7 +734,7 @@ object CdcQueries {
     s.sql(s"OPTIMIZE graft.`$path` ZORDER BY (user_id, value_e2)")
     // the AUTOMATIC pruning path: a plain filtered read over the
     // z-ordered table goes through the stats-aware FileIndex (read()
-    // detects the sidecar), so the file-skipping scan itself sits
+    // detects the ledger), so the file-skipping scan itself sits
     // under the oracle hash at every sf and in all three sweeps;
     // readSkipping is the explicit twin, union'd as a cross-check —
     // both branches must agree exactly for the hash to survive

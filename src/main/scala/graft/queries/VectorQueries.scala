@@ -295,7 +295,7 @@ private[graft] object VectorQueries {
     * O(N·nlist) assignment scan that belongs at WRITE time). */
   private[graft] def ivfProbedPqTopk(spark: SparkSession, path: String,
                                      probes: Seq[Int], k: Int): DataFrame =
-    graft.operators.Layout.readBucketed(spark, path)
+    graft.operators.TableMerge.read(spark, path)
       .filter(col("centroid_id").isin(probes: _*))
       .selectExpr(Seq("vec_id", "centroid_id") ++ pqDistCols: _*)
       .selectExpr(Seq("vec_id", "centroid_id") ++ pqCodeCols: _*)

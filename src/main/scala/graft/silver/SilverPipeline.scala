@@ -222,7 +222,7 @@ object SilverPipeline {
       // silver tables unconditionally, and "no changes yet" is an empty
       // table, not a missing one. The schemas come from the same frames
       // a non-empty run would write (changed is empty here, so both
-      // writes are zero-row snapshots persisted via the schema sidecar).
+      // writes are zero-row snapshots whose record carries the schema).
       if (!TableMerge.exists(cfg.resourcesPath))
         TableMerge.createOrReplace(changed, cfg.resourcesPath)
       if (!TableMerge.exists(cfg.chunksPath))

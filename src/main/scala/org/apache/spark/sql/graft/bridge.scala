@@ -377,7 +377,7 @@ object bridge extends org.apache.spark.internal.Logging {
 
   /** MANIFEST-PLANNED snapshot read (the Iceberg-manifest / Delta-
     * checkpoint move): the file list, sizes, partition values, and
-    * per-file stats all come from the version's commit-time sidecars —
+    * per-file stats all come from the version's commit-time metadata —
     * planning performs ZERO directory listing at any file count, and a
     * stray file dropped into the snapshot dir is invisible (the
     * manifest IS the table). Files whose recorded range/null-count

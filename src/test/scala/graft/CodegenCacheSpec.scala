@@ -74,6 +74,29 @@ class CodegenCacheSpec extends AnyFunSuite {
         "working set outgrew the codegen cache")
   }
 
+  test("the live codegen cache holds more classes than Spark's default 100") {
+    import org.apache.spark.sql.catalyst.expressions.{Add, BoundReference, Literal}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.types.LongType
+    // Spark sizes its JVM-wide cache once, from the conf in force when its
+    // code generator first loads: the conf key above can read 1000 while
+    // the live cache holds 100, if anything generated code before the
+    // session existed. So measure the live bound: 150 distinct classes
+    // (each inlines its own constant), then the first one again.
+    spark.conf.get("spark.sql.codegen.cache.maxEntries")
+    def generate(i: Int): Unit =
+      GenerateUnsafeProjection.generate(Seq(
+        Add(BoundReference(0, LongType, nullable = false), Literal(7919000003L + i)))): Unit
+    val before = compilations
+    (0 until 150).foreach(generate)
+    assert(compilations - before >= 150L, "each class must be a fresh compile")
+    val warm = compilations
+    generate(0)
+    assert(compilations == warm,
+      "the first of 150 classes was evicted: the live codegen cache holds " +
+        s"fewer than ${GraftSession.CodegenCacheEntries} entries")
+  }
+
   test("a graft-table read re-run with fresh keys compiles nothing after its first run") {
     import spark.implicits._
     val day0 = java.time.LocalDate.of(2024, 1, 1)

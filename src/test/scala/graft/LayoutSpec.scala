@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Layout
+import graft.operators.{Layout, TableMerge}
 
 /** The z-order layout's skipping property, measured on real data: files
   * from a z-sorted write cover bounded rectangles in BOTH dimensions,
@@ -89,18 +89,16 @@ class LayoutSpec extends AnyFunSuite {
     val embs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     Layout.writeIvfBucketed(embs, dir, nlist = 16)
     val probes = Seq(0, 3, 7, 11)
-    val pruned = spark.read.parquet(dir)
+    // read through the graft table: its manifest index prunes the
+    // centroid_id IN (…) filter as partition pruning
+    val pruned = TableMerge.read(spark, dir)
       .filter(col("centroid_id").isin(probes: _*))
     pruned.collect()
     val scan = pruned.queryExecution.executedPlan.collect {
       case f: FileSourceScanExec => f
     }.head
     val scannedFiles = scan.metrics("numFiles").value
-    def parquetFilesUnder(p: java.io.File): Long =
-      Option(p.listFiles()).map(_.map(f =>
-        if (f.isDirectory) parquetFilesUnder(f)
-        else if (f.getName.endsWith(".parquet")) 1L else 0L).sum).getOrElse(0L)
-    val totalFiles = parquetFilesUnder(new java.io.File(dir))
+    val totalFiles = TableMerge.manifest(dir).get.size.toLong
     assert(scannedFiles > 0 && scannedFiles < totalFiles,
       s"expected pruning: scanned $scannedFiles of $totalFiles files")
     // partition pruning must not change WHAT is read: same vec_id set as

@@ -110,7 +110,17 @@ class ManifestSpec extends AnyFunSuite {
     assert(TableMerge.manifest(parted).get.map(_._1).toSet == parquetUnder(liveDirOf(parted)))
   }
 
-  test("every commit kind leaves one layout: marker, sidecars, manifest == files") {
+  /** Every `_graft_*` file under a version dir, by relative path. */
+  private def graftFilesUnder(dir: java.nio.file.Path): Set[String] = {
+    val s = Files.walk(dir)
+    try {
+      import scala.jdk.CollectionConverters._
+      s.iterator().asScala.filter(_.getFileName.toString.startsWith("_graft_"))
+        .map(dir.relativize(_).toString).toSet
+    } finally s.close()
+  }
+
+  test("every commit kind leaves one layout: marker, record, manifest == files") {
     import org.apache.spark.sql.types.{LongType, StructField}
     def rows(lo: Long, n: Long): DataFrame =
       (lo until lo + n).map(i => (i, i % 4L, i * 10L)).toDF("id", "g", "v")
@@ -141,22 +151,52 @@ class ManifestSpec extends AnyFunSuite {
         ("dropColumns", path, () => TableMerge.dropColumns(spark, path, Seq("w"))),
         ("restore", path, () => TableMerge.restore(path, TableMerge.versions(path)(1))),
         ("cloneTable", clone, () => TableMerge.cloneTable(path, clone)))
+      val metadataOnly = Set("analyzeStats", "addColumns", "renameColumn", "dropColumns",
+        "restore")
       kinds.foreach { case (kind, table, commit) =>
         val what = s"$kind ($tag)"
         val before = TableMerge.liveVersion(table)
+        // the parent's record bytes and schema, to check that a
+        // metadata-only commit writes its own record, never the parent's
+        val parent = before.map(v => (Files.readAllBytes(
+          Paths.get(table, v, "_graft_snapshot.json")).toSeq,
+          TableMerge.readVersion(spark, table, v).schema))
         commit()
         assert(TableMerge.liveVersion(table).nonEmpty && TableMerge.liveVersion(table) != before,
           s"$what must commit a new version")
         val live = liveDirOf(table)
-        Seq("_graft_committed", "_graft_schema.json").foreach(f =>
-          assert(Files.exists(live.resolve(f)), s"$what: live dir lacks $f"))
-        assert(Files.exists(live.resolve("_graft_parts.txt")) == parts.nonEmpty,
-          s"$what: the parts sidecar must exist exactly when partitioned")
+        val stats = if (TableMerge.statColumnsOf(table).nonEmpty) Set("_graft_stats.tsv") else Set.empty[String]
+        assert(graftFilesUnder(live) ==
+          Set("_graft_committed", "_graft_snapshot.json", "_graft_manifest.tsv") ++ stats,
+          s"$what: the live dir must hold the marker, the record and the manifest, " +
+            "plus the stats ledger exactly when stat columns are declared")
+        assert(TableMerge.partitionColsOf(table) == parts,
+          s"$what: the record must keep the partition columns")
         assert(TableMerge.manifest(table).get.map(_._1).toSet == parquetUnder(live),
           s"$what: the manifest must list exactly the parquet files under the live dir")
+        if (metadataOnly(kind)) parent.foreach { case (bytes, schema) =>
+          val v = before.get
+          assert(Files.readAllBytes(Paths.get(table, v, "_graft_snapshot.json")).toSeq == bytes &&
+            TableMerge.readVersion(spark, table, v).schema == schema,
+            s"$what must leave the parent version's record untouched")
+        }
       }
       assert(TableMerge.read(spark, clone).count() == TableMerge.read(spark, path).count())
     }
+  }
+
+  test("a version dir of the old sidecar layout fails with the delete-and-rebuild message") {
+    val path = tmpTable("old-layout")
+    val df = (0L until 16L).map(i => (i, i % 2L)).toDF("id", "g")
+    TableMerge.createOrReplace(df, path, partitionCols = Seq("g"))
+    // rewrite the live version as the old layout wrote it: the schema and
+    // parts sidecars beside the marker and the manifest, no record
+    val live = liveDirOf(path)
+    Files.delete(live.resolve("_graft_snapshot.json"))
+    Files.writeString(live.resolve("_graft_schema.json"), df.schema.json)
+    Files.writeString(live.resolve("_graft_parts.txt"), "g")
+    val e = intercept[IllegalStateException](TableMerge.read(spark, path))
+    assert(e.getMessage.contains("delete it and rebuild it"), e.getMessage)
   }
 
   test("a partition-scoped merge maintains the manifest incrementally") {

@@ -1099,6 +1099,29 @@ class SqlMergeSpec extends AnyFunSuite {
     assert(e.getMessage.contains("not partitioned"))
   }
 
+  test("DESCRIBE DETAIL answers from one snapshot while commits land") {
+    import spark.implicits._
+    val path = tmpTable("detail-race")
+    // each commit changes the file count, so a row that mixed the live
+    // version of one moment with the manifest of another would show it
+    def write(files: Int): Unit = TableMerge.createOrReplace(
+      (0L until 16L).map(i => (i, i % 4L)).toDF("id", "g").repartition(files), path)
+    write(1)
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val commits = new java.util.concurrent.atomic.AtomicInteger(0)
+    val writer = new Thread(() =>
+      while (!stop.get()) { write(1 + commits.getAndIncrement() % 4) })
+    writer.start()
+    val rows = try (1 to 40).map(_ => spark.sql(s"DESCRIBE DETAIL graft.`$path`").head())
+    finally { stop.set(true); writer.join() }
+    assert(commits.get() > 1, "the writer must commit while DESCRIBE runs")
+    rows.foreach { row =>
+      val v = row.getString(2)
+      assert(row.getLong(3) == TableMerge.versionManifest(path, v).get.size.toLong,
+        s"num_files ${row.getLong(3)} is not the file count of $v")
+    }
+  }
+
   test("DESCRIBE HISTORY counts each version's files from its manifest") {
     import spark.implicits._
     val path = tmpTable("history-files")
