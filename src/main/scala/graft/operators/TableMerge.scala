@@ -6,14 +6,29 @@ import org.apache.spark.sql.functions._
 
 /** Copy-on-write MERGE emulation over plain Parquet directories — the one
   * genuinely custom engine piece (SURVEY.md §7.3). Reproduces the
-  * reference's Iceberg sinks:
+  * reference's Iceberg sinks, whose incremental layer is one operation:
+  * a `MERGE INTO` that replaces some key groups of a table and leaves
+  * the rest alone (`silver/transformer.py:2427-2484`). Here that
+  * operation is ONE function, [[TableMerge.replaceGroups]] — "replace
+  * these key groups of the version I read with these rows" — and every
+  * row-level kind is a thin call of it:
   *
-  *  - K1 upsert  — `MERGE … WHEN MATCHED UPDATE SET * WHEN NOT MATCHED
-  *    INSERT *` (`silver/transformer.py:2427-2458`)
-  *  - K2 delete  — `WHEN MATCHED THEN DELETE` (`transformer.py:2460-2484`)
-  *  - K3 create-or-replace (`transformer.py:1415-1426`)
+  *  - K1 upsert — `MERGE … WHEN MATCHED UPDATE SET * WHEN NOT MATCHED
+  *    INSERT *` (`transformer.py:2427-2458`): drops = the source's keys;
+  *  - replaceKeys — the fused delete + insert of a chunk resync: drops =
+  *    the given groups;
+  *  - K2 delete — `WHEN MATCHED THEN DELETE` (`transformer.py:2460-2484`):
+  *    drops = the given keys, no rows added;
+  *  - restate — drops = every row;
+  *  - SQL MERGE / UPDATE / DELETE / INSERT INTO ([[graft.plans.SqlMerge]]):
+  *    drops = the touched partitions (none for INSERT INTO) or every
+  *    row, against the version the statement analyzed;
   *  - K5 schema evolution — `ALTER TABLE ADD COLUMN` per new column before
-  *    merge (`transformer.py:2421-2425`) → union-by-name with null padding
+  *    merge (`transformer.py:2421-2425`) → union-by-name with null
+  *    padding, inside that function.
+  *
+  * K3 create-or-replace (`transformer.py:1415-1426`) is the only write
+  * that does not read a base: CREATE, CTAS and INSERT OVERWRITE.
   *
   * Commit protocol (the Iceberg snapshot-pointer analogue for a plain
   * FS): a table directory holds immutable version dirs `v-<nanos>` plus
@@ -48,8 +63,9 @@ import org.apache.spark.sql.functions._
   * the race gets a [[CommitConflictException]], and the public merge
   * entry points retry the WHOLE merge against the new base — no lost
   * update, and the critical section is pointer-check + rename, not the
-  * merge itself. A crashed writer's lock is stolen after a staleness
-  * window.
+  * merge itself. SQL DML never retries: its rows come from the snapshot
+  * it analyzed, so it fails and the user re-runs it. A crashed
+  * writer's lock is stolen after a staleness window.
   *
   * Scale posture: the rewrite is partition-scoped when the merge keys
   * cover the partition columns (key implies partition ⇒ untouched
@@ -57,9 +73,9 @@ import org.apache.spark.sql.functions._
   * rewritten, or stolen from the live snapshot); the anti-join shuffles
   * only on the merge keys and AQE handles skew.
   *
-  * File sizing: an unpartitioned whole-table restatement (upsert,
-  * replaceKeys, delete, restate) writes ceil(estimated bytes /
-  * `spark.sql.files.maxPartitionBytes`) files, at least one, where the
+  * File sizing: an unpartitioned whole-table restatement writes
+  * ceil(estimated bytes / `spark.sql.files.maxPartitionBytes`) files,
+  * at least one, where the
   * estimate is the base manifest's bytes plus the source's plan-stat
   * size; with either size unknown, or stat columns declared for file
   * skipping, it keeps the plan's partitioning (see `sizedRestatement`).
@@ -228,7 +244,13 @@ object TableMerge {
       partitionCols: Seq[String],
       columnMap: Option[Seq[(String, String)]],
       statColumns: Seq[String],
-      txn: Map[String, String])
+      txn: Map[String, String]) {
+    /** The partition columns under their LOGICAL names: each physical
+      * dir name mapped back through the column map (a partition column
+      * dropped and re-added lives under a fresh physical name). */
+    def logicalPartitionCols: Seq[String] = partitionCols.map(p =>
+      columnMap.flatMap(_.collectFirst { case (l, `p`) if l.nonEmpty => l }).getOrElse(p))
+  }
 
   private def writeRecord(dir: Path, r: SnapshotRecord): Unit = {
     import org.json4s._
@@ -674,10 +696,11 @@ object TableMerge {
   private def isCommitted(dir: java.io.File): Boolean =
     Files.exists(dir.toPath.resolve(CommittedMarker))
 
-  /** The live version's partition-column chain, from its record
-    * (empty for an unpartitioned table, or no table). Metadata-only —
-    * the SQL MERGE planner uses it to decide whether the
-    * partition-scoped copy-on-write path applies. */
+  /** The live version's partition-column chain as its directories name
+    * it (PHYSICAL names; empty for an unpartitioned table, or no table).
+    * Metadata-only — OPTIMIZE uses it for the depth of its compaction
+    * units; [[SnapshotRecord.logicalPartitionCols]] gives the names a
+    * reader sees. */
   def partitionColsOf(tablePath: String): Seq[String] =
     liveRecord(tablePath).fold(Seq.empty[String])(_.partitionCols)
 
@@ -689,12 +712,13 @@ object TableMerge {
     * lie in no touched dir and would carry beside their rewritten rows,
     * duplicating them. A layout mismatch takes the
     * full-restatement path, which is also the correct semantics for a
-    * re-partitioning write. */
-  private def baseLayoutMatches(liveDir: Path, partitionCols: Seq[String]): Boolean = {
-    val base = recordOf(liveDir).partitionCols
-    base.length == partitionCols.length &&
-      base.zip(partitionCols).forall { case (a, b) => a.equalsIgnoreCase(b) }
-  }
+    * re-partitioning write. `partitionCols` are LOGICAL names, compared
+    * through the base's column map. */
+  private def baseLayoutMatches(base: SnapshotRecord, partitionCols: Seq[String]): Boolean =
+    base.partitionCols.length == partitionCols.length &&
+      base.partitionCols.zip(partitionCols).forall { case (a, b) =>
+        a.equalsIgnoreCase(physNameIn(base.columnMap, b))
+      }
 
   /** The live snapshot, planned from its manifest. */
   def read(spark: SparkSession, tablePath: String): DataFrame =
@@ -771,7 +795,7 @@ object TableMerge {
     * correct replace semantics). */
   def createOrReplace(df: DataFrame, tablePath: String, partitionCols: Seq[String] = Seq.empty,
                       meta: Map[String, String] = Map.empty): Unit =
-    writeVersion(df, tablePath, partitionCols, AnyParent, meta)
+    writeVersion(df, tablePath, partitionCols, AnyParent, meta, resolveLive(tablePath))
 
   /** The version dir a merge computes from (`base`, the pointer it
     * resolved); conflict if it was pruned while resolving. */
@@ -786,9 +810,9 @@ object TableMerge {
     (dir, readSnapshot(spark, dir))
   }
 
-  /** File sizing of an UNPARTITIONED whole-table restatement (the full
-    * paths of [[upsert]], [[replaceKeys]], [[delete]] and [[restate]],
-    * bootstraps included): write ceil(estimate / `spark.sql.files.
+  /** File sizing of an UNPARTITIONED whole-table restatement (any
+    * [[replaceGroups]] commit that is not partition-scoped, bootstraps
+    * included): write ceil(estimate / `spark.sql.files.
     * maxPartitionBytes`) files, at least one, through a narrow
     * `coalesce`, where the estimate is the base snapshot's manifest
     * bytes plus `source`'s plan-stat size, with checkpointed inputs
@@ -820,46 +844,139 @@ object TableMerge {
       }
     }
 
-  /** Write `df` as a complete new version dir, then commit under `expect`. */
-  private def writeVersion(df: DataFrame, tablePath: String,
-                           partitionCols: Seq[String], expect: Expect,
-                           meta: Map[String, String] = Map.empty): Unit = {
-    val live = resolveLive(tablePath).map(snapshotMeta)
-    // mapped tables write PHYSICAL files: a merge/delete restatement
-    // (Parent expect) converts its logical result through the mapping
-    // and carries it; a full REPLACE (AnyParent) resets the mapping —
-    // the replacing content defines fresh identity names, as Delta's
-    // REPLACE TABLE does
-    val (physDf, newMap) = live.filter(_ => expect != AnyParent)
-        .flatMap(m => m.record.columnMap.map(toPhysical(df, _, m.record.schema.map(_.name)))) match {
+  /** Write `df` (LOGICAL columns) as a new version laid out by
+    * `partitionCols` (logical names) and commit it under `expect`. The
+    * record keeps `base`'s declared stat columns, and every written file
+    * is stat-scanned for them (the Delta stats-on-every-add discipline).
+    * A row-level commit (a `Parent` expect) also keeps `base`'s column
+    * map, converting `df` to physical names; a full REPLACE
+    * (`AnyParent`) resets it — the replacing content defines fresh
+    * identity names, as Delta's REPLACE TABLE does. With `carry`, the
+    * files of `base` it keeps hard-link into the version, and `df` is
+    * clustered by the partition columns first, so each dir it writes
+    * gets ONE file from ONE task (tasks×dirs small files made
+    * maintained-index reads and rewrites degrade with width); without,
+    * the version holds only what `df` writes. */
+  private def writeVersion(df: DataFrame, tablePath: String, partitionCols: Seq[String],
+      expect: Expect, meta: Map[String, String], base: Option[Path],
+      carry: Option[String => Boolean] = None): Unit = {
+    val baseRec = base.map(recordOf)
+    // the base's physical names are reserved, so a column new to the
+    // table never takes the name of a dropped column whose values still
+    // live in carried files
+    val (physDf, newMap) = baseRec.filter(_ => expect != AnyParent)
+        .flatMap(r => r.columnMap.map(toPhysical(df, _, r.schema.map(_.name)))) match {
       case Some((p, entries)) => (p, Some(entries))
       case None => (df, None)
     }
-    // the caller names LOGICAL partition columns; the physical frame may
-    // carry them under mapped names (re-partitioning by a RENAMED column
-    // — r19 review: partitionBy on the logical name would fail against
-    // physDf, and the record must name what the dirs are named)
+    // the record and the dirs name the PHYSICAL partition columns
     val physParts = partitionCols.map(physNameIn(newMap, _))
-    // a full snapshot replaces every file: it keeps the table's declared
-    // stat columns and re-records stats for all of them (one bounded
-    // min/max scan of what was just written — the Delta
-    // stats-on-every-add discipline)
-    val record = SnapshotRecord(readBackOrder(physDf.schema, physParts), physParts, newMap,
-      live.fold(Seq.empty[String])(_.record.statColumns), meta)
-    stageCommit(tablePath, expect, record, carryFrom = None) { version =>
-      val writer = physDf.write.mode(SaveMode.Overwrite)
+    val out = if (carry.isDefined) physDf.repartition(physParts.map(col): _*) else physDf
+    val record = SnapshotRecord(readBackOrder(out.schema, physParts), physParts, newMap,
+      baseRec.fold(Seq.empty[String])(_.statColumns), meta)
+    stageCommit(tablePath, expect, record, carry.flatMap(_ => base),
+        carry.getOrElse(_ => true)) { version =>
+      val writer = out.write.mode(SaveMode.Overwrite)
       (if (physParts.nonEmpty) writer.partitionBy(physParts: _*) else writer)
         .parquet(version.toString)
-      freshStats(physDf.sparkSession, version, record)
+      freshStats(out.sparkSession, version, record)
     }
   }
 
-  /** K1 + K5 — upsert `source` into the table at `tablePath` on `keys`.
-    * Matched target rows are replaced wholesale by the source row
-    * (`UPDATE SET *`); unmatched source rows are inserted; columns new to
-    * either side are null-padded (additive schema evolution). `source`
+  /** THE row-level commit. Every upsert, replaceKeys, delete and
+    * restate, and every SQL MERGE, UPDATE, DELETE and INSERT INTO,
+    * commits through it: the version in which the key groups `drops`
+    * (tuples over `groupKeys`; None = every row) of snapshot `base`
+    * (None = no table yet) are replaced by `rows` —
+    * (base ⟕̸ drops) ⊎ rows, by name, columns new to either side
+    * null-padded (K5). The commit expects `base` as its parent: when
+    * another commit landed since `base` was read it fails with
+    * [[CommitConflictException]], and the caller recomputes its rows
+    * against the new base (the API's retry loop) or gives up (SQL DML,
+    * whose rows come from the snapshot it analyzed).
+    *
+    * Scope, decided here alone: PARTITION-SCOPED when the partition
+    * columns are among the group keys and `base` is laid out by them
+    * ([[baseLayoutMatches]]). A dropped row then lives in a partition
+    * some drop tuple names, so only those partitions are rewritten
+    * (their surviving rows plus the `rows` landing there); `rows`
+    * landing in other partitions are added beside the files there; and
+    * every other file hard-links into the new version, never read or
+    * rewritten. When the group keys ARE the partition columns, a dropped
+    * group is a whole partition and nothing of it survives. Past
+    * [[maxScopedPartitions]] touched partitions the commit restates the
+    * whole table instead and records why in its metadata: same result,
+    * and the collect stays bounded. Otherwise it is a whole-table
+    * restatement, sized by [[sizedRestatement]]. `partitionCols`
+    * (logical names) lay out the new version either way. */
+  private[graft] def replaceGroups(spark: SparkSession, tablePath: String,
+      base: Option[String], rows: DataFrame, drops: Option[DataFrame],
+      groupKeys: Seq[String], partitionCols: Seq[String],
+      meta: Map[String, String] = Map.empty): Unit =
+    conflictIfBaseMoved(tablePath, base) {
+      val from = base.map(_ => baseDir(tablePath, base))
+      val target = from.map(readSnapshot(spark, _))
+      def restatement(txn: Map[String, String]): Unit = {
+        val out = target.zip(drops).fold(rows) { case (t, d) =>
+          t.join(d, groupKeys, "left_anti").unionByName(rows, allowMissingColumns = true)
+        }
+        writeVersion(sizedRestatement(out, rows, from, partitionCols),
+          tablePath, partitionCols, Parent(base), txn, from)
+      }
+      val scope = for {
+        dir <- from
+        t <- target
+        d <- drops
+        rec = recordOf(dir)
+        if partitionCols.nonEmpty && partitionCols.forall(groupKeys.contains) &&
+          baseLayoutMatches(rec, partitionCols)
+      } yield (rec, t, d)
+      scope match {
+        case None => restatement(meta)
+        case Some((rec, t, d)) =>
+          val parts = d.select(partitionCols.map(col): _*).distinct()
+          // ONE collect, capped at maxScopedPartitions+1 rows: each
+          // touched partition's values, then its values cast to the
+          // strings the writer names dirs by (`Cast(col, StringType)`
+          // under the session timezone — a JVM `toString` renders a
+          // midnight timestamp as `… 00:00:00.0` where the writer
+          // writes `… 00:00:00`). A touched set out of sync with the
+          // real tree is a data-loss class: the carry would keep
+          // replaced files beside their rewrites.
+          val touched = parts.select(partitionCols.map(col) ++
+              partitionCols.map(c => col(c).cast(org.apache.spark.sql.types.StringType)): _*)
+            .limit((maxScopedPartitions + 1).toInt).collect()
+          if (touched.length > maxScopedPartitions)
+            restatement(meta + (ScopeFallbackKey ->
+              s"touched=${parts.count()}>max=$maxScopedPartitions"))
+          else {
+            val n = partitionCols.length
+            val kept =
+              if (groupKeys.toSet == partitionCols.toSet) t.limit(0)
+              else {
+                val touchedDf = spark.createDataFrame(java.util.Arrays.asList(
+                  touched.map(r => org.apache.spark.sql.Row.fromSeq(r.toSeq.take(n))): _*),
+                  parts.schema)
+                t.join(broadcast(touchedDf), partitionCols, "left_semi")
+                  .join(d, groupKeys, "left_anti")
+              }
+            val dirs = touched.map(r => rec.partitionCols.indices.map(i =>
+              org.apache.spark.sql.graft.bridge.partitionPathSegment(
+                rec.partitionCols(i), r.getString(n + i))).mkString("/")).toSet
+            writeVersion(kept.unionByName(rows, allowMissingColumns = true), tablePath,
+              partitionCols, Parent(base), meta, from, carry = Some(rel => !dirs(unitOf(rel))))
+          }
+      }
+    }
+
+  /** K1 + K5 — upsert `source` into the table at `tablePath` on `keys`:
+    * matched target rows are replaced wholesale by the source row
+    * (`UPDATE SET *`) and unmatched source rows are inserted — the
+    * [[replaceGroups]] whose drops are the source's keys. `source`
     * must be unique per key (the reference dedups upstream, W1/A7); we
-    * enforce it cheaply with a `dropDuplicates(keys)`.
+    * enforce it cheaply with a `dropDuplicates(keys)`, and an anti join
+    * ignores duplicate keys anyway, so the drops take no distinct.
+    * Empty `partitionCols` means an unpartitioned layout.
     */
   def upsert(spark: SparkSession, tablePath: String, source: DataFrame,
              keys: Seq[String], partitionCols: Seq[String] = Seq.empty,
@@ -867,35 +984,8 @@ object TableMerge {
     retryOnConflict(CommitRetries) {
       require(keys.nonEmpty, "merge keys required")
       val src = source.dropDuplicates(keys)
-      val base = currentVersionName(tablePath)
-      if (base.isEmpty) {
-        // bootstrap: committed iff no concurrent bootstrap won the race
-        writeVersion(sizedRestatement(src, src, None, partitionCols),
-          tablePath, partitionCols, Parent(None), meta)
-      } else conflictIfBaseMoved(tablePath, base) {
-        // resolve the merge base ONCE; everything below reads this snapshot
-        val (liveDir, target) = baseSnapshot(spark, tablePath, base)
-        val partitionScoped = partitionCols.nonEmpty &&
-          partitionCols.forall(keys.contains) &&
-          baseLayoutMatches(liveDir, partitionCols)
-        if (partitionScoped) {
-          // Key implies partition ⇒ a matched target row always lives in a
-          // partition the source also touches; hard-link untouched partition
-          // trees into the new version (no data read/rewrite, and the live
-          // snapshot keeps its files for in-flight readers) and rewrite only
-          // the touched ones.
-          val touched = src.select(partitionCols.map(col): _*).distinct()
-            .localCheckpoint() // see replaceKeys: broadcast + link-planner reuse
-          val targetTouched = target.join(broadcast(touched), partitionCols, "left_semi")
-          commitScopedOrFallback(spark, tablePath, liveDir, base, touched,
-            merged = mergeRows(targetTouched, src, keys),
-            fallback = mergeRows(target, src, keys),
-            partitionCols = partitionCols, meta = meta)
-        } else {
-          writeVersion(sizedRestatement(mergeRows(target, src, keys), src, Some(liveDir),
-            partitionCols), tablePath, partitionCols, Parent(base), meta)
-        }
-      }
+      replaceGroups(spark, tablePath, currentVersionName(tablePath), src,
+        Some(src.select(keys.map(col): _*)), keys, partitionCols, meta)
     }
 
   /** Fused K2+K1 — one copy-on-write rewrite that drops every target row
@@ -904,168 +994,52 @@ object TableMerge {
     * `delete(dropGroups)` followed by `upsert(source)` when the source
     * rows all belong to dropped groups (the chunk-resync shape,
     * `transformer.py:2460-2484` delete + 2427-2458 insert), but pays ONE
-    * table rewrite instead of two. */
+    * table rewrite instead of two. Partition-scoped, it is the
+    * ANN-index maintenance shape: moving a vector across centroids drops
+    * (old_centroid, id) and inserts (new_centroid, id). */
   def replaceKeys(spark: SparkSession, tablePath: String, source: DataFrame,
                   dropGroups: DataFrame, groupKeys: Seq[String],
                   partitionCols: Seq[String] = Seq.empty,
-                  meta: Map[String, String] = Map.empty,
-                  touchedHint: Option[DataFrame] = None): Unit =
+                  meta: Map[String, String] = Map.empty): Unit =
     retryOnConflict(CommitRetries) {
       require(groupKeys.nonEmpty, "group keys required")
-      val base = currentVersionName(tablePath)
-      if (base.isEmpty)
-        writeVersion(sizedRestatement(source, source, None, partitionCols),
-          tablePath, partitionCols, Parent(None), meta)
-      else conflictIfBaseMoved(tablePath, base) {
-        val (liveDir, target) = baseSnapshot(spark, tablePath, base)
-        val drops = dropGroups.select(groupKeys.map(col): _*).distinct()
-        val partitionScoped = partitionCols.nonEmpty &&
-          partitionCols.forall(groupKeys.contains) &&
-          baseLayoutMatches(liveDir, partitionCols)
-        if (partitionScoped) {
-          // Group key implies partition ⇒ a dropped row can only live in a
-          // partition named by some dropGroups tuple; partitions touched by
-          // neither dropGroups nor source are hard-linked, exactly as in
-          // [[upsert]]. This is the ANN-index maintenance shape: moving a
-          // vector across centroids drops (old_centroid, id) and inserts
-          // (new_centroid, id), rewriting only those two partitions.
-          // freeze the touched-partition set (≤ #partitions rows): it is
-          // referenced by the broadcast semi-join AND the hard-link
-          // planner's collect, and recomputing it re-evaluates the whole
-          // dropGroups ∪ source lineage each time.
-          // `touchedHint` (r21): every SQL DML caller already computed and
-          // checkpointed exactly this set to scope its own source frame —
-          // recomputing it here re-evaluated the full dropGroups ∪ source
-          // lineage (for MERGE, the whole join cascade) once more per
-          // statement. The hint MUST be the distinct partition tuples of
-          // dropGroups ∪ source, already frozen; a desynced hint is the
-          // same data-loss class as a desynced touched set.
-          val touched = touchedHint.getOrElse(
-            drops.select(partitionCols.map(col): _*)
-              .union(source.select(partitionCols.map(col): _*)).distinct()
-              .localCheckpoint())
-          val targetTouched = target.join(broadcast(touched), partitionCols, "left_semi")
-          commitScopedOrFallback(spark, tablePath, liveDir, base, touched,
-            merged = targetTouched.join(drops, groupKeys, "left_anti")
-              .unionByName(source, allowMissingColumns = true),
-            fallback = target.join(drops, groupKeys, "left_anti")
-              .unionByName(source, allowMissingColumns = true),
-            partitionCols = partitionCols, meta = meta)
-        } else {
-          val remaining = target.join(drops, groupKeys, "left_anti")
-          val merged = remaining.unionByName(source, allowMissingColumns = true)
-          writeVersion(sizedRestatement(merged, source, Some(liveDir), partitionCols),
-            tablePath, partitionCols, Parent(base), meta)
-        }
-      }
+      replaceGroups(spark, tablePath, currentVersionName(tablePath), source,
+        Some(dropGroups.select(groupKeys.map(col): _*)), groupKeys, partitionCols, meta)
     }
-
-  /** The shared partition-scoped commit of [[upsert]] and
-    * [[replaceKeys]]: guard the driver-side partition collect (past
-    * [[maxScopedPartitions]] touched partitions the merge restates
-    * wholesale via `fallback`, recording the decision in commit
-    * metadata — same result, no unbounded collect), write the touched
-    * partitions clustered one-writer-task-per-dir, stat-scan them
-    * BEFORE the untouched trees hard-link in, carry surviving stats,
-    * and CAS-commit against `base`. `merged` must already be
-    * restricted to the touched partitions. */
-  private def commitScopedOrFallback(spark: SparkSession, tablePath: String,
-      liveDir: Path, base: Option[String], touched: DataFrame,
-      merged: => DataFrame, fallback: => DataFrame,
-      partitionCols: Seq[String], meta: Map[String, String]): Unit = {
-    // ONE bounded collect serves both the scope guard and the hard-link
-    // planner (r21): count() + touchedPartitionDirs() were two separate
-    // driver actions over the same checkpointed ≤10k-row frame — at
-    // sf0.1 each Spark job is ~50-80 ms of fixed cost paid per DML
-    // statement. The collect is capped at maxScopedPartitions+1 rows,
-    // so the driver never holds an unbounded set; past the cap the
-    // exact count is computed only on the (rare) fallback path, where
-    // it feeds the commit metadata.
-    val touchedStrs = touched.select(touched.columns.map(c =>
-      col(c).cast(org.apache.spark.sql.types.StringType)): _*)
-      .limit((maxScopedPartitions + 1).toInt).collect()
-    if (touchedStrs.length > maxScopedPartitions) {
-      val nTouched = touched.count()
-      writeVersion(fallback, tablePath, partitionCols, Parent(base),
-        meta + (ScopeFallbackKey -> s"touched=$nTouched>max=$maxScopedPartitions"))
-    } else {
-      // mapped tables stage PHYSICAL rows (identity for unmapped ones);
-      // the base record's physical names are reserved so a merge-side
-      // new column can never collide with a retired (dropped) physical
-      // column still living in the carried files
-      val baseRec = recordOf(liveDir)
-      val (physDf, newMap) = baseRec.columnMap match {
-        case Some(cm) =>
-          val (p, entries) = toPhysical(merged, cm, baseRec.schema.map(_.name))
-          (p, Some(entries))
-        case None => (merged, None)
-      }
-      // cluster by the partition columns before the partitioned write:
-      // each output dir is then written by ONE task (≤ one file per dir
-      // per commit) instead of every shuffle task writing a sliver into
-      // every dir it holds — tasks×dirs small files is what made
-      // maintained-index reads and rewrites degrade with width (r17
-      // probe: 1,953 files for a 64k-row table)
-      val m = physDf.repartition(partitionCols.map(col): _*)
-      val record = baseRec.copy(schema = readBackOrder(m.schema, partitionCols),
-        partitionCols = partitionCols, columnMap = newMap, txn = meta)
-      // the touched partitions are rewritten; the rest hard-link. Fresh
-      // manifest and stats rows cover ONLY the rewritten partitions —
-      // the incremental discipline: commit cost scales with what was
-      // written, not with table file count
-      val touchedDirs = dirsOfTouchedRows(touched.columns, touchedStrs)
-      stageCommit(tablePath, Parent(base), record, Some(liveDir),
-          carry = rel => !touchedDirs.contains(unitOf(rel))) { version =>
-        m.write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*)
-          .parquet(version.toString)
-        freshStats(spark, version, record)
-      }
-    }
-  }
 
   /** Whole-table RESTATEMENT with merge-grade CAS semantics (r21):
     * commit `df` as the new version against the current base — retry on
     * conflict, same pointer swap as every merge — without the scoped
-    * machinery. For writers that provably replace EVERY live row (the
-    * retrain rebuild: dropGroups = live keys ∪ new assignment, so the
-    * scoped path's anti-join is the empty set and its hard-link planner
-    * has nothing to carry — `(target ⟕̸ drops) ⊎ source = source`), this
+    * machinery: the [[replaceGroups]] that drops every row. For writers
+    * that provably replace EVERY live row (the retrain rebuild), this
     * writes the same rows in one pass instead of computing the no-op
-    * the long way. Callers cluster `df` by the partition columns
-    * themselves (one writer task per dir, the createOrReplace seed
-    * discipline). */
+    * anti-join the long way. Callers cluster `df` by the partition
+    * columns themselves (one writer task per dir, the createOrReplace
+    * seed discipline). */
   private[graft] def restate(spark: SparkSession, tablePath: String, df: DataFrame,
       partitionCols: Seq[String] = Seq.empty,
       meta: Map[String, String] = Map.empty): Unit =
     retryOnConflict(CommitRetries) {
-      val base = currentVersionName(tablePath)
-      if (base.isEmpty)
-        writeVersion(sizedRestatement(df, df, None, partitionCols),
-          tablePath, partitionCols, Parent(None), meta)
-      else conflictIfBaseMoved(tablePath, base) {
-        writeVersion(sizedRestatement(df, df, Some(baseDir(tablePath, base)), partitionCols),
-          tablePath, partitionCols, Parent(base), meta)
-      }
+      replaceGroups(spark, tablePath, currentVersionName(tablePath), df, None, Seq.empty,
+        partitionCols, meta)
     }
 
-  /** K2 — delete rows whose key appears in `deleteKeys`. With no
-    * explicit `partitionCols` the restatement KEEPS the live layout —
-    * before r19 it silently flattened a partitioned table, which both
-    * surprised callers and set up the scoped-merge layout-mismatch
-    * hazard [[baseLayoutMatches]] now guards. */
+  /** K2 — delete rows whose key appears in `deleteKeys`: the
+    * [[replaceGroups]] with no rows to add. With no explicit
+    * `partitionCols` the commit KEEPS the base's layout — before r19
+    * it silently flattened a partitioned table, which both surprised
+    * callers and set up the scoped-merge layout-mismatch hazard
+    * [[baseLayoutMatches]] now guards. */
   def delete(spark: SparkSession, tablePath: String, deleteKeys: DataFrame,
              keys: Seq[String], partitionCols: Seq[String] = Seq.empty): Unit =
     retryOnConflict(CommitRetries) {
       val base = currentVersionName(tablePath)
-      if (base.nonEmpty) conflictIfBaseMoved(tablePath, base) {
-        val (liveDir, target) = baseSnapshot(spark, tablePath, base)
+      if (base.nonEmpty) {
         val layout =
           if (partitionCols.nonEmpty) partitionCols
-          else recordOf(liveDir).partitionCols
-        val remaining = target.join(
-          deleteKeys.select(keys.map(col): _*).distinct(), keys, "left_anti")
-        writeVersion(sizedRestatement(remaining, deleteKeys, Some(liveDir), layout),
-          tablePath, layout, Parent(base))
+          else recordOf(baseDir(tablePath, base)).logicalPartitionCols
+        replaceGroups(spark, tablePath, base, spark.emptyDataFrame,
+          Some(deleteKeys.select(keys.map(col): _*)), keys, layout)
       }
     }
 
@@ -1671,16 +1645,6 @@ object TableMerge {
     }
   }
 
-  /** UPDATE-SET-* + INSERT-* semantics with union-by-name schema
-    * evolution: result = (target ∖ source-keys) ⊎ source. `src` is
-    * already unique per key ([[upsert]] dedups it), and an anti join
-    * ignores duplicate keys anyway, so no distinct precedes the join.
-    */
-  private def mergeRows(target: DataFrame, src: DataFrame, keys: Seq[String]): DataFrame = {
-    val notMatched = target.join(src.select(keys.map(col): _*), keys, "left_anti")
-    notMatched.unionByName(src, allowMissingColumns = true)
-  }
-
   private def newVersionDir(tablePath: String): Path = {
     val dir = Paths.get(tablePath, s"v-${System.nanoTime()}")
     Files.createDirectories(Paths.get(tablePath))
@@ -1753,28 +1717,6 @@ object TableMerge {
 
   /** Commit-metadata key recording a scoped→full fallback decision. */
   private[graft] val ScopeFallbackKey = "graft.scopeFallback"
-
-  /** Hive-style partition dir prefixes (`col=value`) touched by the
-    * merge, rendered EXACTLY as Spark's writer names the dirs: values
-    * go through `Cast(col, StringType)` under the session timezone
-    * (the writer's own value rendering — a JVM `toString` would emit
-    * `2020-01-01 00:00:00.0` for a midnight timestamp where the
-    * writer emits `2020-01-01 00:00:00`, desyncing the touched set
-    * from the real tree), then through the writer's segment naming
-    * (null AND empty string → `__HIVE_DEFAULT_PARTITION__`, else
-    * path-escaped). A desynced set is a data-loss class: the carry
-    * keeps the replaced files beside their rewrites, and a
-    * whole-partition drop resurrects the old rows. */
-  /** Relative partition-dir names of already-collected touched rows
-    * (the rows come from the one bounded collect in
-    * [[commitScopedOrFallback]], cast to writer strings there). */
-  private def dirsOfTouchedRows(cols: Array[String],
-      rows: Array[org.apache.spark.sql.Row]): Set[String] =
-    rows.map { row =>
-      cols.zipWithIndex.map { case (c, i) =>
-        org.apache.spark.sql.graft.bridge.partitionPathSegment(c, row.getString(i))
-      }.mkString("/")
-    }.toSet
 
   private def linkTree(src: Path, dest: Path): Unit =
     if (Files.isDirectory(src)) {

@@ -395,13 +395,6 @@ object SinkQueries {
   private def goldFixturePath(sf: String, which: String): String =
     Paths.get(statePath(s"goldfx_${sf}_$which")).toAbsolutePath.toString
 
-  /** Fixture memo (j15 pattern): the silver run + parquet freeze are
-    * SETUP for the gold star build, not the operator under test —
-    * rebuild once per (session, sf) so a repeated bench pass measures
-    * the gold math, not two table merges and two fixture writes. */
-  private val goldFixtureBuilt =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Boolean]()
-
   /** VERDICT r8 #1 — the flagship lifecycle's GOLD stage under a real
     * DuckDB hash oracle. The silver half (normalize → dedup → CDC →
     * merge → chunk; chunker semantics spec-pinned, not SQL-expressible)
@@ -421,7 +414,11 @@ object SinkQueries {
     goldFixtureSf = sf
     val resFx = goldFixturePath(sf, "resources")
     val chFx = goldFixturePath(sf, "chunks")
-    if (goldFixtureBuilt.putIfAbsent((s, sf), java.lang.Boolean.TRUE) == null) {
+    // the silver run + parquet freeze are SETUP for the gold star build,
+    // not the operator under test: built once per (session, sf) through
+    // the session memo, so a repeated bench pass measures the gold math.
+    // The memo keeps only a FINISHED build — one that threw is retried
+    PipelineShared.memo(s, s"goldfx/$sf") {
       val cfg = SilverPipeline.Config(
         statePath(s"goldfx_${sf}_resources_tbl"), statePath(s"goldfx_${sf}_chunks_tbl"),
         chunkMax = 400, chunkMin = 80, chunkOverlap = 60)
@@ -433,6 +430,7 @@ object SinkQueries {
       resourcesT.write.mode("overwrite").parquet(resFx)
       chunksT.select("resource_uid", "chunk_id", "token_count")
         .write.mode("overwrite").parquet(chFx)
+      java.lang.Boolean.TRUE
     }
     val resources = s.read.parquet(resFx)
     val chunks = s.read.parquet(chFx)

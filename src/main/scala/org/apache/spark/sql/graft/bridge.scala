@@ -470,8 +470,12 @@ object bridge extends org.apache.spark.internal.Logging {
     private lazy val partitioned: Seq[(InternalRow, Seq[(String, FileStatusWithMetadata)])] = {
       val key = s"$rootAbs\u0000${cs.sessionState.conf.sessionLocalTimeZone}" +
         s"\u0000${partSchema.map(_.name).mkString(",")}"
-      if (partGroupMemo.size > 64) partGroupMemo.clear() // bounded; rebuilt on demand
-      partGroupMemo.computeIfAbsent(key, _ => buildPartitioned())
+      Option(partGroupMemo.get(key)).getOrElse {
+        // bounded, rebuilt on demand; only a miss clears, so a repeat
+        // read of a memoized snapshot never evicts its own entry
+        if (partGroupMemo.size >= 64) partGroupMemo.clear()
+        partGroupMemo.computeIfAbsent(key, _ => buildPartitioned())
+      }
     }
 
     private def buildPartitioned(): Seq[(InternalRow, Seq[(String, FileStatusWithMetadata)])] = {

@@ -198,4 +198,65 @@ class ColumnMappingSpec extends AnyFunSuite {
     assert(df.columns.toSeq == Seq("id", "xx", "y"))
     assert(df.filter(col("xx") === 3L).count() == 32L)
   }
+
+  /** A table partitioned by a column whose physical name differs from
+    * its logical one: `c` is dropped, re-added (under a fresh physical
+    * name) and the table restated partitioned by it. Rows (id, v, c). */
+  private def mappedPartitionTable(tag: String): String = {
+    val path = tmpTable(tag)
+    TableMerge.createOrReplace((0L until 6L).map(i => (i, i * 10, i)).toDF("id", "v", "c"), path)
+    TableMerge.dropColumns(spark, path, Seq("c"))
+    spark.sql(s"ALTER TABLE graft.`$path` ADD COLUMNS (c INT)")
+    TableMerge.restate(spark, path, TableMerge.read(spark, path)
+      .withColumn("c", (col("id") % 3L).cast("int")), partitionCols = Seq("c"))
+    path
+  }
+
+  test("SQL DML keeps the layout and column map of a table partitioned by a mapped column") {
+    val path = mappedPartitionTable("dml-layout")
+    val layout = TableMerge.partitionColsOf(path)
+    assert(layout.size == 1 && layout.head != "c" && TableMerge.isColumnMapped(path),
+      s"the setup must partition by a physical name other than c, got $layout")
+    var model = (0L until 6L).map(i => i -> ((i * 10, (i % 3).toInt))).toMap
+    def check(stmt: String): Unit = {
+      spark.sql(stmt)
+      assert(TableMerge.partitionColsOf(path) == layout, s"$stmt changed the layout")
+      assert(TableMerge.isColumnMapped(path), s"$stmt dropped the column map")
+      val got = TableMerge.read(spark, path).select("id", "v", "c").as[(Long, Long, Int)]
+        .collect().map { case (i, v, c) => i -> ((v, c)) }.toMap
+      assert(got == model, s"after $stmt")
+    }
+    model += 3L -> ((31L, 0))
+    check(s"UPDATE graft.`$path` SET v = v + 1 WHERE id = 3")
+    model -= 4L
+    check(s"DELETE FROM graft.`$path` WHERE id = 4")
+    model ++= Seq(1L -> ((111L, 1)), 20L -> ((200L, 2)))
+    check(s"""MERGE INTO graft.`$path` t USING (
+             |  SELECT 1L AS id, 111L AS v, 1 AS c
+             |  UNION ALL SELECT 20L AS id, 200L AS v, 2 AS c) s
+             |ON t.id = s.id AND t.c = s.c
+             |WHEN MATCHED THEN UPDATE SET *
+             |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    model += 30L -> ((300L, 0))
+    check(s"INSERT INTO graft.`$path` VALUES (30, 300, 0)")
+    // a REPLACE defines fresh identity names, partitioned by the same column
+    spark.sql(s"INSERT OVERWRITE graft.`$path` VALUES (40, 400, 1)")
+    assert(TableMerge.partitionColsOf(path) == Seq("c") && !TableMerge.isColumnMapped(path))
+    assert(TableMerge.read(spark, path).select("id", "v", "c").as[(Long, Long, Int)]
+      .collect().toSeq == Seq((40L, 400L, 1)))
+  }
+
+  test("introspection names a mapped partition column by its logical name") {
+    val path = mappedPartitionTable("introspect")
+    val phys = TableMerge.partitionColsOf(path).head
+    assert(phys != "c", "partitionColsOf names the directories' physical column")
+    val desc = spark.sql(s"DESCRIBE TABLE graft.`$path`").collect().toSeq
+      .map(r => (r.getString(0), r.getString(1)))
+    assert(desc == Seq(("id", "bigint"), ("v", "bigint"), ("c", "int"),
+      ("# Partition Information", ""), ("c", "int")), s"DESCRIBE TABLE: $desc")
+    val detail = spark.sql(s"DESCRIBE DETAIL graft.`$path`").head()
+    assert(detail.getAs[String]("partition_columns") == "c")
+    assert(spark.sql(s"SHOW PARTITIONS graft.`$path`").as[String].collect().toSeq ==
+      Seq("c=0", "c=1", "c=2"))
+  }
 }

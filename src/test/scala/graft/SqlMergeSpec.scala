@@ -1146,4 +1146,58 @@ class SqlMergeSpec extends AnyFunSuite {
     assert(numFiles == 4L && hist.map(h => (h._2, h._3)) == Seq((true, numFiles)),
       s"the live row must count the manifest's $numFiles files: $hist")
   }
+
+  test("SQL DML fails on a commit that landed after analysis, and never overwrites it") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.CommandExecutionMode
+    import graft.operators.CommitConflictException
+    val seed: Set[(Long, String, Long)] = Set((1L, "a", 10L), (2L, "a", 20L), (3L, "b", 30L), (5L, "q", 50L))
+    val api: Set[(Long, String, Long)] = Set((100L, "a", 1000L), (101L, "z", 1010L))
+    val update = (p: String) => s"UPDATE graft.`$p` SET v = v * 10 WHERE id < 3"
+    val updated = (rs: Set[(Long, String, Long)]) => rs.map { case (i, p, v) => if (i < 3) (i, p, v * 10) else (i, p, v) }
+    // (statement, partitioned, sql, what it does to a plain-Scala model)
+    val cases: Seq[(String, Boolean, String => String, Set[(Long, String, Long)] => Set[(Long, String, Long)])] = Seq(
+      ("update-partitioned", true, update, updated),
+      ("update-unpartitioned", false, update, updated),
+      ("delete", true, p => s"DELETE FROM graft.`$p` WHERE part = 'a' AND v >= 20",
+        _.filterNot { case (_, p, v) => p == "a" && v >= 20 }),
+      ("merge", true, p => s"""MERGE INTO graft.`$p` t USING (
+           |  SELECT 1L AS id, 'a' AS part, 11L AS v
+           |  UNION ALL SELECT 9L AS id, 'b' AS part, 90L AS v) s
+           |ON t.id = s.id AND t.part = s.part
+           |WHEN MATCHED THEN UPDATE SET *
+           |WHEN NOT MATCHED THEN INSERT *""".stripMargin,
+        rs => rs.filterNot(r => r._1 == 1L && r._2 == "a") + ((1L, "a", 11L)) + ((9L, "b", 90L))),
+      // positional VALUES follow the read-back order: partition columns last
+      ("insert-partitioned", true, p => s"INSERT INTO graft.`$p` VALUES (7, 70, 'a')",
+        _ + ((7L, "a", 70L))),
+      ("insert-unpartitioned", false, p => s"INSERT INTO graft.`$p` VALUES (7, 'a', 70)",
+        _ + ((7L, "a", 70L))))
+    val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    cases.foreach { case (name, partitioned, stmt, model) =>
+      val parts = if (partitioned) Seq("part") else Seq.empty
+      def fresh(tag: String): String = {
+        val path = tmpTable(s"$name-$tag")
+        TableMerge.createOrReplace(seed.toSeq.toDF("id", "part", "v"), path, partitionCols = parts)
+        path
+      }
+      // with no commit in between, the statement does what it always did
+      val plain = fresh("plain")
+      spark.sql(stmt(plain))
+      assert(rows(plain) == model(seed), s"$name changed its result")
+      // analyze against v1, let an API upsert commit v2, then execute
+      val path = fresh("raced")
+      val qe = cs.sessionState.executePlan(
+        cs.sessionState.sqlParser.parsePlan(stmt(path)), CommandExecutionMode.SKIP)
+      qe.analyzed
+      TableMerge.upsert(spark, path, api.toSeq.toDF("id", "part", "v"),
+        keys = Seq("id"), partitionCols = parts)
+      intercept[CommitConflictException](qe.executedPlan.executeCollect())
+      assert(rows(path) == seed ++ api, s"$name overwrote the concurrent commit")
+      // re-run, the statement applies on top of it
+      spark.sql(stmt(path))
+      assert(rows(path) == model(seed ++ api), s"$name re-run")
+      assert(TableMerge.partitionColsOf(path) == parts, s"$name changed the layout")
+    }
+  }
 }
