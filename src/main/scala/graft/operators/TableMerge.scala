@@ -640,9 +640,8 @@ object TableMerge {
         s"$dir is not a committed graft snapshot: it lacks the commit marker, " +
           "snapshot record or manifest. A table written by an earlier layout " +
           "is not readable: delete it and rebuild it")
-    if (snapMemo.size > 128) snapMemo.clear() // bounded; rebuilt on demand
-    snapMemo.computeIfAbsent(dir.toAbsolutePath.toString,
-      _ => new SnapshotMeta(dir, parseRecord(dir)))
+    org.apache.spark.sql.graft.bridge.boundedMemo(snapMemo, 128,
+      dir.toAbsolutePath.toString)(new SnapshotMeta(dir, parseRecord(dir)))
   }
 
   private def recordOf(dir: Path): SnapshotRecord = snapshotMeta(dir).record
@@ -814,9 +813,11 @@ object TableMerge {
     * [[replaceGroups]] commit that is not partition-scoped, bootstraps
     * included): write ceil(estimate / `spark.sql.files.
     * maxPartitionBytes`) files, at least one, through a narrow
-    * `coalesce`, where the estimate is the base snapshot's manifest
-    * bytes plus `source`'s plan-stat size, with checkpointed inputs
-    * sized by their stored blocks ([[org.apache.spark.sql.graft.bridge.
+    * `coalesce`, where the estimate is `source`'s plan-stat size plus,
+    * when `source` adds to the base (`addsToBase`), the base snapshot's
+    * manifest bytes; a `source` that IS the whole table (a restatement,
+    * a SQL statement's result) already holds the base. Checkpointed
+    * inputs are sized by their stored blocks ([[org.apache.spark.sql.graft.bridge.
     * observedSizeInBytes]]: a checkpoint of the silver CDC join otherwise
     * carries the join's product-of-inputs estimate, 10 GiB for an 80-row
     * batch). The merge plan's own partitioning would commit a small
@@ -831,10 +832,11 @@ object TableMerge {
     * folding a small clustered table into one file would end its
     * skipping. */
   private def sizedRestatement(out: DataFrame, source: DataFrame, base: Option[Path],
-                               partitionCols: Seq[String]): DataFrame =
+                               addsToBase: Boolean, partitionCols: Seq[String]): DataFrame =
     if (partitionCols.nonEmpty || base.exists(recordOf(_).statColumns.nonEmpty)) out
     else {
-      val baseBytes = base.fold(0L)(snapshotMeta(_).entries.iterator.map(_._2).sum)
+      val baseBytes = base.filter(_ => addsToBase)
+        .fold(0L)(snapshotMeta(_).entries.iterator.map(_._2).sum)
       org.apache.spark.sql.graft.bridge.observedSizeInBytes(source) match {
         case Some(sourceBytes) =>
           val perFile = out.sparkSession.sessionState.conf.filesMaxPartitionBytes
@@ -889,11 +891,13 @@ object TableMerge {
     * (tuples over `groupKeys`; None = every row) of snapshot `base`
     * (None = no table yet) are replaced by `rows` —
     * (base ⟕̸ drops) ⊎ rows, by name, columns new to either side
-    * null-padded (K5). The commit expects `base` as its parent: when
-    * another commit landed since `base` was read it fails with
-    * [[CommitConflictException]], and the caller recomputes its rows
-    * against the new base (the API's retry loop) or gives up (SQL DML,
-    * whose rows come from the snapshot it analyzed).
+    * null-padded (K5). A drop tuple matches the rows holding its values,
+    * null matching null ([[joinGroups]]): a SQL statement's dropped
+    * partition may be the null one. The commit expects `base` as its
+    * parent: when another commit landed since `base` was read it fails
+    * with [[CommitConflictException]], and the caller recomputes its
+    * rows against the new base (the API's retry loop) or gives up (SQL
+    * DML, whose rows come from the snapshot it analyzed).
     *
     * Scope, decided here alone: PARTITION-SCOPED when the partition
     * columns are among the group keys and `base` is laid out by them
@@ -902,13 +906,12 @@ object TableMerge {
     * (their surviving rows plus the `rows` landing there); `rows`
     * landing in other partitions are added beside the files there; and
     * every other file hard-links into the new version, never read or
-    * rewritten. When the group keys ARE the partition columns, a dropped
-    * group is a whole partition and nothing of it survives. Past
-    * [[maxScopedPartitions]] touched partitions the commit restates the
-    * whole table instead and records why in its metadata: same result,
-    * and the collect stays bounded. Otherwise it is a whole-table
-    * restatement, sized by [[sizedRestatement]]. `partitionCols`
-    * (logical names) lay out the new version either way. */
+    * rewritten. Past [[maxScopedPartitions]] touched partitions the
+    * commit restates the whole table instead and records why in its
+    * metadata: same result, and the collect stays bounded. Otherwise it
+    * is a whole-table restatement, sized by [[sizedRestatement]].
+    * `partitionCols` (logical names) lay out the new version either
+    * way. */
   private[graft] def replaceGroups(spark: SparkSession, tablePath: String,
       base: Option[String], rows: DataFrame, drops: Option[DataFrame],
       groupKeys: Seq[String], partitionCols: Seq[String],
@@ -918,9 +921,10 @@ object TableMerge {
       val target = from.map(readSnapshot(spark, _))
       def restatement(txn: Map[String, String]): Unit = {
         val out = target.zip(drops).fold(rows) { case (t, d) =>
-          t.join(d, groupKeys, "left_anti").unionByName(rows, allowMissingColumns = true)
+          joinGroups(t, d, groupKeys, "left_anti").unionByName(rows, allowMissingColumns = true)
         }
-        writeVersion(sizedRestatement(out, rows, from, partitionCols),
+        // with no drops `rows` is the whole table: the base adds no bytes
+        writeVersion(sizedRestatement(out, rows, from, drops.isDefined, partitionCols),
           tablePath, partitionCols, Parent(base), txn, from)
       }
       val scope = for {
@@ -940,9 +944,10 @@ object TableMerge {
           // strings the writer names dirs by (`Cast(col, StringType)`
           // under the session timezone — a JVM `toString` renders a
           // midnight timestamp as `… 00:00:00.0` where the writer
-          // writes `… 00:00:00`). A touched set out of sync with the
-          // real tree is a data-loss class: the carry would keep
-          // replaced files beside their rewrites.
+          // writes `… 00:00:00`; a null names the default-partition
+          // dir). A touched set out of sync with the real tree is a
+          // data-loss class: the carry would keep replaced files beside
+          // their rewrites, or drop a dir whose rows it never rewrote.
           val touched = parts.select(partitionCols.map(col) ++
               partitionCols.map(c => col(c).cast(org.apache.spark.sql.types.StringType)): _*)
             .limit((maxScopedPartitions + 1).toInt).collect()
@@ -951,15 +956,13 @@ object TableMerge {
               s"touched=${parts.count()}>max=$maxScopedPartitions"))
           else {
             val n = partitionCols.length
-            val kept =
-              if (groupKeys.toSet == partitionCols.toSet) t.limit(0)
-              else {
-                val touchedDf = spark.createDataFrame(java.util.Arrays.asList(
-                  touched.map(r => org.apache.spark.sql.Row.fromSeq(r.toSeq.take(n))): _*),
-                  parts.schema)
-                t.join(broadcast(touchedDf), partitionCols, "left_semi")
-                  .join(d, groupKeys, "left_anti")
-              }
+            // the touched partitions as a literal set the scan prunes by,
+            // so no other partition's files are read; a struct IN matches
+            // a null field to a null, so the null partition is one too
+            val inTouched = struct(partitionCols.map(col): _*).isin(touched.map(r =>
+              struct(partitionCols.indices.map(i => lit(r.get(i))
+                .cast(parts.schema(i).dataType).as(partitionCols(i))): _*)): _*)
+            val kept = joinGroups(t.filter(inTouched), d, groupKeys, "left_anti")
             val dirs = touched.map(r => rec.partitionCols.indices.map(i =>
               org.apache.spark.sql.graft.bridge.partitionPathSegment(
                 rec.partitionCols(i), r.getString(n + i))).mkString("/")).toSet
@@ -968,6 +971,25 @@ object TableMerge {
           }
       }
     }
+
+  /** The rows of `t` whose `keys` values do (`how` = "left_semi") or do
+    * not ("left_anti") appear among the tuples of `groups`, null
+    * matching null (`<=>`). An equi-join never matches a null, so a
+    * SQL statement that rewrites the null partition would keep its old
+    * rows beside their rewrite, or leave its result rows out. Callers
+    * that want SQL equality instead (a null key names no row) drop the
+    * tuples holding a null first ([[nonNullGroups]]). */
+  private[graft] def joinGroups(t: DataFrame, groups: DataFrame, keys: Seq[String],
+                                how: String): DataFrame = {
+    val g = groups.select(keys.indices.map(i => col(keys(i)).as(s"__group$i")): _*)
+    t.join(g, keys.indices.map(i => col(keys(i)) <=> g(s"__group$i")).reduce(_ && _), how)
+  }
+
+  /** The `keys` tuples of `groups` that hold no null: the drops of an
+    * API merge, whose keys match by SQL equality as MERGE INTO's `ON`
+    * does — a null key replaces or deletes nothing. */
+  private def nonNullGroups(groups: DataFrame, keys: Seq[String]): DataFrame =
+    groups.select(keys.map(col): _*).na.drop()
 
   /** K1 + K5 — upsert `source` into the table at `tablePath` on `keys`:
     * matched target rows are replaced wholesale by the source row
@@ -985,7 +1007,7 @@ object TableMerge {
       require(keys.nonEmpty, "merge keys required")
       val src = source.dropDuplicates(keys)
       replaceGroups(spark, tablePath, currentVersionName(tablePath), src,
-        Some(src.select(keys.map(col): _*)), keys, partitionCols, meta)
+        Some(nonNullGroups(src, keys)), keys, partitionCols, meta)
     }
 
   /** Fused K2+K1 — one copy-on-write rewrite that drops every target row
@@ -1004,7 +1026,7 @@ object TableMerge {
     retryOnConflict(CommitRetries) {
       require(groupKeys.nonEmpty, "group keys required")
       replaceGroups(spark, tablePath, currentVersionName(tablePath), source,
-        Some(dropGroups.select(groupKeys.map(col): _*)), groupKeys, partitionCols, meta)
+        Some(nonNullGroups(dropGroups, groupKeys)), groupKeys, partitionCols, meta)
     }
 
   /** Whole-table RESTATEMENT with merge-grade CAS semantics (r21):
@@ -1039,7 +1061,7 @@ object TableMerge {
           if (partitionCols.nonEmpty) partitionCols
           else recordOf(baseDir(tablePath, base)).logicalPartitionCols
         replaceGroups(spark, tablePath, base, spark.emptyDataFrame,
-          Some(deleteKeys.select(keys.map(col): _*)), keys, layout)
+          Some(nonNullGroups(deleteKeys, keys)), keys, layout)
       }
     }
 

@@ -899,10 +899,10 @@ object SqlMerge {
   /** Commit `result` — the whole table as a DML statement computed it
     * from snapshot `base` — through the engine's one row-level commit.
     * On a partitioned table the dropped groups are the `touched`
-    * partitions (those holding an affected row, old home and new): only
-    * they rewrite, from the result rows that land in them, and every
-    * other file hard-links. Unpartitioned, the result restates the
-    * table. */
+    * partitions (those holding an affected row, old home and new, the
+    * null partition included): only they rewrite, from the result rows
+    * that land in them, and every other file hard-links. Unpartitioned,
+    * the result restates the table. */
   private def commitDml(spark: SparkSession, path: String, base: String, result: DataFrame,
                         partCols: Seq[String], touched: => DataFrame): Unit =
     if (partCols.isEmpty)
@@ -912,7 +912,8 @@ object SqlMerge {
       // read it, and recomputing it re-runs the statement's plan
       val t = touched.distinct().localCheckpoint()
       TableMerge.replaceGroups(spark, path, Some(base),
-        result.join(broadcast(t), partCols, "left_semi"), Some(t), partCols, partCols)
+        TableMerge.joinGroups(result, broadcast(t), partCols, "left_semi"), Some(t),
+        partCols, partCols)
     }
 
   /** CREATE TABLE (no AS): commit an EMPTY versioned table whose

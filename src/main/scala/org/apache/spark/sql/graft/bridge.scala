@@ -37,6 +37,18 @@ object bridge extends org.apache.spark.internal.Logging {
     org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
       .getPartitionPathString(colName, Option(castValue).getOrElse(""))
 
+  /** `memo`'s value for `key`, built on a miss. Bounded at `max`
+    * entries and rebuilt on demand: a miss that finds the memo full
+    * clears it, a hit never does, so a repeat lookup never evicts its
+    * own entry. Both per-snapshot memos (TableMerge's metadata, the
+    * manifest scan's partition grouping) go through it. */
+  def boundedMemo[V](memo: java.util.concurrent.ConcurrentHashMap[String, V], max: Int,
+                     key: String)(build: => V): V =
+    Option(memo.get(key)).getOrElse {
+      if (memo.size >= max) memo.clear()
+      memo.computeIfAbsent(key, _ => build)
+    }
+
   /** Stand-in leaf for a materialized RDD in a size estimate: its
     * statistics are the RDD's stored bytes. Never executed. */
   private final case class StoredRddLeaf(
@@ -470,12 +482,7 @@ object bridge extends org.apache.spark.internal.Logging {
     private lazy val partitioned: Seq[(InternalRow, Seq[(String, FileStatusWithMetadata)])] = {
       val key = s"$rootAbs\u0000${cs.sessionState.conf.sessionLocalTimeZone}" +
         s"\u0000${partSchema.map(_.name).mkString(",")}"
-      Option(partGroupMemo.get(key)).getOrElse {
-        // bounded, rebuilt on demand; only a miss clears, so a repeat
-        // read of a memoized snapshot never evicts its own entry
-        if (partGroupMemo.size >= 64) partGroupMemo.clear()
-        partGroupMemo.computeIfAbsent(key, _ => buildPartitioned())
-      }
+      boundedMemo(partGroupMemo, 64, key)(buildPartitioned())
     }
 
     private def buildPartitioned(): Seq[(InternalRow, Seq[(String, FileStatusWithMetadata)])] = {

@@ -1200,4 +1200,35 @@ class SqlMergeSpec extends AnyFunSuite {
       assert(TableMerge.partitionColsOf(path) == parts, s"$name changed the layout")
     }
   }
+
+  test("SQL DML on a row whose partition value is NULL keeps that partition's other rows") {
+    import spark.implicits._
+    val seed: Set[(Long, String, Long)] = Set((1L, null, 10L), (2L, null, 20L), (3L, "a", 30L), (4L, "b", 40L))
+    val cases: Seq[(String, Set[(Long, String, Long)] => Set[(Long, String, Long)])] = Seq(
+      ("UPDATE graft.`%s` SET v = v + 1 WHERE id = 1",
+        rs => rs - ((1L, null, 10L)) + ((1L, null, 11L))),
+      ("UPDATE graft.`%s` SET part = 'c' WHERE id = 1",
+        rs => rs - ((1L, null, 10L)) + ((1L, "c", 10L))),
+      ("UPDATE graft.`%s` SET part = NULL WHERE id = 3",
+        rs => rs - ((3L, "a", 30L)) + ((3L, null, 30L))),
+      ("DELETE FROM graft.`%s` WHERE id = 2", _ - ((2L, null, 20L))),
+      ("""MERGE INTO graft.`%s` t USING (
+         |  SELECT 1L AS id, CAST(NULL AS STRING) AS part, 11L AS v
+         |  UNION ALL SELECT 8L AS id, CAST(NULL AS STRING) AS part, 80L AS v) s
+         |ON t.id = s.id
+         |WHEN MATCHED THEN UPDATE SET *
+         |WHEN NOT MATCHED THEN INSERT *""".stripMargin,
+        rs => rs - ((1L, null, 10L)) + ((1L, null, 11L)) + ((8L, null, 80L))),
+      // positional VALUES follow the read-back order: partition columns last
+      ("INSERT INTO graft.`%s` VALUES (9, 90, NULL)", _ + ((9L, null, 90L))))
+    cases.foreach { case (stmt, model) =>
+      val path = tmpTable("null-part")
+      TableMerge.createOrReplace(seed.toSeq.toDF("id", "part", "v"), path,
+        partitionCols = Seq("part"))
+      spark.sql(stmt.format(path))
+      val got = TableMerge.read(spark, path).select("id", "part", "v").as[(Long, String, Long)].collect()
+      assert(got.length == got.toSet.size && got.toSet == model(seed), stmt)
+      assert(TableMerge.partitionColsOf(path) == Seq("part"), stmt)
+    }
+  }
 }

@@ -654,4 +654,35 @@ class TableMergeSpec extends AnyFunSuite {
     assert(PosixFilePermissions.toString(Files.getPosixFilePermissions(dir.resolve("x"))) ==
       "rw-r-----")
   }
+
+  test("a null partition value: scoped API merges match keys by equality and keep the null partition") {
+    import spark.implicits._
+    val seed: Set[(Long, String, Long)] = Set((1L, null, 10L), (2L, null, 20L), (3L, "a", 30L), (4L, "b", 40L))
+    // (op, what it does to a plain-Scala model): a key holding a null
+    // matches no row, as MERGE INTO's ON equality does
+    val ops: Seq[(String, (String, Seq[String]) => Unit, Set[(Long, String, Long)] => Set[(Long, String, Long)])] = Seq(
+      ("delete", (path, parts) => TableMerge.delete(spark, path,
+        Seq[(Long, String)]((1L, null), (3L, "a")).toDF("id", "part"), Seq("id", "part"), parts),
+        _ - ((3L, "a", 30L))),
+      ("upsert", (path, parts) => TableMerge.upsert(spark, path,
+        Seq[(Long, String, Long)]((2L, null, 200L), (4L, "b", 400L), (5L, null, 50L)).toDF("id", "part", "v"),
+        keys = Seq("id", "part"), partitionCols = parts),
+        rs => rs - ((4L, "b", 40L)) + ((4L, "b", 400L)) + ((2L, null, 200L)) + ((5L, null, 50L))),
+      ("replaceKeys", (path, parts) => TableMerge.replaceKeys(spark, path,
+        Seq[(Long, String, Long)]((6L, "a", 60L), (7L, null, 70L)).toDF("id", "part", "v"),
+        Seq[String](null, "a").toDF("part"), Seq("part"), parts),
+        rs => rs - ((3L, "a", 30L)) + ((6L, "a", 60L)) + ((7L, null, 70L))))
+    ops.foreach { case (name, op, model) =>
+      // partitioned, the commit is partition-scoped; unpartitioned, it
+      // restates the table: both must give the model's rows
+      Seq(Seq("part"), Seq.empty[String]).foreach { parts =>
+        val path = tmpTable(s"null-part-$name")
+        TableMerge.createOrReplace(seed.toSeq.toDF("id", "part", "v"), path, partitionCols = parts)
+        op(path, parts)
+        val got = TableMerge.read(spark, path).select("id", "part", "v").as[(Long, String, Long)].collect()
+        assert(got.length == got.toSet.size && got.toSet == model(seed), s"$name on $parts")
+        assert(TableMerge.partitionColsOf(path) == parts, s"$name on $parts changed the layout")
+      }
+    }
+  }
 }
